@@ -130,7 +130,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.length},"reps":$reps,"failed":$failed,"sf":"$sfDir","queries_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "plans/bench_out.json")}"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.length},"reps":$reps,"failed":$failed,"sf":"$sfDir","queries_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "plans/bench_out.json")}"}""")
     spark.stop()
   }
 }

@@ -507,19 +507,14 @@ object Curation {
     // scale the fold's cost IS that fixed job floor (BASELINE §36),
     // not data. The union's branches run as concurrent stages inside
     // one action; the decontamination count rides the s4 branch as a
-    // flagged count (same broadcast-digest anti-join semantics as
-    // [[Dedup.decontaminate]], byte-identical benchDigests
-    // definition), so the not-yet-materialized s4 cache has exactly
+    // flagged count (the digest join [[Dedup.decontaminate]] runs, as
+    // a left join), so the not-yet-materialized s4 cache has exactly
     // ONE consuming branch here — no two branches race to build the
     // same InMemoryRelation. s1/s2 are already materialized by s3's
     // eager checkpoint, s3 by construction.
-    val benchDigests = benchmark
-      .select(md5(col(textCol).cast("binary")).as("_h")).distinct()
     def one(i: Int, df: DataFrame) =
       df.agg(count(lit(1)).as("n")).select(lit(i).as("i"), col("n"))
-    val tail45 = s4
-      .join(broadcast(benchDigests.withColumn("_m", lit(true))),
-        md5(col(textCol).cast("binary")) === col("_h"), "left")
+    val tail45 = Dedup.joinBenchmarkDigests(s4, benchmark, textCol, "left")
       .agg(count(lit(1)).as("n4"),
         count(when(col("_m").isNull, 1)).as("n5"))
       .select(explode(array(
@@ -625,7 +620,7 @@ object Curation {
       .groupBy("gram")
       .agg(graft.functions.BoundedAgg.collect_capped_pair(
         col("did"), col("dng"), maxDocFreq).as("ms"))
-      .filter(size(col("ms")) >= 2)
+      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
       .select(explode(flatten(transform(col("ms"), a =>
         transform(filter(col("ms"), b => b("id") > a("id")), b =>
           struct(a("id").as("ida"), a("v").as("nga"),

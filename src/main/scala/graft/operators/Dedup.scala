@@ -70,11 +70,19 @@ object Dedup {
     * anti-joined in place — no shuffle of corpus text, one scan.
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame =
+    joinBenchmarkDigests(corpus, benchmark, textCol, "left_anti")
+
+  /** `corpus` joined on its md5 text digest to the distinct, broadcast
+    * digests of `benchmark`: `"left_anti"` keeps the clean rows,
+    * `"left"` keeps every row with `_m` true on the contaminated ones. */
+  private[operators] def joinBenchmarkDigests(corpus: DataFrame,
+      benchmark: DataFrame, textCol: String, joinType: String): DataFrame = {
     val benchDigests = benchmark
       .select(md5(col(textCol).cast("binary")).as("_h")).distinct()
+      .withColumn("_m", lit(true))
     corpus.withColumn("_h", md5(col(textCol).cast("binary")))
-      .join(broadcast(benchDigests), Seq("_h"), "left_anti")
+      .join(broadcast(benchDigests), Seq("_h"), joinType)
       .drop("_h")
   }
 

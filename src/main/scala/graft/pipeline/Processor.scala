@@ -537,17 +537,11 @@ object Processor {
     * citation model → citation names, processor.py:529-622,654-717) on
     * the references view. Returns the pre-`assignIdsAndTargets` node
     * union with the view id offsets (header 0, body/ack/annex/refs at
-    * multiples of BodyIdOffset) — exactly what the old five-branch
-    * DataFrame union produced per document.
+    * multiples of BodyIdOffset), plus the labeled body view — the
+    * graphics path derives figure/table candidate boxes from the SAME
+    * labeling the fulltext fold consumed (one pass, and the candidate
+    * numbering provably matches the node numbering).
     */
-  private[pipeline] def processTokensLocal(docId: Long, toks: Seq[TokenRow],
-      config: Config): Seq[SemanticNode] =
-    processTokensLocalWithBody(docId, toks, config)._1
-
-  /** [[processTokensLocal]] variant also returning the labeled body
-    * view — the graphics path derives figure/table candidate boxes from
-    * the SAME labeling the fulltext fold consumed (one pass, and the
-    * candidate numbering provably matches the node numbering). */
   private[pipeline] def processTokensLocalWithBody(docId: Long,
       toks: Seq[TokenRow], config: Config):
       (Seq[SemanticNode], IndexedSeq[(TokenRow, String)]) = {
@@ -629,32 +623,47 @@ object Processor {
     graphics match {
       case None =>
         toks.groupByKey(_.doc_id).flatMapGroups { (docId, it) =>
-          finish(docId, assignIdsAndTargets(
-            processTokensLocal(docId, it.toSeq, config)))
+          finish(docId, documentNodes(docId, it.toSeq, Nil, config))
         }
       case Some(g) =>
-        // the whole graphics chain — candidate boxes off the body
-        // labeling, F3 bbox matching, greedy 1–1, attach — is
-        // per-document by construction, so it runs inside the SAME
-        // cogroup as the node fold: one shuffle of the token table,
-        // one of the (tiny) graphics table, zero extra scans
+        // the whole graphics chain is per-document by construction, so
+        // it runs inside the SAME cogroup as the node fold: one shuffle
+        // of the token table, one of the (tiny) graphics table, zero
+        // extra scans
         val gIn = g.select(col("doc_id"), col("graphic_id"),
             col("graphic_type"), col("x"), col("y"), col("width"),
             col("height"), col("page_number"), col("page_width"),
             col("page_height")).as[GraphicIn]
         toks.groupByKey(_.doc_id).cogroup(gIn.groupByKey(_.doc_id)) {
-          (docId, ts, gsIt) =>
-            val (preNodes, bodyLabeled) =
-              processTokensLocalWithBody(docId, ts.toSeq, config)
-            val nodes = assignIdsAndTargets(preNodes)
-            val gs = gsIt.toSeq
-            val matched = matchGraphicsLocal(gs,
-              figureCandidatesLocal(docId, bodyLabeled)).toMap
-            val gInfo = gs.map(gr => (docId, gr.graphic_id,
-              graphicText(gr, config.extractGraphicAssets),
-              matched.getOrElse(gr.graphic_id, null)))
-            finish(docId, attachGraphicsLocal(docId, nodes, gInfo))
+          (docId, ts, gs) =>
+            finish(docId, documentNodes(docId, ts.toSeq, gs.toSeq, config))
         }
+    }
+  }
+
+  /** ONE document's final semantic nodes — the body of every pipeline
+    * fold, and what the service runs per upload: the local document
+    * flow and `assignIdsAndTargets`, then, when the document has page
+    * graphics, F3 (`processors/fulltext/processor.py:268-273,337-369`
+    * `_process_graphics`): candidate boxes off the body labeling, bbox
+    * matching, greedy 1–1, and attach — a matched graphic becomes a
+    * `graphic` child of its figure node (TEI `<graphic type coords>`,
+    * tei/graphic.py:22-55), unmatched ones collect under one
+    * `note[unmatched_graphics]` back node (processor.py:343,367-369).
+    * With `extractGraphicAssets` the graphic id doubles as the asset's
+    * relative path, the A8 zip entry name (`graphic.py:37-39`). */
+  private[graft] def documentNodes(docId: Long, tokens: Seq[TokenRow],
+      graphics: Seq[GraphicIn], config: Config): Seq[SemanticNode] = {
+    val (preNodes, bodyLabeled) =
+      processTokensLocalWithBody(docId, tokens, config)
+    val nodes = assignIdsAndTargets(preNodes)
+    if (graphics.isEmpty) nodes
+    else {
+      val matched = matchGraphicsLocal(graphics,
+        figureCandidatesLocal(docId, bodyLabeled)).toMap
+      attachGraphicsLocal(docId, nodes, graphics.map(gr => (docId,
+        gr.graphic_id, graphicText(gr, config.extractGraphicAssets),
+        matched.getOrElse(gr.graphic_id, null))))
     }
   }
 
@@ -703,7 +712,7 @@ object Processor {
 
   /** One page graphic as [[documentPipeline]]'s graphics input
     * ([[graphicsForMatching]] output row). */
-  private[pipeline] final case class GraphicIn(
+  private[graft] final case class GraphicIn(
       doc_id: Long, graphic_id: String, graphic_type: String,
       x: Double, y: Double, width: Double, height: Double,
       page_number: Int, page_width: Double, page_height: Double)
@@ -761,21 +770,21 @@ object Processor {
         col("page_number"), col("page_width"), col("page_height"))
   }
 
-  /** F3 wired into the document DAG
-    * (`processors/fulltext/processor.py:268-273,337-369`
-    * `_process_graphics`): bounding-box match page graphics against the
-    * figure/table candidates, attach each matched graphic as a
-    * `graphic` child of its figure node (TEI: `<graphic type coords>`,
-    * tei/graphic.py:22-55), and collect unmatched graphics under one
-    * `note[unmatched_graphics]` back node per document
-    * (processor.py:343,367-369). Graphic info rides in the node row as
-    * `content_id = graphic_id`, `text = "<type>|<page,x,y,w,h>[|<url>]"`
-    * (format_coordinates, tei/common.py:87-94). With
-    * `extractAssets = true` the graphic id doubles as the asset's
-    * relative path (the A8 zip entry name) and TEI emits it as the
-    * `url` attribute — `graphic.py:37-39` sets `relative_path` exactly
-    * when assets are extracted.
-    */
+  /** [[graphicsForMatching]] for ONE document's parsed rows: each
+    * page's dimensions come from its first token with a width, the
+    * join on `page_number` is inner, and graphics without coords drop. */
+  private[graft] def graphicsForMatchingLocal(tokens: Seq[TokenRow],
+      graphicRows: Seq[GraphicRow]): Seq[GraphicIn] = {
+    val pageDims = tokens.filter(_.page_width.isDefined)
+      .groupBy(_.page_number).view.mapValues(_.head).toMap
+    for {
+      g <- graphicRows
+      c <- g.coords
+      t <- pageDims.get(g.page_number)
+    } yield GraphicIn(g.doc_id, g.file_id, g.graphic_type, c.x, c.y,
+      c.width, c.height, g.page_number, t.page_width.get, t.page_height.get)
+  }
+
   /** Per-document attach: matched graphics become `graphic` children
     * of their figure node, strays collect under one
     * `note[unmatched_graphics]` back node. */

@@ -9,11 +9,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{BodyRuleLabeler, ModelDataGenerators, Processor,
-  ReferenceSegmenterRuleLabeler, RuleLabeler, SegmentationRuleLabeler,
-  SemanticNode, SequenceLabeler, TrainingData}
+import graft.pipeline.{BodyRuleLabeler, GraphicRow, ModelDataGenerators,
+  Processor, ReferenceSegmenterRuleLabeler, RuleLabeler,
+  SegmentationRuleLabeler, SemanticNode, SequenceLabeler, TokenRow,
+  TrainingData}
 import graft.sinks.{Assets, Jats, Tei}
-import graft.sources.AltoReader
+import graft.sources.{AltoReader, AltoWriter, DocxReader, PdfReader}
 
 /** Media types the service negotiates (reference
   * `utils/media_types.py:12-31`). */
@@ -36,10 +37,15 @@ object MediaTypes {
   * FastAPI surface (`service/server.py:22-31` mounts the api app at
   * `/api`; `service/api/app.py:23-66` wires the routers) re-expressed
   * on the JDK's built-in HTTP server, so the library needs no
-  * framework dependency. One uploaded document per request runs
-  * through the SAME Spark DataFrame pipeline the batch engine uses
-  * (a 1-row dataset through `AltoReader` → `Processor` → sinks), so
-  * service responses and corpus-scale runs cannot drift apart.
+  * framework dependency. Each uploaded document is parsed on the
+  * request thread and runs the SAME per-document fold the batch
+  * pipeline runs inside its `groupByKey(doc_id)`
+  * ([[Processor.documentNodes]]), then the same TEI/JATS/zip sinks, so
+  * service responses and corpus-scale runs cannot drift apart — and a
+  * document request starts no Spark job, as the reference parses one
+  * document in memory per request (`app/parser.py:485-527`). Only the
+  * `/api/models/<name>` routes, which have no per-document form yet,
+  * run on Spark.
   *
   * Endpoints (paths and semantics mirror the reference):
   *  - `GET  /` and `/api` → `{"links": {}}` (`api/app.py:60-64`)
@@ -270,87 +276,77 @@ final class GraftService(
 
   // ------------------------------------------------------ document flow
 
-  /** Uploaded source → token table, sniffing the payload: %PDF parses
-    * through the in-JVM [[graft.sources.PdfReader]], an OOXML package
-    * through [[graft.sources.DocxReader]] (docx → PDF → tokens, the
-    * reference's converter chain in-engine), anything else is ALTO
-    * XML. The page range prunes at each parser. */
-  private def tokensOf(content: Array[Byte],
-      params: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val docId =
-      math.abs(scala.util.hashing.MurmurHash3.bytesHash(content)).toLong
+  private def docIdOf(content: Array[Byte]): Long =
+    math.abs(scala.util.hashing.MurmurHash3.bytesHash(content)).toLong
+
+  /** ALTO parse on the request thread. A malformed ALTO upload is a
+    * server-side failure (500, pinned by ServiceSpec): its
+    * NumberFormatException would otherwise map to 400. */
+  private def parseAlto(docId: Long, xml: String, first: Int, last: Int)
+      : (Seq[TokenRow], Seq[GraphicRow]) =
+    try AltoReader.parseAll(docId, xml, first, last)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException("ALTO parse failed", e)
+    }
+
+  /** Uploaded source → token rows, sniffing the payload: %PDF parses
+    * through the in-JVM [[PdfReader]], an OOXML package through
+    * [[DocxReader]] (docx → PDF → tokens, the reference's converter
+    * chain in-engine), anything else is ALTO XML. The page range prunes
+    * at each parser; a malformed PDF/DOCX upload surfaces as
+    * IllegalArgumentException → 400. */
+  private def parseTokens(content: Array[Byte],
+      params: Map[String, String]): Seq[TokenRow] = {
+    val docId = docIdOf(content)
     val (first, last) = pageBounds(params)
-    // PDF/DOCX parse DRIVER-SIDE for the 1-row request path: a
-    // malformed upload surfaces as IllegalArgumentException → 400
-    // instead of a SparkException-wrapped task failure → 500
-    if (isPdf(content))
-      spark.createDataset(
-        graft.sources.PdfReader.parseTokens(docId, content, first, last))
-        .toDF()
-    else if (graft.sources.DocxReader.isDocx(content))
-      spark.createDataset(
-        graft.sources.PdfReader.parseTokens(docId,
-          graft.sources.DocxReader.toPdf(content), first, last))
-        .toDF()
-    else
-      AltoReader.tokens(
-        spark.createDataset(
-          Seq((docId, new String(content, StandardCharsets.UTF_8)))),
-        first, last).toDF()
+    if (isPdf(content)) PdfReader.parseTokens(docId, content, first, last)
+    else if (DocxReader.isDocx(content))
+      PdfReader.parseTokens(docId, DocxReader.toPdf(content), first, last)
+    else parseAlto(docId, new String(content, StandardCharsets.UTF_8),
+      first, last)._1
   }
 
-  private def pipelineNodes(content: Array[Byte],
-      params: Map[String, String] = Map.empty): Seq[SemanticNode] =
-    Processor.documentPipeline(tokensOf(content, params), config)
-      .collect().toSeq
-
-  /** The asset-zip pipeline variant: a zip Accept FORCES graphic-asset
-    * extraction (`app/parser.py:401-410` flips
-    * `extract_graphic_assets=True` for ASSET_ZIP_MEDIA_TYPES
-    * regardless of the session config), so the document's ALTO
-    * graphics are parsed, matched into figures (F3) and carry
-    * `<graphic url=…>` asset ids the zip entries are named by. */
-  private def pipelineNodesWithAssets(content: Array[Byte],
-      params: Map[String, String])
-      : (Seq[SemanticNode], Seq[Assets.AssetFile]) = {
+  /** The token table of the model routes, which still run on Spark. */
+  private def tokensOf(content: Array[Byte]): DataFrame = {
     import spark.implicits._
-    // PDF payloads: image XObject placements ARE the graphics side
-    // (PdfReader.parseAll, the ALTO Illustration analog) and their
-    // DECODED payloads become real PNG zip entries; DOCX has no image
-    // parts in this subset — empty graphics
-    if (isPdf(content)) {
-      val docId =
-        math.abs(scala.util.hashing.MurmurHash3.bytesHash(content)).toLong
-      val (first, last) = pageBounds(params)
-      val (toks, gfx, pngs) = graft.sources.PdfReader.parseWithAssets(
-        docId, content, first, last)
-      val toksDf = spark.createDataset(toks).toDF()
-      val graphics = Processor.graphicsForMatching(
-        toksDf, spark.createDataset(gfx).toDF())
-      val nodes = Processor.documentPipeline(toksDf,
-          config.copy(extractGraphicAssets = true), Some(graphics))
-        .collect().toSeq
-      return (nodes,
-        pngs.map { case (id, png) => Assets.AssetFile(s"$id.png", png) })
-    }
-    if (graft.sources.DocxReader.isDocx(content))
-      return (Processor.documentPipeline(tokensOf(content, params),
-          config.copy(extractGraphicAssets = true))
-        .collect().toSeq, Seq.empty)
-    val xml = new String(content, StandardCharsets.UTF_8)
-    val docId = math.abs(scala.util.hashing.MurmurHash3.stringHash(xml)).toLong
-    // the page range prunes at the parse, tokens AND illustrations:
-    // the reference's pdfalto -f/-l limits the whole ALTO output
+    spark.createDataset(parseTokens(content, Map.empty)).toDF()
+  }
+
+  /** One upload through the batch pipeline's per-document fold
+    * ([[Processor.documentNodes]]): its final nodes, plus the asset
+    * files of a zip response. A zip Accept FORCES graphic-asset
+    * extraction (`app/parser.py:401-410` flips
+    * `extract_graphic_assets=True` for ASSET_ZIP_MEDIA_TYPES regardless
+    * of the session config), so the document's page graphics are
+    * parsed, matched into figures (F3) and carry `<graphic url=…>`
+    * asset ids the zip entries are named by. PDF image XObjects are the
+    * graphics and their DECODED payloads become real PNG zip entries;
+    * DOCX has no image parts in this subset; an ALTO document's ids
+    * hash its XML string. */
+  private def documentOf(content: Array[Byte], params: Map[String, String],
+      withAssets: Boolean): (Seq[SemanticNode], Seq[Assets.AssetFile]) = {
+    def withGraphics(docId: Long, toks: Seq[TokenRow],
+        gfx: Seq[GraphicRow]): Seq[SemanticNode] =
+      Processor.documentNodes(docId, toks,
+        Processor.graphicsForMatchingLocal(toks, gfx),
+        config.copy(extractGraphicAssets = true))
     val (first, last) = pageBounds(params)
-    val parsed = AltoReader.parsedDocs(
-      spark.createDataset(Seq((docId, xml))), first, last)
-    val toks = AltoReader.tokensOf(parsed).toDF()
-    val graphics = Processor.graphicsForMatching(
-      toks, AltoReader.graphicsOf(parsed).toDF())
-    (Processor.documentPipeline(toks,
-        config.copy(extractGraphicAssets = true), Some(graphics))
-      .collect().toSeq, Seq.empty)
+    if (!withAssets || DocxReader.isDocx(content))
+      (Processor.documentNodes(docIdOf(content), parseTokens(content, params),
+        Nil, config), Nil)
+    else if (isPdf(content)) {
+      val docId = docIdOf(content)
+      val (toks, gfx, pngs) =
+        PdfReader.parseWithAssets(docId, content, first, last)
+      (withGraphics(docId, toks, gfx),
+        pngs.map { case (id, png) => Assets.AssetFile(s"$id.png", png) })
+    } else {
+      val xml = new String(content, StandardCharsets.UTF_8)
+      val docId = math.abs(scala.util.hashing.MurmurHash3.stringHash(xml)).toLong
+      val (toks, gfx) = parseAlto(docId, xml, first, last)
+      (withGraphics(docId, toks, gfx), Nil)
+    }
   }
 
   /** Root-subtree filter: keep the listed root node types and all
@@ -399,40 +395,28 @@ final class GraftService(
   }
 
   private def renderDocument(nodes: Seq[SemanticNode],
-      mediaType: String,
-      assets: Seq[Assets.AssetFile] = Seq.empty): Response = {
+      mediaType: String, assets: Seq[Assets.AssetFile]): Response = {
     val tei = Tei.buildTei(nodes)
     mediaType match {
       // TEI/JATS XML respond as plain application/xml (`utils.py:19-24`)
       case TeiXml => Response.text(200, Xml, tei)
       case JatsXml => Response.text(200, Xml, Jats.transform(tei))
-      case TeiZip => Response(200, Zip, zipOf(tei, "tei.xml", assets))
+      // one-document asset zip via the A8 sink (`sinks/Assets.scala`)
+      case TeiZip => Response(200, Zip, Assets.buildZip("tei.xml", tei, assets))
       case JatsZip =>
-        Response(200, Zip, zipOf(Jats.transform(tei), "jats.xml", assets))
+        Response(200, Zip, Assets.buildZip("jats.xml", Jats.transform(tei), assets))
       case other => Response.detail(406, s"unsupported media type $other")
     }
   }
 
-  /** One-document asset zip via the A8 sink — a PDF upload's
-    * extracted image XObjects ride along as real PNG entries
-    * (`sinks/Assets.scala`). */
-  private def zipOf(xml: String, xmlName: String,
-      assets: Seq[Assets.AssetFile]): Array[Byte] = {
-    import spark.implicits._
-    val df = Seq((0L, xml, assets)).toDF("doc_id", "xml", "assets")
-    Assets.zipAssets(df, xmlCol = "xml", xmlName = xmlName)
-      .select("zip").head().getAs[Array[Byte]](0)
-  }
+  private def isZip(mediaType: String): Boolean =
+    mediaType == JatsZip || mediaType == TeiZip
 
   private def processDocument(ex: HttpExchange, acceptTypes: Seq[String],
       rootFilter: String => Boolean): Response = {
     val mediaType = negotiate(ex, acceptTypes)
     val params = queryParams(ex)
-    val src = checkedSource(ex)
-    val (nodes, assets) =
-      if (mediaType == JatsZip || mediaType == TeiZip)
-        pipelineNodesWithAssets(src, params)
-      else (pipelineNodes(src, params), Seq.empty[Assets.AssetFile])
+    val (nodes, assets) = documentOf(checkedSource(ex), params, isZip(mediaType))
     renderDocument(subtree(nodes, rootFilter), mediaType, assets)
   }
 
@@ -447,15 +431,12 @@ final class GraftService(
       // upload passes through, a DOCX converts in-JVM; an ALTO
       // source has no PDF to return
       if (isPdf(src)) return Response(200, Pdf, src)
-      if (graft.sources.DocxReader.isDocx(src))
-        return Response(200, Pdf, graft.sources.DocxReader.toPdf(src))
+      if (DocxReader.isDocx(src))
+        return Response(200, Pdf, DocxReader.toPdf(src))
       return Response.detail(501,
         "no PDF source for an ALTO upload; request TEI/JATS")
     }
-    val (nodes, assets) =
-      if (mediaType == JatsZip || mediaType == TeiZip)
-        pipelineNodesWithAssets(src, params)
-      else (pipelineNodes(src, params), Seq.empty[Assets.AssetFile])
+    val (nodes, assets) = documentOf(src, params, isZip(mediaType))
     renderDocument(
       subtree(nodes, includesFilter(params.get("includes"))),
       mediaType, assets)
@@ -469,14 +450,10 @@ final class GraftService(
   private def pdfalto(ex: HttpExchange): Response = {
     val content = sourceContent(ex)
     val params = queryParams(ex)
-    if (isPdf(content) || graft.sources.DocxReader.isDocx(content)) {
-      import spark.implicits._
-      val rows = tokensOf(content, params)
-        .as[graft.pipeline.TokenRow].collect().toSeq
-      Response(200, AltoXml,
-        graft.sources.AltoWriter.toAlto(rows)
-          .getBytes(StandardCharsets.UTF_8))
-    } else Response(200, AltoXml, content)
+    if (isPdf(content) || DocxReader.isDocx(content))
+      Response(200, AltoXml, AltoWriter.toAlto(parseTokens(content, params))
+        .getBytes(StandardCharsets.UTF_8))
+    else Response(200, AltoXml, content)
   }
 
   // ------------------------------------------------------- model routes

@@ -22,7 +22,7 @@ object Assets {
 
   final case class AssetFile(path: String, content: Array[Byte])
 
-  private[sinks] def buildZip(xmlName: String, xml: String,
+  private[graft] def buildZip(xmlName: String, xml: String,
       assets: Seq[AssetFile]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val zip = new ZipOutputStream(bos)

@@ -157,7 +157,7 @@ object AltoReader {
     * the requested range; `external/pdfalto/wrapper.py:20-48`). Kept
     * pages retain their global ordinal `page_idx`, so the output is
     * identical to parsing everything and filtering — minus the work. */
-  private[sources] def parseAll(docId: Long, xml: String,
+  private[graft] def parseAll(docId: Long, xml: String,
       firstPage: Int = 1,
       lastPage: Int = Int.MaxValue): (Seq[TokenRow], Seq[GraphicRow]) = {
     val r = newStreamReader(xml)

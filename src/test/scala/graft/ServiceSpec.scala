@@ -515,4 +515,155 @@ class ServiceSpec extends SparkSuite {
     assert(seg.statusCode() == 200 && all.statusCode() == 200)
     assert(all.body().split("\n").length > seg.body().split("\n").length)
   }
+
+  /** The PDF-with-images and DOCX uploads of the PDF/DOCX cases above. */
+  private lazy val pdfWithImages: Array[Byte] = {
+    import graft.sources.PdfWriter
+    import graft.sources.PdfWriter.{PImage, PTok}
+    PdfWriter.buildWithImages(Seq((Seq(
+      PTok("Neural", 50, 60, 18, bold = true),
+      PTok("Corpus", 120, 60, 18, bold = true),
+      PTok("Engines", 190, 60, 18, bold = true),
+      PTok("Alice", 50, 90, 9.5), PTok("Smith", 90, 90, 9.5),
+      PTok("Figure", 50, 600, 9.5), PTok("1", 95, 600, 9.5),
+      PTok(":", 102, 600, 9.5), PTok("sample", 110, 600, 9.5)),
+      Seq(PImage(50, 560, 200, 30)))))
+  }
+
+  private lazy val docx: Array[Byte] = {
+    import graft.sources.DocxReader
+    def run(t: String, italic: Boolean = false) =
+      DocxReader.Run(t, bold = false, italic = italic)
+    DocxReader.buildDocx(Seq(
+      ("Title", Seq(run("Neural Corpus Engines"))),
+      ("", Seq(run("Alice Smith"))),
+      ("", Seq(run("The corpus body with "), run("emphasis", italic = true),
+        run(" and more plain words after it.")))))
+  }
+
+  test("every document route answers byte for byte what the batch entry " +
+      "points give for the same bytes, and starts no Spark job") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import scala.util.hashing.MurmurHash3
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import graft.pipeline.{Processor, SemanticNode, TokenRow}
+    import graft.service.MediaTypes.{JatsXml, JatsZip, TeiXml, TeiZip}
+    import graft.sinks.{Assets, Jats, Tei}
+    import graft.sources.{AltoReader, AltoWriter, DocxReader, PdfReader}
+    import spark.implicits._
+
+    val uploads = Seq("alto" -> alto.getBytes(UTF_8),
+      "two-page alto" -> twoPageAlto.getBytes(UTF_8),
+      "pdf" -> pdfWithImages, "docx" -> docx)
+    val lastPages = Seq(None, Some(1))
+    def isPdf(b: Array[Byte]) = new String(b.take(4), UTF_8) == "%PDF"
+    def idOf(b: Array[Byte]) = math.abs(MurmurHash3.bytesHash(b)).toLong
+    def tokens(b: Array[Byte], last: Int): DataFrame =
+      if (isPdf(b))
+        spark.createDataset(PdfReader.parseTokens(idOf(b), b, 1, last)).toDF()
+      else if (DocxReader.isDocx(b))
+        spark.createDataset(PdfReader.parseTokens(idOf(b),
+          DocxReader.toPdf(b), 1, last)).toDF()
+      else AltoReader.tokens(Seq((idOf(b), new String(b, UTF_8))).toDS(),
+        1, last).toDF()
+    def teiOf(df: DataFrame): String = df.select("tei").as[String].head()
+    /** Asset-zip TEI and asset files: graphics attached, asset
+      * extraction on; ALTO uploads take the XML string's hash as id. */
+    def assetDoc(b: Array[Byte], last: Int): (String, Seq[Assets.AssetFile]) = {
+      val cfg = Processor.Config(extractGraphicAssets = true)
+      def withGraphics(toks: DataFrame, gfx: DataFrame) =
+        teiOf(Processor.documentTei(toks, cfg,
+          Some(Processor.graphicsForMatching(toks, gfx))))
+      if (isPdf(b)) {
+        val (t, g, pngs) = PdfReader.parseWithAssets(idOf(b), b, 1, last)
+        (withGraphics(spark.createDataset(t).toDF(), spark.createDataset(g).toDF()),
+          pngs.map { case (id, png) => Assets.AssetFile(s"$id.png", png) })
+      } else if (DocxReader.isDocx(b))
+        (teiOf(Processor.documentTei(tokens(b, last), cfg)), Nil)
+      else {
+        val xml = new String(b, UTF_8)
+        val parsed = AltoReader.parsedDocs(
+          Seq((math.abs(MurmurHash3.stringHash(xml)).toLong, xml)).toDS(), 1, last)
+        (withGraphics(AltoReader.tokensOf(parsed).toDF(),
+          AltoReader.graphicsOf(parsed).toDF()), Nil)
+      }
+    }
+    def zipOf(xml: String, name: String, assets: Seq[Assets.AssetFile]) =
+      Assets.zipAssets(Seq((0L, xml, assets)).toDF("doc_id", "xml", "assets"),
+        xmlCol = "xml", xmlName = name).select("zip").as[Array[Byte]].head()
+    val refRoots = Set("reference", "raw_reference", "heading")
+    def subtree(nodes: Seq[SemanticNode], keep: String => Boolean) = {
+      val byParent = nodes.groupBy(_.parent_id)
+      def ids(n: SemanticNode): Seq[Long] =
+        n.node_id +: byParent.getOrElse(n.node_id, Nil).flatMap(ids)
+      val kept = nodes.filter(n => n.parent_id < 0 && keep(n.node_type))
+        .flatMap(ids).toSet
+      nodes.filter(n => kept(n.node_id))
+    }
+
+    // (label, body, path + query, accept, expected bytes)
+    val cases = for {
+      (name, b) <- uploads
+      last <- lastPages
+      query = last.fold("")(l => s"?last_page=$l")
+      lastPage = last.getOrElse(Int.MaxValue)
+      tei = teiOf(Processor.documentTei(tokens(b, lastPage)))
+      nodes = Processor.documentPipeline(tokens(b, lastPage)).collect().toSeq
+      front = Tei.buildTei(subtree(nodes, t =>
+        !(t == "section" || refRoots(t) || t.startsWith("note["))))
+      refs = Tei.buildTei(subtree(nodes, refRoots))
+      (assetTei, assets) = assetDoc(b, lastPage)
+      xmlRoutes = Seq("/api/processFulltextDocument" -> tei,
+        "/api/processHeaderDocument" -> front,
+        "/api/processReferences" -> refs, "/api/convert" -> tei)
+      zipRoutes = Seq("/api/processFulltextAssetDocument", "/api/convert")
+      c <- xmlRoutes.flatMap { case (path, x) =>
+          Seq((path, TeiXml, x.getBytes(UTF_8)),
+            (path, JatsXml, Jats.transform(x).getBytes(UTF_8)))
+        } ++ zipRoutes.flatMap(path => Seq(
+          (path, TeiZip, zipOf(assetTei, "tei.xml", assets)),
+          (path, JatsZip, zipOf(Jats.transform(assetTei), "jats.xml", assets)))) ++
+        (if (isPdf(b) || DocxReader.isDocx(b)) Seq(("/api/pdfalto", "*/*",
+          AltoWriter.toAlto(tokens(b, lastPage).as[TokenRow].collect().toSeq)
+            .getBytes(UTF_8)))
+        else Nil)
+    } yield (s"$name ${c._1}$query ${c._2}", b, c._1 + query, c._2, c._3)
+
+    // listener-bus order is job-submission order: the jobs the requests
+    // start are those seen between the two fence jobs
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def fence(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    def jobsUntil(name: String): Int = Iterator.continually(
+        Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail(s"fence $name never reached the listener")))
+      .takeWhile(_ != name).size
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fence("before requests")
+      jobsUntil("before requests")
+      cases.foreach { case (label, body, path, accept, expected) =>
+        val r = client.send(
+          HttpRequest.newBuilder(URI.create(base + path))
+            .header("Accept", accept)
+            .POST(BodyPublishers.ofByteArray(body)).build(),
+          BodyHandlers.ofByteArray())
+        assert(r.statusCode() == 200, s"$label: ${new String(r.body(), UTF_8)}")
+        assert(r.body().sameElements(expected), label)
+      }
+      fence("after requests")
+      assert(jobsUntil("after requests") == 0,
+        s"${cases.size} document requests started Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
