@@ -1,8 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression,
+  UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -14,9 +17,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * on every lambda iteration, so a 64-permutation MinHash written as
   * `transform(seq(0,63), i -> array_min(transform(hashes, ...)))`
   * recomputes the tokenize→shingle→hash chain 64× per row (measured
-  * 24 s for 500 docs at sf0.01). These expressions evaluate the child
-  * exactly once per row and run a tight JVM loop; `doGenCode` emits a
-  * static call so they stay inside whole-stage codegen.
+  * 24 s for 500 docs at sf0.01). The lambdas are also never compiled:
+  * in Spark 4.1 `ArrayTransform`, `ArrayFilter`, `ZipWith` and
+  * `ArrayAggregate` are all `CodegenFallback`, so every element step is
+  * an interpreted `eval`. These expressions evaluate the child exactly
+  * once per row and run a tight JVM loop; `doGenCode` emits a static
+  * call so they stay inside whole-stage codegen.
   *
   * The permutation family is splitmix64 (public-domain mixer) — a
   * deterministic, seedable 64-bit bijection; sketches are engine
@@ -511,6 +517,43 @@ object Sketch {
       while (j < 8 && a(i + j) == b(i + j)) j += 1
       if (j == 8) cnt += 1
       i += 8
+    }
+    cnt
+  }
+
+  /** [[BandKeysExpr]] kernel: band `b`'s key is Spark's
+    * `xxhash64(slice(sig, b*rows+1, rows), b)` — XXH64 seed 42 folded
+    * over the slice's non-null longs, then over the int `b`. A null or
+    * short signature hashes its empty or partial slices the same way,
+    * so every signature yields `bands` keys. */
+  def bandKeys(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var i = b * rows
+      val end = math.min(i + rows, n)
+      while (i < end) {
+        if (!sig.isNullAt(i)) h = XXH64.hashLong(sig.getLong(i), h)
+        i += 1
+      }
+      out(b) = XXH64.hashInt(b, h)
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** [[SigMatchCountExpr]] kernel: positions where both arrays hold
+    * equal non-null longs; slots past the shorter array never match. */
+  def sigMatchCount(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        cnt += 1
+      i += 1
     }
     cnt
   }
@@ -1174,6 +1217,11 @@ object Sketch {
   def packed_match_count(a: Column, b: Column): Column =
     ColumnBridge.column(PackedMatchCountExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def band_keys(sig: Column, bands: Int, rows: Int): Column =
+    ColumnBridge.column(BandKeysExpr(ColumnBridge.expression(sig), bands, rows))
+  def sig_match_count(a: Column, b: Column): Column =
+    ColumnBridge.column(SigMatchCountExpr(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
 case class DotProductExpr(left: Expression, right: Expression)
@@ -1450,6 +1498,58 @@ case class PackedMatchCountExpr(left: Expression, right: Expression)
       s"graft.functions.Sketch.packedMatchCount($a, $b)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PackedMatchCountExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The LSH band keys of a MinHash signature as one `array<bigint>` of
+  * `bands` keys — `transform(sequence(0, bands - 1), b =>
+  * xxhash64(slice(sig, b * rows + 1, rows), b))` bit for bit, null and
+  * short signatures included, without the interpreted lambda and its
+  * per-band slice arrays. Never null: a null signature still yields
+  * `bands` keys, as the lambda form does. */
+case class BandKeysExpr(child: Expression, bands: Int, rows: Int)
+    extends UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
+  require(bands > 0 && rows > 0, "band_keys requires bands > 0 and rows > 0")
+  override def inputTypes =
+    Seq(ArrayType(org.apache.spark.sql.types.LongType))
+  override def dataType: DataType =
+    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "band_keys"
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    Sketch.bandKeys(child.eval(input).asInstanceOf[ArrayData], bands, rows)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sig = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${sig.code}
+      |ArrayData ${ev.value} = graft.functions.Sketch.bandKeys(
+      |  ${sig.isNull} ? null : ${sig.value}, $bands, $rows);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): BandKeysExpr =
+    copy(child = c)
+}
+
+/** Matching signature positions — `size(filter(zip_with(a, b, _ ===
+  * _), x => x))` without the interpreted lambdas: equal non-null longs
+  * at the same index, ragged tails never match, a null array gives
+  * null. */
+case class SigMatchCountExpr(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
+  override def inputTypes =
+    Seq(ArrayType(org.apache.spark.sql.types.LongType),
+      ArrayType(org.apache.spark.sql.types.LongType))
+  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def prettyName: String = "sig_match_count"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Sketch.sigMatchCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.Sketch.sigMatchCount($a, $b)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SigMatchCountExpr =
     copy(left = newLeft, right = newRight)
 }
 

@@ -621,13 +621,11 @@ object Curation {
       .agg(graft.functions.BoundedAgg.collect_capped_pair(
         col("did"), col("dng"), maxDocFreq).as("ms"))
       .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
-      .select(explode(flatten(transform(col("ms"), a =>
-        transform(filter(col("ms"), b => b("id") > a("id")), b =>
-          struct(a("id").as("ida"), a("v").as("nga"),
-            b("id").as("idb"), b("v").as("ngb")))))).as("p"))
-      .groupBy(col("p.ida").as("doc_id_a"), col("p.idb").as("doc_id_b"))
+      .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+        .as(Seq("doc_id_a", "nga", "doc_id_b", "ngb")))
+      .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("inter"),
-        max(col("p.nga")).as("ng_a"), max(col("p.ngb")).as("ng_b"))
+        max(col("nga")).as("ng_a"), max(col("ngb")).as("ng_b"))
       .filter(round(col("inter").cast("double") /
         (col("ng_a") + col("ng_b") - col("inter")), 4) >= threshold)
       .select("doc_id_a", "doc_id_b")

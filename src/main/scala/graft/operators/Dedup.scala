@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * All variants follow the same scale discipline: per-document work
   * (tokenize, shingle, hash, signature) is a pure projection evaluated
-  * row-local with codegen'd higher-order functions — no shuffle, no UDF;
+  * row-local — no shuffle, no UDF, and the hot kernels are native
+  * codegen'd expressions (graft.functions), not interpreted lambdas;
   * the only shuffles are on compact fixed-width keys (content digest,
   * LSH band key, simhash chunk), never on raw text. That is what keeps
   * each of these linear at 100 TB: candidate generation is a hash
@@ -113,21 +114,20 @@ object Dedup {
 
   /** MinHash + LSH banding: docs sharing any band key become candidate
     * pairs; est. Jaccard = matching signature positions / numHashes.
-    * The join key is (band, 8-byte band hash) — at 100 TB the shuffle
-    * moves `bands` small rows per doc, and AQE handles hot bands
-    * (boilerplate-heavy corpora) via skew-join splitting.
-    */
-  /** MinHash + LSH banding with the same degenerate-bucket discipline
-    * as [[hamming64PairsCapped]]: `maxBucket` caps candidate
-    * generation per (band, band-key) bucket — a band key shared by 10⁶
-    * documents (empty docs, boilerplate pages: every band of an
-    * identical signature collides) otherwise enumerates ~5·10¹¹
-    * candidate pairs. Identical-SIGNATURE volume is recovered
-    * losslessly as keeper stars (group key = xxhash64 of the
-    * signature, 8 bytes through the exchange instead of the 512-byte
-    * signature; star pairs flow through the SAME signature-verify as
-    * banded candidates, so a 64-bit group-key collision is filtered by
-    * its true estimate rather than trusted). Under the cap the output
+    * The band exchange is keyed on (band, 8-byte band hash) — at 100 TB
+    * it moves `bands` small rows per doc; on the uncapped self-join AQE
+    * splits hot bands (boilerplate-heavy corpora) as skewed joins.
+    *
+    * Same degenerate-bucket discipline as [[hamming64PairsCapped]]:
+    * `maxBucket` caps candidate generation per (band, band-key) bucket
+    * — a band key shared by 10⁶ documents (empty docs, boilerplate
+    * pages: every band of an identical signature collides) otherwise
+    * enumerates ~5·10¹¹ candidate pairs. Identical-SIGNATURE volume
+    * is recovered losslessly as keeper stars (group key = xxhash64 of
+    * the signature, 8 bytes through the exchange instead of the
+    * 512-byte signature; star pairs flow through the SAME
+    * signature-verify as banded candidates, so a 64-bit group-key
+    * collision is filtered by its true estimate rather than trusted). Under the cap the output
     * is identical to the uncapped join (stars are subsumed by the
     * distinct). Genuinely-similar-but-not-identical pairs whose every
     * shared band is over-cap are lost — the standard LSH bucket-cap
@@ -137,12 +137,6 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16,
       minEstJaccard: Double = 0.5,
       maxBucket: Long = Long.MaxValue): DataFrame = {
-    // first-level short-circuit: a band bucket can never hold more
-    // members than the corpus has rows, so ONE metadata-cheap count
-    // retires the whole cap machinery (persist, probe, star) whenever
-    // the corpus itself is under the cap — the sf0.1/sf1 bench regime;
-    // a 100 TB corpus stays on the capped path
-    val capped0 = maxBucket != Long.MaxValue && docs.count() > maxBucket
     val sig0 = minHashSignatures(docs, textCol, idCol, shingleSize, numHashes)
     // the signature table feeds the band pass and the two verify
     // join-backs (plus, capped, the star member join) — persist
@@ -151,6 +145,14 @@ object Dedup {
     // consumer (the uncapped plan re-evaluated it for each verify
     // build side)
     val sig = graft.CacheRegistry.persist(sig0)
+    // first-level short-circuit: a band bucket can never hold more
+    // members than the corpus has rows, so ONE count retires the star
+    // probe and recovery whenever the corpus itself is under the cap —
+    // the sf0.1/sf1 bench regime; a 100 TB corpus stays on the capped
+    // path. Counted on the persisted signatures, so the count pays the
+    // cache build every later consumer reuses (one job, not a source
+    // scan plus a cache stage per consumer).
+    val capped0 = maxBucket != Long.MaxValue && sig.count() > maxBucket
     // Candidate pairs first (compact 16-byte rows through the band
     // exchange and the distinct), then the signatures join back ONCE
     // per doc and the 64-element comparison runs once per candidate
@@ -174,10 +176,8 @@ object Dedup {
           .agg(graft.functions.BoundedAgg.collect_capped(col("id"),
             maxBucket).as("ms"))
           .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-          .select(explode(flatten(transform(col("ms"), a =>
-            transform(filter(col("ms"), b => b > a), b =>
-              struct(a.as("ida"), b.as("idb")))))).as("p"))
-          .select(col("p.ida").as("doc_id_a"), col("p.idb").as("doc_id_b"))
+          .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+            .as(Seq("doc_id_a", "doc_id_b")))
           .distinct()
       else {
         val a = banded.select(col("band"), col("bkey"),
@@ -232,14 +232,6 @@ object Dedup {
         graft.functions.Sketch.shingle_hash_stream_text(
           col(textCol), shingleSize), numHashes).as("sig"))
 
-  /** Incremental fuzzy dedup: near-dup candidate pairs BETWEEN a new
-    * delivery and the existing corpus, over their signature tables —
-    * the per-delivery guard that keeps a continuously-ingested corpus
-    * deduplicated without ever re-pairing the corpus against itself.
-    * Same banding/verify discipline as [[minHashLshPairs]]; only band
-    * keys meet in the join, and the corpus side's signatures are the
-    * stored index. Returns (corpus_id, batch_id, est_jaccard).
-    */
   /** (keeper = min id, member) star pairs of every ≥2-member group
     * under `key` — the lossless LINEAR encoding of an
     * identical-signature group (n−1 rows, never C(n,2)) shared by
@@ -261,23 +253,31 @@ object Dedup {
   /** Band keys of a signature table — the shared LSH banding
     * expression of [[minHashLshPairs]] and [[minHashLshPairsAcross]]
     * (one definition so the self-pair and across-pair paths cannot
-    * diverge). */
+    * diverge). Keys are `xxhash64(slice(sig, b*rows+1, rows), b)` from
+    * the native [[graft.functions.BandKeysExpr]]; they are stored in
+    * served indexes ([[minHashBandTable]]), so the hash is fixed. */
   private def bandKeys(sigs: DataFrame, idOut: String, bands: Int,
       numHashes: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     sigs.select(col("id").as(idOut),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b)))
-        .as(Seq("band", "bkey")))
+      posexplode(graft.functions.Sketch.band_keys(col("sig"), bands,
+        numHashes / bands)).as(Seq("band", "bkey")))
   }
 
   /** Signature-agreement estimate — the shared verify expression. */
   private def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
-    round(size(filter(zip_with(sigA, sigB, (x, y) => x === y), eq => eq))
+    round(graft.functions.Sketch.sig_match_count(sigA, sigB)
       .cast("double") / numHashes, 4)
 
-  /** `maxBucket` caps the CORPUS side of each (band, band-key) bucket —
+  /** Incremental fuzzy dedup: near-dup candidate pairs BETWEEN a new
+    * delivery and the existing corpus, over their signature tables —
+    * the per-delivery guard that keeps a continuously-ingested corpus
+    * deduplicated without ever re-pairing the corpus against itself.
+    * Same banding/verify discipline as [[minHashLshPairs]]; only band
+    * keys meet in the join, and the corpus side's signatures are the
+    * stored index. Returns (corpus_id, batch_id, est_jaccard).
+    *
+    * `maxBucket` caps the CORPUS side of each (band, band-key) bucket —
     * the unbounded side at 100 TB (the delivery is delivery-sized by
     * construction). A batch doc whose only shared bands sit in over-cap
     * corpus buckets is recovered when its SIGNATURE matches a stored
@@ -652,12 +652,8 @@ object Dedup {
           .agg(graft.functions.BoundedAgg.collect_capped_pair(
             col("id"), col("sim"), maxBucket).as("ms"))
           .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-          .select(explode(flatten(transform(col("ms"), a =>
-            transform(filter(col("ms"), b => b("id") > a("id")), b =>
-              struct(a("id").as("ida"), a("v").as("sima"),
-                b("id").as("idb"), b("v").as("simb")))))).as("p"))
-          .select(col("p.ida").as("doc_id_a"), col("p.sima").as("sim_a"),
-            col("p.idb").as("doc_id_b"), col("p.simb").as("sim_b"))
+          .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+            .as(Seq("doc_id_a", "sim_a", "doc_id_b", "sim_b")))
       } else {
         // uncapped: the self-join form stands — a member list without
         // the bucket bound could hold the whole corpus in one row
@@ -1012,12 +1008,8 @@ object Dedup {
         // shingles are distinct per doc so each doc appears at most
         // once per list and `inter` counts shared grams exactly as
         // the self-join did
-        members.select(explode(flatten(transform(col("ms"), a =>
-            transform(filter(col("ms"), b => b("id") > a("id")), b =>
-              struct(a("id").as("ida"), a("v").as("nga"),
-                b("id").as("idb"), b("v").as("ngb")))))).as("p"))
-          .select(col("p.ida").as("ida"), col("p.nga").as("nga"),
-            col("p.idb").as("idb"), col("p.ngb").as("ngb"))
+        members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+          .as(Seq("ida", "nga", "idb", "ngb")))
       } else {
         // uncapped: the self-join shape stands — a per-gram list
         // without the df bound could hold the whole corpus in one row
@@ -1138,10 +1130,9 @@ object Dedup {
       .agg(graft.functions.BoundedAgg.collect_capped(col("doc_id"), maxDf)
         .as("ms"))
       .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDf)
-    members.select(explode(flatten(transform(col("ms"), a =>
-        transform(filter(col("ms"), b => b > a), b =>
-          struct(a.as("ida"), b.as("idb")))))).as("p"))
-      .groupBy(col("p.ida").as("doc_id_a"), col("p.idb").as("doc_id_b"))
+    members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+        .as(Seq("doc_id_a", "doc_id_b")))
+      .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }

@@ -824,13 +824,11 @@ object Multimodal {
       .agg(graft.functions.BoundedAgg.collect_capped_pair(
         col("id"), col("nf"), maxDocFreq).as("ms"))
       .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
-    members.select(explode(flatten(transform(col("ms"), a =>
-        transform(filter(col("ms"), b => b("id") > a("id")), b =>
-          struct(a("id").as("ida"), a("v").as("nfa"),
-            b("id").as("idb"), b("v").as("nfb")))))).as("p"))
-      .groupBy(col("p.ida").as("doc_id_a"), col("p.idb").as("doc_id_b"))
+    members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
+        .as(Seq("doc_id_a", "nfa", "doc_id_b", "nfb")))
+      .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("shared_frames"),
-        first(col("p.nfa")).as("frames_a"), first(col("p.nfb")).as("frames_b"))
+        first(col("nfa")).as("frames_a"), first(col("nfb")).as("frames_b"))
       // FULL overlap always pairs regardless of minShared: a pair of
       // single-frame videos — or of undecodable byte-dups, whose one
       // fallback row is their whole signature — shares everything it

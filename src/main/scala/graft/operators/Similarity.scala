@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   * to an `nbits`-bit bucket computed row-local from a deterministic,
   * seed-derived hyperplane matrix; search joins on the bucket (plus
   * Hamming-1 multi-probes) so the exact cosine only runs on a tiny
-  * candidate set. Dot products use `zip_with`+`aggregate` (codegen'd,
-  * no UDF).
+  * candidate set. Dot products call the native `DotProductExpr`
+  * kernel (no UDF): Spark 4.1's higher-order functions
+  * (`zip_with`, `aggregate`, `transform`, `filter`) are
+  * `CodegenFallback`, so a lambda formulation would run interpreted on
+  * every row.
   */
 object Similarity {
 

@@ -359,4 +359,32 @@ class PlanSpec extends SparkSuite {
       assert(!p.contains("Window"), s"ingest plan should not need a window:\n$p")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
+
+  test("capped minHashLshPairs: one (band, bkey) exchange feeds the " +
+      "compiled member_pairs generator; no collect_list, self-join or lambda") {
+    import spark.implicits._
+    val docs = (0L until 40L).map(i =>
+      (i, s"shared words for every doc number ${i % 7} with tail ${i % 3}"))
+      .toDF("doc_id", "text")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val p = try {
+      graft.operators.Dedup.minHashLshPairs(docs, maxBucket = 100000L)
+        .queryExecution.executedPlan.toString
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      CacheRegistry.release(spark)
+    }
+    val lines = p.linesIterator.toIndexedSeq
+    val bandExchanges = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(band#"))
+    assert(bandExchanges.size == 1, s"expected ONE (band, bkey) exchange:\n$p")
+    val gen = lines.indexWhere(_.contains("Generate member_pairs("))
+    assert(gen >= 0 && gen < bandExchanges.head,
+      s"expected the generator above the band exchange:\n$p")
+    assert(lines(gen).contains("*("), s"generator outside codegen:\n$p")
+    assert(!p.contains("collect_list"), p)
+    assert(!p.contains("lambdafunction"), p)
+    assert(!lines.exists(l => l.contains("Join") && l.contains("band#")),
+      s"unexpected self-join on the band key:\n$p")
+  }
 }
