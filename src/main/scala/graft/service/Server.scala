@@ -2,6 +2,8 @@ package graft.service
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -47,8 +49,26 @@ object MediaTypes {
   * `/api/models/<name>` routes, which have no per-document form yet,
   * run on Spark.
   *
+  * Concurrency: requests run on a fixed pool of one worker thread per
+  * core (`graft-service-<n>`, daemon), not on the HTTP server's single
+  * dispatcher thread, so up to that many documents are parsed, folded
+  * and rendered at once. At most that many documents are in flight: an
+  * exchange waiting in the pool's queue has not read its body yet. The
+  * per-document path is the code the batch fold already runs
+  * concurrently on Spark's task threads in this JVM — per-thread StAX
+  * factories in the readers, one shared (thread-safe) compiled JATS
+  * stylesheet with a fresh `Transformer` per call, and no mutable state
+  * at object level. The model routes may submit Spark jobs from several
+  * workers at once, which a `SparkSession` supports; the service's own
+  * fields are immutable after construction (`modelRoutes` is a lazy
+  * val, initialized once under its lock) and the labelers build a new
+  * plan per call, their per-row code already running on concurrent
+  * task threads in batch. [[stop]] stops the server and waits for the
+  * workers to finish.
+  *
   * Endpoints (paths and semantics mirror the reference):
   *  - `GET  /` and `/api` → `{"links": {}}` (`api/app.py:60-64`)
+  *  - `GET  /health` → `{"status": "ok"}`; starts no Spark job
   *  - `POST /api/convert` — Accept picks TEI/JATS XML or ZIP;
   *    `includes=` comma-list restricts the response to requested
   *    fields (`api/routers/convert.py:35-130`,
@@ -94,15 +114,30 @@ final class GraftService(
 
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
 
+  private val workers = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors(),
+      { (r: Runnable) =>
+        val t = new Thread(r, s"graft-service-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+
   def boundPort: Int = server.getAddress.getPort
 
   def start(): GraftService = {
     server.createContext("/", handle(_))
+    server.setExecutor(workers)
     server.start()
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    workers.shutdown()
+    workers.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+  }
 
   // ------------------------------------------------------------ plumbing
 
@@ -147,6 +182,7 @@ final class GraftService(
     val path = ex.getRequestURI.getPath.stripSuffix("/")
     (ex.getRequestMethod, path) match {
       case ("GET", "" | "/api") => Response.text(200, Json, """{"links": {}}""")
+      case ("GET", "/health") => Response.text(200, Json, """{"status": "ok"}""")
       case ("POST", "/api/convert") => convert(ex)
       case ("POST", "/api/processHeaderDocument") =>
         processDocument(ex, Seq(TeiXml, JatsXml), frontRoots)
@@ -194,8 +230,10 @@ final class GraftService(
       val parts = text.split(java.util.regex.Pattern.quote("--" + boundary))
       parts.collectFirst {
         case p if p.contains("name=\"input\"") || p.contains("name=\"file\"") =>
-          val content = p.substring(p.indexOf("\r\n\r\n") + 4)
-          content.stripSuffix("\r\n")
+          val headersEnd = p.indexOf("\r\n\r\n")
+          if (headersEnd < 0) throw new IllegalArgumentException(
+            "multipart 'input'/'file' part without a blank line after its headers")
+          p.substring(headersEnd + 4).stripSuffix("\r\n")
             .getBytes(StandardCharsets.ISO_8859_1)
       }.getOrElse(throw new IllegalArgumentException(
         "multipart request without 'input' or 'file' field"))

@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 
+import org.scalatest.BeforeAndAfterAll
+
 import graft.service.GraftService
 
 /** Drives the REST service layer end-to-end over a real HTTP socket:
@@ -12,11 +14,13 @@ import graft.service.GraftService
   * makes (routing, Accept negotiation, upload forms, model output
   * formats), against the Spark-backed implementation.
   */
-class ServiceSpec extends SparkSuite {
+class ServiceSpec extends SparkSuite with BeforeAndAfterAll {
 
   private lazy val service = new GraftService(spark).start()
   private lazy val base = s"http://127.0.0.1:${service.boundPort}"
   private lazy val client = HttpClient.newHttpClient()
+
+  override def afterAll(): Unit = try service.stop() finally super.afterAll()
 
   // title block (3 toks, large font) + authors + body + Figure/Table
   // captions + Acknowledgements + References (PipelineOps.altoOf)
@@ -541,11 +545,15 @@ class ServiceSpec extends SparkSuite {
         run(" and more plain words after it.")))))
   }
 
-  test("every document route answers byte for byte what the batch entry " +
-      "points give for the same bytes, and starts no Spark job") {
+  /** The byte-equality matrix: (label, body, path + query, accept,
+    * expected bytes) for ALTO, two-page ALTO, PDF with image and DOCX
+    * uploads × every document route × TEI/JATS/zip Accept × {full,
+    * `last_page=1`}, plus PDF/DOCX `pdfalto`; the expected bytes come
+    * from the batch entry points. */
+  private lazy val parityCases
+      : Seq[(String, Array[Byte], String, String, Array[Byte])] = {
     import java.nio.charset.StandardCharsets.UTF_8
     import scala.util.hashing.MurmurHash3
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.DataFrame
     import graft.pipeline.{Processor, SemanticNode, TokenRow}
     import graft.service.MediaTypes.{JatsXml, JatsZip, TeiXml, TeiZip}
@@ -602,8 +610,7 @@ class ServiceSpec extends SparkSuite {
       nodes.filter(n => kept(n.node_id))
     }
 
-    // (label, body, path + query, accept, expected bytes)
-    val cases = for {
+    for {
       (name, b) <- uploads
       last <- lastPages
       query = last.fold("")(l => s"?last_page=$l")
@@ -629,9 +636,21 @@ class ServiceSpec extends SparkSuite {
             .getBytes(UTF_8)))
         else Nil)
     } yield (s"$name ${c._1}$query ${c._2}", b, c._1 + query, c._2, c._3)
+  }
 
-    // listener-bus order is job-submission order: the jobs the requests
-    // start are those seen between the two fence jobs
+  private def postBytes(path: String, accept: String,
+      body: Array[Byte]): HttpResponse[Array[Byte]] =
+    client.send(
+      HttpRequest.newBuilder(URI.create(base + path))
+        .header("Accept", accept)
+        .POST(BodyPublishers.ofByteArray(body)).build(),
+      BodyHandlers.ofByteArray())
+
+  /** Spark jobs started while `run` runs: those a `SparkListener` sees
+    * between two fence jobs (listener-bus order is job-submission
+    * order). */
+  private def sparkJobsDuring(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -652,18 +671,155 @@ class ServiceSpec extends SparkSuite {
     try {
       fence("before requests")
       jobsUntil("before requests")
+      run
+      fence("after requests")
+      jobsUntil("after requests")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("every document route answers byte for byte what the batch entry " +
+      "points give for the same bytes, and starts no Spark job") {
+    val cases = parityCases
+    val jobs = sparkJobsDuring {
       cases.foreach { case (label, body, path, accept, expected) =>
-        val r = client.send(
-          HttpRequest.newBuilder(URI.create(base + path))
-            .header("Accept", accept)
-            .POST(BodyPublishers.ofByteArray(body)).build(),
-          BodyHandlers.ofByteArray())
-        assert(r.statusCode() == 200, s"$label: ${new String(r.body(), UTF_8)}")
+        val r = postBytes(path, accept, body)
+        assert(r.statusCode() == 200,
+          s"$label: ${new String(r.body(), java.nio.charset.StandardCharsets.UTF_8)}")
         assert(r.body().sameElements(expected), label)
       }
-      fence("after requests")
-      assert(jobsUntil("after requests") == 0,
-        s"${cases.size} document requests started Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"${cases.size} document requests started Spark jobs")
+  }
+
+  test("the byte-equality matrix sent from 8 clients at once answers " +
+      "every request as the sequential run does, and starts no Spark job") {
+    val cases = parityCases
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = sparkJobsDuring {
+      val clients = (1 to 8).map { c =>
+        val t = new Thread(() => {
+          var i = next.getAndIncrement()
+          while (i < cases.size) {
+            val (label, body, path, accept, expected) = cases(i)
+            try {
+              val r = postBytes(path, accept, body)
+              if (r.statusCode() != 200) wrong.add(s"$label: ${r.statusCode()}")
+              else if (!r.body().sameElements(expected)) wrong.add(s"$label: bytes")
+            } catch {
+              case e: Exception => wrong.add(s"$label: $e")
+            }
+            i = next.getAndIncrement()
+          }
+        }, s"service-spec-client-$c")
+        t.start()
+        t
+      }
+      clients.foreach(_.join())
+    }
+    assert(wrong.isEmpty, wrong.toArray.mkString("\n"))
+    assert(jobs == 0, s"${cases.size} document requests started Spark jobs")
+  }
+
+  test("a stalled upload does not hold up other clients") {
+    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+    val body = alto.getBytes(UTF_8)
+    val half = body.length / 2
+    val socket = new java.net.Socket("127.0.0.1", service.boundPort)
+    try {
+      socket.setSoTimeout(60000)
+      val out = socket.getOutputStream
+      // the Content-Length promises the whole body; only half is sent
+      out.write((s"POST /api/processFulltextDocument HTTP/1.1\r\n" +
+        s"Host: 127.0.0.1\r\nAccept: application/tei+xml\r\n" +
+        s"Content-Length: ${body.length}\r\nConnection: close\r\n\r\n")
+        .getBytes(US_ASCII))
+      out.write(body, 0, half)
+      out.flush()
+      Thread.sleep(300) // let the server take up the stalled exchange
+      val index = client.send(HttpRequest.newBuilder(URI.create(base + "/"))
+          .timeout(java.time.Duration.ofSeconds(10)).GET().build(),
+        BodyHandlers.ofString())
+      assert(index.statusCode() == 200)
+      out.write(body, half, body.length - half)
+      out.flush()
+      val status = new java.io.BufferedReader(new java.io.InputStreamReader(
+        socket.getInputStream, US_ASCII)).readLine()
+      assert(status == "HTTP/1.1 200 OK", status)
+    } finally socket.close()
+  }
+
+  test("model routes from concurrent clients answer as they do one at a time") {
+    val paths = Seq("/api/models/header?output_format=json",
+      "/api/models/segmentation?output_format=raw_data",
+      "/api/models/citation?output_format=data",
+      "/api/models/figure?output_format=xml")
+    val sequential = paths.map(p => p -> post(p).body()).toMap
+    val requests = paths ++ paths
+    val answers = new Array[(Int, String)](requests.size)
+    val clients = requests.indices.map { i =>
+      val t = new Thread(() => {
+        val r = post(requests(i))
+        answers(i) = (r.statusCode(), r.body())
+      }, s"service-spec-model-client-$i")
+      t.start()
+      t
+    }
+    clients.foreach(_.join())
+    requests.indices.foreach { i =>
+      assert(answers(i) == ((200, sequential(requests(i)))), requests(i))
+    }
+  }
+
+  test("GET /health answers ok without reading the body or starting a Spark job") {
+    var r: HttpResponse[String] = null
+    val jobs = sparkJobsDuring {
+      // a body that is no document: the route must not parse it
+      r = client.send(HttpRequest.newBuilder(URI.create(base + "/health"))
+          .method("GET", BodyPublishers.ofString("not a document")).build(),
+        BodyHandlers.ofString())
+    }
+    assert(r.statusCode() == 200)
+    assert(r.headers().firstValue("Content-Type").get() == "application/json")
+    assert(r.body() == """{"status": "ok"}""")
+    assert(jobs == 0)
+  }
+
+  test("a multipart file part without a blank line after its headers " +
+      "answers 400") {
+    val boundary = "graftTestBoundary"
+    val body = s"--$boundary\r\n" +
+      "Content-Disposition: form-data; name=\"file\"; filename=\"d.xml\"\r\n" +
+      alto + s"\r\n--$boundary--\r\n"
+    val r = post("/api/processFulltextDocument",
+      accept = Some("application/tei+xml"), body = body,
+      contentType = Some(s"multipart/form-data; boundary=$boundary"))
+    assert(r.statusCode() == 400, r.body())
+    assert(r.body() == """{"detail": "multipart 'input'/'file' part """ +
+      """without a blank line after its headers"}""")
+  }
+
+  test("stop() ends the service's worker threads and closes its port") {
+    import scala.jdk.CollectionConverters._
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-service-")).toSet
+    val before = workers
+    val s = new GraftService(spark).start()
+    val port = s.boundPort
+    val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/api/processHeaderDocument"))
+        .header("Accept", "application/tei+xml")
+        .POST(BodyPublishers.ofString(alto)).build(),
+      BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    val mine = workers -- before
+    assert(mine.nonEmpty && mine.forall(_.isDaemon))
+    s.stop()
+    // stop() returns once the pool has terminated; a worker thread may
+    // still be leaving its run loop, so give each a moment to exit
+    mine.foreach(_.join(1000))
+    assert((workers -- before).isEmpty)
+    intercept[java.net.ConnectException](
+      new java.net.Socket("127.0.0.1", port).close())
   }
 }
