@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.Locale
+import java.math.{BigDecimal, RoundingMode}
 
 /** Page-coordinate merging and the TEI `coords` attribute format
   * (reference `document/layout_document.py:65-98` get_merged_with /
@@ -40,10 +40,54 @@ object Coordinates {
     out.toList
   }
 
-  /** "%d,%.2f,%.2f,%.2f,%.2f" (tei/common.py:87-94). */
+  /** "%d,%.2f,%.2f,%.2f,%.2f" (tei/common.py:87-94), built without a
+    * `java.util.Formatter` (one per call, with its locale symbols, cost
+    * a quarter of the per-document fold); equal to
+    * `formatLocal(Locale.ROOT, …)` on every double. */
   def format(c: Coords): String =
-    "%d,%.2f,%.2f,%.2f,%.2f".formatLocal(Locale.ROOT,
-      c.page_number, c.x, c.y, c.width, c.height)
+    format(c.page_number, c.x, c.y, c.width, c.height)
+
+  private[graft] def format(page: Int, x: Double, y: Double, width: Double,
+      height: Double): String = {
+    val sb = new java.lang.StringBuilder(40).append(page)
+    appendFixed2(sb.append(','), x)
+    appendFixed2(sb.append(','), y)
+    appendFixed2(sb.append(','), width)
+    appendFixed2(sb.append(','), height)
+    sb.toString
+  }
+
+  /** `%.2f` as `Formatter` prints it: the shortest decimal form
+    * (`Double.toString`) rounded half-up to two places (1.005 → 1.01,
+    * 0.125 → 0.13), a '-' on every negative value including -0.0 and
+    * those that round to 0.00, and `NaN` / `Infinity` as words. */
+  private def appendFixed2(sb: java.lang.StringBuilder, v: Double): Unit =
+    if (v.isNaN) sb.append("NaN")
+    else {
+      if (java.lang.Double.compare(v, 0.0) < 0) sb.append('-')
+      val a = math.abs(v)
+      if (a.isInfinite) sb.append("Infinity")
+      else {
+        val s = java.lang.Double.toString(a)
+        // plain "ddd.ddd" for 1e-3 <= a < 1e7, so the digits fit a long
+        val dot = if (s.indexOf('E') >= 0) -1 else s.indexOf('.')
+        if (dot < 0)
+          sb.append(new BigDecimal(s).setScale(2, RoundingMode.HALF_UP).toPlainString)
+        else {
+          var hundredths = 0L
+          var i = 0
+          while (i < dot) { hundredths = hundredths * 10 + (s.charAt(i) - '0'); i += 1 }
+          // Double.toString prints at least one fraction digit
+          hundredths = hundredths * 10 + (s.charAt(dot + 1) - '0')
+          hundredths = hundredths * 10 + (if (dot + 2 < s.length) s.charAt(dot + 2) - '0' else 0)
+          if (dot + 3 < s.length && s.charAt(dot + 3) >= '5') hundredths += 1
+          val frac = (hundredths % 100).toInt
+          sb.append(hundredths / 100).append('.')
+          if (frac < 10) sb.append('0')
+          sb.append(frac)
+        }
+      }
+    }
 
   /** ';'-joined list (tei/common.py:97-101); null when empty so a
     * missing attribute and an absent coordinate list are the same. */

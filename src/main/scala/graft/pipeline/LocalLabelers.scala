@@ -40,10 +40,53 @@ private[graft] object LocalLabelers {
   private val AckRe = Pattern.compile("(?i)^acknowledge?ments?$")
   private val AnnexRe = Pattern.compile("(?i)^(appendix|annex)$")
   private val RefsRe = Pattern.compile("(?i)^(references?|bibliography)$")
-  private val BareNum = Pattern.compile("^[0-9]+$")
-  private val NumPunct = Pattern.compile("^[0-9]+[.,:)]?$")
-  private val FigWord = Pattern.compile("^(Figure|Fig\\.?)$")
-  private val Markerish = Pattern.compile("^[0-9]+$|^[.)\\]\\[]$")
+
+  // The per-token patterns as char scans with the window labelers'
+  // rlike semantics (Java find(), null → false): they run on every
+  // token of every line, where a Matcher per call cost a tenth of the
+  // fold.
+
+  /** Java's `$` without MULTILINE at index i: the end of `s`, or
+    * before one final line terminator (\n, \r\n, \r, U+0085,
+    * U+2028, U+2029). */
+  private def endsAt(s: String, i: Int): Boolean = {
+    val n = s.length
+    if (i == n) true
+    else if (i == n - 1) {
+      val c = s.charAt(i)
+      (c == '\n' && (i == 0 || s.charAt(i - 1) != '\r')) || c == '\r' ||
+        c == '\u0085' || c == '\u2028' || c == '\u2029'
+    } else i == n - 2 && s.charAt(i) == '\r' && s.charAt(i + 1) == '\n'
+  }
+
+  private def leadingDigits(s: String): Int = {
+    var i = 0
+    while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+    i
+  }
+
+  /** `^[0-9]+$` */
+  private[graft] def bareNum(s: String): Boolean =
+    s != null && { val k = leadingDigits(s); k > 0 && endsAt(s, k) }
+
+  /** `^[0-9]+[.,:)]?$` */
+  private[graft] def numPunct(s: String): Boolean =
+    s != null && {
+      val k = leadingDigits(s)
+      k > 0 && (endsAt(s, k) ||
+        (k < s.length && ".,:)".indexOf(s.charAt(k)) >= 0 && endsAt(s, k + 1)))
+    }
+
+  /** `^(Figure|Fig\.?)$` */
+  private[graft] def figWord(s: String): Boolean =
+    s != null && s.startsWith("Fig") && (endsAt(s, 3) ||
+      (s.startsWith("Fig.") && endsAt(s, 4)) ||
+      (s.startsWith("Figure") && endsAt(s, 6)))
+
+  /** `^[0-9]+$|^[.)\]\[]$` */
+  private[graft] def markerish(s: String): Boolean =
+    bareNum(s) ||
+      (s != null && s.nonEmpty && ".)][".indexOf(s.charAt(0)) >= 0 && endsAt(s, 1))
 
   private def fontSize(t: TokenRow): Option[Double] =
     Option(t.font).flatMap(_.font_size)
@@ -129,8 +172,8 @@ private[graft] object LocalLabelers {
       val first = line.find(_.token_idx == 0).map(_.text).orNull
       val second = line.find(_.token_idx == 1).map(_.text).orNull
       val captionTag =
-        if (first == "Figure" && re(NumPunct, second)) "<figure>"
-        else if (first == "Table" && re(NumPunct, second)) "<table>"
+        if (first == "Figure" && numPunct(second)) "<figure>"
+        else if (first == "Table" && numPunct(second)) "<table>"
         else null
       var i = 0
       while (i < n) {
@@ -144,18 +187,18 @@ private[graft] object LocalLabelers {
         val label =
           if (captionTag != null)
             (if (idx == 0) "B-" else "I-") + captionTag
-          else if (idx > 0 && re(FigWord, text) && re(NumPunct, next))
+          else if (idx > 0 && figWord(text) && numPunct(next))
             "B-<figure_marker>"
-          else if (idx > 0 && text == "Table" && re(NumPunct, next))
+          else if (idx > 0 && text == "Table" && numPunct(next))
             "B-<table_marker>"
-          else if (idx > 1 && re(NumPunct, text) && re(FigWord, prev))
+          else if (idx > 1 && numPunct(text) && figWord(prev))
             "I-<figure_marker>"
-          else if (idx > 1 && re(NumPunct, text) && prev == "Table")
+          else if (idx > 1 && numPunct(text) && prev == "Table")
             "I-<table_marker>"
-          else if (text == "[" && re(BareNum, next) && next2 == "]")
+          else if (text == "[" && bareNum(next) && next2 == "]")
             "B-<citation_marker>"
-          else if ((prev == "[" && re(BareNum, text) && next == "]") ||
-              (text == "]" && re(BareNum, prev) && prev2 == "["))
+          else if ((prev == "[" && bareNum(text) && next == "]") ||
+              (text == "]" && bareNum(prev) && prev2 == "["))
             "I-<citation_marker>"
           else if (t.line_idx == 0) {
             if (idx == 0) "B-<section>" else "I-<section>"
@@ -177,12 +220,12 @@ private[graft] object LocalLabelers {
     lines(toks).foreach { line =>
       val first = line.find(_.token_idx == 0).map(_.text).orNull
       val second = line.find(_.token_idx == 1).map(_.text).orNull
-      val hasLabel = re(BareNum, first) ||
-        (first == "[" && re(BareNum, second))
+      val hasLabel = bareNum(first) ||
+        (first == "[" && bareNum(second))
       // min token_idx whose text is non-null and not marker-shaped
       // (window when(!markerish) skips null text the same way)
       val firstNonMarker = line.iterator
-        .filter(t => t.text != null && !re(Markerish, t.text))
+        .filter(t => t.text != null && !markerish(t.text))
         .map(_.token_idx).minOption
       line.foreach { t =>
         val idx = t.token_idx

@@ -745,9 +745,8 @@ object Processor {
   /** Graphic render text: `<type>|<page,x,y,w,h>[|<url>]`
     * (format_coordinates, tei/common.py:87-94; url when assets are
     * extracted, graphic.py:37-39). */
-  private def graphicText(g: GraphicIn, extractAssets: Boolean): String = {
-    val coords = "%d,%.2f,%.2f,%.2f,%.2f".formatLocal(java.util.Locale.US,
-      g.page_number, g.x, g.y, g.width, g.height)
+  private[graft] def graphicText(g: GraphicIn, extractAssets: Boolean): String = {
+    val coords = Coordinates.format(g.page_number, g.x, g.y, g.width, g.height)
     if (extractAssets) s"${g.graphic_type}|$coords|${g.graphic_id}"
     else s"${g.graphic_type}|$coords"
   }

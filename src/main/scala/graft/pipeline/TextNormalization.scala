@@ -6,13 +6,16 @@ package graft.pipeline
   * - ligature/quote/dash folding map: `sciencebeam_parser/utils/text.py:7-47`
   * - delimiter set: `sciencebeam_parser/utils/tokenizer.py:10-15`
   *
-  * JVM-side functions; used inside the ALTO reader's per-row parse
-  * (genuinely imperative, row-local work) — the relational surface uses
-  * built-in Catalyst string functions instead.
+  * JVM-side functions on the per-document path: the ALTO and PDF
+  * readers' normalize/retokenize chain, the PDF writer's text escape and
+  * the reference matcher's partial tokens — the relational surface uses
+  * built-in Catalyst string functions instead. Every function is a
+  * single char scan over lookup tables: they run once per layout token,
+  * where a `Pattern` per call dominated the parse.
   */
 object TextNormalization {
 
-  private val replacements: Map[Char, String] = Map(
+  private[graft] val replacements: Map[Char, String] = Map(
     '`' -> "'",
     'ﬀ' -> "ff", 'ﬁ' -> "fi", 'ﬂ' -> "fl",
     'ﬃ' -> "ffi", 'ﬄ' -> "ffl", 'ﬅ' -> "ft", 'ﬆ' -> "st",
@@ -27,56 +30,105 @@ object TextNormalization {
     '⦾' -> "•", '⦿' -> "•", '∗' -> "*",
   )
 
+  /** [[replacements]] indexed by char; null = kept as is. */
+  private val replacementTable: Array[String] = {
+    val t = new Array[String](replacements.keys.max + 1)
+    replacements.foreach { case (c, s) => t(c) = s }
+    t
+  }
+
+  /** Java's `(?U)\s` (Unicode White_Space): the Zs/Zl/Zp separators,
+    * U+0009–U+000D and U+0085. Python's `\s`, which the reference
+    * regexes use, also takes the thin space, NBSP and ideographic
+    * space; it is NOT `Character.isWhitespace`, which drops the
+    * no-break spaces and adds U+001C–U+001F. */
+  private[graft] def isSpace(c: Char): Boolean =
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r')
+    else c == '\u0085' || {
+      val t = Character.getType(c)
+      t == Character.SPACE_SEPARATOR || t == Character.LINE_SEPARATOR ||
+        t == Character.PARAGRAPH_SEPARATOR
+    }
+
   /** normalize_text (utils/text.py:55-65): fold chars, collapse
     * whitespace-around-newlines to '\n', collapse runs of whitespace.
+    * One scan: a maximal whitespace run containing '\n' becomes "\n",
+    * any other run of two or more chars becomes " ", a lone whitespace
+    * char is kept as it is (the reference's `\s*\n\s*` then `\s{2,}`).
+    * No folded char or replacement is whitespace, so folding and run
+    * collapsing do not interact.
     */
   def normalize(text: String): String = {
-    val sb = new StringBuilder(text.length)
-    text.foreach(c => sb.append(replacements.getOrElse(c, c.toString)))
-    // (?U): the reference regexes are Python's Unicode-aware \s (thin
-    // space, NBSP, ideographic space all collapse); Java's default \s
-    // is ASCII-only and would leave them behind
+    val n = text.length
+    val sb = new java.lang.StringBuilder(n)
+    var i = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      if (isSpace(c)) {
+        val start = i
+        var newline = false
+        while (i < n && isSpace(text.charAt(i))) {
+          if (text.charAt(i) == '\n') newline = true
+          i += 1
+        }
+        sb.append(if (newline) '\n' else if (i - start == 1) c else ' ')
+      } else {
+        val r = if (c < replacementTable.length) replacementTable(c) else null
+        if (r == null) sb.append(c) else sb.append(r)
+        i += 1
+      }
+    }
     sb.toString
-      .replaceAll("(?U)\\s*\\n\\s*", "\n")
-      .replaceAll("(?U)\\s{2,}", " ")
   }
 
   /** Delimiters (utils/tokenizer.py:10-15): DELFT/GROBID sets + common
     * affiliation markers.
     */
-  private val delimiters: String =
-    "\n\r\t\f ([ •*,:;?.!/#)-−–‐\"“”‘’'`$]*♦♥♣♠ @" +
+  private[graft] val delimiters: String =
+    "\n\r\t\f ([ •*,:;?.!/#)-−–‐\"“”‘’'`$]*♦♥♣♠ @" +
       "†‡§¶⁋ǂ"
 
-  private val delimiterRegex =
-    ("(?U)(" + delimiters.map(c => java.util.regex.Pattern.quote(c.toString)).mkString("|") +
-      "|\\s)").r
+  /** Each delimiter as its one-char part, indexed by char; null = not
+    * in [[delimiters]]. */
+  private val delimiterParts: Array[String] = {
+    val t = new Array[String](delimiters.max + 1)
+    delimiters.foreach(c => t(c) = c.toString)
+    t
+  }
 
   /** Blank in the Python `str.strip()` sense: Unicode whitespace
     * including the Zs spaces (NBSP, thin space) Java's `trim`/
     * `isWhitespace` alone would miss. */
-  private def isBlank(s: String): Boolean =
+  private[graft] def isBlank(s: String): Boolean =
     // U+0085 NEL: Python \s and (?U)\s both match it, but neither
     // Character.isWhitespace nor isSpaceChar does on the JVM
     s.forall(c => Character.isWhitespace(c) || Character.isSpaceChar(c) ||
       c == '\u0085')
 
-  /** iter_tokenized_tokens: regex split keeping the delimiters as
-    * tokens; whitespace-only tokens dropped unless `keepWhitespace`.
-    * The `(?U)` flag mirrors Python's Unicode `\s` — a thin-space
-    * (U+2009) separated pair must split, and the thin-space token must
-    * count as blank.
+  /** iter_tokenized_tokens: split keeping the delimiters as tokens —
+    * every delimiter and every `(?U)\s` char ([[isSpace]]; a
+    * thin-space (U+2009) separated pair must split, and the thin-space
+    * token must count as blank) is its own one-char part, the runs
+    * between them are the other parts; blank parts dropped unless
+    * `keepWhitespace`.
     */
   def tokenize(text: String, keepWhitespace: Boolean = false): List[String] = {
     val parts = scala.collection.mutable.ListBuffer.empty[String]
+    def add(p: String): Unit = if (keepWhitespace || !isBlank(p)) parts += p
+    val n = text.length
     var last = 0
-    for (m <- delimiterRegex.findAllMatchIn(text)) {
-      if (m.start > last) parts += text.substring(last, m.start)
-      parts += m.matched
-      last = m.end
+    var i = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      val d = if (c < delimiterParts.length) delimiterParts(c) else null
+      if (d != null || isSpace(c)) {
+        if (i > last) add(text.substring(last, i))
+        add(if (d != null) d else String.valueOf(c))
+        last = i + 1
+      }
+      i += 1
     }
-    if (last < text.length) parts += text.substring(last)
-    if (keepWhitespace) parts.toList
-    else parts.toList.filterNot(isBlank)
+    if (last < n) add(text.substring(last))
+    parts.toList
   }
 }
