@@ -273,9 +273,12 @@ object AltoReader {
   /** Retokenize one ALTO String token, pro-rating coordinates by char
     * offset (layout_document.py:159-212 `retokenize_layout_token`):
     * whitespace splits attach to the preceding token's `whitespace`.
+    * Blank is the reference's `str.strip()` test
+    * ([[TextNormalization.isBlank]]): an NBSP or thin-space part is
+    * whitespace, not a token (`String.trim` only strips <= U+0020).
     */
   private[sources] def retokenize(text: String, c: Coords): Seq[(String, String, Coords)] = {
-    if (text.trim.isEmpty) return Nil
+    if (TextNormalization.isBlank(text)) return Nil
     val parts = TextNormalization.tokenize(text, keepWhitespace = true)
     val totalLen = parts.map(_.length).sum.toDouble
     val out = ListBuffer.empty[(String, String, Coords)]
@@ -284,7 +287,7 @@ object AltoReader {
     var pendingOffset = 0
     var offset = 0
     parts.foreach { p =>
-      if (p.trim.isEmpty) {
+      if (TextNormalization.isBlank(p)) {
         pendingWs += p
         offset += p.length
       } else {

@@ -285,6 +285,17 @@ class PdfSpec extends SparkSuite {
       altoRows.map(t => (t.text, t.whitespace, t.token_idx)))
   }
 
+  test("Unicode whitespace inside a word is the preceding token's " +
+      "whitespace, as on the ALTO chain") {
+    val pdf = PdfWriter.build(Seq(Seq(
+      PTok("Fig.\u00a01", 50, 60, 10), PTok("\u00a0", 120, 60, 10),
+      PTok("end", 150, 60, 10))))
+    val rows = PdfReader.parseTokens(3L, pdf)
+    assert(rows.map(t => (t.text, t.whitespace)) ==
+      Seq(("Fig", ""), (".", "\u00a0"), ("1", " "), ("end", " ")),
+      rows.map(t => (t.text, t.whitespace)))
+  }
+
   test("Spark surface: tokens/tokensPermissive/quarantine/readDirectory " +
       "follow the AltoReader conventions") {
     val good = PdfWriter.documentPdf(

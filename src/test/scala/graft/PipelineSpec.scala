@@ -70,6 +70,25 @@ class PipelineSpec extends SparkSuite {
     assert(comma.coords.exists(c => math.abs(c.x - (118.0 + 48.0 * 5 / 8)) < 1e-9))
   }
 
+  test("retokenization: Unicode whitespace is the preceding token's " +
+      "whitespace, never a token (str.strip blank test)") {
+    def block0(a: String, title: String) =
+      AltoReader.parseAll(0L, altoXml.replace("CONTENT=\"A\"", s"CONTENT=\"$a\"")
+        .replace("CONTENT=\"Title\"", s"CONTENT=\"$title\""))._1
+        .filter(_.block_idx == 0).map(t => (t.text, t.whitespace))
+    // a lone NBSP survives normalize, then splits like the reference
+    assert(block0("A", "Fig.&#160;1") ==
+      Seq(("A", " "), ("Fig", ""), (".", "\u00a0"), ("1", " ")))
+    assert(block0("a&#8201;b", "c&#8239;d") ==
+      Seq(("a", "\u2009"), ("b", " "), ("c", "\u202f"), ("d", " ")))
+    // an NBSP-only CONTENT yields no token at all
+    assert(block0("&#160;", "Title") == Seq(("Title", " ")))
+    val one = AltoReader.parseAll(0L, altoXml.replace("CONTENT=\"Title\"",
+      "CONTENT=\"Fig.&#160;1\""))._1.filter(_.text == "1")
+    // "Fig.\u00a01" -> parts 3,1,1,1 over width 48: "1" starts at 5/6
+    assert(one.flatMap(_.coords).map(_.x) == Seq(118.0 + 48.0 * 5 / 6))
+  }
+
   test("corrupt ALTO: permissive parse skips, quarantine reports, strict throws") {
     val truncated = altoXml.take(altoXml.length / 2)
     val mixed = Seq((0L, altoXml), (1L, truncated)).toDS()
