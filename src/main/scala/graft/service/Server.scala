@@ -333,10 +333,10 @@ final class GraftService(
     * [[DocxReader]] (docx → PDF → tokens, the reference's converter
     * chain in-engine), anything else is ALTO XML. The page range prunes
     * at each parser; a malformed PDF/DOCX upload surfaces as
-    * IllegalArgumentException → 400. */
-  private def parseTokens(content: Array[Byte],
+    * IllegalArgumentException → 400. `docId` is the caller's
+    * [[docIdOf]], so an upload is hashed once per request. */
+  private def parseTokens(docId: Long, content: Array[Byte],
       params: Map[String, String]): Seq[TokenRow] = {
-    val docId = docIdOf(content)
     val (first, last) = pageBounds(params)
     if (isPdf(content)) PdfReader.parseTokens(docId, content, first, last)
     else if (DocxReader.isDocx(content))
@@ -348,7 +348,7 @@ final class GraftService(
   /** The token table of the model routes, which still run on Spark. */
   private def tokensOf(content: Array[Byte]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(parseTokens(content, Map.empty)).toDF()
+    spark.createDataset(parseTokens(docIdOf(content), content, Map.empty)).toDF()
   }
 
   /** One upload through the batch pipeline's per-document fold
@@ -370,10 +370,11 @@ final class GraftService(
         Processor.graphicsForMatchingLocal(toks, gfx),
         config.copy(extractGraphicAssets = true))
     val (first, last) = pageBounds(params)
-    if (!withAssets || DocxReader.isDocx(content))
-      (Processor.documentNodes(docIdOf(content), parseTokens(content, params),
+    if (!withAssets || DocxReader.isDocx(content)) {
+      val docId = docIdOf(content)
+      (Processor.documentNodes(docId, parseTokens(docId, content, params),
         Nil, config), Nil)
-    else if (isPdf(content)) {
+    } else if (isPdf(content)) {
       val docId = docIdOf(content)
       val (toks, gfx, pngs) =
         PdfReader.parseWithAssets(docId, content, first, last)
@@ -489,7 +490,7 @@ final class GraftService(
     val content = sourceContent(ex)
     val params = queryParams(ex)
     if (isPdf(content) || DocxReader.isDocx(content))
-      Response(200, AltoXml, AltoWriter.toAlto(parseTokens(content, params))
+      Response(200, AltoXml, AltoWriter.toAlto(parseTokens(docIdOf(content), content, params))
         .getBytes(StandardCharsets.UTF_8))
     else Response(200, AltoXml, content)
   }
