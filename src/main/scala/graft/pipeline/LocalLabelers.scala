@@ -110,21 +110,25 @@ private[graft] object LocalLabelers {
     * everything else body. */
   def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val titleBlock = titleBlockOf(toks)
-    val blockFirst: Map[(Int, Int), String] = toks.iterator
+    // the back-matter tag of each block, from its first token — matched
+    // once per block, not once per token of the block
+    val blockBack: Map[(Int, Int), String] = toks.iterator
       .filter(t => t.line_idx == 0 && t.token_idx == 0)
-      .map(t => (t.page_idx, t.block_idx) -> t.text).toMap
+      .map { t =>
+        val back =
+          if (re(AckRe, t.text)) "<acknowledgement>"
+          else if (re(AnnexRe, t.text)) "<annex>"
+          else if (re(RefsRe, t.text)) "<references>"
+          else null
+        (t.page_idx, t.block_idx) -> back
+      }.toMap
     toks.map { t =>
       val isFirst = t.line_idx == 0 && t.token_idx == 0
       val isHeader = t.page_idx == 0 && titleBlock.exists(tb => t.block_idx <= tb + 1)
-      val bf = blockFirst.get((t.page_idx, t.block_idx)).orNull
       val label =
         if (isHeader) { if (isFirst) "B-<header>" else "I-<header>" }
         else {
-          val back =
-            if (re(AckRe, bf)) "<acknowledgement>"
-            else if (re(AnnexRe, bf)) "<annex>"
-            else if (re(RefsRe, bf)) "<references>"
-            else null
+          val back = blockBack.getOrElse((t.page_idx, t.block_idx), null)
           if (back != null) (if (isFirst) "B-" else "I-") + back
           else if (isFirst) "B-<body>" else "I-<body>"
         }

@@ -267,6 +267,20 @@ object Processor {
     out.toList
   }
 
+  /** Content-id matching key: lower-cased, keeping only `[a-z0-9]`.
+    * One char scan, since it runs on every reference token. */
+  private[graft] def normKey(s: String): String = {
+    val lower = s.toLowerCase
+    val sb = new java.lang.StringBuilder(lower.length)
+    var i = 0
+    while (i < lower.length) {
+      val c = lower.charAt(i)
+      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) sb.append(c)
+      i += 1
+    }
+    sb.toString
+  }
+
   /** Local (per-document) matcher with [[RefMatching.matchContentIds]]
     * semantics (reference `processors/ref_matching.py:19-105` — the
     * reference, too, matches within one document at a time): exact
@@ -285,7 +299,6 @@ object Processor {
       citations: Seq[(Long, String)],
       candidates: Seq[(String, String)],
       partialCandidates: Seq[(String, String)] = Nil): Map[Long, String] = {
-    def normKey(s: String): String = s.toLowerCase.replaceAll("[^a-z0-9]", "")
     def prefixKey(s: String, n: Int = 1): String =
       s.split("\\s+").filter(_.nonEmpty).map { t =>
         normKey(if (t.exists(_.isDigit)) t else t.take(n))

@@ -161,6 +161,20 @@ class TextKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("Processor.normKey equals its replaceAll form on random mixed-case " +
+      "Unicode strings") {
+    def oracle(s: String): String = s.toLowerCase.replaceAll("[^a-z0-9]", "")
+    val alphabet = (('A' to 'Z') ++ ('a' to 'z') ++ ('0' to '9')).map(_.toString) ++
+      Seq("\u0130", "\u212a", "\u00df", "\u00c9", "\u03a3", "\ufb01", "-", ".",
+        " ", "\u00a0", "\ud83d\ude00", "\u2019")
+    val rnd = new Random(5L)
+    (alphabet :+ "").foreach(s => assert(Processor.normKey(s) == oracle(s), show(s)))
+    (0 until 30000).foreach { _ =>
+      val s = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      assert(Processor.normKey(s) == oracle(s), show(s))
+    }
+  }
+
   test("LocalLabelers token predicates equal their Pattern.find forms on " +
       "random digit/punctuation/Fig/line-terminator strings") {
     val alphabet = IndexedSeq("0", "7", "12", ".", ",", ":", ")", "(", "]", "[",
