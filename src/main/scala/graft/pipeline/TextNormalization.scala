@@ -38,10 +38,10 @@ object TextNormalization {
   }
 
   /** Java's `(?U)\s` (Unicode White_Space): the Zs/Zl/Zp separators,
-    * U+0009–U+000D and U+0085. Python's `\s`, which the reference
-    * regexes use, also takes the thin space, NBSP and ideographic
-    * space; it is NOT `Character.isWhitespace`, which drops the
-    * no-break spaces and adds U+001C–U+001F. */
+    * U+0009–U+000D and U+0085. Like the reference regexes' Python `\s`
+    * it takes the thin space, NBSP and ideographic space, which Java's
+    * default `\s` does not; it is NOT `Character.isWhitespace`, which
+    * drops the no-break spaces and adds U+001C–U+001F. */
   private[graft] def isSpace(c: Char): Boolean =
     if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r')
     else c == '\u0085' || {
