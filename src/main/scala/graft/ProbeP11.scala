@@ -71,7 +71,7 @@ object ProbeP11 {
           walk(qe.executedPlan, 0)
         }
         val modelFile = new java.io.File(
-          new java.io.File(sys.props("java.io.tmpdir"),
+          new java.io.File(graft.queries.ScaleOps.servedRoot,
             "graft-p11-crf-" + graft.queries.ScaleOps.stateKeyDigest(sfDir)),
           "model.wapiti.gz")
         val labeled = t("label construct") {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.util.regex.Pattern
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ListBuffer
 
 /** Per-document (driver-free, executor-local) forms of the rule
@@ -22,16 +23,85 @@ import scala.collection.mutable.ListBuffer
   */
 private[graft] object LocalLabelers {
 
+  private val DocOrder: java.util.Comparator[TokenRow] = (a, b) => {
+    var c = Integer.compare(a.page_idx, b.page_idx)
+    if (c == 0) c = Integer.compare(a.block_idx, b.block_idx)
+    if (c == 0) c = Integer.compare(a.line_idx, b.line_idx)
+    if (c == 0) c = Integer.compare(a.token_idx, b.token_idx)
+    c
+  }
+
   /** Document-order sort — the order every labeler window used
-    * (`orderBy(page_idx, block_idx, line_idx, token_idx)`). */
-  def ordered(tokens: Seq[TokenRow]): IndexedSeq[TokenRow] =
-    tokens.sortBy(t => (t.page_idx, t.block_idx, t.line_idx, t.token_idx))
-      .toIndexedSeq
+    * (`orderBy(page_idx, block_idx, line_idx, token_idx)`). A stable
+    * sort, so tokens with equal keys keep their input order. */
+  def ordered(tokens: Seq[TokenRow]): IndexedSeq[TokenRow] = {
+    val arr = tokens.toArray
+    java.util.Arrays.sort(arr, DocOrder)
+    ArraySeq.unsafeWrapArray(arr)
+  }
+
+  /** A tag's two BIO labels, built once instead of per token. */
+  private final class Bio(tag: String) {
+    val b: String = "B-" + tag
+    val i: String = "I-" + tag
+    def apply(first: Boolean): String = if (first) b else i
+  }
+  private val Header = new Bio("<header>")
+  private val Body = new Bio("<body>")
+  private val Acknowledgement = new Bio("<acknowledgement>")
+  private val Annex = new Bio("<annex>")
+  private val References = new Bio("<references>")
+  private val Title = new Bio("<title>")
+  private val Author = new Bio("<author>")
+  private val Figure = new Bio("<figure>")
+  private val Table = new Bio("<table>")
+  private val FigureMarker = new Bio("<figure_marker>")
+  private val TableMarker = new Bio("<table_marker>")
+  private val CitationMarker = new Bio("<citation_marker>")
+  private val Section = new Bio("<section>")
+  private val Paragraph = new Bio("<paragraph>")
+  private val Label = new Bio("<label>")
+  private val Reference = new Bio("<reference>")
+
+  /** The labels above mapped to their tags, so stripping one of them
+    * is a lookup, not a substring. */
+  private val TagOf: java.util.HashMap[String, String] = {
+    val m = new java.util.HashMap[String, String]
+    Seq(Header, Body, Acknowledgement, Annex, References, Title, Author,
+      Figure, Table, FigureMarker, TableMarker, CitationMarker, Section,
+      Paragraph, Label, Reference).foreach { t =>
+      m.put(t.b, t.b.substring(2)); m.put(t.i, t.i.substring(2))
+    }
+    m
+  }
 
   /** strip_tag_prefix (utils/labels.py:4-8; BioSpans.strippedTag). */
-  def stripTag(label: String): String =
-    if (label.startsWith("B-") || label.startsWith("I-")) label.substring(2)
+  def stripTag(label: String): String = {
+    val known = TagOf.get(label)
+    if (known != null) known
+    else if (label.startsWith("B-") || label.startsWith("I-")) label.substring(2)
     else label
+  }
+
+  /** `stripTag(label) == tag`, without building the stripped string. */
+  private def hasTag(label: String, tag: String): Boolean =
+    if (label.startsWith("B-") || label.startsWith("I-"))
+      label.length == tag.length + 2 && label.startsWith(tag, 2)
+    else label == tag
+
+  /** The tokens of each of the distinct `tags`, in order, in one pass:
+    * `views(labeled, tags)(k)` is
+    * `labeled.collect { case (t, l) if stripTag(l) == tags(k) => t }`. */
+  def views(labeled: IndexedSeq[(TokenRow, String)],
+      tags: IndexedSeq[String]): IndexedSeq[IndexedSeq[TokenRow]] = {
+    val out = IndexedSeq.fill(tags.length)(ArraySeq.newBuilder[TokenRow])
+    labeled.foreach { case (t, l) =>
+      var k = 0
+      while (k < tags.length && !hasTag(l, tags(k))) k += 1
+      if (k < tags.length) out(k) += t
+    }
+    out.map(_.result())
+  }
 
   // rlike semantics: Java find() over the (anchored) pattern, null → false
   private def re(p: Pattern, s: String): Boolean =
@@ -88,21 +158,33 @@ private[graft] object LocalLabelers {
     bareNum(s) ||
       (s != null && s.nonEmpty && ".)][".indexOf(s.charAt(0)) >= 0 && endsAt(s, 1))
 
-  private def fontSize(t: TokenRow): Option[Double] =
-    Option(t.font).flatMap(_.font_size)
-
   /** The title-block anchor both font-driven labelers share: the
     * smallest block index on page 0 whose max font size equals the
     * document max (None when no token has a font size — the window
-    * `===` on nulls is never true). */
+    * `===` on nulls is never true). The max is `Double.compare`'s, as
+    * `Seq.max` takes it. */
   private def titleBlockOf(toks: IndexedSeq[TokenRow]): Option[Int] = {
-    val sizes = toks.flatMap(fontSize)
-    if (sizes.isEmpty) return None
-    val maxFs = sizes.max
-    val cands = toks.filter(t => t.page_idx == 0 && fontSize(t).contains(maxFs))
-      .map(_.block_idx)
+    var hasSize = false
+    var maxFs = 0.0
+    toks.foreach { t =>
+      if (t.font != null && t.font.font_size.isDefined) {
+        val fs = t.font.font_size.get
+        if (!hasSize || java.lang.Double.compare(maxFs, fs) < 0) maxFs = fs
+        hasSize = true
+      }
+    }
+    if (!hasSize) return None
     // block max == doc max iff SOME token in the block carries the max
-    if (cands.isEmpty) None else Some(cands.min)
+    var found = false
+    var block = 0
+    toks.foreach { t =>
+      if (t.page_idx == 0 && t.font != null && t.font.font_size.isDefined &&
+          t.font.font_size.get == maxFs && (!found || t.block_idx < block)) {
+        block = t.block_idx
+        found = true
+      }
+    }
+    if (found) Some(block) else None
   }
 
   /** [[SegmentationRuleLabeler]] fold twin: header = title block + its
@@ -110,31 +192,34 @@ private[graft] object LocalLabelers {
     * everything else body. */
   def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val titleBlock = titleBlockOf(toks)
-    // the back-matter tag of each block, from its first token — matched
-    // once per block, not once per token of the block
-    val blockBack: Map[(Int, Int), String] = toks.iterator
-      .filter(t => t.line_idx == 0 && t.token_idx == 0)
-      .map { t =>
+    // the back-matter tag of each (page, block), from its first token —
+    // matched once per block, not once per token of the block
+    val blockBack = new scala.collection.mutable.LongMap[Bio]
+    toks.foreach { t =>
+      if (t.line_idx == 0 && t.token_idx == 0) {
         val back =
-          if (re(AckRe, t.text)) "<acknowledgement>"
-          else if (re(AnnexRe, t.text)) "<annex>"
-          else if (re(RefsRe, t.text)) "<references>"
+          if (re(AckRe, t.text)) Acknowledgement
+          else if (re(AnnexRe, t.text)) Annex
+          else if (re(RefsRe, t.text)) References
           else null
-        (t.page_idx, t.block_idx) -> back
-      }.toMap
+        blockBack.update(blockKey(t), back)
+      }
+    }
     toks.map { t =>
       val isFirst = t.line_idx == 0 && t.token_idx == 0
       val isHeader = t.page_idx == 0 && titleBlock.exists(tb => t.block_idx <= tb + 1)
       val label =
-        if (isHeader) { if (isFirst) "B-<header>" else "I-<header>" }
+        if (isHeader) Header(isFirst)
         else {
-          val back = blockBack.getOrElse((t.page_idx, t.block_idx), null)
-          if (back != null) (if (isFirst) "B-" else "I-") + back
-          else if (isFirst) "B-<body>" else "I-<body>"
+          val back = blockBack.getOrNull(blockKey(t))
+          if (back != null) back(isFirst) else Body(isFirst)
         }
       (t, label)
     }
   }
+
+  private def blockKey(t: TokenRow): Long =
+    (t.page_idx.toLong << 32) | (t.block_idx & 0xffffffffL)
 
   /** [[RuleLabeler]] fold twin (header-stage): title block → title,
     * successor → author, rest O — computed over the view's tokens. */
@@ -143,122 +228,116 @@ private[graft] object LocalLabelers {
     toks.map { t =>
       val isFirst = t.line_idx == 0 && t.token_idx == 0
       val label = titleBlock match {
-        case Some(tb) if t.page_idx == 0 && t.block_idx == tb =>
-          if (isFirst) "B-<title>" else "I-<title>"
-        case Some(tb) if t.page_idx == 0 && t.block_idx == tb + 1 =>
-          if (isFirst) "B-<author>" else "I-<author>"
+        case Some(tb) if t.page_idx == 0 && t.block_idx == tb => Title(isFirst)
+        case Some(tb) if t.page_idx == 0 && t.block_idx == tb + 1 => Author(isFirst)
         case _ => "O"
       }
       (t, label)
     }
   }
 
-  /** Consecutive same-line runs of a document-ordered token seq. */
-  private def lines(toks: IndexedSeq[TokenRow]): Iterator[IndexedSeq[TokenRow]] =
-    new Iterator[IndexedSeq[TokenRow]] {
-      private var i = 0
-      def hasNext: Boolean = i < toks.length
-      def next(): IndexedSeq[TokenRow] = {
-        val start = i
-        val k = (toks(i).page_idx, toks(i).block_idx, toks(i).line_idx)
-        while (i < toks.length &&
-          (toks(i).page_idx, toks(i).block_idx, toks(i).line_idx) == k) i += 1
-        toks.slice(start, i)
-      }
+  /** Calls `f(start, end)` for each consecutive same-line run
+    * `toks[start, end)` of a document-ordered token seq. */
+  private def foreachLine(toks: IndexedSeq[TokenRow])(f: (Int, Int) => Unit): Unit = {
+    var i = 0
+    while (i < toks.length) {
+      val start = i
+      val t0 = toks(i)
+      i += 1
+      while (i < toks.length && {
+          val t = toks(i)
+          t.line_idx == t0.line_idx && t.block_idx == t0.block_idx &&
+            t.page_idx == t0.page_idx
+        }) i += 1
+      f(start, i)
     }
+  }
+
+  /** The text of the first token of `toks[start, end)` with token index
+    * `idx`, or null. */
+  private def textAt(toks: IndexedSeq[TokenRow], start: Int, end: Int,
+      idx: Int): String = {
+    var i = start
+    while (i < end && toks(i).token_idx != idx) i += 1
+    if (i < end) toks(i).text else null
+  }
 
   /** [[BodyRuleLabeler]] fold twin — caption lines, figure/table and
     * bracket citation markers, first-line section headings. */
   def bodyRuleLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
-    val out = new ListBuffer[(TokenRow, String)]
-    lines(toks).foreach { line =>
-      val n = line.length
-      val first = line.find(_.token_idx == 0).map(_.text).orNull
-      val second = line.find(_.token_idx == 1).map(_.text).orNull
-      val captionTag =
-        if (first == "Figure" && numPunct(second)) "<figure>"
-        else if (first == "Table" && numPunct(second)) "<table>"
+    val out = new Array[(TokenRow, String)](toks.length)
+    foreachLine(toks) { (start, end) =>
+      val first = textAt(toks, start, end, 0)
+      val second = textAt(toks, start, end, 1)
+      val caption =
+        if (first == "Figure" && numPunct(second)) Figure
+        else if (first == "Table" && numPunct(second)) Table
         else null
-      var i = 0
-      while (i < n) {
-        val t = line(i)
+      var i = start
+      while (i < end) {
+        val t = toks(i)
         val idx = t.token_idx
         val text = t.text
-        val next = if (i + 1 < n) line(i + 1).text else null
-        val next2 = if (i + 2 < n) line(i + 2).text else null
-        val prev = if (i > 0) line(i - 1).text else null
-        val prev2 = if (i > 1) line(i - 2).text else null
+        val next = if (i + 1 < end) toks(i + 1).text else null
+        val next2 = if (i + 2 < end) toks(i + 2).text else null
+        val prev = if (i > start) toks(i - 1).text else null
+        val prev2 = if (i > start + 1) toks(i - 2).text else null
         val label =
-          if (captionTag != null)
-            (if (idx == 0) "B-" else "I-") + captionTag
-          else if (idx > 0 && figWord(text) && numPunct(next))
-            "B-<figure_marker>"
-          else if (idx > 0 && text == "Table" && numPunct(next))
-            "B-<table_marker>"
-          else if (idx > 1 && numPunct(text) && figWord(prev))
-            "I-<figure_marker>"
-          else if (idx > 1 && numPunct(text) && prev == "Table")
-            "I-<table_marker>"
-          else if (text == "[" && bareNum(next) && next2 == "]")
-            "B-<citation_marker>"
+          if (caption != null) caption(idx == 0)
+          else if (idx > 0 && figWord(text) && numPunct(next)) FigureMarker.b
+          else if (idx > 0 && text == "Table" && numPunct(next)) TableMarker.b
+          else if (idx > 1 && numPunct(text) && figWord(prev)) FigureMarker.i
+          else if (idx > 1 && numPunct(text) && prev == "Table") TableMarker.i
+          else if (text == "[" && bareNum(next) && next2 == "]") CitationMarker.b
           else if ((prev == "[" && bareNum(text) && next == "]") ||
               (text == "]" && bareNum(prev) && prev2 == "["))
-            "I-<citation_marker>"
-          else if (t.line_idx == 0) {
-            if (idx == 0) "B-<section>" else "I-<section>"
-          } else {
-            if (idx == 0) "B-<paragraph>" else "I-<paragraph>"
-          }
-        out += ((t, label))
+            CitationMarker.i
+          else if (t.line_idx == 0) Section(idx == 0)
+          else Paragraph(idx == 0)
+        out(i) = (t, label)
         i += 1
       }
     }
-    out.toIndexedSeq
+    ArraySeq.unsafeWrapArray(out)
   }
 
   /** [[ReferenceSegmenterRuleLabeler]] fold twin — leading numeric
     * marker run (`1.`, `[1]`, `2)`) → label, rest of line → reference. */
   def referenceSegmenterLabels(
       toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
-    val out = new ListBuffer[(TokenRow, String)]
-    lines(toks).foreach { line =>
-      val first = line.find(_.token_idx == 0).map(_.text).orNull
-      val second = line.find(_.token_idx == 1).map(_.text).orNull
+    val out = new Array[(TokenRow, String)](toks.length)
+    foreachLine(toks) { (start, end) =>
+      val first = textAt(toks, start, end, 0)
+      val second = textAt(toks, start, end, 1)
       val hasLabel = bareNum(first) ||
         (first == "[" && bareNum(second))
       // min token_idx whose text is non-null and not marker-shaped
       // (window when(!markerish) skips null text the same way)
-      val firstNonMarker = line.iterator
-        .filter(t => t.text != null && !markerish(t.text))
-        .map(_.token_idx).minOption
-      line.foreach { t =>
+      var hasNonMarker = false
+      var firstNonMarker = 0
+      var i = start
+      while (i < end) {
+        val t = toks(i)
+        if (t.text != null && !markerish(t.text) &&
+            (!hasNonMarker || t.token_idx < firstNonMarker)) {
+          hasNonMarker = true
+          firstNonMarker = t.token_idx
+        }
+        i += 1
+      }
+      i = start
+      while (i < end) {
+        val t = toks(i)
         val idx = t.token_idx
         val label =
-          if (hasLabel && firstNonMarker.forall(idx < _)) {
-            if (idx == 0) "B-<label>" else "I-<label>"
-          } else if (hasLabel) {
-            if (firstNonMarker.contains(idx)) "B-<reference>" else "I-<reference>"
-          } else {
-            if (idx == 0) "B-<reference>" else "I-<reference>"
-          }
-        out += ((t, label))
+          if (hasLabel && (!hasNonMarker || idx < firstNonMarker)) Label(idx == 0)
+          else if (hasLabel) Reference(idx == firstNonMarker)
+          else Reference(idx == 0)
+        out(i) = (t, label)
+        i += 1
       }
     }
-    out.toIndexedSeq
-  }
-
-  /** [[BioSpans.assignSpanIds]] fold twin: running span ids (1-based)
-    * over a document-ordered labeled seq. */
-  def assignSpanIdsLocal(
-      labeled: IndexedSeq[(TokenRow, String)]): IndexedSeq[(TokenRow, String, Long)] = {
-    var spanId = 0L
-    var prevTag: String = null
-    labeled.map { case (t, label) =>
-      val tag = stripTag(label)
-      if (spanId == 0L || label.startsWith("B-") || tag != prevTag) spanId += 1
-      prevTag = tag
-      (t, tag, spanId)
-    }
+    ArraySeq.unsafeWrapArray(out)
   }
 
   /** [[BioSpans.spans]] fold twin: collapse to ordered spans with

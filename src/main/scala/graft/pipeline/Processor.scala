@@ -363,18 +363,24 @@ object Processor {
     * `<ref target="#fig_N">`). Figures and tables are matched
     * separately, as the reference does.
     */
+  private val NodeIdOrder: java.util.Comparator[SemanticNode] =
+    (a, b) => java.lang.Long.compare(a.node_id, b.node_id)
+
   private[pipeline] def assignIdsAndTargets(
       nodes: Seq[SemanticNode]): Seq[SemanticNode] = {
     var figN = 0
     var tabN = 0
-    val withIds = nodes.sortBy(_.node_id).map { n =>
+    val byNodeId = nodes.toArray
+    java.util.Arrays.sort(byNodeId, NodeIdOrder)
+    val withIds = scala.collection.immutable.ArraySeq.unsafeWrapArray(byNodeId).map { n =>
       n.node_type match {
         case "figure" => val id = s"fig_$figN"; figN += 1; n.copy(content_id = id)
         case "table" => val id = s"tab_$tabN"; tabN += 1; n.copy(content_id = id)
         case _ => n
       }
     }
-    val byId = withIds.map(n => n.node_id -> n).toMap
+    val byId = new scala.collection.mutable.LongMap[SemanticNode](withIds.length)
+    withIds.foreach(n => byId.update(n.node_id, n))
     def labelsOf(targetType: String): Seq[(String, String)] =
       withIds.filter(_.node_type == "label").flatMap { l =>
         byId.get(l.parent_id).filter(_.node_type == targetType)
@@ -555,26 +561,31 @@ object Processor {
     * labeling the fulltext fold consumed (one pass, and the candidate
     * numbering provably matches the node numbering).
     */
+  /** The segmentation tags [[processTokensLocalWithBody]] splits into
+    * views, in the order it destructures them. */
+  private val SegmentationViews = IndexedSeq("<header>", "<body>",
+    "<acknowledgement>", "<annex>", "<references>")
+
   private[pipeline] def processTokensLocalWithBody(docId: Long,
       toks: Seq[TokenRow], config: Config):
       (Seq[SemanticNode], IndexedSeq[(TokenRow, String)]) = {
     val ordered = LocalLabelers.ordered(toks)
     val seg = LocalLabelers.segmentationLabels(ordered)
-    def view(tag: String): IndexedSeq[TokenRow] =
-      seg.collect { case (t, l) if LocalLabelers.stripTag(l) == tag => t }
+    val IndexedSeq(headerView, bodyView, ackView, annexView, refsView) =
+      LocalLabelers.views(seg, SegmentationViews)
 
     val headerNodes = processDocument(docId, Extractors.headerFold(docId,
-      LocalLabelers.spansLocal(LocalLabelers.headerRuleLabels(view("<header>")))),
+      LocalLabelers.spansLocal(LocalLabelers.headerRuleLabels(headerView))),
       config)
-    val bodyLabeled = LocalLabelers.bodyRuleLabels(view("<body>"))
+    val bodyLabeled = LocalLabelers.bodyRuleLabels(bodyView)
     val bodyNodes = figureTablePass(docId, ModelExtractors.fulltextFold(docId,
       LocalLabelers.spansLocal(bodyLabeled), "body")).map(shiftIds(_, BodyIdOffset))
-    val ackNodes = fulltextViewLocal(docId, view("<acknowledgement>"),
+    val ackNodes = fulltextViewLocal(docId, ackView,
       "acknowledgement", 2 * BodyIdOffset)
-    val annexNodes = fulltextViewLocal(docId, view("<annex>"),
+    val annexNodes = fulltextViewLocal(docId, annexView,
       "annex", 3 * BodyIdOffset)
     val refSpans = LocalLabelers.spansLocal(
-      LocalLabelers.referenceSegmenterLabels(view("<references>")))
+      LocalLabelers.referenceSegmenterLabels(refsView))
     val refNodes = citationNamePass(docId,
       citationPass(docId, ModelExtractors.referenceSegmenterFold(docId, refSpans)),
       config).map(shiftIds(_, 4 * BodyIdOffset))
@@ -700,22 +711,38 @@ object Processor {
     */
   private[pipeline] def figureCandidatesLocal(docId: Long,
       bodyLabeled: IndexedSeq[(TokenRow, String)]): Seq[CandidateRow] = {
-    val withIds = LocalLabelers.assignSpanIdsLocal(bodyLabeled)
-    val kept = withIds.filter { case (t, tag, _) =>
-      (tag == "<figure>" || tag == "<table>") &&
-        t.coords.isDefined && t.page_width.isDefined
+    // each figure/table span's tokens with coordinates and page size,
+    // in span order; spans split where BioSpans.assignSpanIds starts a
+    // new span id (a B- label or a tag change)
+    val kept = scala.collection.mutable.ListBuffer.empty[(String, List[TokenRow])]
+    var open = false
+    var spanTag: String = null
+    var spanToks = List.empty[TokenRow]
+    def close(): Unit = if (spanToks.nonEmpty) {
+      kept += ((spanTag, spanToks.reverse))
+      spanToks = Nil
     }
+    bodyLabeled.foreach { case (t, label) =>
+      val tag = LocalLabelers.stripTag(label)
+      if (!open || label.startsWith("B-") || tag != spanTag) {
+        close()
+        open = true
+        spanTag = tag
+      }
+      if ((tag == "<figure>" || tag == "<table>") &&
+          t.coords.isDefined && t.page_width.isDefined) spanToks = t :: spanToks
+    }
+    close()
     var figN = 0
     var tabN = 0
-    kept.groupBy(_._3).toSeq.sortBy(_._1).map { case (_, ts) =>
-      val tag = ts.head._2
-      val cs = ts.map(_._1.coords.get)
+    kept.toList.map { case (tag, ts) =>
+      val cs = ts.map(_.coords.get)
       val x = cs.map(_.x).min
       val y = cs.map(_.y).min
       val x2 = cs.map(c => c.x + c.width).max
       val y2 = cs.map(c => c.y + c.height).max
-      val pg = ts.map(t => (t._1.page_number, t._1.page_width.get,
-        t._1.page_height.getOrElse(0.0))).min
+      val pg = ts.map(t => (t.page_number, t.page_width.get,
+        t.page_height.getOrElse(0.0))).min
       val cid =
         if (tag == "<figure>") { val c = s"fig_$figN"; figN += 1; c }
         else { val c = s"tab_$tabN"; tabN += 1; c }
@@ -787,8 +814,17 @@ object Processor {
     * join on `page_number` is inner, and graphics without coords drop. */
   private[graft] def graphicsForMatchingLocal(tokens: Seq[TokenRow],
       graphicRows: Seq[GraphicRow]): Seq[GraphicIn] = {
-    val pageDims = tokens.filter(_.page_width.isDefined)
-      .groupBy(_.page_number).view.mapValues(_.head).toMap
+    if (graphicRows.isEmpty) return Nil
+    // the first token with a width on each page a graphic is on
+    val pages = graphicRows.map(_.page_number).toSet
+    val pageDims = new scala.collection.mutable.LongMap[TokenRow]
+    val it = tokens.iterator
+    while (pageDims.size < pages.size && it.hasNext) {
+      val t = it.next()
+      if (t.page_width.isDefined && pages(t.page_number) &&
+          !pageDims.contains(t.page_number))
+        pageDims.update(t.page_number, t)
+    }
     for {
       g <- graphicRows
       c <- g.coords

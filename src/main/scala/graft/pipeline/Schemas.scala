@@ -58,18 +58,6 @@ final case class GraphicRow(
     coords: Option[Coords],
     related_block_idx: Option[Int])
 
-/** Labeled BIO span over the token table (models/model.py:61-79). */
-final case class SpanRow(
-    doc_id: Long,
-    span_id: Long,
-    tag: String,
-    text: String,
-    first_page_idx: Int,
-    first_block_idx: Int,
-    first_line_idx: Int,
-    first_token_idx: Int,
-    n_tokens: Long)
-
 /** Flattened semantic-document node (semantic_document.py §1.2 mapping):
   * adjacency rows instead of the reference's mutable tree.
   */

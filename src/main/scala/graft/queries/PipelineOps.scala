@@ -465,23 +465,16 @@ object PipelineOps {
     import graft.pipeline.{BioSpans, CrfLabeler, CrfTrainer, RuleLabeler}
     val lines = graft.pipeline.HeaderFeatures.dataLines(tokenTable(s, d))
       .withColumnRenamed("data_line", "features")
-    val modelFile = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-p11-crf-" + graft.queries.ScaleOps.stateKeyDigest(d)),
-      "model.wapiti.gz")
-    if (!modelFile.exists()) {
+    val modelFile = new java.io.File(ScaleOps.servedState(
+        "graft-p11-crf-" + ScaleOps.stateKeyDigest(d)) { dir =>
       val trained = CrfTrainer.train(new RuleLabeler().label(lines),
         P11Templates, epochs = 8)
-      modelFile.getParentFile.mkdirs()
-      val tmp = new java.io.File(modelFile.getParentFile,
-        s".model-${java.util.UUID.randomUUID()}.tmp")
       val out = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(tmp))
+        new java.io.FileOutputStream(new java.io.File(dir, "model.wapiti.gz")))
       try out.write(graft.pipeline.CrfModel.toWapitiNative(trained.model)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      if (!tmp.renameTo(modelFile)) tmp.delete()
-    }
+    }, "model.wapiti.gz")
     val labeled = CrfLabeler.fromFile(modelFile.getPath).label(lines)
     BioSpans.spans(labeled)
       .groupBy("doc_id")
@@ -508,16 +501,9 @@ object PipelineOps {
   private[graft] def aviFixture(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Multimodal
     val key = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    val dest = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft-p16-avi-$key.parquet")
-    if (!dest.exists()) {
-      val tmp = new java.io.File(dest.getParentFile,
-        dest.getName + s".tmp-${System.nanoTime()}")
+    val dest = ScaleOps.servedState(s"graft-p16-avi-$key.parquet") { dir =>
       Multimodal.aviFromDocuments(Tables(s, d).documents)
-        .toDF().write.mode("overwrite").parquet(tmp.getPath)
-      if (!tmp.renameTo(dest) && !dest.exists())
-        throw new java.io.IOException(s"cannot move fixture to $dest")
-      if (tmp.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+        .toDF().write.mode("overwrite").parquet(dir.getPath)
     }
     s.read.parquet(dest.getPath)
   }
@@ -607,29 +593,22 @@ object PipelineOps {
   /** Shared p17b/p18b sign-time state: the flagged signature table
     * plus its cap BOOKKEEPING (over-cap chunk list + star keepers),
     * built once per scale dir — a delivery then broadcasts/scans them
-    * instead of re-aggregating the corpus (the q102b discipline; all
-    * three tables gate on their own _SUCCESS, any missing marker
-    * rebuilds all). */
+    * instead of re-aggregating the corpus (the q102b discipline: the
+    * three tables are published together by [[ScaleOps.servedState]]). */
   private def flaggedSigState(s: SparkSession, d: String, tag: String,
       build: () => DataFrame): (DataFrame, DataFrame, DataFrame) = {
     import graft.operators.Multimodal
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-$tag-idx-" + graft.queries.ScaleOps.stateKeyDigest(d))
-    val sigsDir = new java.io.File(stateDir, "sigs").getPath
-    val chunksDir = new java.io.File(stateDir, "chunks").getPath
-    val keepersDir = new java.io.File(stateDir, "keepers").getPath
-    val committed = Seq(sigsDir, chunksDir, keepersDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
-      build().write.mode("overwrite").parquet(sigsDir)
-      val signed = s.read.parquet(sigsDir)
+    val stateDir = ScaleOps.servedState(
+        s"graft-$tag-idx-" + ScaleOps.stateKeyDigest(d)) { dir =>
+      build().write.mode("overwrite").parquet(s"$dir/sigs")
+      val signed = s.read.parquet(s"$dir/sigs")
       Multimodal.flaggedOverCapChunks(signed)
-        .write.mode("overwrite").parquet(chunksDir)
+        .write.mode("overwrite").parquet(s"$dir/chunks")
       Multimodal.flaggedSignatureKeepers(signed)
-        .write.mode("overwrite").parquet(keepersDir)
+        .write.mode("overwrite").parquet(s"$dir/keepers")
     }
-    (s.read.parquet(sigsDir), s.read.parquet(chunksDir),
-      s.read.parquet(keepersDir))
+    (s.read.parquet(s"$stateDir/sigs"), s.read.parquet(s"$stateDir/chunks"),
+      s.read.parquet(s"$stateDir/keepers"))
   }
 
   /** P18b audio dedup ACROSS a stored fingerprint index (rows-only):
@@ -668,22 +647,19 @@ object PipelineOps {
     import s.implicits._
     import graft.operators.Multimodal
     val orig = aviFixture(s, d).as[Multimodal.MediaRow]
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-p19-idx-" + graft.queries.ScaleOps.stateKeyDigest(d))
-    val framesDir = new java.io.File(stateDir, "frames").getPath
-    val sizesDir = new java.io.File(stateDir, "sizes").getPath
-    val dfsDir = new java.io.File(stateDir, "dfs").getPath
-    val committed = Seq(framesDir, sizesDir, dfsDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = ScaleOps.servedState(
+        "graft-p19-idx-" + ScaleOps.stateKeyDigest(d)) { dir =>
       Multimodal.videoFrameIndex(orig)
-        .write.mode("overwrite").parquet(framesDir)
-      val signed = s.read.parquet(framesDir)
+        .write.mode("overwrite").parquet(s"$dir/frames")
+      val signed = s.read.parquet(s"$dir/frames")
       Multimodal.videoFrameSizes(signed)
-        .write.mode("overwrite").parquet(sizesDir)
+        .write.mode("overwrite").parquet(s"$dir/sizes")
       Multimodal.videoFrameDfs(signed)
-        .write.mode("overwrite").parquet(dfsDir)
+        .write.mode("overwrite").parquet(s"$dir/dfs")
     }
+    val framesDir = s"$stateDir/frames"
+    val sizesDir = s"$stateDir/sizes"
+    val dfsDir = s"$stateDir/dfs"
     val delivery = orig.filter((m: Multimodal.MediaRow) => m.doc_id % 7 == 0)
       .map(m => m.copy(doc_id = m.doc_id + 10000000L,
         content = Multimodal.remuxAvi(m.content, fps = 8)))
@@ -755,27 +731,17 @@ object PipelineOps {
     val featDim = 64
     val lines = graft.pipeline.HeaderFeatures.dataLines(tokenTable(s, d))
       .withColumnRenamed("data_line", "features")
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-p21-onnx-" + graft.queries.ScaleOps.stateKeyDigest(d))
-    val modelFile = new java.io.File(stateDir, "model.onnx")
-    val labelsFile = new java.io.File(stateDir, "labels.txt")
-    if (!modelFile.exists() || !labelsFile.exists()) {
+    val stateDir = ScaleOps.servedState(
+        "graft-p21-onnx-" + ScaleOps.stateKeyDigest(d)) { dir =>
       val (labels, bytes) = NeuralTrainer.trainDenseHead(
         new RuleLabeler().label(lines),
         NeuralLabeler.positionalHashingEncoder(featDim), featDim)
-      stateDir.mkdirs()
-      // labels land first, model last: the model file is the commit
-      // marker the reader checks
-      val tmpL = new java.io.File(stateDir,
-        s".labels-${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmpL.toPath,
+      java.nio.file.Files.write(new java.io.File(dir, "labels.txt").toPath,
         labels.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      if (!tmpL.renameTo(labelsFile)) tmpL.delete()
-      val tmpM = new java.io.File(stateDir,
-        s".model-${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmpM.toPath, bytes)
-      if (!tmpM.renameTo(modelFile)) tmpM.delete()
+      java.nio.file.Files.write(new java.io.File(dir, "model.onnx").toPath, bytes)
     }
+    val modelFile = new java.io.File(stateDir, "model.onnx")
+    val labelsFile = new java.io.File(stateDir, "labels.txt")
     val labels = new String(
       java.nio.file.Files.readAllBytes(labelsFile.toPath),
       java.nio.charset.StandardCharsets.UTF_8).split("\n").toIndexedSeq
@@ -819,10 +785,7 @@ object PipelineOps {
     import s.implicits._
     import graft.sources.WarcReader
     val docs = Tables(s, d).documents.select("doc_id", "source", "text")
-    val fixDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-p22-warc2-" + graft.queries.ScaleOps.stateKeyDigest(d))
-    if (!new java.io.File(fixDir, "_SUCCESS").exists()) {
-      fixDir.mkdirs()
+    ScaleOps.servedState("graft-p22-warc2-" + ScaleOps.stateKeyDigest(d)) { fixDir =>
       val dirPath = fixDir.getPath
       docs.repartition(8, pmod(col("doc_id"), lit(8)))
         .as[(Long, String, String)]
@@ -843,19 +806,12 @@ object PipelineOps {
             }
             val bytes = WarcReader.buildWarcGz(s"part-${rows.head._1}",
               responses)
-            val f = new java.io.File(dirPath,
-              s"part-${rows.head._1}.warc.gz")
-            val tmp = new java.io.File(dirPath,
-              f.getName + s".tmp-${java.util.UUID.randomUUID()}")
-            java.nio.file.Files.write(tmp.toPath, bytes)
-            if (!tmp.renameTo(f)) tmp.delete()
+            java.nio.file.Files.write(new java.io.File(dirPath,
+              s"part-${rows.head._1}.warc.gz").toPath, bytes)
             ()
           }
         }
-      new java.io.FileOutputStream(
-        new java.io.File(fixDir, "_SUCCESS")).close()
-    }
-    fixDir.getPath
+    }.getPath
   }
 
   /** Corpus-shared WARC extraction hub: the unfiltered response frame
@@ -916,25 +872,17 @@ object PipelineOps {
     import graft.sources.{PdfReader, PdfWriter}
     val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
       .filter(col("doc_id") % 5 === 0)
-    val fixDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-p23-pdf-" + graft.queries.ScaleOps.stateKeyDigest(d))
-    if (!new java.io.File(fixDir, "_SUCCESS").exists()) {
-      fixDir.mkdirs()
-      val dirPath = fixDir.getPath
+    val fixDir = ScaleOps.servedState(
+        "graft-p23-pdf-" + ScaleOps.stateKeyDigest(d)) { dir =>
+      val dirPath = dir.getPath
       docs.repartition(8, pmod(col("doc_id"), lit(8)))
         .as[(Long, String)]
         .foreachPartition { (it: Iterator[(Long, String)]) =>
           it.foreach { case (id, text) =>
-            val bytes = PdfWriter.documentPdf(text)
-            val f = new java.io.File(dirPath, s"doc-$id.pdf")
-            val tmp = new java.io.File(dirPath,
-              f.getName + s".tmp-${java.util.UUID.randomUUID()}")
-            java.nio.file.Files.write(tmp.toPath, bytes)
-            if (!tmp.renameTo(f)) tmp.delete()
+            java.nio.file.Files.write(new java.io.File(dirPath, s"doc-$id.pdf").toPath,
+              PdfWriter.documentPdf(text))
           }
         }
-      new java.io.FileOutputStream(
-        new java.io.File(fixDir, "_SUCCESS")).close()
     }
     val pdfTokens = PdfReader.tokens(
       s.read.format("binaryFile").option("pathGlobFilter", "*.pdf")

@@ -21,8 +21,8 @@ object ScaleOps {
     * documents table, so a regenerated corpus invalidates the
     * persisted index instead of serving stale state, and a collision
     * across scale dirs is cryptographically impossible (a 32-bit
-    * hashCode was not — VERDICT r10 #5). Torn builds (no _SUCCESS)
-    * rebuild on the next call.
+    * hashCode was not — VERDICT r10 #5). [[servedState]] builds and
+    * publishes the state under the key.
     *
     * When the table is a DIRECTORY (a Spark-written corpus), the
     * digest folds every part file's (name, size, mtime): the directory
@@ -40,6 +40,42 @@ object ScaleOps {
         .getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  /** Where served state lives. Each entry was created by
+    * [[servedState]]'s rename, so each is complete. */
+  private[graft] def servedRoot: java.io.File =
+    new java.io.File(sys.props("java.io.tmpdir"), "graft-served")
+
+  /** Served state `<root>/<name>` (the served-index queries key `name`
+    * by [[stateKeyDigest]]), built once and published whole. `build`
+    * writes the state into a private sibling directory, and one atomic
+    * rename moves that onto `<root>/<name>`. So a reader sees no
+    * directory or a complete one, never a build in progress. When
+    * builders race, every rename after the first fails on the published
+    * directory: the losing builder deletes its copy and reads the
+    * winner's. */
+  private[graft] def servedState(name: String, root: java.io.File = servedRoot)(
+      build: java.io.File => Unit): java.io.File = {
+    val dir = new java.io.File(root, name)
+    if (!dir.isDirectory) {
+      java.nio.file.Files.createDirectories(root.toPath)
+      val tmp = java.nio.file.Files.createTempDirectory(root.toPath, s".$name-")
+      try {
+        build(tmp.toFile)
+        try java.nio.file.Files.move(tmp, dir.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if dir.isDirectory => () }
+      } finally {
+        if (java.nio.file.Files.exists(tmp))
+          org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      }
+    }
+    dir
+  }
+
+  /** `dir`'s sub-table `name`, as a path to read or write. */
+  private def sub(dir: java.io.File, name: String): String =
+    new java.io.File(dir, name).getPath
 
   /** Q31 exact dedup: duplicate text groups with keeper id. */
   def q31(s: SparkSession, d: String): DataFrame =
@@ -234,22 +270,19 @@ object ScaleOps {
     val n = emb.count()
     val nbits = math.max(4,
       math.ceil(math.log(n / 128.0) / math.log(2.0)).toInt)
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q43-idx-" + stateKeyDigest(d, "embeddings.parquet"))
-    val idxDir = new java.io.File(stateDir, "index").getPath
-    val keepersDir = new java.io.File(stateDir, "keepers").getPath
-    val bucketsDir = new java.io.File(stateDir, "buckets").getPath
-    val committed = Seq(idxDir, keepersDir, bucketsDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = servedState(
+        "graft-q43-idx-" + stateKeyDigest(d, "embeddings.parquet")) { dir =>
       Dedup.embeddingIndex(emb, nbits = nbits)
-        .write.mode("overwrite").parquet(idxDir)
-      val signed = s.read.parquet(idxDir)
+        .write.mode("overwrite").parquet(sub(dir, "index"))
+      val signed = s.read.parquet(sub(dir, "index"))
       Dedup.embeddingStarKeepers(signed)
-        .write.mode("overwrite").parquet(keepersDir)
+        .write.mode("overwrite").parquet(sub(dir, "keepers"))
       Dedup.embeddingOverCapBuckets(signed, maxBucket = 100000L)
-        .write.mode("overwrite").parquet(bucketsDir)
+        .write.mode("overwrite").parquet(sub(dir, "buckets"))
     }
+    val idxDir = sub(stateDir, "index")
+    val keepersDir = sub(stateDir, "keepers")
+    val bucketsDir = sub(stateDir, "buckets")
     val delivery = emb.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
@@ -272,24 +305,20 @@ object ScaleOps {
     * re-paired, aggregated or broadcast. */
   def q37b(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q37-idx-" + stateKeyDigest(d))
-    val sigsDir = new java.io.File(stateDir, "sigs").getPath
-    val chunksDir = new java.io.File(stateDir, "chunks").getPath
-    val keepersDir = new java.io.File(stateDir, "keepers").getPath
-    val committed = Seq(sigsDir, chunksDir, keepersDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = servedState("graft-q37-idx-" + stateKeyDigest(d)) { dir =>
       docs.select(col("doc_id"),
           Dedup.simHash64(Dedup.tokensOf(col("text"))).as("sim"))
-        .write.mode("overwrite").parquet(sigsDir)
-      val signed = s.read.parquet(sigsDir)
+        .write.mode("overwrite").parquet(sub(dir, "sigs"))
+      val signed = s.read.parquet(sub(dir, "sigs"))
       Dedup.signatureOverCapChunks(signed, "doc_id", "sim",
           maxBucket = 100000L)
-        .write.mode("overwrite").parquet(chunksDir)
+        .write.mode("overwrite").parquet(sub(dir, "chunks"))
       Dedup.signatureKeepers(signed, "doc_id", "sim")
-        .write.mode("overwrite").parquet(keepersDir)
+        .write.mode("overwrite").parquet(sub(dir, "keepers"))
     }
+    val sigsDir = sub(stateDir, "sigs")
+    val chunksDir = sub(stateDir, "chunks")
+    val keepersDir = sub(stateDir, "keepers")
     val delivery = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" v2")).as("text"))
@@ -519,18 +548,14 @@ object ScaleOps {
     * batch-over-union parity and both plan invariants). */
   def q44b(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q44-idx-" + stateKeyDigest(d))
-    val postDir = new java.io.File(stateDir, "postings").getPath
-    val dfsDir = new java.io.File(stateDir, "dfs").getPath
-    val committed = Seq(postDir, dfsDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = servedState("graft-q44-idx-" + stateKeyDigest(d)) { dir =>
       Dedup.winnowPostings(docs)
-        .write.mode("overwrite").parquet(postDir)
-      Dedup.postingsDfs(s.read.parquet(postDir))
-        .write.mode("overwrite").parquet(dfsDir)
+        .write.mode("overwrite").parquet(sub(dir, "postings"))
+      Dedup.postingsDfs(s.read.parquet(sub(dir, "postings")))
+        .write.mode("overwrite").parquet(sub(dir, "dfs"))
     }
+    val postDir = sub(stateDir, "postings")
+    val dfsDir = sub(stateDir, "dfs")
     val batch = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" v2")).as("text"))
@@ -556,23 +581,16 @@ object ScaleOps {
     * multi-consumer discipline. Returns the three table dirs. */
   private def ensureGramIndex(s: SparkSession, d: String)
       : (String, String, String) = {
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q35-idx-" + stateKeyDigest(d))
-    val postDir = new java.io.File(stateDir, "postings").getPath
-    val dfsDir = new java.io.File(stateDir, "dfs").getPath
-    val sizesDir = new java.io.File(stateDir, "sizes").getPath
-    val committed = Seq(postDir, dfsDir, sizesDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = servedState("graft-q35-idx-" + stateKeyDigest(d)) { dir =>
       Dedup.ngramPostings(Tables(s, d).documents, n = 2)
-        .write.mode("overwrite").parquet(postDir)
-      val signed = s.read.parquet(postDir)
+        .write.mode("overwrite").parquet(sub(dir, "postings"))
+      val signed = s.read.parquet(sub(dir, "postings"))
       Dedup.postingsDfs(signed, "gram")
-        .write.mode("overwrite").parquet(dfsDir)
+        .write.mode("overwrite").parquet(sub(dir, "dfs"))
       Dedup.postingsSizes(signed)
-        .write.mode("overwrite").parquet(sizesDir)
+        .write.mode("overwrite").parquet(sub(dir, "sizes"))
     }
-    (postDir, dfsDir, sizesDir)
+    (sub(stateDir, "postings"), sub(stateDir, "dfs"), sub(stateDir, "sizes"))
   }
 
   def q35b(s: SparkSession, d: String): DataFrame = {
@@ -605,14 +623,11 @@ object ScaleOps {
   def q53b(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
     val (postDir, dfsDir, sizesDir) = ensureGramIndex(s, d)
-    val labelsDir = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-q53-idx-" + stateKeyDigest(d)),
-      "labels").getPath
-    if (!new java.io.File(labelsDir, "_SUCCESS").exists()) {
+    val labelsDir = sub(servedState("graft-q53-idx-" + stateKeyDigest(d)) { dir =>
       Dedup.connectedComponents(Dedup.ngramJaccardPairs(docs,
           n = 2, threshold = 0.2, maxDocFreq = 100L))
-        .write.mode("overwrite").parquet(labelsDir)
-    }
+        .write.mode("overwrite").parquet(sub(dir, "labels"))
+    }, "labels")
     val batch = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" v2")).as("text"))
@@ -732,15 +747,9 @@ object ScaleOps {
   def q82b(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables(s, d).embeddings
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q82-idx-" + stateKeyDigest(d, "embeddings.parquet"))
-    val idxDir = new java.io.File(stateDir, "index").getPath
-    val centDir = new java.io.File(stateDir, "centroids").getPath
-    val clustersDir = new java.io.File(stateDir, "clusters").getPath
-    val keepersDir = new java.io.File(stateDir, "keepers").getPath
-    val committed = Seq(idxDir, centDir, clustersDir, keepersDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
+    val stateDir = servedState(
+        "graft-q82-idx-" + stateKeyDigest(d, "embeddings.parquet")) { dir =>
+      val idxDir = sub(dir, "index")
       // q82's shared training family (one derivation, not a copy):
       // the index must cluster with the same centroids the dedup pass
       // used to select the kept set
@@ -748,7 +757,7 @@ object ScaleOps {
       val cs = Similarity.trainIvfCentroids(emb, kEff, sampleN = sampleEff)
       cs.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
         .toDF("cluster", "cv").coalesce(1)
-        .write.mode("overwrite").parquet(centDir)
+        .write.mode("overwrite").parquet(sub(dir, "centroids"))
       val kept = Dedup.semanticDedup(emb, tau = 0.4,
         maxCluster = 100000L)
       Similarity.ivfAssign(emb, cs)
@@ -760,10 +769,14 @@ object ScaleOps {
       val signed = s.read.parquet(idxDir)
       signed.groupBy("cluster").agg(count(lit(1)).as("cn"))
         .filter(col("cn") > 100000L).select("cluster")
-        .write.mode("overwrite").parquet(clustersDir)
+        .write.mode("overwrite").parquet(sub(dir, "clusters"))
       signed.select(xxhash64(col("v")).as("sh"), col("id").as("corpus_id"))
-        .write.mode("overwrite").parquet(keepersDir)
+        .write.mode("overwrite").parquet(sub(dir, "keepers"))
     }
+    val idxDir = sub(stateDir, "index")
+    val centDir = sub(stateDir, "centroids")
+    val clustersDir = sub(stateDir, "clusters")
+    val keepersDir = sub(stateDir, "keepers")
     // centroid family: k is occupancy-derived (n/128), so the collect
     // is bounded by design — the same driver-side array the batch
     // operator's assignment broadcast already carries
@@ -799,25 +812,23 @@ object ScaleOps {
   def q82c(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables(s, d).embeddings
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q82c-idx-" + stateKeyDigest(d, "embeddings.parquet"))
-    val centDir = new java.io.File(stateDir, "centroids").getPath
-    val keepDir = new java.io.File(stateDir, "veckeep").getPath
-    if (!Seq(centDir, keepDir)
-        .forall(p => new java.io.File(p, "_SUCCESS").exists())) {
+    val stateDir = servedState(
+        "graft-q82c-idx-" + stateKeyDigest(d, "embeddings.parquet")) { dir =>
       val (kEff, sampleEff) = Dedup.semanticFamily(emb.count())
       val cs0 = Similarity.trainIvfCentroids(emb, kEff, sampleN = sampleEff)
       cs0.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
         .toDF("cluster", "cv").coalesce(1)
-        .write.mode("overwrite").parquet(centDir)
+        .write.mode("overwrite").parquet(sub(dir, "centroids"))
       Similarity.ivfAssign(emb, cs0)
         .groupBy("v").agg(
           min(col("vec_id")).as("corpus_id"),
           (min(col("list_id")) === max(col("list_id"))).as("cl_ok"),
           min(col("list_id")).as("cluster"))
         .withColumnRenamed("v", "embedding")
-        .write.mode("overwrite").parquet(keepDir)
+        .write.mode("overwrite").parquet(sub(dir, "veckeep"))
     }
+    val centDir = sub(stateDir, "centroids")
+    val keepDir = sub(stateDir, "veckeep")
     val cs = s.read.parquet(centDir).orderBy("cluster")
       .collect().map(_.getSeq[Float](1).toArray)
     val delivery = Similarity.ivfAssign(
@@ -848,33 +859,26 @@ object ScaleOps {
     * tie-breaks. */
   /** The corpus's BPE tokenizer state — merges + subword vocabulary —
     * trained and signed ONCE per scale dir (the p11/p21 train-once
-    * discipline; vocab lands last as the commit marker). q84 and q63b
+    * discipline, published by [[servedState]]). q84 and q63b
     * both serve from it: a production tokenizer is a persisted
     * artifact, not a per-query re-learn. */
   private def bpeStateFor(s: SparkSession,
       d: String): (Seq[graft.operators.Tokenizer.BpeMerge], Map[String, Int]) = {
     import graft.operators.Tokenizer
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-bpe-" + stateKeyDigest(d))
-    val mergesFile = new java.io.File(stateDir, "merges.tsv")
-    val vocabFile = new java.io.File(stateDir, "vocab.tsv")
-    if (!vocabFile.exists() || !mergesFile.exists()) {
-      stateDir.mkdirs()
+    val stateDir = servedState("graft-bpe-" + stateKeyDigest(d)) { dir =>
       val merges = Tokenizer.bpeTrain(docs, numMerges = 40)
       val vocab = Tokenizer.bpeVocab(docs, merges)
-      def writeAtomic(f: java.io.File, content: String): Unit = {
-        val tmp = new java.io.File(stateDir,
-          s".${f.getName}-${java.util.UUID.randomUUID()}.tmp")
-        java.nio.file.Files.write(tmp.toPath,
+      def write(name: String, content: String): Unit =
+        java.nio.file.Files.write(new java.io.File(dir, name).toPath,
           content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      writeAtomic(mergesFile, merges.map(m =>
+      write("merges.tsv", merges.map(m =>
         s"${m.rank}\t${m.left}\t${m.right}").mkString("\n"))
-      writeAtomic(vocabFile, vocab.toSeq.sortBy(_._2).map { case (sw, i) =>
+      write("vocab.tsv", vocab.toSeq.sortBy(_._2).map { case (sw, i) =>
         s"$i\t$sw" }.mkString("\n"))
     }
+    val mergesFile = new java.io.File(stateDir, "merges.tsv")
+    val vocabFile = new java.io.File(stateDir, "vocab.tsv")
     def readLines(f: java.io.File): Seq[String] =
       new String(java.nio.file.Files.readAllBytes(f.toPath),
         java.nio.charset.StandardCharsets.UTF_8)
@@ -1148,48 +1152,42 @@ object ScaleOps {
     * pays per delivery (q102 folds a full corpus signing into every
     * rep; BASELINE §24 measured q102 at ~8 s sf1 where the delivery
     * side is delivery-sized). The q117b state-dir discipline: cache
-    * key = SHA-256 over the part listing, torn writes (no _SUCCESS)
-    * rebuild.
+    * key = SHA-256 over the part listing, state published whole by
+    * [[servedState]].
     *
     * The cap's BOOKKEEPING lives in the index too (VERDICT r11 #2):
     * the over-cap band list ([[Dedup.minHashOverCapBands]], tiny) and
     * the star-keeper table ([[Dedup.minHashStarKeepers]]) are
     * materialized ONCE at sign time — a delivery broadcasts the former
     * and scans the latter only when the corpus is actually dirty,
-    * instead of re-aggregating corpus band counts on every call. The
-    * three tables commit sigs → keepers → bands so the LAST _SUCCESS
-    * marks a complete build; any missing marker rebuilds all three. */
+    * instead of re-aggregating corpus band counts on every call. */
   def q102b(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-q102-idx-" + stateKeyDigest(d))
-    val sigsDir = new java.io.File(stateDir, "sigs").getPath
-    val keepersDir = new java.io.File(stateDir, "keepers").getPath
-    val bandsDir = new java.io.File(stateDir, "bands").getPath
-    val bandTblDir = new java.io.File(stateDir, "bandtbl").getPath
-    val binSigsDir = new java.io.File(stateDir, "sigsbin").getPath
-    val committed = Seq(sigsDir, keepersDir, bandsDir, bandTblDir, binSigsDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!committed) {
-      Dedup.minHashSignatures(docs).write.mode("overwrite").parquet(sigsDir)
+    val stateDir = servedState("graft-q102-idx-" + stateKeyDigest(d)) { dir =>
+      Dedup.minHashSignatures(docs).write.mode("overwrite").parquet(sub(dir, "sigs"))
       // keepers, over-cap bands and the band-key TABLE all derive from
       // the just-written parquet — one signing pass total. The band
       // table (round 12, BASELINE scale probe) is what a delivery
       // scans instead of re-hashing every 512-byte corpus signature:
       // the only across form whose fixed-delivery cost grew 3.4× at a
       // 10× corpus now matches the family's scan-only shape
-      val signed = s.read.parquet(sigsDir)
+      val signed = s.read.parquet(sub(dir, "sigs"))
       Dedup.minHashStarKeepers(signed)
-        .write.mode("overwrite").parquet(keepersDir)
+        .write.mode("overwrite").parquet(sub(dir, "keepers"))
       Dedup.minHashOverCapBands(signed, maxBucket = 100000L)
-        .write.mode("overwrite").parquet(bandsDir)
+        .write.mode("overwrite").parquet(sub(dir, "bands"))
       Dedup.minHashBandTable(signed)
-        .write.mode("overwrite").parquet(bandTblDir)
+        .write.mode("overwrite").parquet(sub(dir, "bandtbl"))
       // binary-packed verify table (round 13): the across verify scans
       // plain byte rows instead of decoding 64-long parquet arrays
       Dedup.minHashBinSigs(signed)
-        .write.mode("overwrite").parquet(binSigsDir)
+        .write.mode("overwrite").parquet(sub(dir, "sigsbin"))
     }
+    val sigsDir = sub(stateDir, "sigs")
+    val keepersDir = sub(stateDir, "keepers")
+    val bandsDir = sub(stateDir, "bands")
+    val bandTblDir = sub(stateDir, "bandtbl")
+    val binSigsDir = sub(stateDir, "sigsbin")
     val batch = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" v2")).as("text"))
@@ -1215,14 +1213,11 @@ object ScaleOps {
   def q37c(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
     val digest = md5(concat_ws(" ", Dedup.tokensOf(col("text"))))
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q37c-idx-" + stateKeyDigest(d))
-    val keepDir = new java.io.File(stateDir, "tokkeep").getPath
-    if (!new java.io.File(keepDir, "_SUCCESS").exists()) {
+    val keepDir = sub(servedState("graft-q37c-idx-" + stateKeyDigest(d)) { dir =>
       docs.select(col("doc_id"), digest.as("digest"))
         .groupBy("digest").agg(min(col("doc_id")).as("corpus_id"))
-        .write.mode("overwrite").parquet(keepDir)
-    }
+        .write.mode("overwrite").parquet(sub(dir, "tokkeep"))
+    }, "tokkeep")
     val delivery = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("batch_id"), digest.as("digest"))
     s.read.parquet(keepDir)
@@ -1244,13 +1239,11 @@ object ScaleOps {
     * discipline). */
   def q43c(s: SparkSession, d: String): DataFrame = {
     val emb = Tables(s, d).embeddings
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q43c-idx-" + stateKeyDigest(d, "embeddings.parquet"))
-    val keepDir = new java.io.File(stateDir, "veckeep").getPath
-    if (!new java.io.File(keepDir, "_SUCCESS").exists()) {
+    val keepDir = sub(servedState(
+        "graft-q43c-idx-" + stateKeyDigest(d, "embeddings.parquet")) { dir =>
       emb.groupBy("embedding").agg(min(col("vec_id")).as("corpus_id"))
-        .write.mode("overwrite").parquet(keepDir)
-    }
+        .write.mode("overwrite").parquet(sub(dir, "veckeep"))
+    }, "veckeep")
     val delivery = emb.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + 1000000L).as("batch_id"), col("embedding"))
     s.read.parquet(keepDir)
@@ -1275,14 +1268,11 @@ object ScaleOps {
     val docs = Tables(s, d).documents
     val digest = md5(concat_ws("",
       sort_array(Dedup.shingles(Dedup.tokensOf(col("text")), 3))))
-    val stateDir = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-q102c-idx-" + stateKeyDigest(d))
-    val keepDir = new java.io.File(stateDir, "setkeep").getPath
-    if (!new java.io.File(keepDir, "_SUCCESS").exists()) {
+    val keepDir = sub(servedState("graft-q102c-idx-" + stateKeyDigest(d)) { dir =>
       docs.select(col("doc_id"), digest.as("digest"))
         .groupBy("digest").agg(min(col("doc_id")).as("corpus_id"))
-        .write.mode("overwrite").parquet(keepDir)
-    }
+        .write.mode("overwrite").parquet(sub(dir, "setkeep"))
+    }, "setkeep")
     val delivery = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("batch_id"), digest.as("digest"))
     s.read.parquet(keepDir)
@@ -1322,24 +1312,20 @@ object ScaleOps {
       graft.functions.Sketch.min_hash(
         graft.functions.Sketch.shingle_hash_stream_text(col("text"), 3), 64)
         .as("sig"))
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q36c-idx-" + stateKeyDigest(d))
-    val sigsDir = new java.io.File(stateDir, "sigs").getPath
-    val keepDir = new java.io.File(stateDir, "sigkeep").getPath
-    if (!Seq(sigsDir, keepDir)
-        .forall(p => new java.io.File(p, "_SUCCESS").exists())) {
+    val stateDir = servedState("graft-q36c-idx-" + stateKeyDigest(d)) { dir =>
       // ONE signing pass: the signature table lands first, the keeper
-      // derives from the just-written parquet (the q102b ordering —
-      // the LAST _SUCCESS marks a complete build). sig_ok pins
-      // intra-corpus determinism at build (min==max over the group);
-      // min(sig) is the representative deliveries compare against.
-      signed(docs).write.mode("overwrite").parquet(sigsDir)
-      s.read.parquet(sigsDir).groupBy("setd").agg(
+      // derives from the just-written parquet. sig_ok pins intra-corpus
+      // determinism at build (min==max over the group); min(sig) is the
+      // representative deliveries compare against.
+      signed(docs).write.mode("overwrite").parquet(sub(dir, "sigs"))
+      s.read.parquet(sub(dir, "sigs")).groupBy("setd").agg(
         min(col("doc_id")).as("doc_id_a"),
         (min(col("sig")) === max(col("sig"))).as("sig_ok"),
         min(col("sig")).as("sig"))
-        .write.mode("overwrite").parquet(keepDir)
+        .write.mode("overwrite").parquet(sub(dir, "sigkeep"))
     }
+    val sigsDir = sub(stateDir, "sigs")
+    val keepDir = sub(stateDir, "sigkeep")
     val keep = s.read.parquet(keepDir)
     // intra-corpus pairs come straight from the persisted state (24-byte
     // member rows; the sig column is pruned at the scan)
@@ -1395,19 +1381,16 @@ object ScaleOps {
       md5(graft.functions.Sketch.pack_longs(
         graft.operators.TextAnalysis.winnowingFingerprints(col("text"))))
         .as("fpd"))
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q44c-idx-" + stateKeyDigest(d))
-    val fpsDir = new java.io.File(stateDir, "fps").getPath
-    val keepDir = new java.io.File(stateDir, "fpkeep").getPath
-    if (!Seq(fpsDir, keepDir)
-        .forall(p => new java.io.File(p, "_SUCCESS").exists())) {
-      signed(docs).write.mode("overwrite").parquet(fpsDir)
-      s.read.parquet(fpsDir).groupBy("tokd").agg(
+    val stateDir = servedState("graft-q44c-idx-" + stateKeyDigest(d)) { dir =>
+      signed(docs).write.mode("overwrite").parquet(sub(dir, "fps"))
+      s.read.parquet(sub(dir, "fps")).groupBy("tokd").agg(
         min(col("doc_id")).as("doc_id_a"),
         (min(col("fpd")) === max(col("fpd"))).as("fp_ok"),
         min(col("fpd")).as("fpd"))
-        .write.mode("overwrite").parquet(keepDir)
+        .write.mode("overwrite").parquet(sub(dir, "fpkeep"))
     }
+    val fpsDir = sub(stateDir, "fps")
+    val keepDir = sub(stateDir, "fpkeep")
     // same serving shape as q36c: intra-corpus pairs from persisted
     // state, the delivery freshly winnowed and REQUIREd to match the
     // stored fingerprint digest — cross-run kernel determinism — with
@@ -1498,16 +1481,13 @@ object ScaleOps {
         when(col("doc_id") % 7 === 0, "ads/").otherwise("article/"),
         col("doc_id")).as("url"))
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-q124-idx-" + stateKeyDigest(d))
-    val keepDir = new java.io.File(stateDir, "urlkeep").getPath
-    if (!new java.io.File(keepDir, "_SUCCESS").exists()) {
+    val keepDir = sub(servedState("graft-q124-idx-" + stateKeyDigest(d)) { dir =>
       // the batch pass + its scores — what a production run persists
       q124(s, d)
         .join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
         .select("doc_id", "domain", "n_chars")
-        .write.mode("overwrite").parquet(keepDir)
-    }
+        .write.mode("overwrite").parquet(sub(dir, "urlkeep"))
+    }, "urlkeep")
     val delivery = withUrls(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("source"),
         (col("n_chars") + 1000L).as("n_chars")))
@@ -1579,42 +1559,32 @@ object ScaleOps {
     // the base funnel ran when the state was established, not per
     // delivery (round 13; q105b previously re-ran the whole base
     // funnel inside every rep)
-    val stateDir = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-q105-idx-" + stateKeyDigest(d))
-    val survDir = new java.io.File(stateDir, "survivors").getPath
-    val digDir = new java.io.File(stateDir, "digests").getPath
-    val postDir = new java.io.File(stateDir, "spost").getPath
-    val sizesDir = new java.io.File(stateDir, "ssizes").getPath
-    val boundsFile = new java.io.File(stateDir, "bounds")
-    val committed = Seq(survDir, digDir, postDir, sizesDir)
-      .forall(p => new java.io.File(p, "_SUCCESS").exists()) &&
-      boundsFile.exists()
-    if (!committed) {
+    val stateDir = servedState("graft-q105-idx-" + stateKeyDigest(d)) { dir =>
       val st = graft.operators.Curation.initialFunnelState(
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), benchmark,
         Blocklist)
-      st.survivors.write.mode("overwrite").parquet(survDir)
+      st.survivors.write.mode("overwrite").parquet(sub(dir, "survivors"))
       // the fold's three survivor derivatives, signed once so a
       // delivery never re-hashes/re-tokenizes the stored corpus
-      val signed = s.read.parquet(survDir)
+      val signed = s.read.parquet(sub(dir, "survivors"))
       signed.select(xxhash64(col("text")).as("__d")).distinct()
-        .write.mode("overwrite").parquet(digDir)
+        .write.mode("overwrite").parquet(sub(dir, "digests"))
       signed.select(col("doc_id").as("sid"),
           explode(Dedup.shingles(Dedup.tokensOf(col("text")), 2))
             .as("gram"))
-        .write.mode("overwrite").parquet(postDir)
+        .write.mode("overwrite").parquet(sub(dir, "spost"))
       signed.select(col("doc_id").as("sid"),
           size(Dedup.shingles(Dedup.tokensOf(col("text")), 2))
             .cast("bigint").as("sng"))
-        .write.mode("overwrite").parquet(sizesDir)
-      // bounds land LAST via temp+rename — the committed check
-      // requires everything, so a torn build rebuilds
-      val tmp = new java.io.File(stateDir,
-        s".bounds-${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp.toPath,
+        .write.mode("overwrite").parquet(sub(dir, "ssizes"))
+      java.nio.file.Files.write(new java.io.File(dir, "bounds").toPath,
         s"${st.lenLo} ${st.lenHi}".getBytes("UTF-8"))
-      if (!tmp.renameTo(boundsFile)) tmp.delete()
     }
+    val survDir = sub(stateDir, "survivors")
+    val digDir = sub(stateDir, "digests")
+    val postDir = sub(stateDir, "spost")
+    val sizesDir = sub(stateDir, "ssizes")
+    val boundsFile = new java.io.File(stateDir, "bounds")
     val Array(lo, hi) = new String(java.nio.file.Files
       .readAllBytes(boundsFile.toPath), "UTF-8").trim.split(' ')
       .map(_.toDouble)
@@ -1890,14 +1860,13 @@ object ScaleOps {
     * BASELINE §23 measured that build as ~56% of the line). */
   def q117b(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
-    val stateDir = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-q117-index-" + stateKeyDigest(d)).getPath
-    if (TextAnalysis.committedSpanDfSlots(s, stateDir).isEmpty)
-      TextAnalysis.saveSpanDfDelta(s, stateDir,
+    val stateDir = servedState("graft-q117-index-" + stateKeyDigest(d)) { dir =>
+      TextAnalysis.saveSpanDfDelta(s, dir.getPath,
         TextAnalysis.spanGramDfs(
             docs.filter(pmod(col("doc_id"), lit(4)) =!= 0), n = 8)
           .sortWithinPartitions("gh"),
         slot = Some(0L), snapshot = true)
+    }.getPath
     TextAnalysis.removeSharedSpansIncremental(
         docs.filter(pmod(col("doc_id"), lit(4)) === 0),
         TextAnalysis.loadSpanDfIndex(s, stateDir), n = 8)

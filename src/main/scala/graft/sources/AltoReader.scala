@@ -280,7 +280,9 @@ object AltoReader {
   private[sources] def retokenize(text: String, c: Coords): Seq[(String, String, Coords)] = {
     if (TextNormalization.isBlank(text)) return Nil
     val parts = TextNormalization.tokenize(text, keepWhitespace = true)
-    val totalLen = parts.map(_.length).sum.toDouble
+    var chars = 0
+    parts.foreach(p => chars += p.length)
+    val totalLen = chars.toDouble
     val out = ListBuffer.empty[(String, String, Coords)]
     var pendingText: String = null
     var pendingWs = ""
@@ -298,7 +300,8 @@ object AltoReader {
         offset += p.length
       }
     }
-    pendingWs += " " // reference default LayoutToken.whitespace = ' '
+    // reference default LayoutToken.whitespace = ' '
+    pendingWs = if (pendingWs.isEmpty) " " else pendingWs + " "
     if (pendingText != null) out += ((pendingText, pendingWs, proRate(c, pendingText, pendingOffset, totalLen)))
     out.toList
   }

@@ -43,20 +43,29 @@ private[graft] object PdfFonts {
     611, 556, 778, 556, 556, 500,
     389, 280, 389, 584)
 
-  /** Advance width in 1/1000 em for `code` under base font name
-    * `baseFont` (subset prefixes like `ABCDEF+` already stripped by
-    * the caller). Unknown codes get the font's space width — the
-    * estimate-not-fail rule for binary-corpus robustness. */
-  def width(baseFont: String, code: Int): Int = {
+  // Courier and its cuts are monospace: every glyph 600
+  private val courier: Array[Int] = Array.fill(95)(600)
+
+  /** The width table (codes 32–126) for base font name `baseFont`
+    * (subset prefixes like `ABCDEF+` already stripped by the caller). */
+  def widthTable(baseFont: String): Array[Int] = {
     val name = if (baseFont == null) "" else baseFont
-    if (name.startsWith("Courier")) return 600 // monospace cut, all glyphs
-    val table =
-      if (name.startsWith("Helvetica-Bold") || name.contains("BoldObl") ||
+    if (name.startsWith("Courier")) courier
+    else if (name.startsWith("Helvetica-Bold") || name.contains("BoldObl") ||
         (name.contains("Bold") && name.startsWith("Helvetica")))
-        helveticaBold
-      else helvetica
-    if (code >= 32 && code <= 126) table(code - 32) else table(0)
+      helveticaBold
+    else helvetica
   }
+
+  /** Advance width in 1/1000 em for `code` in a [[widthTable]]. Unknown
+    * codes get the font's space width — the estimate-not-fail rule for
+    * binary-corpus robustness. */
+  def width(table: Array[Int], code: Int): Int =
+    if (code >= 32 && code <= 126) table(code - 32) else table(0)
+
+  /** Advance width in 1/1000 em for `code` under base font name
+    * `baseFont`. */
+  def width(baseFont: String, code: Int): Int = width(widthTable(baseFont), code)
 
   /** Width of a whole string at `size` points. */
   def stringWidth(baseFont: String, s: String, size: Double): Double = {

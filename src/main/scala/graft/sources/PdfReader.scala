@@ -329,16 +329,20 @@ object PdfReader {
 
   // ------------------------------------------------------------- pages
 
-  private final case class FontRes(resName: String, baseFont: String,
+  private[graft] final case class FontRes(resName: String, baseFont: String,
       bold: Boolean, italic: Boolean,
       firstChar: Int, widths: Array[Int], missingWidth: Int) {
+    // the standard-14 table, resolved once per font, not per glyph
+    private val stdWidths =
+      if (widths == null) PdfFonts.widthTable(baseFont) else null
+
     def width(code: Int): Int =
       if (widths != null && code >= firstChar &&
           code - firstChar < widths.length) {
         val w = widths(code - firstChar)
         if (w > 0) w else missingWidth
       } else if (widths != null) missingWidth
-      else PdfFonts.width(baseFont, code)
+      else PdfFonts.width(stdWidths, code)
   }
 
   private final case class PageData(mediaX: Double, mediaY: Double,
@@ -501,19 +505,84 @@ object PdfReader {
 
   /** One extracted word: device-space position with TOP-DOWN y
     * (ALTO convention), box height = effective font size. */
-  private final case class Word(text: String, x: Double, yTop: Double,
+  private[graft] final case class Word(text: String, x: Double, yTop: Double,
       width: Double, height: Double, font: FontRes, size: Double)
+
+  /** Reading order of a page's words: by `yTop`, then `x`, under
+    * `Double.compare`. */
+  private[graft] val TopThenX: java.util.Comparator[Word] = (a, b) => {
+    val c = java.lang.Double.compare(a.yTop, b.yTop)
+    if (c != 0) c else java.lang.Double.compare(a.x, b.x)
+  }
+
+  /** Order of the words inside a line. */
+  private[graft] val ByX: java.util.Comparator[Word] =
+    (a, b) => java.lang.Double.compare(a.x, b.x)
 
   /** 2D affine `[a b c d e f]` (PDF order). */
   private type Mat = Array[Double]
   private val Id: Mat = Array(1, 0, 0, 1, 0, 0)
-  private def mul(m1: Mat, m2: Mat): Mat = Array(
-    m1(0) * m2(0) + m1(1) * m2(2),
-    m1(0) * m2(1) + m1(1) * m2(3),
-    m1(2) * m2(0) + m1(3) * m2(2),
-    m1(2) * m2(1) + m1(3) * m2(3),
-    m1(4) * m2(0) + m1(5) * m2(2) + m2(4),
-    m1(4) * m2(1) + m1(5) * m2(3) + m2(5))
+
+  /** `out = m1 × m2`; `out` is neither `m1` nor `m2`. */
+  private[graft] def mulInto(m1: Mat, m2: Mat, out: Mat): Unit = {
+    out(0) = m1(0) * m2(0) + m1(1) * m2(2)
+    out(1) = m1(0) * m2(1) + m1(1) * m2(3)
+    out(2) = m1(2) * m2(0) + m1(3) * m2(2)
+    out(3) = m1(2) * m2(1) + m1(3) * m2(3)
+    out(4) = m1(4) * m2(0) + m1(5) * m2(2) + m2(4)
+    out(5) = m1(4) * m2(1) + m1(5) * m2(3) + m2(5)
+  }
+
+  private def mul(m1: Mat, m2: Mat): Mat = {
+    val out = new Array[Double](6)
+    mulInto(m1, m2, out)
+    out
+  }
+
+  /** The text matrix and each glyph's products, in matrices reused
+    * from glyph to glyph: `tm × ctm` is computed once per glyph and no
+    * matrix is allocated per glyph. */
+  private[graft] final class GlyphMath {
+    /** The text matrix, owned: `translate` rewrites it. */
+    private[graft] var tm: Mat = Id.clone()
+    private var spare: Mat = new Array[Double](6)
+    private val step: Mat = Id.clone()
+    private val scale: Mat = new Array[Double](6)
+    private val scaled: Mat = new Array[Double](6)
+    /** The glyph's rendering matrix `[size·hScale 0 0 size 0 rise] ×
+      * tm × ctm`; its translation is the glyph origin. */
+    val trm: Mat = new Array[Double](6)
+    /** `tm × ctm`. */
+    val dev: Mat = new Array[Double](6)
+
+    def setTm(m: Mat): Unit = System.arraycopy(m, 0, tm, 0, 6)
+
+    /** `trm` and `dev` for the next glyph. */
+    def place(ctm: Mat, size: Double, hScale: Double, rise: Double): Unit = {
+      scale(0) = size * hScale; scale(1) = 0; scale(2) = 0
+      scale(3) = size; scale(4) = 0; scale(5) = rise
+      mulInto(scale, tm, scaled)
+      mulInto(scaled, ctm, trm)
+      mulInto(tm, ctm, dev)
+    }
+
+    /** Effective device size: `size` through the vertical scale of
+      * `dev` (identity matrices give `size` back). */
+    def effSize(size: Double): Double =
+      size * math.sqrt(dev(2) * dev(2) + dev(3) * dev(3))
+
+    /** The horizontal scale of `dev`. */
+    def xScale: Double = math.sqrt(dev(0) * dev(0) + dev(1) * dev(1))
+
+    /** `tm = [1 0 0 1 tx 0] × tm`. */
+    def translate(tx: Double): Unit = {
+      step(4) = tx
+      mulInto(step, tm, spare)
+      val t = tm
+      tm = spare
+      spare = t
+    }
+  }
   private def apply(m: Mat, x: Double, y: Double): (Double, Double) =
     (m(0) * x + m(2) * y + m(4), m(1) * x + m(3) * y + m(5))
 
@@ -526,7 +595,7 @@ object PdfReader {
     val words = ListBuffer.empty[Word]
     var ctm: Mat = Id
     val gsStack = mutable.Stack.empty[Mat]
-    var tm: Mat = Id
+    val g = new GlyphMath
     var tlm: Mat = Id
     var font: FontRes = null
     var size = 0.0
@@ -544,13 +613,6 @@ object PdfReader {
     var wSize = 0.0
     var wFont: FontRes = null
     var expectX = Double.NaN
-
-    def effSize: Double = {
-      // effective device size from the text+current matrices (vertical
-      // scale component) — identity matrices give Tf size back
-      val m = mul(tm, ctm)
-      size * math.sqrt(m(2) * m(2) + m(3) * m(3))
-    }
 
     def flush(): Unit = {
       if (sb.nonEmpty && wFont != null) {
@@ -570,13 +632,14 @@ object PdfReader {
         val w0 = font.width(code)
         val disp = (w0 / 1000.0 * size + charSpace +
           (if (code == 32) wordSpace else 0.0)) * hScale
-        val trm = mul(mul(Array(size * hScale, 0, 0, size, 0, rise), tm), ctm)
-        val gx = trm(4) - page.mediaX
-        val gy = trm(5) - page.mediaY
-        val deviceW = disp * math.sqrt(
-          mul(tm, ctm).pipe(m => m(0) * m(0) + m(1) * m(1)))
+        g.place(ctm, size, hScale, rise)
+        val gx = g.trm(4) - page.mediaX
+        val gy = g.trm(5) - page.mediaY
+        val deviceW = disp * g.xScale
         if (code == 32) flush()
         else {
+          // effective device size from the text+current matrices
+          val effSize = g.effSize(size)
           val continues = !expectX.isNaN &&
             math.abs(gx - expectX) <= 0.18 * math.max(effSize, 1.0) &&
             sb.nonEmpty && (wFont eq font) &&
@@ -594,14 +657,14 @@ object PdfReader {
           wWidth = (gx + deviceW) - wx0
           expectX = gx + deviceW
         }
-        tm = mul(Array(1, 0, 0, 1, disp, 0), tm)
+        g.translate(disp)
         if (code == 32) expectX = Double.NaN
         i += 1
       }
     }
 
     val lx = new Lexer(page.content)
-    val stack = ListBuffer.empty[PdfObj]
+    val stack = mutable.ArrayBuffer.empty[PdfObj]
     var tok = lx.nextToken()
     while (tok != null) {
       tok match {
@@ -617,7 +680,7 @@ object PdfReader {
             case "cm" =>
               ctm = mul(Array(num(6), num(5), num(4), num(3), num(2), num(1)),
                 ctm)
-            case "BT" => tm = Id; tlm = Id; flush()
+            case "BT" => g.setTm(Id); tlm = Id; flush()
             case "ET" => flush()
             case "Tf" =>
               flush()
@@ -630,20 +693,20 @@ object PdfReader {
               }
             case "Td" =>
               tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
-              tm = tlm
+              g.setTm(tlm)
               flush()
             case "TD" =>
               leading = -num(1)
               tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
-              tm = tlm
+              g.setTm(tlm)
               flush()
             case "Tm" =>
               tlm = Array(num(6), num(5), num(4), num(3), num(2), num(1))
-              tm = tlm
+              g.setTm(tlm)
               flush()
             case "T*" =>
               tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              tm = tlm
+              g.setTm(tlm)
               flush()
             case "TL" => leading = num(1)
             case "Tc" => charSpace = num(1)
@@ -657,7 +720,7 @@ object PdfReader {
               }
             case "'" =>
               tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              tm = tlm
+              g.setTm(tlm)
               flush()
               stack.lastOption.foreach {
                 case PStr(b) => showString(b)
@@ -667,7 +730,7 @@ object PdfReader {
               wordSpace = num(3)
               charSpace = num(2)
               tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              tm = tlm
+              g.setTm(tlm)
               flush()
               stack.lastOption.foreach {
                 case PStr(b) => showString(b)
@@ -679,7 +742,7 @@ object PdfReader {
                   case PStr(b) => showString(b)
                   case PNum(v) =>
                     val adj = -v / 1000.0 * size * hScale
-                    tm = mul(Array(1, 0, 0, 1, adj, 0), tm)
+                    g.translate(adj)
                   case _ => ()
                 }
                 case _ => ()
@@ -770,7 +833,8 @@ object PdfReader {
         }
         // lines: group words by baseline proximity (tolerance scales
         // with the glyph size), x-sorted inside a line
-        val sorted = words.sortBy(w => (w.yTop, w.x))
+        val sorted = words.toArray
+        java.util.Arrays.sort(sorted, TopThenX)
         val lines = ListBuffer.empty[ListBuffer[Word]]
         sorted.foreach { w =>
           lines.lastOption match {
@@ -781,7 +845,11 @@ object PdfReader {
             case _ => lines += ListBuffer(w)
           }
         }
-        val lineSeqs = lines.map(_.sortBy(_.x).toList).toList
+        val lineSeqs = lines.map { line =>
+          val byX = line.toArray
+          java.util.Arrays.sort(byX, ByX)
+          byX.toList
+        }.toList
         // blocks: a WHITESPACE gap (previous line's bottom to this
         // line's top) larger than 0.9× the smaller line height starts
         // a new block — body leading (~1.2–1.5× size, gap ≤ 0.5×)
@@ -884,9 +952,5 @@ object PdfReader {
     val raw = spark.read.format("binaryFile").load(path)
       .select(xxhash64(col("path")).as("doc_id"), col("content"))
     tokens(raw.as[(Long, Array[Byte])]).toDF()
-  }
-
-  implicit private class PipeOps[A](private val a: A) extends AnyVal {
-    def pipe[B](f: A => B): B = f(a)
   }
 }

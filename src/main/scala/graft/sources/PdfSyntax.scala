@@ -19,7 +19,7 @@ import java.nio.charset.StandardCharsets
   * PDF 1.5+ writers parse. Encrypted documents are out of scope and
   * fail loudly (the reference also rejects them).
   */
-private[sources] object PdfSyntax {
+private[graft] object PdfSyntax {
 
   sealed trait PdfObj
   final case class PNum(v: Double) extends PdfObj {
@@ -51,6 +51,78 @@ private[sources] object PdfSyntax {
     */
   final case class Op(name: String)
 
+  private val CloseArray = Op("]")
+  private val CloseDict = Op(">>")
+
+  /** The content-stream operators of up to three bytes (ISO 32000
+    * Table A.1), one shared [[Op]] each, keyed by [[opKey]]: the lexer
+    * builds no `String` and no `Op` for them. */
+  private val Ops: scala.collection.mutable.LongMap[Op] = {
+    val m = new scala.collection.mutable.LongMap[Op]
+    Seq("b", "B", "b*", "B*", "BDC", "BI", "BMC", "BT", "BX", "c", "cm",
+      "CS", "cs", "d", "d0", "d1", "Do", "DP", "EI", "EMC", "ET", "EX", "f",
+      "F", "f*", "G", "g", "gs", "h", "i", "ID", "j", "J", "K", "k", "l", "m",
+      "M", "MP", "n", "q", "Q", "re", "RG", "rg", "ri", "s", "S", "SC", "sc",
+      "SCN", "scn", "sh", "T*", "Tc", "Td", "TD", "Tf", "Tj", "TJ", "TL",
+      "Tm", "Tr", "Ts", "Tw", "Tz", "v", "w", "W", "W*", "y", "'", "\"",
+      "obj").foreach { name =>
+      val b = name.getBytes(StandardCharsets.ISO_8859_1)
+      m.update(opKey(b, 0, b.length), Op(name))
+    }
+    m
+  }
+
+  /** The bytes `[start, start + n)`, n ≤ 3, and their count as one key. */
+  private def opKey(bytes: Array[Byte], start: Int, n: Int): Long = {
+    var k = n.toLong
+    var i = start
+    while (i < start + n) { k = (k << 8) | (bytes(i) & 0xff); i += 1 }
+    k
+  }
+
+  /** Exact powers of ten: every double from 1e0 to 1e22 is. */
+  private val ExactPow10: Array[Double] = Array(1e0, 1e1, 1e2, 1e3, 1e4,
+    1e5, 1e6, 1e7, 1e8, 1e9, 1e10, 1e11, 1e12, 1e13, 1e14, 1e15, 1e16, 1e17,
+    1e18, 1e19, 1e20, 1e21, 1e22)
+
+  /** `bytes[start, end)` read as `String.toDouble` reads it (ISO-8859-1).
+    * A plain decimal (`[+-]?` digits with at most one '.') of at most 15
+    * significant digits and 22 fraction digits takes Clinger's fast
+    * path: its digits as a long, divided by an exact power of ten. Both
+    * operands are exact, so the division's one rounding gives the
+    * correctly rounded value, as `parseDouble` does. Everything else,
+    * malformed input included, goes through `parseDouble`, and throws
+    * where it throws. */
+  private[graft] def numberValue(bytes: Array[Byte], start: Int, end: Int): Double = {
+    var i = start
+    val neg = i < end && bytes(i) == '-'
+    if (i < end && (bytes(i) == '+' || bytes(i) == '-')) i += 1
+    var mantissa = 0L // wraps past 18 digits, but is only read at ≤ 15
+    var significant = 0
+    var digits = 0
+    var fraction = -1 // digits after the '.', -1 before it
+    var plain = true
+    while (i < end && plain) {
+      val c = bytes(i)
+      if (c >= '0' && c <= '9') {
+        digits += 1
+        if (fraction >= 0) fraction += 1
+        if (significant > 0 || c != '0') {
+          significant += 1
+          mantissa = mantissa * 10 + (c - '0')
+        }
+      } else if (c == '.' && fraction < 0) fraction = 0
+      else plain = false
+      i += 1
+    }
+    if (plain && digits > 0 && significant <= 15 && fraction <= 22) {
+      val v = if (fraction > 0) mantissa / ExactPow10(fraction) else mantissa.toDouble
+      if (neg) -v else v
+    } else
+      java.lang.Double.parseDouble(
+        new String(bytes, start, end - start, StandardCharsets.ISO_8859_1))
+  }
+
   final class Lexer(val bytes: Array[Byte], var pos: Int = 0) {
 
     def atEnd: Boolean = pos >= bytes.length
@@ -65,10 +137,13 @@ private[sources] object PdfSyntax {
       }
     }
 
-    private def bareToken(): String = {
-      val start = pos
+    private def skipBare(): Unit =
       while (pos < bytes.length && !isWs(bytes(pos) & 0xff) &&
           !isDelim(bytes(pos) & 0xff)) pos += 1
+
+    private def bareToken(): String = {
+      val start = pos
+      skipBare()
       new String(bytes, start, pos - start, StandardCharsets.ISO_8859_1)
     }
 
@@ -84,27 +159,32 @@ private[sources] object PdfSyntax {
           pos += 1
           val items = Vector.newBuilder[PdfObj]
           var t = nextToken()
-          while (t != Op("]")) {
+          while (t != CloseArray) {
             require(t != null, "EOF inside array")
             items += t.asInstanceOf[PdfObj]
             t = nextToken()
           }
           PArr(items.result())
-        case ']' => pos += 1; Op("]")
+        case ']' => pos += 1; CloseArray
         case '<' =>
           if (pos + 1 < bytes.length && bytes(pos + 1) == '<') parseDict()
           else parseHexString()
         case '>' =>
           require(pos + 1 < bytes.length && bytes(pos + 1) == '>',
             "stray '>'")
-          pos += 2; Op(">>")
+          pos += 2; CloseDict
         case '{' => pos += 1; Op("{")
         case '}' => pos += 1; Op("}")
         case ')' => throw new IllegalArgumentException("stray ')'")
         case _ if c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9') =>
           parseNumberOrRef()
         case _ =>
-          bareToken() match {
+          val start = pos
+          skipBare()
+          val n = pos - start
+          val op = if (n > 0 && n <= 3) Ops.getOrNull(opKey(bytes, start, n)) else null
+          if (op != null) op
+          else new String(bytes, start, n, StandardCharsets.ISO_8859_1) match {
             case "true" => PBool(true)
             case "false" => PBool(false)
             case "null" => PNull
@@ -210,7 +290,7 @@ private[sources] object PdfSyntax {
       pos += 2 // '<<'
       val m = Map.newBuilder[String, PdfObj]
       var t = nextToken()
-      while (t != Op(">>")) {
+      while (t != CloseDict) {
         require(t != null, "EOF inside dict")
         val key = t match {
           case PName(n) => n
@@ -254,8 +334,7 @@ private[sources] object PdfSyntax {
           ((bytes(pos) >= '0' && bytes(pos) <= '9') || bytes(pos) == '.'))
         pos += 1
       require(pos > start, s"expected number at $start")
-      PNum(new String(bytes, start, pos - start,
-        StandardCharsets.ISO_8859_1).toDouble)
+      PNum(numberValue(bytes, start, pos))
     }
 
     /** Consume an expected bare keyword. */

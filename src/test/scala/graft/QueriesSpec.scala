@@ -131,4 +131,57 @@ class QueriesSpec extends SparkSuite {
       } finally org.apache.commons.io.FileUtils.deleteDirectory(single)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
+
+  test("servedState: two builders of one key at once both read the complete " +
+      "state, and one directory remains") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    import graft.queries.ScaleOps
+    val root = java.nio.file.Files.createTempDirectory("graft-served").toFile
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val bothBuilding = new CountDownLatch(2)
+      val builds = new java.util.concurrent.atomic.AtomicInteger
+      def build(dir: java.io.File): Unit = {
+        builds.incrementAndGet()
+        bothBuilding.countDown()
+        assert(bothBuilding.await(30, TimeUnit.SECONDS))
+        (0 until 40).foreach { i =>
+          java.nio.file.Files.write(new java.io.File(dir, s"part-$i").toPath,
+            s"$i".getBytes("UTF-8"))
+          Thread.sleep(1)
+        }
+      }
+      def contents(dir: java.io.File): Map[String, String] =
+        dir.listFiles().map(f => f.getName ->
+          new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toMap
+      val expected = (0 until 40).map(i => s"part-$i" -> s"$i").toMap
+      val runs = (0 until 2).map { _ =>
+        pool.submit(new Callable[(java.io.File, Map[String, String])] {
+          def call() = {
+            val dir = ScaleOps.servedState("state-key", root)(build)
+            (dir, contents(dir))
+          }
+        })
+      }.map(_.get(60, TimeUnit.SECONDS))
+      assert(builds.get == 2, "both builders ran at once")
+      runs.foreach { case (dir, got) =>
+        assert(dir == new java.io.File(root, "state-key"))
+        assert(got == expected)
+      }
+      assert(root.list().toSeq == Seq("state-key"), "private copies left behind")
+      // a published key is served without another build
+      ScaleOps.servedState("state-key", root)(_ => fail("rebuilt a published key"))
+      // a failed build publishes nothing and leaves no private copy
+      intercept[IllegalStateException] {
+        ScaleOps.servedState("other-key", root) { dir =>
+          java.nio.file.Files.write(new java.io.File(dir, "half").toPath, Array[Byte](1))
+          throw new IllegalStateException("build failed")
+        }
+      }
+      assert(root.list().toSeq == Seq("state-key"))
+    } finally {
+      pool.shutdownNow()
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
 }

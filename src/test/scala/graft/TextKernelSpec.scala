@@ -7,12 +7,16 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Coordinates, Coords, LocalLabelers, Processor, TextNormalization}
+import graft.pipeline.{Coordinates, Coords, FontInfo, LocalLabelers, Processor,
+  TextNormalization, TokenRow}
+import graft.sources.{PdfReader, PdfSyntax}
 
-/** Differential specs for the per-document text kernels: each char-scan
-  * kernel against the regex / `java.util.Formatter` form it replaced,
-  * kept here as the oracle. The kernels define token identity and the
-  * TEI `coords` bytes, so any difference is an output change.
+/** Differential specs for the per-document kernels: each char-scan,
+  * comparator-sort or scratch-buffer kernel against the regex /
+  * `java.util.Formatter` / boxed-key / allocating form it replaced, kept
+  * here as the oracle. The kernels define token identity, token order,
+  * glyph positions and the TEI `coords` bytes, so any difference is an
+  * output change.
   */
 class TextKernelSpec extends AnyFunSuite {
 
@@ -196,5 +200,159 @@ class TextKernelSpec extends AnyFunSuite {
     // Java's $ also matches before one final line terminator
     assert(LocalLabelers.bareNum("12\n") && LocalLabelers.bareNum("12\r\n"))
     assert(!LocalLabelers.bareNum("12\n\n") && !LocalLabelers.figWord("Fig.\n\r"))
+  }
+
+  test("PDF number scan equals String.toDouble on signs, dots, -0, long " +
+      "mantissas, long fractions and random strings; malformed input throws alike") {
+    def oracle(s: String): Either[Class[_], Long] =
+      try Right(java.lang.Double.doubleToRawLongBits(s.toDouble))
+      catch { case e: Exception => Left(e.getClass) }
+    def kernel(s: String): Either[Class[_], Long] = {
+      // embedded in other bytes, as the lexer sees it
+      val b = ("x" + s + "y").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      try Right(java.lang.Double.doubleToRawLongBits(
+        PdfSyntax.numberValue(b, 1, b.length - 1)))
+      catch { case e: Exception => Left(e.getClass) }
+    }
+    def check(s: String): Unit = assert(kernel(s) == oracle(s), show(s))
+    val fixed = Seq("0", "-0", "+0", "-0.0", "-.0", "0.", ".5", "-.5", "+.5", "5.",
+      "-5.", "+5", "12", "-12.75", "612", "792.000", "0.1", "0.3", "1.005",
+      "123456789012345", "1234567890123456", "12345678901234567",
+      "123456789012345678901234567890", "999999999999999", "9999999999999999",
+      "0.123456789012345", "0.1234567890123456", "1.23456789012345",
+      "12345678.9012345", "000000000000000000000001", "00000000000000000.5",
+      "0.0000000000000000000001", "0.00000000000000000000001",
+      "1.0000000000000000000000", "1.00000000000000000000000",
+      "4503599627370497", "9007199254740993", "0.30000000000000004",
+      "1.2.3", "..", ".", "-", "+", "+.", "-.", "", "+-1", "--1", "1-", "1+1",
+      " 1", "1 ", "1e5", "1E-3", "NaN", "Infinity", "0x10", "1d", "1f", "١")
+    fixed.foreach(check)
+    assert(kernel("1.2.3") == Left(classOf[NumberFormatException]))
+    val rnd = new Random(29L)
+    val alphabet = "0123456789.-+0000999e x"
+    (0 until 100000).foreach { _ =>
+      check(Seq.fill(rnd.nextInt(26))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    }
+    // well-formed decimals of every length around the fast path's limits
+    (0 until 100000).foreach { _ =>
+      val int = Seq.fill(rnd.nextInt(19))(('0' + rnd.nextInt(10)).toChar).mkString
+      val frac = Seq.fill(rnd.nextInt(26))(('0' + rnd.nextInt(10)).toChar).mkString
+      val sign = Seq("", "-", "+")(rnd.nextInt(3))
+      check(sign + int + (if (frac.nonEmpty || rnd.nextBoolean()) "." + frac else ""))
+    }
+  }
+
+  test("PDF lexer yields operator keywords and literals as before") {
+    val ops = Seq("b", "B", "b*", "B*", "BDC", "BI", "BMC", "BT", "BX", "c", "cm",
+      "CS", "cs", "d", "d0", "d1", "Do", "DP", "EI", "EMC", "ET", "EX", "f", "F", "f*",
+      "G", "g", "gs", "h", "i", "ID", "j", "J", "K", "k", "l", "m", "M", "MP", "n", "q",
+      "Q", "re", "RG", "rg", "ri", "s", "S", "SC", "sc", "SCN", "scn", "sh", "T*", "Tc",
+      "Td", "TD", "Tf", "Tj", "TJ", "TL", "Tm", "Tr", "Ts", "Tw", "Tz", "v", "w", "W",
+      "W*", "y", "'", "\"", "obj", "endobj", "stream", "Tx", "TTT", "ABCD", "x")
+    val src = (ops :+ "true false null [ 1 -2.5 ] << /K 3 0 R >>").mkString(" ")
+    val lx = new PdfSyntax.Lexer(src.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    val got = Iterator.continually(lx.nextToken()).takeWhile(_ != null).toList
+    assert(got == ops.map(PdfSyntax.Op(_)) ++ Seq(PdfSyntax.PBool(true),
+      PdfSyntax.PBool(false), PdfSyntax.PNull,
+      PdfSyntax.PArr(Vector(PdfSyntax.PNum(1), PdfSyntax.PNum(-2.5))),
+      PdfSyntax.PDict(Map("K" -> PdfSyntax.PRef(3, 0)))))
+  }
+
+  test("LocalLabelers.ordered equals the 4-tuple sortBy, duplicates in input order") {
+    val rnd = new Random(31L)
+    (0 until 300).foreach { _ =>
+      val n = rnd.nextInt(200)
+      val toks = Seq.tabulate(n) { i =>
+        TokenRow(1L, rnd.nextInt(3), rnd.nextInt(4), rnd.nextInt(3), rnd.nextInt(5) - 1,
+          s"t$i", " ", FontInfo.empty, None, 1, None, None)
+      }
+      val oracle = toks.sortBy(t => (t.page_idx, t.block_idx, t.line_idx, t.token_idx))
+      val got = LocalLabelers.ordered(toks)
+      assert(got.length == oracle.length)
+      assert(got.zip(oracle).forall { case (a, b) => a eq b })
+    }
+  }
+
+  test("PdfReader word comparators equal the (yTop, x) and x sortBy, with " +
+      "duplicate keys, -0.0 and NaN") {
+    val vs = IndexedSeq(0.0, -0.0, 1.5, -1.5, 72.25, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e-300, 700.0)
+    val rnd = new Random(37L)
+    (0 until 300).foreach { _ =>
+      val words = Seq.tabulate(rnd.nextInt(120)) { i =>
+        PdfReader.Word(s"w$i", vs(rnd.nextInt(vs.length)), vs(rnd.nextInt(vs.length)),
+          1.0, 10.0, null, 10.0)
+      }
+      def sorted(cmp: java.util.Comparator[PdfReader.Word]) = {
+        val a = words.toArray
+        java.util.Arrays.sort(a, cmp)
+        a.toSeq
+      }
+      val byTop = sorted(PdfReader.TopThenX)
+      assert(byTop.zip(words.sortBy(w => (w.yTop, w.x))).forall { case (a, b) => a eq b })
+      val byX = sorted(PdfReader.ByX)
+      assert(byX.zip(words.sortBy(_.x)).forall { case (a, b) => a eq b })
+    }
+  }
+
+  test("GlyphMath's scratch-matrix products equal the allocating mul form, " +
+      "bit for bit up to NaN payloads, on random matrices with ±0.0, ∞ and NaN") {
+    type Mat = Array[Double]
+    def mul(m1: Mat, m2: Mat): Mat = Array(
+      m1(0) * m2(0) + m1(1) * m2(2),
+      m1(0) * m2(1) + m1(1) * m2(3),
+      m1(2) * m2(0) + m1(3) * m2(2),
+      m1(2) * m2(1) + m1(3) * m2(3),
+      m1(4) * m2(0) + m1(5) * m2(2) + m2(4),
+      m1(4) * m2(1) + m1(5) * m2(3) + m2(5))
+    val specials = IndexedSeq(0.0, -0.0, 1.0, -1.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e308, 4.9e-324)
+    val rnd = new Random(41L)
+    def v(): Double = rnd.nextInt(4) match {
+      case 0 => specials(rnd.nextInt(specials.length))
+      case 1 => rnd.nextInt(2000) / 100.0 - 10
+      case _ => rnd.nextGaussian() * 100
+    }
+    // every bit but a NaN's sign and payload, which the JIT may change
+    // by commuting the operands of one product
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    def same(a: Double, b: Double, what: String) = assert(bits(a) == bits(b), what)
+    (0 until 20000).foreach { _ =>
+      val g = new PdfReader.GlyphMath
+      var tm: Mat = Array.fill(6)(v())
+      g.setTm(tm)
+      val ctm: Mat = Array.fill(6)(v())
+      // several glyphs in a row: the text matrix advances in place
+      (0 until 4).foreach { _ =>
+        val (size, hScale, rise, disp) = (v(), v(), v(), v())
+        g.place(ctm, size, hScale, rise)
+        val trm = mul(mul(Array(size * hScale, 0, 0, size, 0, rise), tm), ctm)
+        val dev = mul(tm, ctm)
+        same(g.trm(4), trm(4), "trm x"); same(g.trm(5), trm(5), "trm y")
+        same(g.effSize(size), size * math.sqrt(dev(2) * dev(2) + dev(3) * dev(3)), "effSize")
+        same(disp * g.xScale, disp * math.sqrt(dev(0) * dev(0) + dev(1) * dev(1)), "deviceW")
+        g.translate(disp)
+        tm = mul(Array(1, 0, 0, 1, disp, 0), tm)
+        (0 until 6).foreach(k => same(g.tm(k), tm(k), s"tm($k)"))
+      }
+    }
+  }
+
+  test("LocalLabelers.views splits a labeling like five collects") {
+    val tags = IndexedSeq("<header>", "<body>", "<acknowledgement>", "<annex>", "<references>")
+    val labels = tags.flatMap(t => Seq("B-" + t, "I-" + t, t)) ++
+      Seq("O", "B-", "I-", "B-<bodyx>", "I-<body", "<body>x", "b-<body>", "B-B-<body>")
+    val rnd = new Random(43L)
+    (0 until 300).foreach { _ =>
+      val labeled = IndexedSeq.tabulate(rnd.nextInt(150)) { i =>
+        (TokenRow(1L, 0, 0, 0, i, s"t$i", " ", FontInfo.empty, None, 1, None, None),
+          labels(rnd.nextInt(labels.length)))
+      }
+      val got = LocalLabelers.views(labeled, tags)
+      tags.indices.foreach { k =>
+        val oracle = labeled.collect { case (t, l) if LocalLabelers.stripTag(l) == tags(k) => t }
+        assert(got(k) == oracle, tags(k))
+      }
+    }
   }
 }
