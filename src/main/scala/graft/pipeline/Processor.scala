@@ -372,14 +372,16 @@ object Processor {
     var tabN = 0
     val byNodeId = nodes.toArray
     java.util.Arrays.sort(byNodeId, NodeIdOrder)
-    val withIds = scala.collection.immutable.ArraySeq.unsafeWrapArray(byNodeId).map { n =>
+    // a List, as the sinks' many small groupBy/filter passes over the
+    // result are cheapest on one
+    val withIds = byNodeId.toList.map { n =>
       n.node_type match {
         case "figure" => val id = s"fig_$figN"; figN += 1; n.copy(content_id = id)
         case "table" => val id = s"tab_$tabN"; tabN += 1; n.copy(content_id = id)
         case _ => n
       }
     }
-    val byId = new scala.collection.mutable.LongMap[SemanticNode](withIds.length)
+    val byId = new scala.collection.mutable.LongMap[SemanticNode](byNodeId.length)
     withIds.foreach(n => byId.update(n.node_id, n))
     def labelsOf(targetType: String): Seq[(String, String)] =
       withIds.filter(_.node_type == "label").flatMap { l =>

@@ -524,7 +524,7 @@ object PdfReader {
   private val Id: Mat = Array(1, 0, 0, 1, 0, 0)
 
   /** `out = m1 × m2`; `out` is neither `m1` nor `m2`. */
-  private[graft] def mulInto(m1: Mat, m2: Mat, out: Mat): Unit = {
+  private def mulInto(m1: Mat, m2: Mat, out: Mat): Unit = {
     out(0) = m1(0) * m2(0) + m1(1) * m2(2)
     out(1) = m1(0) * m2(1) + m1(1) * m2(3)
     out(2) = m1(2) * m2(0) + m1(3) * m2(2)
