@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,10 +37,6 @@ object BioSpans {
       .drop("_new_span")
   }
 
-  /** Collapse to one row per span: ordered text reassembly
-    * (`text + whitespace` per token, trailing whitespace trimmed —
-    * LayoutBlock text semantics) + first-token position keys.
-    */
   /** Seq[Row] of the collected token structs → (text, coords, styles)
     * via the SAME [[SpanAssembly.assemble]] the local span form uses —
     * one implementation, provable parity. A UDF (not HOF expressions)
@@ -48,25 +44,17 @@ object BioSpans {
     * per-span arrays are small and this DataFrame path is the
     * secondary entry (the documentPipeline fold never goes through
     * Catalyst for span assembly at all). */
-  private val assembleUdf = udf { toks: Seq[org.apache.spark.sql.Row] =>
-    val spanToks = toks.map { r =>
-      val coords = Option(r.getAs[org.apache.spark.sql.Row]("coords")).map(c =>
-        Coords(c.getAs[Double]("x"), c.getAs[Double]("y"),
-          c.getAs[Double]("width"), c.getAs[Double]("height"),
-          c.getAs[Int]("page_number")))
-      val font = Option(r.getAs[org.apache.spark.sql.Row]("font")).map(f =>
-        FontInfo(f.getAs[String]("font_id"), f.getAs[String]("font_family"),
-          Option(f.getAs[java.lang.Double]("font_size")).map(_.doubleValue),
-          f.getAs[Boolean]("is_bold"), f.getAs[Boolean]("is_italics"),
-          f.getAs[Boolean]("is_subscript"), f.getAs[Boolean]("is_superscript")))
-        .orNull
-      SpanAssembly.SpanTok(r.getAs[String]("text"),
-        r.getAs[String]("whitespace"), coords, font)
-    }
-    val (text, coords, styles) = SpanAssembly.assemble(spanToks)
-    (text, coords, styles)
+  private val assembleUdf = udf { toks: Seq[Row] =>
+    SpanAssembly.assemble(toks.map(r => SpanAssembly.SpanTok(
+      r.getAs[String]("text"), r.getAs[String]("whitespace"),
+      Option(r.getAs[Row]("coords")).map(Coords.fromRow),
+      Option(r.getAs[Row]("font")).map(FontInfo.fromRow).orNull)))
   }
 
+  /** Collapse to one row per span: ordered text reassembly
+    * (`text + whitespace` per token, trailing whitespace trimmed —
+    * LayoutBlock text semantics) + first-token position keys.
+    */
   def spans(labeled: DataFrame): DataFrame = {
     // tolerate geometry-/font-less token frames (synthetic labels in
     // tests, re-labeled text): typed null structs assemble to nulls

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Sequence-labeler abstraction (SURVEY.md §7 step 5).
   *
@@ -13,8 +14,10 @@ import org.apache.spark.sql.functions._
   * - [[ScriptedLabeler]]: deterministic label map (the reference's
   *   `tests/processors/fulltext/model_mocks.py` pattern) — broadcast
   *   join on the positional key; drives all pipeline tests.
-  * - [[RuleLabeler]]: heuristic layout rules, good enough to exercise
-  *   the full pipeline without model artifacts (zero-egress build).
+  * - [[RuleLabeler]] and the other rule labelers: heuristic layout
+  *   rules, good enough to exercise the full pipeline without model
+  *   artifacts (zero-egress build) — each a [[PerDocumentLabeler]] over
+  *   the one [[LocalLabelers]] implementation the pipeline fold runs.
   * - A Wapiti/ONNX backend plugs in as `mapPartitions` with an
   *   executor-local subprocess/session; same contract.
   */
@@ -38,9 +41,10 @@ trait SequenceLabeler {
   *    the cluster. Viterbi context then restarts at page boundaries —
   *    for the segmentation model, whose lines carry their page context
   *    in the feature vector itself (relative page position, repetitive-
-  *    pattern flags), LabelerParitySpec pins page-scoped output ≡
-  *    document-scoped on a multi-page fixture; models whose spans
-  *    legitimately cross pages (fulltext) should stay doc-scoped.
+  *    pattern flags), LabelerParitySpec's page-scoped case pins
+  *    page-scoped CRF output ≡ document-scoped on a multi-page
+  *    fixture; models whose spans legitimately cross pages (fulltext)
+  *    should stay doc-scoped.
   */
 private[pipeline] object SequenceScope {
 
@@ -93,166 +97,57 @@ final class ScriptedLabeler(spark: SparkSession,
   }
 }
 
-/** Segmentation-stage rule labeler: the largest-font block on page 0
-  * and its successor (title + authors region) → `<header>`; a block
-  * opening with an "Acknowledgement(s)"/"Acknowledgment(s)" heading →
-  * `<acknowledgement>`; one opening "Appendix"/"Annex" → `<annex>`;
-  * everything else → `<body>` — the line-level segmentation label set
-  * the reference's segmentation model emits (`processor.py:205-225`
-  * consumes exactly these views) as a deterministic stand-in.
-  */
-final class SegmentationRuleLabeler extends SequenceLabeler {
-  import org.apache.spark.sql.expressions.Window
+/** The rule labelers' DataFrame form: one [[LocalLabelers]] rule run
+  * per document, grouped on the `doc_id` column itself so a token table
+  * already clustered by document (the `alto-tokens` hub) labels without
+  * an exchange. Every input row comes out unchanged with `label` set,
+  * an existing `label` replaced in place as `withColumn` does. `font`
+  * and `coords` are read only when the frame has them. */
+class PerDocumentLabeler(
+    rule: IndexedSeq[TokenRow] => IndexedSeq[(TokenRow, String)])
+    extends SequenceLabeler {
 
   override def label(tokens: DataFrame): DataFrame = {
-    val docW = Window.partitionBy("doc_id")
-    val blockW = Window.partitionBy("doc_id", "page_idx", "block_idx")
-    val withMax = tokens
-      .withColumn("_max_fs", max(col("font.font_size")).over(docW))
-      .withColumn("_block_max_fs", max(col("font.font_size")).over(blockW))
-      .withColumn("_block_first", max(when(
-        col("line_idx") === 0 && col("token_idx") === 0, col("text"))).over(blockW))
-    val isTitleBlock = col("page_idx") === 0 && col("_block_max_fs") === col("_max_fs")
-    val titleBlockIdx = min(when(isTitleBlock, col("block_idx"))).over(
-      Window.partitionBy("doc_id", "page_idx"))
-    val isHeader = col("page_idx") === 0 && col("_title_block").isNotNull &&
-      col("block_idx") <= col("_title_block") + 1
-    val isFirst = col("line_idx") === 0 && col("token_idx") === 0
-    val backTag = when(
-        col("_block_first").rlike("(?i)^acknowledge?ments?$"), "<acknowledgement>")
-      .when(col("_block_first").rlike("(?i)^(appendix|annex)$"), "<annex>")
-      .when(col("_block_first").rlike("(?i)^(references?|bibliography)$"),
-        "<references>")
-    withMax
-      .withColumn("_title_block", titleBlockIdx)
-      .withColumn("label",
-        when(isHeader, when(isFirst, "B-<header>").otherwise("I-<header>"))
-          .when(backTag.isNotNull,
-            concat(when(isFirst, "B-").otherwise("I-"), backTag))
-          .otherwise(when(isFirst, "B-<body>").otherwise("I-<body>")))
-      .drop("_max_fs", "_block_max_fs", "_block_first", "_title_block")
+    val in = tokens.schema
+    val Seq(page, block, line, token, text, font, coords, labelAt) =
+      Seq("page_idx", "block_idx", "line_idx", "token_idx", "text", "font",
+        "coords", "label").map(in.fieldNames.indexOf(_))
+    val labelField = StructField("label", StringType, nullable = false)
+    val out = if (labelAt < 0) in.add(labelField)
+      else StructType(in.fields.updated(labelAt, labelField))
+    val f = rule // the closure must not capture this (not Serializable)
+    tokens.groupBy(col("doc_id"))
+      .as[Long, Row](Encoders.scalaLong, Encoders.row(in))
+      .flatMapGroups { (docId, it) =>
+        val rows = it.toArray
+        val rowOf = new java.util.IdentityHashMap[TokenRow, Row](rows.length)
+        val toks = rows.map { r =>
+          val t = TokenRow(docId, r.getInt(page), r.getInt(block),
+            r.getInt(line), r.getInt(token), r.getString(text), null,
+            if (font < 0 || r.isNullAt(font)) null
+            else FontInfo.fromRow(r.getStruct(font)),
+            if (coords < 0 || r.isNullAt(coords)) None
+            else Some(Coords.fromRow(r.getStruct(coords))),
+            0, None, None)
+          rowOf.put(t, r)
+          t
+        }
+        f(LocalLabelers.ordered(toks)).iterator.map { case (t, l) =>
+          val vals = rowOf.get(t).toSeq
+          Row.fromSeq(if (labelAt < 0) vals :+ l else vals.updated(labelAt, l))
+        }
+      }(Encoders.row(out))
   }
 }
 
-/** Reference-segmenter-stage rule labeler (reference_segmenter model
-  * stand-in; the label set `models/reference_segmenter/extract.py`
-  * consumes): within the `<references>` view, a leading numeric-marker
-  * token run on a line (`1.`, `[1]`, `2)` — split by the retokenizer
-  * into digit + punctuation tokens) is the `<label>`; the rest of the
-  * line is one `<reference>` span. A line with no leading marker is a
-  * whole `<reference>` — [[ModelExtractors.referenceSegmenterFold]]
-  * demotes a first short one to the section heading.
-  */
-final class ReferenceSegmenterRuleLabeler extends SequenceLabeler {
-  import org.apache.spark.sql.expressions.Window
+/** Segmentation-stage rule labeler ([[LocalLabelers.segmentationLabels]]). */
+final class SegmentationRuleLabeler extends PerDocumentLabeler(LocalLabelers.segmentationLabels)
 
-  override def label(tokens: DataFrame): DataFrame = {
-    val lineW = Window.partitionBy("doc_id", "page_idx", "block_idx", "line_idx")
-    val markerish = col("text").rlike("^[0-9]+$|^[.)\\]\\[]$")
-    val firstTok = max(when(col("token_idx") === 0, col("text"))).over(lineW)
-    val secondTok = max(when(col("token_idx") === 1, col("text"))).over(lineW)
-    // first token of the line that is NOT part of a numeric marker run
-    val firstNonMarker = min(when(!markerish, col("token_idx"))).over(lineW)
-    // a marker is a leading bare number (`1.`, `2)`) or a leading `[`
-    // whose next token is a number (`[1]` — the retokenizer splits it)
-    val hasLabel = firstTok.rlike("^[0-9]+$") ||
-      (firstTok === "[" && secondTok.rlike("^[0-9]+$"))
-    tokens.withColumn("label",
-      when(hasLabel && (firstNonMarker.isNull || col("token_idx") < firstNonMarker),
-        when(col("token_idx") === 0, "B-<label>").otherwise("I-<label>"))
-        .when(hasLabel,
-          when(col("token_idx") === firstNonMarker, "B-<reference>")
-            .otherwise("I-<reference>"))
-        .otherwise(when(col("token_idx") === 0, "B-<reference>")
-          .otherwise("I-<reference>")))
-  }
-}
+/** Reference-segmenter-stage rule labeler ([[LocalLabelers.referenceSegmenterLabels]]). */
+final class ReferenceSegmenterRuleLabeler extends PerDocumentLabeler(LocalLabelers.referenceSegmenterLabels)
 
-/** Body-stage rule labeler (fulltext-model stand-in): the first line of
-  * each block is a `<section>` heading, every other line is a
-  * `<paragraph>` span (one span per line — consecutive paragraph spans
-  * start new paragraphs in the fulltext fold, matching the reference's
-  * per-line labeling granularity). Figure/table awareness mirroring the
-  * fulltext model's label set (`models/fulltext/extract.py`):
-  * - a line starting `Figure <n>` / `Table <n>` is a caption →
-  *   `<figure>`/`<table>` span over the whole line;
-  * - `Figure|Fig.|Table` + number mid-line is a citation marker →
-  *   `<figure_marker>`/`<table_marker>` span over the two tokens.
-  */
-final class BodyRuleLabeler extends SequenceLabeler {
-  import org.apache.spark.sql.expressions.Window
+/** Body-stage rule labeler ([[LocalLabelers.bodyRuleLabels]]). */
+final class BodyRuleLabeler extends PerDocumentLabeler(LocalLabelers.bodyRuleLabels)
 
-  override def label(tokens: DataFrame): DataFrame = {
-    val lineW = Window.partitionBy("doc_id", "page_idx", "block_idx", "line_idx")
-    val lineOrd = lineW.orderBy("token_idx")
-    val firstTok = max(when(col("token_idx") === 0, col("text"))).over(lineW)
-    val secondTok = max(when(col("token_idx") === 1, col("text"))).over(lineW)
-    val nextTok = lead(col("text"), 1).over(lineOrd)
-    val prevTok = lag(col("text"), 1).over(lineOrd)
-
-    val num = "^[0-9]+[.,:)]?$"
-    val captionTag = when(firstTok === "Figure" && secondTok.rlike(num), "<figure>")
-      .when(firstTok === "Table" && secondTok.rlike(num), "<table>")
-    val isFigHead = col("token_idx") > 0 &&
-      col("text").rlike("^(Figure|Fig\\.?)$") && nextTok.rlike(num)
-    val isTabHead = col("token_idx") > 0 &&
-      col("text") === "Table" && nextTok.rlike(num)
-    val isFigTail = col("token_idx") > 1 && col("text").rlike(num) &&
-      prevTok.rlike("^(Figure|Fig\\.?)$")
-    val isTabTail = col("token_idx") > 1 && col("text").rlike(num) &&
-      prevTok === "Table"
-    // bracketed reference citations "[ n ]" (the retokenizer splits the
-    // brackets off) → <citation_marker>, the fulltext model's bibr label
-    val nextTok2 = lead(col("text"), 2).over(lineOrd)
-    val prevTok2 = lag(col("text"), 2).over(lineOrd)
-    val bareNum = "^[0-9]+$"
-    val isCitOpen = col("text") === "[" && nextTok.rlike(bareNum) && nextTok2 === "]"
-    val isCitNum = prevTok === "[" && col("text").rlike(bareNum) && nextTok === "]"
-    val isCitClose = col("text") === "]" && prevTok.rlike(bareNum) && prevTok2 === "["
-
-    tokens.withColumn("label",
-      when(captionTag.isNotNull,
-        concat(when(col("token_idx") === 0, "B-").otherwise("I-"), captionTag))
-        .when(isFigHead, "B-<figure_marker>")
-        .when(isTabHead, "B-<table_marker>")
-        .when(isFigTail, "I-<figure_marker>")
-        .when(isTabTail, "I-<table_marker>")
-        .when(isCitOpen, "B-<citation_marker>")
-        .when(isCitNum || isCitClose, "I-<citation_marker>")
-        .when(col("line_idx") === 0,
-          when(col("token_idx") === 0, "B-<section>").otherwise("I-<section>"))
-        .otherwise(
-          when(col("token_idx") === 0, "B-<paragraph>").otherwise("I-<paragraph>")))
-  }
-}
-
-/** Layout-heuristic labeler: largest-font tokens on the first page →
-  * title; the following block → author; everything else O. Deterministic
-  * and model-free — exercises exactly the segmentation→header flow
-  * shape of the reference pipeline.
-  */
-final class RuleLabeler extends SequenceLabeler {
-  import org.apache.spark.sql.expressions.Window
-
-  override def label(tokens: DataFrame): DataFrame = {
-    val docW = Window.partitionBy("doc_id")
-    val titleBlockW = Window.partitionBy("doc_id", "page_idx", "block_idx")
-    val withMax = tokens
-      .withColumn("_max_fs", max(col("font.font_size")).over(docW))
-      .withColumn("_block_max_fs", max(col("font.font_size")).over(titleBlockW))
-    val isTitleBlock = col("page_idx") === 0 && col("_block_max_fs") === col("_max_fs")
-    val titleBlockIdx = min(when(isTitleBlock, col("block_idx"))).over(
-      Window.partitionBy("doc_id", "page_idx"))
-    withMax
-      .withColumn("_title_block", titleBlockIdx)
-      .withColumn("label",
-        when(col("page_idx") === 0 && col("block_idx") === col("_title_block"),
-          when(col("block_idx").isNotNull && col("line_idx") === 0 && col("token_idx") === 0,
-            "B-<title>").otherwise("I-<title>"))
-        .when(col("page_idx") === 0 && col("block_idx") === col("_title_block") + 1,
-          when(col("line_idx") === 0 && col("token_idx") === 0, "B-<author>")
-            .otherwise("I-<author>"))
-        .otherwise("O"))
-      .drop("_max_fs", "_block_max_fs", "_title_block")
-  }
-}
+/** Header-stage layout-heuristic labeler ([[LocalLabelers.headerRuleLabels]]). */
+final class RuleLabeler extends PerDocumentLabeler(LocalLabelers.headerRuleLabels)

@@ -5,21 +5,14 @@ import java.util.regex.Pattern
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ListBuffer
 
-/** Per-document (driver-free, executor-local) forms of the rule
-  * labelers and BIO span grouping — the fold-form the single-pass
-  * [[Processor.documentPipeline]] runs inside ONE `groupByKey(doc_id)`.
-  *
-  * The reference processes one document at a time in plain Python
-  * (`processors/fulltext/processor.py:180-274`); the engine's
-  * DataFrame labelers ([[SegmentationRuleLabeler]], [[RuleLabeler]],
-  * [[BodyRuleLabeler]], [[ReferenceSegmenterRuleLabeler]],
-  * [[BioSpans]]) express the same rules as window functions for the
-  * standalone labeled-token surface (p02/p03/p14, CRF training data).
-  * Running five window-labeled view branches per document cost ~14
-  * exchanges in the p04 plan; these local twins compute identical
-  * labels inside the per-doc fold, so the whole pipeline costs one
-  * shuffle of the token table. LabelerParitySpec pins window ≡ local
-  * on every labeler.
+/** The rule labelers and BIO span grouping for ONE document — the
+  * reference processes one document at a time in plain Python
+  * (`processors/fulltext/processor.py:180-274`). The only
+  * implementation of each rule: the single-pass
+  * [[Processor.documentPipeline]] fold and the service call these
+  * directly, and the DataFrame labelers run them per document through
+  * [[PerDocumentLabeler]]. LabelerParitySpec pins each rule to golden
+  * labels, and [[BioSpans.spans]] ≡ [[spansLocal]].
   */
 private[graft] object LocalLabelers {
 
@@ -31,9 +24,8 @@ private[graft] object LocalLabelers {
     c
   }
 
-  /** Document-order sort — the order every labeler window used
-    * (`orderBy(page_idx, block_idx, line_idx, token_idx)`). A stable
-    * sort, so tokens with equal keys keep their input order. */
+  /** Document order — `(page_idx, block_idx, line_idx, token_idx)`.
+    * A stable sort, so tokens with equal keys keep their input order. */
   def ordered(tokens: Seq[TokenRow]): IndexedSeq[TokenRow] = {
     val arr = tokens.toArray
     java.util.Arrays.sort(arr, DocOrder)
@@ -103,7 +95,7 @@ private[graft] object LocalLabelers {
     out.map(_.result())
   }
 
-  // rlike semantics: Java find() over the (anchored) pattern, null → false
+  // Java find() over the (anchored) pattern, null → false
   private def re(p: Pattern, s: String): Boolean =
     s != null && p.matcher(s).find()
 
@@ -111,10 +103,10 @@ private[graft] object LocalLabelers {
   private val AnnexRe = Pattern.compile("(?i)^(appendix|annex)$")
   private val RefsRe = Pattern.compile("(?i)^(references?|bibliography)$")
 
-  // The per-token patterns as char scans with the window labelers'
-  // rlike semantics (Java find(), null → false): they run on every
-  // token of every line, where a Matcher per call cost a tenth of the
-  // fold.
+  // The per-token patterns as char scans with the regexes' find()
+  // semantics (null → false; TextKernelSpec keeps the regexes as their
+  // oracle): they run on every token of every line, where a Matcher
+  // per call cost a tenth of the fold.
 
   /** Java's `$` without MULTILINE at index i: the end of `s`, or
     * before one final line terminator (\n, \r\n, \r, U+0085,
@@ -160,9 +152,8 @@ private[graft] object LocalLabelers {
 
   /** The title-block anchor both font-driven labelers share: the
     * smallest block index on page 0 whose max font size equals the
-    * document max (None when no token has a font size — the window
-    * `===` on nulls is never true). The max is `Double.compare`'s, as
-    * `Seq.max` takes it. */
+    * document max (None when no token has a font size). The max is
+    * `Double.compare`'s, as `Seq.max` takes it. */
   private def titleBlockOf(toks: IndexedSeq[TokenRow]): Option[Int] = {
     var hasSize = false
     var maxFs = 0.0
@@ -187,9 +178,11 @@ private[graft] object LocalLabelers {
     if (found) Some(block) else None
   }
 
-  /** [[SegmentationRuleLabeler]] fold twin: header = title block + its
-    * successor on page 0; back-matter tags from a block's first token;
-    * everything else body. */
+  /** Segmentation-stage rules: the title block and its successor on
+    * page 0 → `<header>`; blocks opening with an acknowledgement,
+    * appendix/annex or references heading → `<acknowledgement>`/
+    * `<annex>`/`<references>`; the rest → `<body>` — the views
+    * `processor.py:205-225` consumes, as a deterministic stand-in. */
   def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val titleBlock = titleBlockOf(toks)
     // the back-matter tag of each (page, block), from its first token —
@@ -221,8 +214,8 @@ private[graft] object LocalLabelers {
   private def blockKey(t: TokenRow): Long =
     (t.page_idx.toLong << 32) | (t.block_idx & 0xffffffffL)
 
-  /** [[RuleLabeler]] fold twin (header-stage): title block → title,
-    * successor → author, rest O — computed over the view's tokens. */
+  /** Header-stage layout rules: title block → `<title>`, its
+    * successor → `<author>`, the rest O — over the view's tokens. */
   def headerRuleLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val titleBlock = titleBlockOf(toks)
     toks.map { t =>
@@ -262,8 +255,12 @@ private[graft] object LocalLabelers {
     if (i < end) toks(i).text else null
   }
 
-  /** [[BodyRuleLabeler]] fold twin — caption lines, figure/table and
-    * bracket citation markers, first-line section headings. */
+  /** Body-stage rules (fulltext-model stand-in,
+    * `models/fulltext/extract.py` labels): `Figure <n>`/`Table <n>`
+    * caption lines → `<figure>`/`<table>`; `Figure|Fig.|Table` + number
+    * mid-line → `<figure_marker>`/`<table_marker>`; `[ n ]` →
+    * `<citation_marker>`; a block's first line → `<section>`, every
+    * other line one `<paragraph>` span. */
   def bodyRuleLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val out = new Array[(TokenRow, String)](toks.length)
     foreachLine(toks) { (start, end) =>
@@ -301,8 +298,9 @@ private[graft] object LocalLabelers {
     ArraySeq.unsafeWrapArray(out)
   }
 
-  /** [[ReferenceSegmenterRuleLabeler]] fold twin — leading numeric
-    * marker run (`1.`, `[1]`, `2)`) → label, rest of line → reference. */
+  /** Reference-segmenter-stage rules: a line's leading numeric marker
+    * run (`1.`, `[1]`, `2)`) → `<label>`, the rest of the line (or a
+    * line with no marker) → one `<reference>` span. */
   def referenceSegmenterLabels(
       toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
     val out = new Array[(TokenRow, String)](toks.length)
@@ -312,7 +310,6 @@ private[graft] object LocalLabelers {
       val hasLabel = bareNum(first) ||
         (first == "[" && bareNum(second))
       // min token_idx whose text is non-null and not marker-shaped
-      // (window when(!markerish) skips null text the same way)
       var hasNonMarker = false
       var firstNonMarker = 0
       var i = start
@@ -340,7 +337,7 @@ private[graft] object LocalLabelers {
     ArraySeq.unsafeWrapArray(out)
   }
 
-  /** [[BioSpans.spans]] fold twin: collapse to ordered spans with
+  /** [[BioSpans.spans]] per document: collapse to ordered spans with
     * `text + whitespace` reassembly, trailing whitespace trimmed
     * (UTF8String.trimRight semantics — chars <= 0x20). */
   def spansLocal(labeled: IndexedSeq[(TokenRow, String)]): IndexedSeq[Extractors.Span] = {

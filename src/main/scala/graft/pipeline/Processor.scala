@@ -604,7 +604,7 @@ object Processor {
   }
 
   /** The reference's full document flow (processor.py:180-274) as ONE
-    * `groupByKey(doc_id)` fold: segmentation, the five view labelers,
+    * per-`doc_id` fold: segmentation, the five view labelers,
     * every model fold, and `assignIdsAndTargets` all run per document
     * inside a single pass — the same shape as the reference's
     * one-document `FullTextProcessor.get_semantic_document`.
@@ -612,10 +612,10 @@ object Processor {
     * This replaced a five-branch DataFrame formulation whose per-view
     * window labelers cost ~14 exchanges and 12-13 s at sf1 for
     * p04/p06: labels are per-line/per-block decisions, so the fold
-    * computes them locally ([[LocalLabelers]], window-parity pinned by
-    * LabelerParitySpec) and the whole pipeline shuffles the token
-    * table exactly once. At 100 TB that is the difference between one
-    * repartition of the corpus and five window sorts of it.
+    * computes them locally ([[LocalLabelers]]) and the whole pipeline
+    * shuffles the token table at most once (not at all if it is
+    * clustered by `doc_id`). At 100 TB that is the difference between
+    * one repartition of the corpus and five window sorts of it.
     */
   def documentPipeline(tokens: DataFrame, config: Config = Config(),
       graphics: Option[DataFrame] = None): Dataset[SemanticNode] = {
@@ -638,7 +638,8 @@ object Processor {
 
   /** The per-document fold shared by every pipeline surface: `finish`
     * maps a document's final nodes to output rows (identity for the
-    * node table, `buildTei` for the fused TEI sink). */
+    * node table, `buildTei` for the fused TEI sink). Grouping on the
+    * `doc_id` column keeps a doc-clustered input's partitioning. */
   private def foldDocuments[T](tokens: DataFrame, config: Config,
       graphics: Option[DataFrame])(
       finish: (Long, Seq[SemanticNode]) => Iterator[T])(
@@ -648,22 +649,22 @@ object Processor {
     val toks = asTokenRows(tokens)
     graphics match {
       case None =>
-        toks.groupByKey(_.doc_id).flatMapGroups { (docId, it) =>
-          finish(docId, documentNodes(docId, it.toSeq, Nil, config))
+        toks.groupBy(col("doc_id")).as[Long, TokenRow].flatMapGroups {
+          (docId, it) => finish(docId, documentNodes(docId, it.toSeq, Nil, config))
         }
       case Some(g) =>
         // the whole graphics chain is per-document by construction, so
-        // it runs inside the SAME cogroup as the node fold: one shuffle
-        // of the token table, one of the (tiny) graphics table, zero
-        // extra scans
+        // it runs inside the SAME cogroup as the node fold: at most one
+        // shuffle of the token table, one of the (tiny) graphics table,
+        // zero extra scans
         val gIn = g.select(col("doc_id"), col("graphic_id"),
             col("graphic_type"), col("x"), col("y"), col("width"),
             col("height"), col("page_number"), col("page_width"),
             col("page_height")).as[GraphicIn]
-        toks.groupByKey(_.doc_id).cogroup(gIn.groupByKey(_.doc_id)) {
-          (docId, ts, gs) =>
+        toks.groupBy(col("doc_id")).as[Long, TokenRow]
+          .cogroup(gIn.groupBy(col("doc_id")).as[Long, GraphicIn]) { (docId, ts, gs) =>
             finish(docId, documentNodes(docId, ts.toSeq, gs.toSeq, config))
-        }
+          }
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.Row
+
 /** Engine-internal document data model (SURVEY.md §1.2 / FIXTURES.md §2).
   *
   * The reference keeps one nested Python object tree per document
@@ -23,10 +25,23 @@ final case class FontInfo(
 object FontInfo {
   /** EMPTY_FONT analog (layout_document.py EMPTY_FONT). */
   val empty: FontInfo = FontInfo(null, null, None, false, false, false, false)
+
+  /** The token table's `font` struct, read by field name. */
+  def fromRow(f: Row): FontInfo =
+    FontInfo(f.getAs[String]("font_id"), f.getAs[String]("font_family"),
+      Option(f.getAs[java.lang.Double]("font_size")).map(_.doubleValue),
+      f.getAs[Boolean]("is_bold"), f.getAs[Boolean]("is_italics"),
+      f.getAs[Boolean]("is_subscript"), f.getAs[Boolean]("is_superscript"))
 }
 
 final case class Coords(
     x: Double, y: Double, width: Double, height: Double, page_number: Int)
+
+object Coords {
+  /** The token table's `coords` struct, read by field name. */
+  def fromRow(c: Row): Coords = Coords(c.getAs("x"), c.getAs("y"),
+    c.getAs("width"), c.getAs("height"), c.getAs("page_number"))
+}
 
 /** One row per layout token (layout_document.py:121-126 + page meta). */
 final case class TokenRow(

@@ -41,7 +41,7 @@ object MediaTypes {
   * on the JDK's built-in HTTP server, so the library needs no
   * framework dependency. Each uploaded document is parsed on the
   * request thread and runs the SAME per-document fold the batch
-  * pipeline runs inside its `groupByKey(doc_id)`
+  * pipeline runs inside its per-`doc_id` fold
   * ([[Processor.documentNodes]]), then the same TEI/JATS/zip sinks, so
   * service responses and corpus-scale runs cannot drift apart — and a
   * document request starts no Spark job, as the reference parses one

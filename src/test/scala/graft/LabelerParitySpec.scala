@@ -5,9 +5,12 @@ import org.apache.spark.sql.DataFrame
 import graft.pipeline._
 import graft.sources.AltoReader
 
-/** Pins the window-form labelers (the standalone DataFrame surface) and
-  * their fold-form twins in [[LocalLabelers]] to IDENTICAL output — the
-  * invariant the single-pass documentPipeline rests on. The corpus
+/** Pins every rule labeler to golden labels — both its DataFrame form
+  * (the standalone labeled-token surface) and the [[LocalLabelers]]
+  * function the single-pass documentPipeline calls directly — and the
+  * DataFrame [[BioSpans]] to its per-document form. The golden labels
+  * are the window-expression labelers' output on this corpus, from
+  * before those were replaced by [[PerDocumentLabeler]]. The corpus
   * exercises every rule branch: multi-block header, figure/table
   * captions and markers, bracket citations, acknowledgement/annex/
   * references blocks with `1.` and `[1]` reference markers, a fontless
@@ -51,20 +54,22 @@ class LabelerParitySpec extends SparkSuite {
       Seq("[", "2", "]", "Bob", "Jones", "Deep", "Analysis", "2021"),
       Seq("no", "marker", "reference", "line")))).mkString("\n"))
 
-  // no font sizes at all: title-block anchor must resolve to None in
-  // both forms (the window === on null never fires)
+  // no font sizes at all: the title-block anchor must resolve to None,
+  // so the document has no header
   private val fontlessDoc = alto(
     block("", Seq(Seq("Plain", "words"), Seq("more", "text"))))
 
   private def corpus: DataFrame =
     AltoReader.tokens(Seq((0L, richDoc), (1L, fontlessDoc)).toDS()).toDF()
 
-  private def windowLabels(labeled: DataFrame): Seq[(Long, Int, Int, Int, Int, String)] =
+  private type Labeled = Seq[(Long, Int, Int, Int, Int, String)]
+
+  private def positionLabels(labeled: DataFrame): Labeled =
     labeled.select("doc_id", "page_idx", "block_idx", "line_idx", "token_idx", "label")
       .as[(Long, Int, Int, Int, Int, String)].collect().sortBy(r => (r._1, r._2, r._3, r._4, r._5))
 
   private def localLabels(f: IndexedSeq[TokenRow] => IndexedSeq[(TokenRow, String)],
-      tokens: DataFrame): Seq[(Long, Int, Int, Int, Int, String)] = {
+      tokens: DataFrame): Labeled = {
     val rows = tokens.as[TokenRow].collect().toIndexedSeq
     rows.groupBy(_.doc_id).toSeq.flatMap { case (_, ts) =>
       f(LocalLabelers.ordered(ts)).map { case (t, l) =>
@@ -73,12 +78,49 @@ class LabelerParitySpec extends SparkSuite {
     }.sortBy(r => (r._1, r._2, r._3, r._4, r._5))
   }
 
-  test("segmentation labeler: window and local forms agree") {
-    val w = windowLabels(new SegmentationRuleLabeler().label(corpus))
-    val l = localLabels(LocalLabelers.segmentationLabels, corpus)
-    assert(w == l)
+  /** Golden labels, one line per text line: `"doc page block line:"`
+    * then the labels of its tokens 0, 1, 2, … */
+  private def golden(lines: String*): Labeled =
+    lines.flatMap { l =>
+      val Array(key, labels) = l.split(": ")
+      val Array(d, p, b, ln) = key.split(" ")
+      labels.split(" ").toSeq.zipWithIndex.map { case (lab, t) =>
+        (d.toLong, p.toInt, b.toInt, ln.toInt, t, lab)
+      }
+    }
+
+  /** Both forms of one rule label `tokens` exactly as `expected`. */
+  private def assertGolden(labeler: SequenceLabeler,
+      rule: IndexedSeq[TokenRow] => IndexedSeq[(TokenRow, String)],
+      tokens: DataFrame, expected: Labeled): Unit = {
+    assert(positionLabels(labeler.label(tokens)) == expected)
+    assert(localLabels(rule, tokens) == expected)
+  }
+
+  test("segmentation labeler: golden labels") {
+    val expected = golden(
+      "0 0 0 0: B-<header> I-<header> I-<header>",
+      "0 0 1 0: B-<header> I-<header> I-<header> I-<header> I-<header>",
+      "0 0 2 0: B-<body> I-<body> I-<body>",
+      "0 0 2 1: I-<body> I-<body> I-<body> I-<body> I-<body> I-<body> I-<body>",
+      "0 0 2 2: I-<body> I-<body> I-<body> I-<body> I-<body> I-<body> I-<body> I-<body> I-<body>",
+      "0 0 3 0: B-<body> I-<body> I-<body> I-<body> I-<body>",
+      "0 0 4 0: B-<body> I-<body> I-<body>",
+      "0 0 4 1: I-<body> I-<body>",
+      "0 0 5 0: B-<acknowledgement>",
+      "0 0 5 1: I-<acknowledgement> I-<acknowledgement> I-<acknowledgement>",
+      "0 0 6 0: B-<annex>",
+      "0 0 6 1: I-<annex> I-<annex>",
+      "0 0 7 0: B-<references>",
+      "0 0 7 1: I-<references> I-<references> I-<references> I-<references> I-<references> I-<references> I-<references>",
+      "0 0 7 2: I-<references> I-<references> I-<references> I-<references> I-<references> I-<references> I-<references> I-<references>",
+      "0 0 7 3: I-<references> I-<references> I-<references> I-<references>",
+      "1 0 0 0: B-<body> I-<body>",
+      "1 0 0 1: I-<body> I-<body>")
+    assertGolden(new SegmentationRuleLabeler(), LocalLabelers.segmentationLabels,
+      corpus, expected)
     // sanity: the corpus actually hits every view
-    val tags = w.map(r => LocalLabelers.stripTag(r._6)).toSet
+    val tags = expected.map(r => LocalLabelers.stripTag(r._6)).toSet
     assert(tags == Set("<header>", "<body>", "<acknowledgement>",
       "<annex>", "<references>"))
   }
@@ -87,30 +129,39 @@ class LabelerParitySpec extends SparkSuite {
     BioSpans.filterByTags(new SegmentationRuleLabeler().label(corpus), Seq(tag))
       .drop("label", "tag")
 
-  test("header rule labeler: window and local forms agree") {
-    val view = segView("<header>")
-    val w = windowLabels(new RuleLabeler().label(view))
-    val l = localLabels(LocalLabelers.headerRuleLabels, view)
-    assert(w == l)
-    assert(w.exists(_._6 == "B-<title>") && w.exists(_._6 == "B-<author>"))
+  test("header rule labeler: golden labels") {
+    // the fontless document has no title block, so no header view
+    assertGolden(new RuleLabeler(), LocalLabelers.headerRuleLabels,
+      segView("<header>"), golden(
+        "0 0 0 0: B-<title> I-<title> I-<title>",
+        "0 0 1 0: B-<author> I-<author> I-<author> I-<author> I-<author>"))
   }
 
-  test("body rule labeler: window and local forms agree") {
-    val view = segView("<body>")
-    val w = windowLabels(new BodyRuleLabeler().label(view))
-    val l = localLabels(LocalLabelers.bodyRuleLabels, view)
-    assert(w == l)
-    val tags = w.map(r => LocalLabelers.stripTag(r._6)).toSet
+  test("body rule labeler: golden labels") {
+    val expected = golden(
+      "0 0 2 0: B-<section> I-<section> I-<section>",
+      "0 0 2 1: B-<paragraph> B-<figure_marker> I-<figure_marker> I-<paragraph> B-<table_marker> I-<table_marker> I-<paragraph>",
+      "0 0 2 2: B-<paragraph> B-<citation_marker> I-<citation_marker> I-<citation_marker> I-<paragraph> I-<paragraph> I-<paragraph> I-<paragraph> I-<paragraph>",
+      "0 0 3 0: B-<figure> I-<figure> I-<figure> I-<figure> I-<figure>",
+      "0 0 4 0: B-<table> I-<table> I-<table>",
+      "0 0 4 1: B-<paragraph> I-<paragraph>",
+      "1 0 0 0: B-<section> I-<section>",
+      "1 0 0 1: B-<paragraph> I-<paragraph>")
+    assertGolden(new BodyRuleLabeler(), LocalLabelers.bodyRuleLabels,
+      segView("<body>"), expected)
+    val tags = expected.map(r => LocalLabelers.stripTag(r._6)).toSet
     assert(Set("<figure>", "<table>", "<figure_marker>", "<table_marker>",
       "<citation_marker>", "<section>", "<paragraph>").subsetOf(tags))
   }
 
-  test("reference-segmenter labeler: window and local forms agree") {
-    val view = segView("<references>")
-    val w = windowLabels(new ReferenceSegmenterRuleLabeler().label(view))
-    val l = localLabels(LocalLabelers.referenceSegmenterLabels, view)
-    assert(w == l)
-    assert(w.exists(_._6 == "B-<label>")) // both 1. and [2] marker styles
+  test("reference-segmenter labeler: golden labels") {
+    // both the `1.` and the `[2]` marker styles
+    assertGolden(new ReferenceSegmenterRuleLabeler(),
+      LocalLabelers.referenceSegmenterLabels, segView("<references>"), golden(
+        "0 0 7 0: B-<reference>",
+        "0 0 7 1: B-<label> I-<label> B-<reference> I-<reference> I-<reference> I-<reference> I-<reference>",
+        "0 0 7 2: B-<label> I-<label> I-<label> B-<reference> I-<reference> I-<reference> I-<reference> I-<reference>",
+        "0 0 7 3: B-<reference> I-<reference> I-<reference> I-<reference>"))
   }
 
   // ---------------------------------- adversarial lattice decode cases
@@ -249,8 +300,8 @@ class LabelerParitySpec extends SparkSuite {
         "text", "whitespace", "features", "label").drop("label")
     def labelsOf(perPage: Boolean) =
       new CrfLabeler(modelText, perPage = perPage).label(corpus)
-    val byDoc = windowLabels(labelsOf(perPage = false))
-    val byPage = windowLabels(labelsOf(perPage = true))
+    val byDoc = positionLabels(labelsOf(perPage = false))
+    val byPage = positionLabels(labelsOf(perPage = true))
     assert(byDoc == byPage)
     // the fixture is non-trivial: every label appears, on every page
     assert(byPage.count(_._6 == "B-<t>") == 15) // 12 giant pages + 3 docs

@@ -246,6 +246,66 @@ class PlanSpec extends SparkSuite {
       s"documentTei should be one token shuffle (+report sort), found $exchanges:\n${p.take(4000)}")
   }
 
+  /** A token table in the `alto-tokens` hub's shape
+    * (`PipelineOps.tokenTable`): hash-partitioned by `doc_id`, sorted by
+    * position within each partition, cached and materialized. (Until
+    * its first job, an adaptively planned cache reports no output
+    * partitioning, and its consumers plan an exchange — window
+    * functions included.) */
+  private def tokenHub(): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val xml = new PipelineSpec().altoXml
+    val hub = graft.sources.AltoReader.tokens((0L until 3L).map((_, xml)).toDS())
+      .toDF()
+      .repartition(org.apache.spark.sql.functions.col("doc_id"))
+      .sortWithinPartitions("doc_id", "page_idx", "block_idx", "line_idx",
+        "token_idx")
+      .cache()
+    hub.count()
+    hub
+  }
+
+  /** Shuffle exchanges of `df`'s physical plan above its cached inputs
+    * (the scan of a cached frame is a leaf, so the exchange that built
+    * the cache is not counted). */
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case e: ShuffleExchangeLike => e }.size
+  }
+
+  test("rule labelers fold a doc-clustered token hub without an exchange") {
+    val hub = tokenHub()
+    try {
+      Seq(new graft.pipeline.RuleLabeler(),
+          new graft.pipeline.SegmentationRuleLabeler(),
+          new graft.pipeline.BodyRuleLabeler(),
+          new graft.pipeline.ReferenceSegmenterRuleLabeler()).foreach { l =>
+        val labeled = l.label(hub)
+        val p = labeled.queryExecution.executedPlan.toString
+        assert(p.contains("MapGroups"), s"expected the per-document fold in:\n$p")
+        assert(shuffles(labeled) == 0, s"hub is already clustered by doc_id:\n$p")
+      }
+    } finally hub.unpersist()
+  }
+
+  test("single-pass documentPipeline: no exchange before the fold on a " +
+      "doc-clustered token hub") {
+    val hub = tokenHub()
+    try {
+      Seq(graft.pipeline.Processor.documentTei(hub),
+          graft.pipeline.Processor.documentPipeline(hub).toDF()).foreach { df =>
+        val p = df.queryExecution.executedPlan.toString
+        assert(p.contains("MapGroups"), s"expected the per-document fold in:\n$p")
+        assert(shuffles(df) == 0, s"hub is already clustered by doc_id:\n$p")
+      }
+    } finally hub.unpersist()
+  }
+
   test("q115 source cap is the bounded aggregate, never a per-source window sort") {
     val p = plan("q115_source_cap")
     assert(p.contains("collect_min_k_by"),

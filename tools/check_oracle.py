@@ -4,15 +4,7 @@ driver's DuckDB compare: sort columns by name, canonical-render values,
 SHA-256 over '|'-joined rows). Usage: check_oracle.py <verify_out> <sf_dir>
 """
 import sys, json, glob, os, hashlib
-import duckdb
-import pyarrow.parquet as pq
 
-out_dir, sf_dir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
 
 def render(v):
     if v is None:
@@ -21,54 +13,70 @@ def render(v):
         return repr(v)
     return str(v)
 
-def canon(cols, rows):
+
+def lines(cols, rows):
+    """Each row as one '|'-joined line of its values, columns by name."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = ["|".join(render(r[i]) for i in order) for r in rows]
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+    return ["|".join(render(r[i]) for i in order) for r in rows]
 
-fails = []
-for name in sorted(oracle):
-    pdir = os.path.join(out_dir, name)
-    files = glob.glob(os.path.join(pdir, "*.parquet"))
-    if not files:
-        fails.append((name, "no spark output")); continue
-    tbl = pq.read_table(files[0])
-    scols = tbl.column_names
-    srows = [tuple(r[c] for c in scols) for r in tbl.to_pylist()]
-    try:
-        res = con.execute(oracle[name])
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    except Exception as e:
-        fails.append((name, f"duckdb error: {e}")); continue
-    if sorted(scols) != sorted(dcols):
-        fails.append((name, f"schema mismatch spark={sorted(scols)} duck={sorted(dcols)}")); continue
-    if len(srows) != len(drows):
-        fails.append((name, f"rowcount spark={len(srows)} duck={len(drows)}")); continue
-    hs, hd = canon(scols, srows), canon(dcols, drows)
-    if hs != hd:
-        # find first differing row for debugging
-        order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-        order_d = sorted(range(len(dcols)), key=lambda i: dcols[i])
-        detail = ""
-        for i, (a, b) in enumerate(zip(srows, drows)):
-            la = "|".join(render(a[j]) for j in order_s)
-            lb = "|".join(render(b[j]) for j in order_d)
-            if la != lb:
-                detail = f" first diff row {i}: spark={la!r} duck={lb!r}"
-                break
-        fails.append((name, "hash mismatch" + detail))
-    else:
-        print(f"OK   {name} ({len(srows)} rows)")
 
-for name, why in fails:
-    print(f"FAIL {name}: {why}")
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} oracled queries match")
-# rows-only queries: report counts
-for name in sorted(os.listdir(out_dir)):
-    if name in oracle or name == "oracle_sql.json":
-        continue
-    files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
-    n = pq.read_metadata(files[0]).num_rows if files else -1
-    print(f"ROWS {name}: {n}")
-sys.exit(1 if fails else 0)
+def canon(cols, rows):
+    return hashlib.sha256("\n".join(lines(cols, rows)).encode()).hexdigest()
+
+
+def main(out_dir, sf_dir):
+    import duckdb
+    import pyarrow.parquet as pq
+
+    con = duckdb.connect()
+    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+
+    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+
+    fails = []
+    for name in sorted(oracle):
+        pdir = os.path.join(out_dir, name)
+        files = glob.glob(os.path.join(pdir, "*.parquet"))
+        if not files:
+            fails.append((name, "no spark output")); continue
+        tbl = pq.read_table(files[0])
+        scols = tbl.column_names
+        srows = [tuple(r[c] for c in scols) for r in tbl.to_pylist()]
+        try:
+            res = con.execute(oracle[name])
+            dcols = [d[0] for d in res.description]
+            drows = res.fetchall()
+        except Exception as e:
+            fails.append((name, f"duckdb error: {e}")); continue
+        if sorted(scols) != sorted(dcols):
+            fails.append((name, f"schema mismatch spark={sorted(scols)} duck={sorted(dcols)}")); continue
+        if len(srows) != len(drows):
+            fails.append((name, f"rowcount spark={len(srows)} duck={len(drows)}")); continue
+        hs, hd = canon(scols, srows), canon(dcols, drows)
+        if hs != hd:
+            # find first differing row for debugging
+            detail = ""
+            for i, (la, lb) in enumerate(zip(lines(scols, srows), lines(dcols, drows))):
+                if la != lb:
+                    detail = f" first diff row {i}: spark={la!r} duck={lb!r}"
+                    break
+            fails.append((name, "hash mismatch" + detail))
+        else:
+            print(f"OK   {name} ({len(srows)} rows)")
+
+    for name, why in fails:
+        print(f"FAIL {name}: {why}")
+    print(f"\n{len(oracle) - len(fails)}/{len(oracle)} oracled queries match")
+    # rows-only queries: report counts
+    for name in sorted(os.listdir(out_dir)):
+        if name in oracle or name == "oracle_sql.json":
+            continue
+        files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
+        n = pq.read_metadata(files[0]).num_rows if files else -1
+        print(f"ROWS {name}: {n}")
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1], sys.argv[2]))
