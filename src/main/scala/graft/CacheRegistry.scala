@@ -110,7 +110,13 @@ object CacheRegistry {
     * in the warm session returns the SAME Dataset instance, so Spark's
     * cache hits by object identity of the plan, not canonical equality.
     * Released by `release(includeShared = true)` like any shared entry
-    * (a later call then rebuilds). */
+    * (a later call then rebuilds).
+    *
+    * The first build is materialized before it is returned (one
+    * `count`): until a cache's first job, an adaptively planned cached
+    * plan reports no output partitioning, so the first consumer of a
+    * fresh doc-clustered hub would plan its own `hashpartitioning`
+    * exchange on top of the one that built the cache. */
   def persistKeyed[T](spark: SparkSession, key: String)(
       mk: => Dataset[T]): Dataset[T] = {
     sweepStopped()
@@ -151,7 +157,9 @@ object CacheRegistry {
               winner.queryExecution.analyzed))
             df.unpersist(blocking = false)
           winner
-        case None => df
+        case None =>
+          df.count()
+          df
       }
     }
   }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators over a document corpus.
@@ -114,102 +116,191 @@ object Dedup {
 
   /** MinHash + LSH banding: docs sharing any band key become candidate
     * pairs; est. Jaccard = matching signature positions / numHashes.
-    * The band exchange is keyed on (band, 8-byte band hash) — at 100 TB
-    * it moves `bands` small rows per doc; on the uncapped self-join AQE
-    * splits hot bands (boilerplate-heavy corpora) as skewed joins.
+    * Returns (doc_id_a < doc_id_b, est_jaccard ≥ `minEstJaccard`), one
+    * row per pair. Ids are an integral column of unique values; a null
+    * id never pairs. Uniqueness is not checked (no job is spent on
+    * it): on the capped path a repeated id pairs once per pair of its
+    * rows that share an under-cap bucket.
     *
-    * Same degenerate-bucket discipline as [[hamming64PairsCapped]]:
-    * `maxBucket` caps candidate generation per (band, band-key) bucket
-    * — a band key shared by 10⁶ documents (empty docs, boilerplate
-    * pages: every band of an identical signature collides) otherwise
-    * enumerates ~5·10¹¹ candidate pairs. Identical-SIGNATURE volume
-    * is recovered losslessly as keeper stars (group key = xxhash64 of
-    * the signature, 8 bytes through the exchange instead of the
-    * 512-byte signature; star pairs flow through the SAME
-    * signature-verify as banded candidates, so a 64-bit group-key
-    * collision is filtered by its true estimate rather than trusted). Under the cap the output
-    * is identical to the uncapped join (stars are subsumed by the
-    * distinct). Genuinely-similar-but-not-identical pairs whose every
-    * shared band is over-cap are lost — the standard LSH bucket-cap
-    * trade. */
+    * With a finite `maxBucket` (the scale path) candidates are verified
+    * where the band exchange puts them: ONE exchange on (band, bkey)
+    * carries each doc's id AND signature, and a bucket-local kernel
+    * ([[lshBucketPairs]]) estimates every member pair and emits it only
+    * from the FIRST band where the two share an under-cap bucket — so
+    * each pair comes out once with no pair `distinct` and no signature
+    * join-back. The trade: each of a doc's `bands` rows through the
+    * band exchange carries its signature (8·numHashes bytes more than
+    * the id and key), in place of a pair `distinct` and two signature
+    * join-backs (three more exchanges plus their aggregation state and
+    * hash tables). A bucket reads at most
+    * `maxBucket + 1` members, so its state is bounded by
+    * `maxBucket·(8 + 8·numHashes)` bytes.
+    *
+    * `maxBucket` caps candidate generation per (band, band-key) bucket —
+    * a band key shared by 10⁶ documents (empty docs, boilerplate pages:
+    * every band of an identical signature collides) otherwise
+    * enumerates ~5·10¹¹ candidate pairs. Identical-SIGNATURE volume is
+    * recovered losslessly as keeper stars ((min id, member) per group of
+    * one `xxhash64(sig)`), kept only when the two share no under-cap
+    * bucket and verified by their true estimate, so a 64-bit group-key
+    * collision is filtered rather than trusted. Under the cap the
+    * output equals the uncapped self-join's row for row. Genuinely
+    * similar but not identical pairs whose every shared band is
+    * over-cap are lost — the standard LSH bucket-cap trade.
+    *
+    * `maxBucket = Long.MaxValue` keeps the plain self-join on the band
+    * key (an unbounded bucket could be corpus-sized); on it AQE splits
+    * hot bands as skewed joins. */
   def minHashLshPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleSize: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
       minEstJaccard: Double = 0.5,
       maxBucket: Long = Long.MaxValue): DataFrame = {
     val sig0 = minHashSignatures(docs, textCol, idCol, shingleSize, numHashes)
-    // the signature table feeds the band pass and the two verify
-    // join-backs (plus, capped, the star member join) — persist
-    // unconditionally (r17) so the shingle+minhash kernel, THE
-    // corpus-scale pass of this family, runs once instead of once per
-    // consumer (the uncapped plan re-evaluated it for each verify
-    // build side)
+    // the signature table feeds the band pass and the count below (plus,
+    // capped, the over-cap probe and the star pass; uncapped, the two
+    // verify join-backs) — persisted so the shingle+minhash kernel, THE
+    // corpus-scale pass of this family, runs once
     val sig = graft.CacheRegistry.persist(sig0)
-    // first-level short-circuit: a band bucket can never hold more
-    // members than the corpus has rows, so ONE count retires the star
-    // probe and recovery whenever the corpus itself is under the cap —
-    // the sf0.1/sf1 bench regime; a 100 TB corpus stays on the capped
-    // path. Counted on the persisted signatures, so the count pays the
-    // cache build every later consumer reuses (one job, not a source
-    // scan plus a cache stage per consumer).
-    val capped0 = maxBucket != Long.MaxValue && sig.count() > maxBucket
-    // Candidate pairs first (compact 16-byte rows through the band
-    // exchange and the distinct), then the signatures join back ONCE
-    // per doc and the 64-element comparison runs once per candidate
-    // pair — not once per shared band, which for boilerplate-heavy
-    // corpora multiplies the array work by the band count.
-    val banded = bandKeys(sig, "id", bands, numHashes)
-    // r17 (guide §2.4): with a finite cap, ONE exchange on (band,
-    // bkey) builds per-bucket member lists via the SIZE-CAPPED collect
-    // (aggregation state bounded at maxBucket+1 ids per key on every
-    // partial buffer) and candidate pairs explode row-locally; the
-    // bucket cap is the list-size filter (a sentinel-capped list IS an
-    // over-cap bucket). This replaces the bucket-count probe +
-    // semi-join prune + a×b self-join — the banded table was read
-    // three ways across two extra re-planned AQE stages. At sub-cap
-    // corpus sizes no bucket can be over cap, so the candidates equal
-    // the uncapped join's exactly. A truly uncapped request keeps the
-    // self-join (an unbounded member list could be corpus-sized).
-    var cand =
-      if (maxBucket != Long.MaxValue)
-        banded.groupBy("band", "bkey")
-          .agg(graft.functions.BoundedAgg.collect_capped(col("id"),
-            maxBucket).as("ms"))
-          .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-          .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-            .as(Seq("doc_id_a", "doc_id_b")))
-          .distinct()
-      else {
-        val a = banded.select(col("band"), col("bkey"),
-          col("id").as("doc_id_a"))
-        val b = banded.select(col("band"), col("bkey"),
-          col("id").as("doc_id_b"))
-        a.join(b, Seq("band", "bkey"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .select("doc_id_a", "doc_id_b").distinct()
-      }
-    // adaptive star-recovery probe (the q113 salted-join pattern),
-    // reached only when the corpus count says an over-cap bucket is
-    // POSSIBLE: one small aggregate over 8-byte band keys decides
-    // whether any bucket actually dropped pairs — a clean corpus (the
-    // common case) skips the star union and its extra distinct.
-    val capped = capped0 && !banded.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bn")).filter(col("bn") > maxBucket).isEmpty
-    if (capped) {
-      // keeper-star recovery of identical-signature groups the cap may
-      // have dropped: n−1 linear rows per group, never C(n, 2)
-      val star = keeperStars(sig, col("id"), xxhash64(col("sig")))
-        .select(col("star_a").as("doc_id_a"), col("star_b").as("doc_id_b"))
-      cand = cand.unionByName(star).distinct()
+    if (maxBucket == Long.MaxValue) {
+      val banded = bandKeys(sig, "id", bands, numHashes)
+      val a = banded.select(col("band"), col("bkey"), col("id").as("doc_id_a"))
+      val b = banded.select(col("band"), col("bkey"), col("id").as("doc_id_b"))
+      a.join(b, Seq("band", "bkey"))
+        .filter(col("doc_id_a") < col("doc_id_b"))
+        .select("doc_id_a", "doc_id_b").distinct()
+        .join(sig.select(col("id").as("doc_id_a"), col("sig").as("sig_a")), "doc_id_a")
+        .join(sig.select(col("id").as("doc_id_b"), col("sig").as("sig_b")), "doc_id_b")
+        .withColumn("est_jaccard", estJaccard(
+          graft.functions.Sketch.sig_match_count(col("sig_a"), col("sig_b")),
+          numHashes))
+        .filter(col("est_jaccard") >= minEstJaccard)
+        .select("doc_id_a", "doc_id_b", "est_jaccard")
+    } else {
+      val idType = sig.schema("id").dataType
+      val live = sig.filter(col("id").isNotNull)
+        .select(col("id").cast("long").as("id"), col("sig"))
+      val banded = bandKeys(live, "id", bands, numHashes, col("sig"))
+      // A bucket never holds more members than the corpus has rows, so
+      // ONE count on the persisted signatures (which pays the cache
+      // build the kernel reuses) rules out every over-cap bucket when
+      // the corpus is under the cap — the benchmark and sf0.1 regime.
+      // Otherwise one small aggregate over the band keys lists the
+      // over-cap buckets: at most n·bands/(maxBucket+1) of them.
+      val overCap: Set[(Int, Long)] =
+        if (sig.count() <= maxBucket) Set.empty
+        else banded.groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
+          .filter(col("bn") > maxBucket).select("band", "bkey")
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      val rows = numHashes / bands
+      val inBuckets = banded.groupBy(col("band"), col("bkey"))
+        .as[(Int, Long), LshMember](
+          Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong), MemberEnc)
+        .flatMapGroups { (key, members) =>
+          lshBucketPairs(key._1, members, maxBucket, bands, rows, overCap)
+        }(PairEnc)
+      val pairs =
+        if (overCap.isEmpty) inBuckets
+        else
+          // keeper-star recovery of identical-signature groups the cap
+          // may have dropped: members stream in id order, so the keeper
+          // (min id) comes first and only its signature is held; n−1
+          // linear rows per group, never C(n, 2)
+          inBuckets.union(live.groupBy(xxhash64(col("sig")))
+            .as[Long, LshMember](Encoders.scalaLong, MemberEnc)
+            .flatMapSortedGroups(col("id")) { (_, members) =>
+              lshStarPairs(members, bands, rows, overCap)
+            }(PairEnc))
+      pairs.toDF()
+        .withColumn("est_jaccard", estJaccard(col("matches"), numHashes))
+        .filter(col("est_jaccard") >= minEstJaccard)
+        .select(col("doc_id_a").cast(idType).as("doc_id_a"),
+          col("doc_id_b").cast(idType).as("doc_id_b"), col("est_jaccard"))
     }
-    cand
-      .join(sig.select(col("id").as("doc_id_a"), col("sig").as("sig_a")), "doc_id_a")
-      .join(sig.select(col("id").as("doc_id_b"), col("sig").as("sig_b")), "doc_id_b")
-      .withColumn("est_jaccard",
-        estJaccard(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("doc_id_a", "doc_id_b", "est_jaccard")
   }
+
+  /** One member of a [[minHashLshPairs]] bucket; `sig` is null for a
+    * null text. */
+  private[operators] final case class LshMember(id: Long, sig: Array[Long])
+
+  /** A [[minHashLshPairs]] pair before its estimate: `matches` counts
+    * the agreeing signature positions, None when either signature is
+    * null. */
+  private[operators] final case class LshPair(doc_id_a: Long, doc_id_b: Long,
+      matches: Option[Int])
+
+  private lazy val MemberEnc = Encoders.product[LshMember]
+  private lazy val PairEnc = Encoders.product[LshPair]
+
+  private def sigData(m: LshMember): ArrayData =
+    if (m.sig == null) null else UnsafeArrayData.fromPrimitiveArray(m.sig)
+
+  /** A member's band keys by the one [[graft.functions.Sketch.bandKeys]]
+    * definition, so a 64-bit key collision behaves as it does in the
+    * band exchange. */
+  private def keysOf(sig: ArrayData, bands: Int, rows: Int): Array[Long] =
+    graft.functions.Sketch.bandKeys(sig, bands, rows).toLongArray()
+
+  /** Whether two members' keys agree on a band below `limit` whose
+    * bucket is under the cap — i.e. the pair came out of that bucket. */
+  private def sharedUnderCap(ka: Array[Long], kb: Array[Long], limit: Int,
+      overCap: Set[(Int, Long)]): Boolean = {
+    var b = 0
+    while (b < limit) {
+      if (ka(b) == kb(b) && (overCap.isEmpty || !overCap.contains((b, ka(b)))))
+        return true
+      b += 1
+    }
+    false
+  }
+
+  private def lshPair(idA: Long, sigA: ArrayData, idB: Long, sigB: ArrayData): LshPair =
+    LshPair(idA, idB,
+      if (sigA == null || sigB == null) None
+      else Some(graft.functions.Sketch.sigMatchCount(sigA, sigB)))
+
+  /** The bucket-local verify of [[minHashLshPairs]] for one bucket of
+    * band `band`: reads at most `maxBucket + 1` members; a bucket over
+    * the cap or under 2 members emits nothing. Every member pair with
+    * `id_a < id_b` (equal ids never pair) is estimated and emitted
+    * unless the two already share an under-cap bucket of a lower band,
+    * so over all buckets each pair comes out exactly once. */
+  private[operators] def lshBucketPairs(band: Int, members: Iterator[LshMember],
+      maxBucket: Long, bands: Int, rows: Int,
+      overCap: Set[(Int, Long)]): Iterator[LshPair] = {
+    val ms = scala.collection.mutable.ArrayBuffer.empty[LshMember]
+    while (members.hasNext && ms.size <= maxBucket) ms += members.next()
+    if (ms.size < 2 || ms.size > maxBucket) return Iterator.empty
+    val sigs = ms.map(sigData)
+    val keys = sigs.map(keysOf(_, bands, rows))
+    Iterator.range(0, ms.size).flatMap { i =>
+      Iterator.range(i + 1, ms.size).flatMap { j =>
+        val (a, b) = if (ms(i).id < ms(j).id) (i, j) else (j, i)
+        if (ms(a).id == ms(b).id || sharedUnderCap(keys(a), keys(b), band, overCap))
+          Iterator.empty
+        else Iterator.single(lshPair(ms(a).id, sigs(a), ms(b).id, sigs(b)))
+      }
+    }
+  }
+
+  /** Keeper stars of one identical-signature group, members in id
+    * order: (keeper = first id, member) for every larger-id member that
+    * shares no under-cap bucket with the keeper (such a pair already
+    * came out of [[lshBucketPairs]]). Holds one signature. */
+  private[operators] def lshStarPairs(members: Iterator[LshMember], bands: Int,
+      rows: Int, overCap: Set[(Int, Long)]): Iterator[LshPair] =
+    if (!members.hasNext) Iterator.empty
+    else {
+      val keeper = members.next()
+      val kSig = sigData(keeper)
+      val kKeys = keysOf(kSig, bands, rows)
+      members.filter(_.id != keeper.id).flatMap { m =>
+        val mSig = sigData(m)
+        if (sharedUnderCap(kKeys, keysOf(mSig, bands, rows), bands, overCap))
+          Iterator.empty
+        else Iterator.single(lshPair(keeper.id, kSig, m.id, mSig))
+      }
+    }
 
   /** MinHash signature table (id, sig) — the PERSISTABLE form of the
     * fuzzy-dedup index: compute once per corpus snapshot, store as
@@ -257,17 +348,17 @@ object Dedup {
     * the native [[graft.functions.BandKeysExpr]]; they are stored in
     * served indexes ([[minHashBandTable]]), so the hash is fixed. */
   private def bandKeys(sigs: DataFrame, idOut: String, bands: Int,
-      numHashes: Int): DataFrame = {
+      numHashes: Int, carry: Column*): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    sigs.select(col("id").as(idOut),
+    sigs.select((col("id").as(idOut) +: carry) :+
       posexplode(graft.functions.Sketch.band_keys(col("sig"), bands,
-        numHashes / bands)).as(Seq("band", "bkey")))
+        numHashes / bands)).as(Seq("band", "bkey")): _*)
   }
 
-  /** Signature-agreement estimate — the shared verify expression. */
-  private def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
-    round(graft.functions.Sketch.sig_match_count(sigA, sigB)
-      .cast("double") / numHashes, 4)
+  /** Signature-agreement estimate from a matching-position count — the
+    * shared verify rounding. */
+  private def estJaccard(matches: Column, numHashes: Int): Column =
+    round(matches.cast("double") / numHashes, 4)
 
   /** Incremental fuzzy dedup: near-dup candidate pairs BETWEEN a new
     * delivery and the existing corpus, over their signature tables —

@@ -535,6 +535,131 @@ class DedupSpec extends SparkSuite {
     assert(a == b, s"capped-under-cap diverged: $a vs $b")
   }
 
+  /** Seeded near-duplicate clusters: each cluster is a random 24-token
+    * base text and variants with 0–3 tokens replaced, so members agree
+    * on several bands but rarely on all, and exact copies make
+    * identical-signature groups. Ids are 1..n. */
+  private def lshCorpus(seed: Int, clusters: Int, maxSize: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = (0 until 400).map(i => s"w$i")
+    def word() = vocab(rnd.nextInt(vocab.size))
+    val texts = (0 until clusters).flatMap { _ =>
+      val base = Vector.fill(24)(word())
+      Seq.fill(1 + rnd.nextInt(maxSize))((0 until rnd.nextInt(4))
+        .foldLeft(base)((v, _) => v.updated(rnd.nextInt(v.size), word()))
+        .mkString(" "))
+    }
+    texts.indices.map(i => (i + 1L, texts(i)))
+  }
+
+  /** The signatures' LSH buckets with the operator's defaults (16 bands
+    * of 4 rows), on the driver: (band, key) → member ids. */
+  private def lshBuckets(sigs: Map[Long, Array[Long]]): Map[(Int, Long), Seq[Long]] =
+    sigs.toSeq.flatMap { case (id, s) =>
+      graft.functions.Sketch.bandKeys(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(s), 16, 4).toLongArray()
+        .zipWithIndex.map { case (k, b) => ((b, k), id) }
+    }.groupMap(_._1)(_._2)
+
+  private def estOf(a: Array[Long], b: Array[Long]): Double =
+    BigDecimal(a.indices.count(i => a(i) == b(i)).toDouble / 64)
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** minHashLshPairs' capped contract on the driver (unique ids, no
+    * null texts): every pair sharing an under-cap bucket, plus the
+    * (min id, member) stars of identical signatures, estimated once. */
+  private def lshReference(corpus: Seq[(Long, String)], maxBucket: Long,
+      minEst: Double): Seq[(Long, Long, Double)] = {
+    val sigs = Dedup.minHashSignatures(corpus.toDF("doc_id", "text"))
+      .as[(Long, Array[Long])].collect().toMap
+    val banded = lshBuckets(sigs).values.filter(_.size <= maxBucket)
+      .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b)).toSet
+    val stars = sigs.toSeq.groupBy(_._2.toSeq).values.flatMap { g =>
+      val keeper = g.map(_._1).min
+      g.map(_._1).filter(_ != keeper).map((keeper, _))
+    }
+    (banded ++ stars).toSeq.map { case (a, b) => (a, b, estOf(sigs(a), sigs(b))) }
+      .filter(_._3 >= minEst).sorted
+  }
+
+  private def lshRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    try df.as[(Long, Long, Double)].collect().toSeq.sorted
+    finally CacheRegistry.release(spark)
+
+  test("minHashLshPairs capped kernel: under the cap equals the uncapped " +
+      "self-join row for row on seeded corpora with multi-band collisions") {
+    Seq(3, 17, 29).foreach { seed =>
+      val corpus = lshCorpus(seed, clusters = 25, maxSize = 6)
+      val docs = corpus.toDF("doc_id", "text")
+      val sigs = Dedup.minHashSignatures(docs).as[(Long, Array[Long])].collect().toMap
+      val shared = lshBuckets(sigs).values.filter(_.size >= 2)
+        .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
+        .groupBy(identity).values.map(_.size)
+      assert(shared.count(_ >= 2) >= 10 && shared.exists(_ < 16),
+        s"seed $seed: too few multi-band collisions")
+      val capped = lshRows(Dedup.minHashLshPairs(docs, minEstJaccard = 0.0,
+        maxBucket = 1000L))
+      val uncapped = lshRows(Dedup.minHashLshPairs(docs, minEstJaccard = 0.0))
+      assert(capped.nonEmpty && capped == uncapped, s"seed $seed")
+      assert(capped == lshReference(corpus, 1000L, 0.0), s"seed $seed")
+    }
+  }
+
+  test("minHashLshPairs capped kernel over the cap: equals the driver " +
+      "reference; a pair whose first shared band is over the cap and a " +
+      "later one under it comes out once") {
+    val corpus = lshCorpus(11, clusters = 30, maxSize = 8)
+    val maxBucket = 3L
+    val sigs = Dedup.minHashSignatures(corpus.toDF("doc_id", "text"))
+      .as[(Long, Array[Long])].collect().toMap
+    val buckets = lshBuckets(sigs)
+    val bandsOf = buckets.toSeq.flatMap { case ((band, _), ms) =>
+      for (a <- ms; b <- ms if a < b) yield ((a, b), (band, ms.size <= maxBucket))
+    }.groupMap(_._1)(_._2)
+    val lateOnes = bandsOf.collect { case (pair, bs)
+        if !bs.minBy(_._1)._2 && bs.exists(_._2) => pair }.toSet
+    assert(lateOnes.nonEmpty, "no pair with an over-cap first band")
+    val got = lshRows(Dedup.minHashLshPairs(corpus.toDF("doc_id", "text"),
+      minEstJaccard = 0.0, maxBucket = maxBucket))
+    assert(got == lshReference(corpus, maxBucket, 0.0))
+    assert(got.map(p => (p._1, p._2)).distinct.size == got.size)
+    lateOnes.foreach(pair =>
+      assert(got.count(p => (p._1, p._2) == pair) == 1, pair))
+  }
+
+  test("minHashLshPairs: null texts and null ids never pair, capped or not") {
+    val base = "one two three four five six seven eight nine ten"
+    val docs = Seq[(java.lang.Long, String)]((1L, base), (2L, base),
+        (3L, null), (4L, null), (5L, null), (6L, ""), (7L, ""),
+        (null, base), (8L, base + " eleven"))
+      .toDF("doc_id", "text")
+    val uncapped = lshRows(Dedup.minHashLshPairs(docs, minEstJaccard = 0.0))
+    val capped = lshRows(Dedup.minHashLshPairs(docs, minEstJaccard = 0.0,
+      maxBucket = 1000L))
+    // empty texts share the all-max signature (est 1.0), as today
+    assert(uncapped.map(p => (p._1, p._2)) == Seq((1L, 2L), (1L, 8L), (2L, 8L), (6L, 7L)),
+      uncapped)
+    assert(capped == uncapped)
+    // over the cap (three null texts share every bucket): stars of the
+    // null signatures have no estimate and are dropped
+    val over = lshRows(Dedup.minHashLshPairs(docs, minEstJaccard = 0.0,
+      maxBucket = 2L))
+    assert(!over.exists(p => Set(3L, 4L, 5L)(p._1) || Set(3L, 4L, 5L)(p._2)), over)
+    assert(over.contains((6L, 7L, 1.0)), over)
+  }
+
+  test("minHashLshPairs with repeated doc_ids (outside the unique-id " +
+      "contract): one row per pair of rows sharing a bucket") {
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val b = "red orange yellow green blue indigo violet black white grey"
+    val c = "north south east west up down left right in out"
+    val docs = Seq((1L, a), (1L, a), (2L, a), (3L, b), (3L, c), (4L, b))
+      .toDF("doc_id", "text")
+    val got = lshRows(Dedup.minHashLshPairs(docs, maxBucket = 1000L))
+    assert(got == Seq((1L, 2L, 1.0), (1L, 2L, 1.0), (3L, 4L, 1.0)), got)
+  }
+
   test("minHashLshPairsAcross maxBucket: over-cap corpus groups match " +
       "each batch dup ONCE via the corpus keeper; banded pairs survive") {
     import spark.implicits._

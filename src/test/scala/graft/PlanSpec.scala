@@ -306,6 +306,20 @@ class PlanSpec extends SparkSuite {
     } finally hub.unpersist()
   }
 
+  test("a fresh alto-tokens hub, never actioned by its caller, feeds " +
+      "RuleLabeler and documentTei with no exchange") {
+    Graft.releaseCaches(spark, includeShared = true)
+    try {
+      val hub = graft.queries.PipelineOps.tokenTable(spark, sf("0.001"))
+      Seq(new graft.pipeline.RuleLabeler().label(hub),
+          graft.pipeline.Processor.documentTei(hub)).foreach { df =>
+        val p = df.queryExecution.executedPlan.toString
+        assert(p.contains("MapGroups"), s"expected the per-document fold in:\n$p")
+        assert(shuffles(df) == 0, s"the hub is already clustered by doc_id:\n$p")
+      }
+    } finally Graft.releaseCaches(spark, includeShared = true)
+  }
+
   test("q115 source cap is the bounded aggregate, never a per-source window sort") {
     val p = plan("q115_source_cap")
     assert(p.contains("collect_min_k_by"),
@@ -420,8 +434,8 @@ class PlanSpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("capped minHashLshPairs: one (band, bkey) exchange feeds the " +
-      "compiled member_pairs generator; no collect_list, self-join or lambda") {
+  test("capped minHashLshPairs under the cap: ONE (band, bkey) exchange " +
+      "into the bucket-local kernel; no aggregate, join or lambda") {
     import spark.implicits._
     val docs = (0L until 40L).map(i =>
       (i, s"shared words for every doc number ${i % 7} with tail ${i % 3}"))
@@ -435,16 +449,16 @@ class PlanSpec extends SparkSuite {
       CacheRegistry.release(spark)
     }
     val lines = p.linesIterator.toIndexedSeq
-    val bandExchanges = lines.indices.filter(i =>
-      lines(i).contains("Exchange hashpartitioning(band#"))
-    assert(bandExchanges.size == 1, s"expected ONE (band, bkey) exchange:\n$p")
-    val gen = lines.indexWhere(_.contains("Generate member_pairs("))
-    assert(gen >= 0 && gen < bandExchanges.head,
-      s"expected the generator above the band exchange:\n$p")
-    assert(lines(gen).contains("*("), s"generator outside codegen:\n$p")
-    assert(!p.contains("collect_list"), p)
+    val exchanges = lines.filter(_.contains("Exchange"))
+    assert(exchanges.size == 1 &&
+      exchanges.head.contains("hashpartitioning(band#") &&
+      exchanges.head.contains("bkey#"),
+      s"expected exactly ONE (band, bkey) exchange:\n$p")
+    val mapGroups = lines.indexWhere(_.contains("MapGroups"))
+    assert(mapGroups >= 0 && mapGroups < lines.indexWhere(_.contains("Exchange")),
+      s"expected the bucket kernel above the band exchange:\n$p")
+    assert(!p.contains("Aggregate"), s"unexpected aggregate:\n$p")
+    assert(!p.contains("Join"), s"unexpected join:\n$p")
     assert(!p.contains("lambdafunction"), p)
-    assert(!lines.exists(l => l.contains("Join") && l.contains("band#")),
-      s"unexpected self-join on the band key:\n$p")
   }
 }

@@ -17,6 +17,20 @@ class TeiDocumentSpec extends SparkSuite {
   private def tei(nodes: Seq[SemanticNode]): String =
     Tei.serialize(nodes.toDF()).collect().head.getString(1)
 
+  test("buildTei: shuffled and id-sorted nodes give byte-equal TEI") {
+    val nodes = graft.pipeline.Processor.documentPipeline(
+      new PipelineSpec().fixtureTokens.toDF()).collect().toList.sortBy(_.node_id)
+    assert(nodes.map(_.node_type).distinct.size >= 3, nodes)
+    val sorted = Tei.buildTei(nodes)
+    assert(sorted.contains("<TEI"), sorted)
+    Seq(1, 2, 3).foreach { seed =>
+      val shuffled = new scala.util.Random(seed).shuffle(nodes)
+      assert(shuffled != nodes)
+      assert(Tei.buildTei(shuffled) == sorted, s"seed $seed")
+      assert(Tei.buildTei(shuffled.toVector) == sorted, s"seed $seed")
+    }
+  }
+
   test("empty document has no div (test_should_return_empty_document)") {
     val xml = tei(Seq(n(0, -1, "title", "")))
     assert(!xml.contains("<div"), xml)
