@@ -38,17 +38,29 @@ object BioSpans {
   }
 
   /** Seq[Row] of the collected token structs → (text, coords, styles)
-    * via the SAME [[SpanAssembly.assemble]] the local span form uses —
+    * through the [[SpanAssembly]] the local span form streams into —
     * one implementation, provable parity. A UDF (not HOF expressions)
     * because the styled-run offset fold has no clean Column form; the
     * per-span arrays are small and this DataFrame path is the
     * secondary entry (the documentPipeline fold never goes through
     * Catalyst for span assembly at all). */
   private val assembleUdf = udf { toks: Seq[Row] =>
-    SpanAssembly.assemble(toks.map(r => SpanAssembly.SpanTok(
-      r.getAs[String]("text"), r.getAs[String]("whitespace"),
-      Option(r.getAs[Row]("coords")).map(Coords.fromRow),
-      Option(r.getAs[Row]("font")).map(FontInfo.fromRow).orNull)))
+    val asm = new SpanAssembly
+    asm.start()
+    toks.foreach { r =>
+      val f = r.getAs[Row]("font")
+      asm.add(r.getAs[String]("text"), r.getAs[String]("whitespace"),
+        if (f == null) 0
+        else SpanAssembly.styleMask(f.getAs[Boolean]("is_bold"),
+          f.getAs[Boolean]("is_italics"), f.getAs[Boolean]("is_subscript"),
+          f.getAs[Boolean]("is_superscript")))
+      val c = r.getAs[Row]("coords")
+      if (c != null)
+        asm.box(c.getAs[Double]("x"), c.getAs[Double]("y"), c.getAs[Double]("width"),
+          c.getAs[Double]("height"), c.getAs[Int]("page_number"))
+    }
+    asm.finish()
+    (asm.text, asm.coords, asm.styles)
   }
 
   /** Collapse to one row per span: ordered text reassembly

@@ -48,13 +48,18 @@ object Coordinates {
     format(c.page_number, c.x, c.y, c.width, c.height)
 
   private[graft] def format(page: Int, x: Double, y: Double, width: Double,
-      height: Double): String = {
-    val sb = new java.lang.StringBuilder(40).append(page)
+      height: Double): String =
+    appendTo(new java.lang.StringBuilder(40), page, x, y, width, height).toString
+
+  /** [[format]] appended to `sb`. */
+  private[graft] def appendTo(sb: java.lang.StringBuilder, page: Int, x: Double,
+      y: Double, width: Double, height: Double): java.lang.StringBuilder = {
+    sb.append(page)
     appendFixed2(sb.append(','), x)
     appendFixed2(sb.append(','), y)
     appendFixed2(sb.append(','), width)
     appendFixed2(sb.append(','), height)
-    sb.toString
+    sb
   }
 
   /** `%.2f` as `Formatter` prints it: the shortest decimal form
@@ -117,61 +122,131 @@ object Coordinates {
     formatList(merge(ss.filter(s => s != null && s.nonEmpty).flatMap(parse)))
 }
 
-/** Shared span assembly: ordered tokens → (text, coords, styles), the
-  * single source of truth for BOTH span forms ([[LocalLabelers.spansLocal]]
-  * streams through it per span; [[BioSpans.spans]] applies it to the
-  * collected token array) so the window/local parity pin covers all
-  * three fields by construction. */
-object SpanAssembly {
+/** Span assembly: a span's ordered tokens → (text, coords, styles),
+  * streamed token by token. The one implementation behind both span
+  * forms: [[LocalLabelers.spansLocal]] feeds it the labeled
+  * [[TokenRow]]s of each span, and the [[BioSpans.spans]] UDF the
+  * collected token structs, so LabelerParitySpec's span parity covers
+  * all three fields by construction.
+  *
+  * - text: `text + whitespace` of each token whose two fields are both
+  *   non-null (concat_ws skips the element when concat(text,
+  *   whitespace) is null), trailing chars <= U+0020 trimmed
+  *   (UTF8String.trimRight).
+  * - coords: one box per run of same-page tokens, grown with
+  *   [[Coordinates.union]]'s arithmetic, kept as four doubles; a page
+  *   change formats the pending box (`Coordinates.formatList`).
+  * - styles: styled runs — same-style neighbours merge with the joining
+  *   whitespace inside, boundary whitespace stays plain
+  *   (tei/common.py:115-151), `start,end,mask` clipped to the text.
+  *
+  * Reused from span to span: [[start]] clears it, [[finish]] sets
+  * [[text]], [[coords]] and [[styles]]. */
+private[graft] final class SpanAssembly {
+  private val sb = new java.lang.StringBuilder
+  // closed styled runs, (start, end, mask) triples
+  private var runs = new Array[Int](24)
+  private var nRuns = 0
+  private var runStart = 0
+  private var runEnd = 0
+  private var runMask = 0
+  private val boxes = new java.lang.StringBuilder
+  private var hasBox = false
+  private var boxPage = 0
+  private var boxX = 0.0
+  private var boxY = 0.0
+  private var boxW = 0.0
+  private var boxH = 0.0
 
-  final case class SpanTok(text: String, whitespace: String,
-      coords: Option[Coords], font: FontInfo)
+  var text: String = null
+  var coords: String = null
+  var styles: String = null
 
-  private def styleMask(f: FontInfo): Int =
-    (if (f != null && f.is_bold) 1 else 0) |
-      (if (f != null && f.is_italics) 2 else 0) |
-      (if (f != null && f.is_subscript) 4 else 0) |
-      (if (f != null && f.is_superscript) 8 else 0)
+  def start(): Unit = {
+    sb.setLength(0)
+    nRuns = 0
+    runStart = 0
+    runEnd = 0
+    runMask = 0
+    boxes.setLength(0)
+    hasBox = false
+  }
 
-  /** text + whitespace reassembly with trailing-blank trim, merged
-    * page boxes, and styled runs (same-style neighbours merge with the
-    * joining whitespace inside; boundary whitespace stays plain —
-    * tei/common.py:115-151). */
-  def assemble(toks: Seq[SpanTok]): (String, String, String) = {
-    val sb = new StringBuilder
-    val boxes = scala.collection.mutable.ListBuffer.empty[Coords]
-    val runs = scala.collection.mutable.ListBuffer.empty[(Int, Int, Int)]
-    var runStart = 0
-    var runEnd = 0
-    var runMask = 0
-    def closeRun(): Unit = {
-      if (runMask != 0 && runEnd > runStart) runs += ((runStart, runEnd, runMask))
-      runMask = 0
+  private def closeRun(): Unit = {
+    if (runMask != 0 && runEnd > runStart) {
+      if (nRuns * 3 == runs.length) runs = java.util.Arrays.copyOf(runs, runs.length * 2)
+      runs(nRuns * 3) = runStart
+      runs(nRuns * 3 + 1) = runEnd
+      runs(nRuns * 3 + 2) = runMask
+      nRuns += 1
     }
-    toks.foreach { t =>
-      // concat_ws skips the element when concat(text, whitespace) is null
-      if (t.text != null && t.whitespace != null) {
-        val mask = styleMask(t.font)
-        if (mask != runMask) { closeRun(); runStart = sb.length; runMask = mask }
-        sb.append(t.text)
-        runEnd = sb.length
-        sb.append(t.whitespace)
-      }
-      t.coords.foreach { c =>
-        if (boxes.nonEmpty && boxes.last.page_number == c.page_number)
-          boxes(boxes.length - 1) = Coordinates.union(boxes.last, c)
-        else boxes += c
-      }
+    runMask = 0
+  }
+
+  /** A token's text, its whitespace and its [[SpanAssembly.styleMask]]. */
+  def add(text: String, whitespace: String, mask: Int): Unit =
+    if (text != null && whitespace != null) {
+      if (mask != runMask) { closeRun(); runStart = sb.length; runMask = mask }
+      sb.append(text)
+      runEnd = sb.length
+      sb.append(whitespace)
     }
+
+  /** A token's box. */
+  def box(x: Double, y: Double, width: Double, height: Double, page: Int): Unit =
+    if (hasBox && page == boxPage) {
+      val ux = math.min(boxX, x)
+      val uy = math.min(boxY, y)
+      boxW = math.max(boxX + boxW, x + width) - ux
+      boxH = math.max(boxY + boxH, y + height) - uy
+      boxX = ux
+      boxY = uy
+    } else {
+      flushBox()
+      hasBox = true
+      boxPage = page
+      boxX = x; boxY = y; boxW = width; boxH = height
+    }
+
+  private def flushBox(): Unit = if (hasBox) {
+    if (boxes.length > 0) boxes.append(';')
+    Coordinates.appendTo(boxes, boxPage, boxX, boxY, boxW, boxH)
+  }
+
+  def finish(): Unit = {
     var end = sb.length
     while (end > 0 && sb.charAt(end - 1) <= ' ') end -= 1
     closeRun()
-    val styles = runs.collect {
-      case (s, e, m) if s < end => s"$s,${math.min(e, end)},$m"
+    flushBox()
+    hasBox = false
+    text = sb.substring(0, end)
+    coords = if (boxes.length == 0) null else boxes.toString
+    var style: java.lang.StringBuilder = null
+    var k = 0
+    while (k < nRuns) {
+      val s = runs(k * 3)
+      if (s < end) {
+        if (style == null) style = new java.lang.StringBuilder
+        else style.append(';')
+        style.append(s).append(',').append(math.min(runs(k * 3 + 1), end))
+          .append(',').append(runs(k * 3 + 2))
+      }
+      k += 1
     }
-    (sb.substring(0, end), Coordinates.formatList(boxes.toList),
-      if (styles.isEmpty) null else styles.mkString(";"))
+    styles = if (style == null) null else style.toString
   }
+}
+
+object SpanAssembly {
+  /** Style bits: 1 bold, 2 italic, 4 subscript, 8 superscript. */
+  def styleMask(f: FontInfo): Int =
+    if (f == null) 0
+    else styleMask(f.is_bold, f.is_italics, f.is_subscript, f.is_superscript)
+
+  def styleMask(bold: Boolean, italic: Boolean, subscript: Boolean,
+      superscript: Boolean): Int =
+    (if (bold) 1 else 0) | (if (italic) 2 else 0) |
+      (if (subscript) 4 else 0) | (if (superscript) 8 else 0)
 }
 
 /** Styled token runs over a span/node text, encoded `start,end,mask`

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.util.regex.Pattern
 
 import scala.collection.immutable.ArraySeq
-import scala.collection.mutable.ListBuffer
 
 /** The rule labelers and BIO span grouping for ONE document — the
   * reference processes one document at a time in plain Python
@@ -339,29 +338,39 @@ private[graft] object LocalLabelers {
 
   /** [[BioSpans.spans]] per document: collapse to ordered spans with
     * `text + whitespace` reassembly, trailing whitespace trimmed
-    * (UTF8String.trimRight semantics — chars <= 0x20). */
+    * (UTF8String.trimRight semantics — chars <= 0x20). Each labeled row
+    * goes straight into one reused [[SpanAssembly]]. */
   def spansLocal(labeled: IndexedSeq[(TokenRow, String)]): IndexedSeq[Extractors.Span] = {
-    val out = new ListBuffer[Extractors.Span]
+    val out = Vector.newBuilder[Extractors.Span]
+    val asm = new SpanAssembly
     var spanId = 0L
     var curTag: String = null
     var open = false
-    val toks = new ListBuffer[SpanAssembly.SpanTok]
-    def flush(): Unit = if (open) {
-      val (text, coords, styles) = SpanAssembly.assemble(toks.toList)
-      out += Extractors.Span(spanId, curTag, text, coords, styles)
-    }
-    labeled.foreach { case (t, label) =>
+    var i = 0
+    while (i < labeled.length) {
+      val (t, label) = labeled(i)
       val tag = stripTag(label)
       if (!open || label.startsWith("B-") || tag != curTag) {
-        flush()
+        if (open) {
+          asm.finish()
+          out += Extractors.Span(spanId, curTag, asm.text, asm.coords, asm.styles)
+        }
         spanId += 1
         curTag = tag
-        toks.clear()
+        asm.start()
         open = true
       }
-      toks += SpanAssembly.SpanTok(t.text, t.whitespace, t.coords, t.font)
+      asm.add(t.text, t.whitespace, SpanAssembly.styleMask(t.font))
+      if (t.coords.isDefined) {
+        val c = t.coords.get
+        asm.box(c.x, c.y, c.width, c.height, c.page_number)
+      }
+      i += 1
     }
-    flush()
-    out.toIndexedSeq
+    if (open) {
+      asm.finish()
+      out += Extractors.Span(spanId, curTag, asm.text, asm.coords, asm.styles)
+    }
+    out.result()
   }
 }

@@ -60,8 +60,21 @@ object TextNormalization {
     */
   def normalize(text: String): String = {
     val n = text.length
-    val sb = new java.lang.StringBuilder(n)
+    // the input itself when no char folds and no whitespace run collapses
     var i = 0
+    var same = true
+    while (i < n && same) {
+      val c = text.charAt(i)
+      if (isSpace(c)) same = i + 1 == n || !isSpace(text.charAt(i + 1))
+      else {
+        val r = if (c < replacementTable.length) replacementTable(c) else null
+        same = r == null || (r.length == 1 && r.charAt(0) == c)
+      }
+      i += 1
+    }
+    if (same) return text
+    val sb = new java.lang.StringBuilder(n)
+    i = 0
     while (i < n) {
       val c = text.charAt(i)
       if (isSpace(c)) {
@@ -99,11 +112,31 @@ object TextNormalization {
   /** Blank in the Python `str.strip()` sense: Unicode whitespace
     * including the Zs spaces (NBSP, thin space) Java's `trim`/
     * `isWhitespace` alone would miss. */
-  private[graft] def isBlank(s: String): Boolean =
-    // U+0085 NEL: Python \s and (?U)\s both match it, but neither
-    // Character.isWhitespace nor isSpaceChar does on the JVM
-    s.forall(c => Character.isWhitespace(c) || Character.isSpaceChar(c) ||
-      c == '\u0085')
+  private[graft] def isBlank(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      // U+0085 NEL: Python \s and (?U)\s both match it, but neither
+      // Character.isWhitespace nor isSpaceChar does on the JVM
+      if (!(Character.isWhitespace(c) || Character.isSpaceChar(c) || c == '\u0085'))
+        return false
+      i += 1
+    }
+    true
+  }
+
+  /** Whether [[tokenize]] splits `text`: it holds a delimiter or a
+    * `(?U)\s` char. */
+  private def splits(text: String): Boolean = {
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if ((c < delimiterParts.length && delimiterParts(c) != null) || isSpace(c))
+        return true
+      i += 1
+    }
+    false
+  }
 
   /** iter_tokenized_tokens: split keeping the delimiters as tokens —
     * every delimiter and every `(?U)\s` char ([[isSpace]]; a
@@ -130,5 +163,58 @@ object TextNormalization {
     }
     if (last < n) add(text.substring(last))
     parts.toList
+  }
+
+  /** Receives the tokens of a layout word, in order. */
+  private[graft] trait TokenSink {
+    def token(text: String, whitespace: String, coords: Coords): Unit
+  }
+
+  /** One layout word's tokens, for both readers: [[normalize]], then
+    * retokenize with pro-rated coordinates (layout_document.py:159-212
+    * `retokenize_layout_token`). The box `(x, y, width, height)` on
+    * `page` is split by char offset; whitespace parts attach to the
+    * preceding token's `whitespace`, and the last token's ends with
+    * the reference default " ". Blank is the reference's `str.strip()`
+    * test ([[isBlank]]): a blank word has no token, and an NBSP or
+    * thin-space part is whitespace, not a token (`String.trim` only
+    * strips <= U+0020).
+    *
+    * A word [[tokenize]] does not split is one token, whose box takes
+    * the same pro-rating arithmetic; nothing but its row is allocated.
+    */
+  private[graft] def wordTokens(word: String, x: Double, y: Double,
+      width: Double, height: Double, page: Int, sink: TokenSink): Unit = {
+    val text = normalize(word)
+    if (isBlank(text)) return
+    val totalLen = text.length.toDouble
+    def proRated(part: String, offset: Int): Coords =
+      Coords(x + width * offset / totalLen, y, width * part.length / totalLen,
+        height, page)
+    if (!splits(text)) {
+      sink.token(text, " ", proRated(text, 0))
+      return
+    }
+    var parts = tokenize(text, keepWhitespace = true)
+    var pendingText: String = null
+    var pendingWs = ""
+    var pendingOffset = 0
+    var offset = 0
+    while (parts.nonEmpty) {
+      val p = parts.head
+      if (isBlank(p)) pendingWs += p
+      else {
+        if (pendingText != null)
+          sink.token(pendingText, pendingWs, proRated(pendingText, pendingOffset))
+        pendingText = p
+        pendingWs = ""
+        pendingOffset = offset
+      }
+      offset += p.length
+      parts = parts.tail
+    }
+    if (pendingText != null)
+      sink.token(pendingText, if (pendingWs.isEmpty) " " else pendingWs + " ",
+        proRated(pendingText, pendingOffset))
   }
 }

@@ -142,13 +142,50 @@ object AltoReader {
     if (v == null || v.isEmpty) None else Some(v)
   }
 
+  /** A coordinate attribute's value as `String.toDouble` reads it; 0.0
+    * when absent or empty. */
+  private def coord(v: String): Double =
+    if (v == null || v.isEmpty) 0.0 else PdfSyntax.decimalValue(v)
+
   private def coordsOf(r: javax.xml.stream.XMLStreamReader, pageNumber: Int): Coords =
     Coords(
-      x = attr(r, "HPOS").map(_.toDouble).getOrElse(0.0),
-      y = attr(r, "VPOS").map(_.toDouble).getOrElse(0.0),
-      width = attr(r, "WIDTH").map(_.toDouble).getOrElse(0.0),
-      height = attr(r, "HEIGHT").map(_.toDouble).getOrElse(0.0),
+      x = coord(r.getAttributeValue(null, "HPOS")),
+      y = coord(r.getAttributeValue(null, "VPOS")),
+      width = coord(r.getAttributeValue(null, "WIDTH")),
+      height = coord(r.getAttributeValue(null, "HEIGHT")),
       page_number = pageNumber)
+
+  /** The attributes of a `String` element, read in one pass over its
+    * attribute list. Each is its first attribute of that local name,
+    * in any namespace, as `getAttributeValue(null, name)` finds it; null
+    * when absent. */
+  private final class StringAttrs {
+    var styleRefs: String = null
+    var hpos: String = null
+    var vpos: String = null
+    var width: String = null
+    var height: String = null
+    var content: String = null
+
+    def read(r: javax.xml.stream.XMLStreamReader): Unit = {
+      styleRefs = null; hpos = null; vpos = null
+      width = null; height = null; content = null
+      val n = r.getAttributeCount
+      var i = 0
+      while (i < n) {
+        r.getAttributeLocalName(i) match {
+          case "STYLEREFS" => if (styleRefs == null) styleRefs = r.getAttributeValue(i)
+          case "HPOS" => if (hpos == null) hpos = r.getAttributeValue(i)
+          case "VPOS" => if (vpos == null) vpos = r.getAttributeValue(i)
+          case "WIDTH" => if (width == null) width = r.getAttributeValue(i)
+          case "HEIGHT" => if (height == null) height = r.getAttributeValue(i)
+          case "CONTENT" => if (content == null) content = r.getAttributeValue(i)
+          case _ => ()
+        }
+        i += 1
+      }
+    }
+  }
 
   /** `firstPage`/`lastPage` (1-based ordinal, inclusive) prune pages AT
     * THE PARSE: out-of-range pages are skipped wholesale — their
@@ -161,18 +198,13 @@ object AltoReader {
       firstPage: Int = 1,
       lastPage: Int = Int.MaxValue): (Seq[TokenRow], Seq[GraphicRow]) = {
     val r = newStreamReader(xml)
-    val tokens = ListBuffer.empty[TokenRow]
+    val rows = new TokenRows(docId)
     val graphics = ListBuffer.empty[GraphicRow]
     val fonts = scala.collection.mutable.Map.empty[String, FontInfo]
+    val str = new StringAttrs
 
     var pageIdx = -1
     var pageInRange = true
-    var pageNumber = 0
-    var pageW: Option[Double] = None
-    var pageH: Option[Double] = None
-    var blockIdx = 0
-    var lineIdx = 0
-    var tokenIdx = 0
     var blockHasTokens = false
     var inBlock = false
     var inLine = false
@@ -196,54 +228,59 @@ object AltoReader {
                 styles("subscript"), styles("superscript"))
             case "Page" =>
               pageIdx += 1
+              rows.pageIdx = pageIdx
               pageInRange = pageIdx + 1 >= firstPage && pageIdx + 1 <= lastPage
               // a skipped page's attributes are never even read — a
               // malformed out-of-range page must not fail a ranged
               // parse (the ServiceSpec proof that pruning is at the
               // parse, not a post-filter)
               if (pageInRange) {
-                pageNumber = attr(r, "PHYSICAL_IMG_NR").map(_.toInt).getOrElse(pageIdx + 1)
-                pageW = attr(r, "WIDTH").map(_.toDouble)
-                pageH = attr(r, "HEIGHT").map(_.toDouble)
+                rows.pageNumber = attr(r, "PHYSICAL_IMG_NR").map(_.toInt).getOrElse(pageIdx + 1)
+                rows.pageWidth = attr(r, "WIDTH").map(_.toDouble)
+                rows.pageHeight = attr(r, "HEIGHT").map(_.toDouble)
               }
-              blockIdx = 0
+              rows.blockIdx = 0
             case "TextBlock" if pageInRange =>
               inBlock = true
-              lineIdx = 0
+              rows.lineIdx = 0
               blockHasTokens = false
             case "TextLine" if inBlock =>
               inLine = true
-              tokenIdx = 0
+              rows.tokenIdx = 0
             case "String" if inLine =>
-              val font = attr(r, "STYLEREFS").flatMap(fonts.get).getOrElse(FontInfo.empty)
-              val c = coordsOf(r, pageNumber)
+              str.read(r)
+              rows.font =
+                if (str.styleRefs == null || str.styleRefs.isEmpty) FontInfo.empty
+                else fonts.getOrElse(str.styleRefs, FontInfo.empty)
+              val x = coord(str.hpos)
+              val y = coord(str.vpos)
+              val w = coord(str.width)
+              val h = coord(str.height)
               // normalize + retokenize (B1/B2), pro-rating coordinates
-              retokenize(TextNormalization.normalize(attr(r, "CONTENT").getOrElse("")), c)
-                .foreach { case (text, whitespace, tc) =>
-                  tokens += TokenRow(docId, pageIdx, blockIdx, lineIdx, tokenIdx,
-                    text, whitespace, font, Some(tc), pageNumber, pageW, pageH)
-                  tokenIdx += 1
-                  blockHasTokens = true
-                }
+              val before = rows.tokenIdx
+              TextNormalization.wordTokens(
+                if (str.content == null) "" else str.content, x, y, w, h,
+                rows.pageNumber, rows)
+              if (rows.tokenIdx > before) blockHasTokens = true
             case "Illustration" if pageInRange =>
               // explicit reading-order adjacency: the enclosing block
               // for a nested Illustration, else the block just
               // completed — F4 prefers this over derived linkage
               val related =
-                if (inBlock) Some(blockIdx)
-                else if (blockIdx > 0) Some(blockIdx - 1)
+                if (inBlock) Some(rows.blockIdx)
+                else if (rows.blockIdx > 0) Some(rows.blockIdx - 1)
                 else None
               if (inBlock) pendingNested += graphics.length
-              graphics += GraphicRow(docId, pageIdx, pageNumber,
+              graphics += GraphicRow(docId, pageIdx, rows.pageNumber,
                 attr(r, "FILEID").orNull, attr(r, "TYPE").orNull,
-                Some(coordsOf(r, pageNumber)), related)
+                Some(coordsOf(r, rows.pageNumber)), related)
             case _ => ()
           }
         case END_ELEMENT if r.getNamespaceURI == AltoNs =>
           r.getLocalName match {
             case "TextLine" if inLine =>
               inLine = false
-              if (tokenIdx > 0) lineIdx += 1 // drop empty lines (B3)
+              if (rows.tokenIdx > 0) rows.lineIdx += 1 // drop empty lines (B3)
             case "TextBlock" if inBlock =>
               inBlock = false
               // a nested Illustration's enclosing-block adjacency only
@@ -254,14 +291,14 @@ object AltoReader {
                 graphics(i) = graphics(i).copy(related_block_idx = None)
               }
               pendingNested.clear()
-              if (blockHasTokens) blockIdx += 1 // drop empty blocks (B3)
+              if (blockHasTokens) rows.blockIdx += 1 // drop empty blocks (B3)
             case _ => ()
           }
         case _ => ()
       }
     }
     r.close()
-    (tokens.toList, graphics.toList)
+    (rows.rows.toList, graphics.toList)
   }
 
   private[sources] def parseTokens(docId: Long, xml: String): Seq[TokenRow] =
@@ -269,46 +306,4 @@ object AltoReader {
 
   private[sources] def parseGraphics(docId: Long, xml: String): Seq[GraphicRow] =
     parseAll(docId, xml)._2
-
-  /** Retokenize one ALTO String token, pro-rating coordinates by char
-    * offset (layout_document.py:159-212 `retokenize_layout_token`):
-    * whitespace splits attach to the preceding token's `whitespace`.
-    * Blank is the reference's `str.strip()` test
-    * ([[TextNormalization.isBlank]]): an NBSP or thin-space part is
-    * whitespace, not a token (`String.trim` only strips <= U+0020).
-    */
-  private[sources] def retokenize(text: String, c: Coords): Seq[(String, String, Coords)] = {
-    if (TextNormalization.isBlank(text)) return Nil
-    val parts = TextNormalization.tokenize(text, keepWhitespace = true)
-    var chars = 0
-    parts.foreach(p => chars += p.length)
-    val totalLen = chars.toDouble
-    val out = ListBuffer.empty[(String, String, Coords)]
-    var pendingText: String = null
-    var pendingWs = ""
-    var pendingOffset = 0
-    var offset = 0
-    parts.foreach { p =>
-      if (TextNormalization.isBlank(p)) {
-        pendingWs += p
-        offset += p.length
-      } else {
-        if (pendingText != null) out += ((pendingText, pendingWs, proRate(c, pendingText, pendingOffset, totalLen)))
-        pendingText = p
-        pendingWs = ""
-        pendingOffset = offset
-        offset += p.length
-      }
-    }
-    // reference default LayoutToken.whitespace = ' '
-    pendingWs = if (pendingWs.isEmpty) " " else pendingWs + " "
-    if (pendingText != null) out += ((pendingText, pendingWs, proRate(c, pendingText, pendingOffset, totalLen)))
-    out.toList
-  }
-
-  private def proRate(c: Coords, text: String, offset: Int, totalLen: Double): Coords =
-    if (totalLen <= 0) c
-    else c.copy(
-      x = c.x + c.width * offset / totalLen,
-      width = c.width * text.length / totalLen)
 }

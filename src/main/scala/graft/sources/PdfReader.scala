@@ -6,7 +6,7 @@ import scala.collection.mutable.ListBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Coords, FontInfo, TokenRow}
+import graft.pipeline.{Coords, FontInfo, TextNormalization, TokenRow}
 
 import PdfSyntax._
 
@@ -22,9 +22,9 @@ import PdfSyntax._
   * widths ([[PdfFonts]]) with embedded `/Widths` override, and
   * bold/italic from the font descriptor flags or name.
   *
-  * Downstream parity: extracted words run through the SAME
-  * normalize + retokenize chain as the ALTO path
-  * ([[AltoReader.retokenize]], B1/B2/B3), so every pipeline stage —
+  * Downstream parity: extracted words run through the SAME word →
+  * token kernel as the ALTO path ([[TextNormalization.wordTokens]],
+  * normalize + retokenize, B1/B2/B3), so every pipeline stage —
   * features, labelers, extractors, TEI — consumes PDF-parsed tokens
   * identically to ALTO-parsed ones (PdfSpec pins the equivalence).
   *
@@ -35,16 +35,16 @@ import PdfSyntax._
   * declared swap for complex print layouts.
   *
   * Scale shape: one task per PDF file (`binaryFile` rows), the parse
-  * is pure row-local CPU, and page pruning happens at the interpreter
-  * (out-of-range pages never decode their content streams — the
-  * `-f/-l` behavior).
+  * is pure row-local CPU, and page pruning happens before any page is
+  * read: out-of-range pages never resolve their resources or decode
+  * their content streams — the `-f/-l` behavior.
   */
 object PdfReader {
 
   // ---------------------------------------------------------- document
 
   /** Lazily-resolving PDF document over raw bytes. */
-  private[sources] final class PdfDoc(val bytes: Array[Byte]) {
+  private[graft] final class PdfDoc(val bytes: Array[Byte]) {
     // object number -> either direct file offset or (objstm num, index)
     private val offsets = mutable.Map.empty[Int, Long]
     private val inObjStm = mutable.Map.empty[Int, (Int, Int)]
@@ -345,17 +345,32 @@ object PdfReader {
       else PdfFonts.width(stdWidths, code)
   }
 
-  private final case class PageData(mediaX: Double, mediaY: Double,
+  private[graft] final case class PageData(mediaX: Double, mediaY: Double,
       width: Double, height: Double, fonts: Map[String, FontRes],
       content: Array[Byte], imageXObjects: Set[String],
       imageStreams: Map[String, PStream], doc: PdfDoc)
 
-  private def pagesOf(doc: PdfDoc): Seq[PageData] = {
+  /** A leaf of the page tree with the resources and media box it
+    * inherits, not yet read. */
+  private final case class PageRef(page: PDict, res: Option[PDict],
+      box: Option[PArr])
+
+  /** The pages `firstPage` to `lastPage` (1-based, inclusive) as
+    * (page index, page), read before the first is interpreted. The
+    * others are never read. */
+  private[graft] def pages(doc: PdfDoc, firstPage: Int, lastPage: Int)
+      : Seq[(Int, PageData)] =
+    pagesOf(doc).zipWithIndex.collect {
+      case (p, i) if i + 1 >= firstPage && i + 1 <= lastPage =>
+        (i, pageData(doc, p.page, p.res, p.box))
+    }
+
+  private def pagesOf(doc: PdfDoc): Seq[PageRef] = {
     val root = doc.resolve(doc.trailer.get("Root").getOrElse(PNull)) match {
       case d: PDict => d
       case _ => throw new IllegalArgumentException("bad /Root")
     }
-    val out = ListBuffer.empty[PageData]
+    val out = ListBuffer.empty[PageRef]
     val visited = mutable.Set.empty[PdfObj]
     def walk(nodeRef: PdfObj, inhRes: Option[PDict],
         inhBox: Option[PArr]): Unit = {
@@ -374,7 +389,7 @@ object PdfReader {
                 case _ => ()
               }
             case Some(PName("Page")) =>
-              out += pageData(doc, d, res, box)
+              out += PageRef(d, res, box)
             case _ => ()
           }
         case _ => ()
@@ -587,44 +602,87 @@ object PdfReader {
     (m(0) * x + m(2) * y + m(4), m(1) * x + m(3) * y + m(5))
 
   /** One placed image: resource name + device-space TOP-DOWN box. */
-  private final case class PlacedImage(resName: String, x: Double,
+  private[graft] final case class PlacedImage(resName: String, x: Double,
       yTop: Double, width: Double, height: Double)
 
-  private def interpret(page: PageData): (Seq[Word], Seq[PlacedImage]) = {
-    val images = ListBuffer.empty[PlacedImage]
-    val words = ListBuffer.empty[Word]
-    var ctm: Mat = Id
-    val gsStack = mutable.Stack.empty[Mat]
-    val g = new GlyphMath
-    var tlm: Mat = Id
-    var font: FontRes = null
-    var size = 0.0
-    var charSpace = 0.0
-    var wordSpace = 0.0
-    var hScale = 1.0
-    var leading = 0.0
-    var rise = 0.0
+  /** A page's words and image placements, in content-stream order. */
+  private[graft] def interpret(page: PageData)
+      : (collection.IndexedSeq[Word], collection.IndexedSeq[PlacedImage]) =
+    new Interpreter(page).run()
+
+  /** The content-stream interpreter of one page. Operands wait on a
+    * typed stack (parallel kind / `double` / payload arrays, filled
+    * from [[ContentLexer]]), so no operand is boxed; `num(i)` reads the
+    * i-th operand from the top as a number, and anything else as 0.0.
+    * Every operator clears the stack. Text and line matrices live in
+    * reused arrays. */
+  private final class Interpreter(page: PageData) {
+    import ContentLexer.{Arr, End, Name, Num, Operator, Str}
+
+    private val images = mutable.ArrayBuffer.empty[PlacedImage]
+    private val words = mutable.ArrayBuffer.empty[Word]
+    private var ctm: Mat = Id
+    private val gsStack = mutable.Stack.empty[Mat]
+    private val g = new GlyphMath
+    /** The text line matrix, owned: [[moveLine]] writes the next one
+      * into `spareTlm` and swaps. */
+    private var tlm: Mat = Id.clone()
+    private var spareTlm: Mat = new Array[Double](6)
+    private val lineStep: Mat = Id.clone()
+    private var font: FontRes = null
+    private var size = 0.0
+    private var charSpace = 0.0
+    private var wordSpace = 0.0
+    private var hScale = 1.0
+    private var leading = 0.0
+    private var rise = 0.0
 
     // current word accumulator
-    val sb = new StringBuilder
-    var wx0 = 0.0
-    var wy = 0.0
-    var wWidth = 0.0
-    var wSize = 0.0
-    var wFont: FontRes = null
-    var expectX = Double.NaN
+    private val sb = new java.lang.StringBuilder
+    private var wx0 = 0.0
+    private var wy = 0.0
+    private var wWidth = 0.0
+    private var wSize = 0.0
+    private var wFont: FontRes = null
+    private var expectX = Double.NaN
 
-    def flush(): Unit = {
-      if (sb.nonEmpty && wFont != null) {
+    // operand stack
+    private var kinds = new Array[Int](16)
+    private var nums = new Array[Double](16)
+    private var refs = new Array[AnyRef](16)
+    private var depth = 0
+
+    private def push(kind: Int, num: Double, ref: AnyRef): Unit = {
+      if (depth == kinds.length) {
+        kinds = java.util.Arrays.copyOf(kinds, depth * 2)
+        nums = java.util.Arrays.copyOf(nums, depth * 2)
+        refs = java.util.Arrays.copyOf(refs, depth * 2)
+      }
+      kinds(depth) = kind
+      nums(depth) = num
+      refs(depth) = ref
+      depth += 1
+    }
+
+    private def num(i: Int): Double = {
+      val k = depth - i
+      if (k >= 0 && kinds(k) == Num) nums(k) else 0.0
+    }
+
+    /** The top operand's payload if it is of `kind`, else null. */
+    private def top(kind: Int): AnyRef =
+      if (depth > 0 && kinds(depth - 1) == kind) refs(depth - 1) else null
+
+    private def flush(): Unit = {
+      if (sb.length > 0 && wFont != null) {
         words += Word(sb.toString, wx0,
           page.height - wy - wSize, wWidth, wSize, wFont, wSize)
-        sb.clear()
       }
-      sb.clear()
+      sb.setLength(0)
       expectX = Double.NaN
     }
 
-    def showString(bytesStr: Array[Byte]): Unit = {
+    private def showString(bytesStr: Array[Byte]): Unit = {
       if (font == null) return
       var i = 0
       while (i < bytesStr.length) {
@@ -642,7 +700,7 @@ object PdfReader {
           val effSize = g.effSize(size)
           val continues = !expectX.isNaN &&
             math.abs(gx - expectX) <= 0.18 * math.max(effSize, 1.0) &&
-            sb.nonEmpty && (wFont eq font) &&
+            sb.length > 0 && (wFont eq font) &&
             math.abs((page.height - gy - effSize) -
               (page.height - wy - wSize)) < 0.01
           if (!continues) {
@@ -663,124 +721,121 @@ object PdfReader {
       }
     }
 
-    val lx = new Lexer(page.content)
-    val stack = mutable.ArrayBuffer.empty[PdfObj]
-    var tok = lx.nextToken()
-    while (tok != null) {
-      tok match {
-        case o: PdfObj => stack += o
-        case Op(op) =>
-          def num(i: Int): Double = stack.lift(stack.length - i) match {
-            case Some(PNum(v)) => v
-            case _ => 0.0
-          }
-          op match {
-            case "q" => gsStack.push(ctm)
-            case "Q" => if (gsStack.nonEmpty) ctm = gsStack.pop()
-            case "cm" =>
-              ctm = mul(Array(num(6), num(5), num(4), num(3), num(2), num(1)),
-                ctm)
-            case "BT" => g.setTm(Id); tlm = Id; flush()
-            case "ET" => flush()
-            case "Tf" =>
-              flush()
-              size = num(1)
-              stack.lift(stack.length - 2) match {
-                case Some(PName(fn)) => font = page.fonts.getOrElse(fn,
-                  FontRes(fn, "Helvetica", bold = false, italic = false,
-                    0, null, 0))
-                case _ => ()
-              }
-            case "Td" =>
-              tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
-              g.setTm(tlm)
-              flush()
-            case "TD" =>
-              leading = -num(1)
-              tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
-              g.setTm(tlm)
-              flush()
-            case "Tm" =>
-              tlm = Array(num(6), num(5), num(4), num(3), num(2), num(1))
-              g.setTm(tlm)
-              flush()
-            case "T*" =>
-              tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              g.setTm(tlm)
-              flush()
-            case "TL" => leading = num(1)
-            case "Tc" => charSpace = num(1)
-            case "Tw" => wordSpace = num(1)
-            case "Tz" => hScale = num(1) / 100.0
-            case "Ts" => rise = num(1)
-            case "Tj" =>
-              stack.lastOption.foreach {
-                case PStr(b) => showString(b)
-                case _ => ()
-              }
-            case "'" =>
-              tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              g.setTm(tlm)
-              flush()
-              stack.lastOption.foreach {
-                case PStr(b) => showString(b)
-                case _ => ()
-              }
-            case "\"" =>
-              wordSpace = num(3)
-              charSpace = num(2)
-              tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
-              g.setTm(tlm)
-              flush()
-              stack.lastOption.foreach {
-                case PStr(b) => showString(b)
-                case _ => ()
-              }
-            case "TJ" =>
-              stack.lastOption.foreach {
-                case PArr(items) => items.foreach {
-                  case PStr(b) => showString(b)
-                  case PNum(v) =>
-                    val adj = -v / 1000.0 * size * hScale
-                    g.translate(adj)
-                  case _ => ()
-                }
-                case _ => ()
-              }
-            case "Do" =>
-              // image XObject placement: the unit square through the
-              // CTM — corners transformed, box = min/max (handles
-              // scale+translate exactly; rotations box-bound)
-              stack.lastOption.foreach {
-                case PName(n) if page.imageXObjects.contains(n) =>
-                  val corners = Seq((0.0, 0.0), (1.0, 0.0), (0.0, 1.0),
-                    (1.0, 1.0)).map { case (ux, uy) => apply(ctm, ux, uy) }
-                  val xs = corners.map(_._1 - page.mediaX)
-                  val ys = corners.map(_._2 - page.mediaY)
-                  val x0 = xs.min; val x1 = xs.max
-                  val y0 = ys.min; val y1 = ys.max
-                  images += PlacedImage(n, x0, page.height - y1,
-                    x1 - x0, y1 - y0)
-                case _ => ()
-              }
-            case _ => () // path/color operators: no text effect
-          }
-          stack.clear()
-        case _ => ()
-      }
-      tok = lx.nextToken()
+    /** `tlm = [1 0 0 1 tx ty] × tlm`, then the text matrix follows. */
+    private def moveLine(tx: Double, ty: Double): Unit = {
+      lineStep(4) = tx
+      lineStep(5) = ty
+      mulInto(lineStep, tlm, spareTlm)
+      val t = tlm
+      tlm = spareTlm
+      spareTlm = t
+      g.setTm(tlm)
     }
-    flush()
-    (words.toList, images.toList)
+
+    private def showTop(): Unit = {
+      val b = top(Str)
+      if (b != null) showString(b.asInstanceOf[Array[Byte]])
+    }
+
+    private def operator(op: String): Unit = op match {
+      case "q" => gsStack.push(ctm)
+      case "Q" => if (gsStack.nonEmpty) ctm = gsStack.pop()
+      case "cm" =>
+        ctm = mul(Array(num(6), num(5), num(4), num(3), num(2), num(1)), ctm)
+      case "BT" =>
+        g.setTm(Id)
+        System.arraycopy(Id, 0, tlm, 0, 6)
+        flush()
+      case "ET" => flush()
+      case "Tf" =>
+        flush()
+        size = num(1)
+        if (depth >= 2 && kinds(depth - 2) == Name) {
+          val fn = refs(depth - 2).asInstanceOf[String]
+          font = page.fonts.getOrElse(fn,
+            FontRes(fn, "Helvetica", bold = false, italic = false, 0, null, 0))
+        }
+      case "Td" =>
+        moveLine(num(2), num(1))
+        flush()
+      case "TD" =>
+        leading = -num(1)
+        moveLine(num(2), num(1))
+        flush()
+      case "Tm" =>
+        tlm(0) = num(6); tlm(1) = num(5); tlm(2) = num(4)
+        tlm(3) = num(3); tlm(4) = num(2); tlm(5) = num(1)
+        g.setTm(tlm)
+        flush()
+      case "T*" =>
+        moveLine(0, -leading)
+        flush()
+      case "TL" => leading = num(1)
+      case "Tc" => charSpace = num(1)
+      case "Tw" => wordSpace = num(1)
+      case "Tz" => hScale = num(1) / 100.0
+      case "Ts" => rise = num(1)
+      case "Tj" => showTop()
+      case "'" =>
+        moveLine(0, -leading)
+        flush()
+        showTop()
+      case "\"" =>
+        wordSpace = num(3)
+        charSpace = num(2)
+        moveLine(0, -leading)
+        flush()
+        showTop()
+      case "TJ" =>
+        val a = top(Arr)
+        if (a != null) a.asInstanceOf[PArr].items.foreach {
+          case PStr(b) => showString(b)
+          case PNum(v) =>
+            val adj = -v / 1000.0 * size * hScale
+            g.translate(adj)
+          case _ => ()
+        }
+      case "Do" =>
+        // image XObject placement: the unit square through the
+        // CTM — corners transformed, box = min/max (handles
+        // scale+translate exactly; rotations box-bound)
+        val n = top(Name).asInstanceOf[String]
+        if (n != null && page.imageXObjects.contains(n)) {
+          val corners = Seq((0.0, 0.0), (1.0, 0.0), (0.0, 1.0),
+            (1.0, 1.0)).map { case (ux, uy) => apply(ctm, ux, uy) }
+          val xs = corners.map(_._1 - page.mediaX)
+          val ys = corners.map(_._2 - page.mediaY)
+          val x0 = xs.min; val x1 = xs.max
+          val y0 = ys.min; val y1 = ys.max
+          images += PlacedImage(n, x0, page.height - y1,
+            x1 - x0, y1 - y0)
+        }
+      case _ => () // path/color operators: no text effect
+    }
+
+    def run(): (collection.IndexedSeq[Word], collection.IndexedSeq[PlacedImage]) = {
+      val lx = new ContentLexer(page.content)
+      var kind = lx.next()
+      while (kind != End) {
+        if (kind == Operator) {
+          operator(lx.ref.asInstanceOf[Op].name)
+          java.util.Arrays.fill(refs, 0, depth, null)
+          depth = 0
+        } else push(kind, lx.num, lx.ref)
+        kind = lx.next()
+      }
+      flush()
+      (words, images)
+    }
   }
 
   // ------------------------------------------------ token-table assembly
 
   /** Parse one document's bytes into TokenRows — words → baselines →
-    * lines → blocks, then the shared ALTO normalize/retokenize chain.
-    * `firstPage`/`lastPage` prune AT the interpreter (1-based,
-    * inclusive): out-of-range pages never decode or interpret their
-    * content streams. */
+    * lines → blocks, then the word → token kernel the ALTO reader
+    * shares ([[TextNormalization.wordTokens]]). `firstPage`/`lastPage`
+    * prune before any page is read (1-based, inclusive): out-of-range
+    * pages never decode or interpret their content streams. */
   def parseTokens(docId: Long, bytes: Array[Byte], firstPage: Int = 1,
       lastPage: Int = Int.MaxValue): Seq[TokenRow] =
     parseAll(docId, bytes, firstPage, lastPage)._1
@@ -807,95 +862,108 @@ object PdfReader {
       : (Seq[TokenRow], Seq[graft.pipeline.GraphicRow],
         Seq[(String, Array[Byte])]) = {
     val doc = new PdfDoc(bytes)
-    val pages = pagesOf(doc)
-    val out = ListBuffer.empty[TokenRow]
+    val rows = new TokenRows(docId)
     val graphics = ListBuffer.empty[graft.pipeline.GraphicRow]
     val assets = ListBuffer.empty[(String, Array[Byte])]
-    pages.zipWithIndex.foreach { case (page, pageIdx) =>
-      if (pageIdx + 1 >= firstPage && pageIdx + 1 <= lastPage) {
-        val (words, imgs) = interpret(page)
-        val pngCache = scala.collection.mutable.Map.empty[String, Option[Array[Byte]]]
-        imgs.zipWithIndex.foreach { case (im, k) =>
-          val fileId = s"img-$docId-p${pageIdx + 1}-${im.resName}-$k"
-          graphics += graft.pipeline.GraphicRow(docId, pageIdx,
-            pageIdx + 1,
-            file_id = fileId,
-            graphic_type = "image",
-            coords = Some(Coords(r2(im.x), r2(im.yTop), r2(im.width),
-              r2(im.height), pageIdx + 1)),
-            related_block_idx = None)
-          if (decodeAssets) {
-            val png = pngCache.getOrElseUpdate(im.resName,
-              page.imageStreams.get(im.resName)
-                .flatMap(decodeImagePng(page.doc, _)))
-            png.foreach(p => assets += ((fileId, p)))
-          }
-        }
-        // lines: group words by baseline proximity (tolerance scales
-        // with the glyph size), x-sorted inside a line
-        val sorted = words.toArray
-        java.util.Arrays.sort(sorted, TopThenX)
-        val lines = ListBuffer.empty[ListBuffer[Word]]
-        sorted.foreach { w =>
-          lines.lastOption match {
-            case Some(line)
-                if math.abs(line.head.yTop - w.yTop) <=
-                  0.3 * math.max(line.head.height, w.height) =>
-              line += w
-            case _ => lines += ListBuffer(w)
-          }
-        }
-        val lineSeqs = lines.map { line =>
-          val byX = line.toArray
-          java.util.Arrays.sort(byX, ByX)
-          byX.toList
-        }.toList
-        // blocks: a WHITESPACE gap (previous line's bottom to this
-        // line's top) larger than 0.9× the smaller line height starts
-        // a new block — body leading (~1.2–1.5× size, gap ≤ 0.5×)
-        // merges, heading/paragraph breaks (gap ≥ 1×) split (the
-        // single-column segmentation subset)
-        var blockIdx = 0
-        var lineIdx = 0
-        var prevTop = Double.NaN
-        var prevH = 0.0
-        lineSeqs.foreach { line =>
-          val top = line.head.yTop
-          val h = line.map(_.height).max
-          if (!prevTop.isNaN &&
-              top - (prevTop + prevH) > 0.9 * math.min(h, prevH)) {
-            blockIdx += 1
-            lineIdx = 0
-          }
-          var tokenIdx = 0
-          line.foreach { w =>
-            val fi = FontInfo(
-              font_id = w.font.resName,
-              font_family = PdfFonts.familyOf(w.font.baseFont),
-              font_size = Some(math.rint(w.size * 10) / 10),
-              is_bold = w.font.bold,
-              is_italics = w.font.italic,
-              is_subscript = false,
-              is_superscript = false)
-            val c = Coords(
-              x = r2(w.x), y = r2(w.yTop), width = r2(w.width),
-              height = r2(w.height), page_number = pageIdx + 1)
-            AltoReader.retokenize(
-              graft.pipeline.TextNormalization.normalize(w.text), c)
-              .foreach { case (text, whitespace, tc) =>
-                out += TokenRow(docId, pageIdx, blockIdx, lineIdx, tokenIdx,
-                  text, whitespace, fi, Some(tc), pageIdx + 1,
-                  Some(page.width), Some(page.height))
-                tokenIdx += 1
-              }
-          }
-          if (line.nonEmpty) lineIdx += 1
-          prevTop = top
-          prevH = h
+    val fonts = new FontInfos
+    pages(doc, firstPage, lastPage).foreach { case (pageIdx, page) =>
+      val (words, imgs) = interpret(page)
+      val pngCache = scala.collection.mutable.Map.empty[String, Option[Array[Byte]]]
+      imgs.zipWithIndex.foreach { case (im, k) =>
+        val fileId = s"img-$docId-p${pageIdx + 1}-${im.resName}-$k"
+        graphics += graft.pipeline.GraphicRow(docId, pageIdx,
+          pageIdx + 1,
+          file_id = fileId,
+          graphic_type = "image",
+          coords = Some(Coords(r2(im.x), r2(im.yTop), r2(im.width),
+            r2(im.height), pageIdx + 1)),
+          related_block_idx = None)
+        if (decodeAssets) {
+          val png = pngCache.getOrElseUpdate(im.resName,
+            page.imageStreams.get(im.resName)
+              .flatMap(decodeImagePng(page.doc, _)))
+          png.foreach(p => assets += ((fileId, p)))
         }
       }
+      rows.pageIdx = pageIdx
+      rows.pageNumber = pageIdx + 1
+      rows.pageWidth = Some(page.width)
+      rows.pageHeight = Some(page.height)
+      rows.blockIdx = 0
+      rows.lineIdx = 0
+      // lines: runs of words by baseline proximity to the run's first
+      // word (tolerance scales with the glyph size), x-sorted inside
+      // a line
+      val sorted = words.toArray
+      java.util.Arrays.sort(sorted, TopThenX)
+      // blocks: a WHITESPACE gap (previous line's bottom to this
+      // line's top) larger than 0.9× the smaller line height starts
+      // a new block — body leading (~1.2–1.5× size, gap ≤ 0.5×)
+      // merges, heading/paragraph breaks (gap ≥ 1×) split (the
+      // single-column segmentation subset)
+      var prevTop = Double.NaN
+      var prevH = 0.0
+      var start = 0
+      while (start < sorted.length) {
+        val head = sorted(start)
+        var end = start + 1
+        while (end < sorted.length && math.abs(head.yTop - sorted(end).yTop) <=
+            0.3 * math.max(head.height, sorted(end).height)) end += 1
+        java.util.Arrays.sort(sorted, start, end, ByX)
+        val top = sorted(start).yTop
+        var h = sorted(start).height
+        var k = start + 1
+        while (k < end) {
+          // `Seq.max`: the first of the largest under `Double.compare`
+          if (java.lang.Double.compare(h, sorted(k).height) < 0) h = sorted(k).height
+          k += 1
+        }
+        if (!prevTop.isNaN &&
+            top - (prevTop + prevH) > 0.9 * math.min(h, prevH)) {
+          rows.blockIdx += 1
+          rows.lineIdx = 0
+        }
+        rows.tokenIdx = 0
+        k = start
+        while (k < end) {
+          val w = sorted(k)
+          rows.font = fonts(w.font, w.size)
+          TextNormalization.wordTokens(w.text, r2(w.x), r2(w.yTop),
+            r2(w.width), r2(w.height), pageIdx + 1, rows)
+          k += 1
+        }
+        rows.lineIdx += 1
+        prevTop = top
+        prevH = h
+        start = end
+      }
     }
-    (out.toList, graphics.toList, assets.toList)
+    (rows.rows.toList, graphics.toList, assets.toList)
+  }
+
+  /** The [[FontInfo]] of a word, shared by consecutive words of one
+    * font and size. */
+  private final class FontInfos {
+    private var font: FontRes = null
+    private var sizeBits = 0L
+    private var info: FontInfo = null
+
+    def apply(f: FontRes, size: Double): FontInfo = {
+      val bits = java.lang.Double.doubleToRawLongBits(size)
+      if (!(f eq font) || bits != sizeBits || info == null) {
+        font = f
+        sizeBits = bits
+        info = FontInfo(
+          font_id = f.resName,
+          font_family = PdfFonts.familyOf(f.baseFont),
+          font_size = Some(math.rint(size * 10) / 10),
+          is_bold = f.bold,
+          is_italics = f.italic,
+          is_subscript = false,
+          is_superscript = false)
+      }
+      info
+    }
   }
 
   /** One-pass Dataset of (tokens, graphics) per doc — the

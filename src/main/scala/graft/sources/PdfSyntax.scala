@@ -115,12 +115,49 @@ private[graft] object PdfSyntax {
       else plain = false
       i += 1
     }
-    if (plain && digits > 0 && significant <= 15 && fraction <= 22) {
-      val v = if (fraction > 0) mantissa / ExactPow10(fraction) else mantissa.toDouble
-      if (neg) -v else v
-    } else
+    if (plain && digits > 0 && significant <= 15 && fraction <= 22)
+      exactValue(neg, mantissa, fraction)
+    else
       java.lang.Double.parseDouble(
         new String(bytes, start, end - start, StandardCharsets.ISO_8859_1))
+  }
+
+  /** `s.toDouble`, on [[numberValue]]'s fast path over the chars: the
+    * same plain decimals take it, and everything else, padded or
+    * malformed input included, goes through `parseDouble` and throws
+    * where it throws. For the ALTO readers' coordinate attributes. */
+  private[graft] def decimalValue(s: String): Double = {
+    val end = s.length
+    var i = 0
+    val neg = i < end && s.charAt(i) == '-'
+    if (i < end && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+    var mantissa = 0L
+    var significant = 0
+    var digits = 0
+    var fraction = -1
+    var plain = true
+    while (i < end && plain) {
+      val c = s.charAt(i)
+      if (c >= '0' && c <= '9') {
+        digits += 1
+        if (fraction >= 0) fraction += 1
+        if (significant > 0 || c != '0') {
+          significant += 1
+          mantissa = mantissa * 10 + (c - '0')
+        }
+      } else if (c == '.' && fraction < 0) fraction = 0
+      else plain = false
+      i += 1
+    }
+    if (plain && digits > 0 && significant <= 15 && fraction <= 22)
+      exactValue(neg, mantissa, fraction)
+    else java.lang.Double.parseDouble(s)
+  }
+
+  /** A fast-path decimal: `mantissa` (at most 15 digits) over 10^`fraction`. */
+  private def exactValue(neg: Boolean, mantissa: Long, fraction: Int): Double = {
+    val v = if (fraction > 0) mantissa / ExactPow10(fraction) else mantissa.toDouble
+    if (neg) -v else v
   }
 
   final class Lexer(val bytes: Array[Byte], var pos: Int = 0) {
@@ -278,7 +315,9 @@ private[graft] object PdfSyntax {
           stop = true
         } else if (!isWs(c)) {
           val v = Character.digit(c, 16)
-          require(v >= 0, s"bad hex digit '${c.toChar}'")
+          // thrown as `require` would, without its message closure per digit
+          if (v < 0) throw new IllegalArgumentException(
+            "requirement failed: bad hex digit '" + c.toChar + "'")
           if (hi < 0) hi = v
           else { out.write((hi << 4) | v); hi = -1 }
         }
@@ -325,7 +364,10 @@ private[graft] object PdfSyntax {
       n1
     }
 
-    def parseNumber(): PNum = {
+    def parseNumber(): PNum = PNum(scanNumber())
+
+    /** [[parseNumber]]'s value, unboxed. */
+    private[sources] def scanNumber(): Double = {
       skipWs()
       val start = pos
       if (pos < bytes.length && (bytes(pos) == '+' || bytes(pos) == '-'))
@@ -333,15 +375,19 @@ private[graft] object PdfSyntax {
       while (pos < bytes.length &&
           ((bytes(pos) >= '0' && bytes(pos) <= '9') || bytes(pos) == '.'))
         pos += 1
-      require(pos > start, s"expected number at $start")
-      PNum(numberValue(bytes, start, pos))
+      // thrown as `require` would, without its message closure per number
+      if (pos <= start) throw new IllegalArgumentException(
+        "requirement failed: expected number at " + start)
+      numberValue(bytes, start, pos)
     }
 
     /** Consume an expected bare keyword. */
     def expectKeyword(kw: String): Unit = {
       skipWs()
       val got = bareToken()
-      require(got == kw, s"expected '$kw', got '$got' at $pos")
+      // thrown as `require` would, without its message closure per object
+      if (got != kw) throw new IllegalArgumentException(
+        s"requirement failed: expected '$kw', got '$got' at $pos")
     }
 
     def readLineRaw(): String = {
@@ -353,6 +399,134 @@ private[graft] object PdfSyntax {
       if (pos < bytes.length && bytes(pos) == '\n') pos += 1
       s
     }
+  }
+
+  /** A content stream read token by token, as [[Lexer.nextToken]]
+    * reads it, into typed fields instead of boxed objects: [[next]]
+    * returns the token's kind and leaves a number in [[num]] and any
+    * other payload in [[ref]].
+    *
+    * Numbers, shared operators, plain literal strings (no `\`, no
+    * nested parentheses: one copy of their bytes) and names without
+    * `#` escapes are read in place. Every other token is read by
+    * `nextToken` at the same position, so it keeps its value and any
+    * exception its class and message. The `n g R` look-ahead after a
+    * non-negative integer is kept, and the number it reads is
+    * remembered, so the next token does not scan it again. */
+  private[sources] final class ContentLexer(bytes: Array[Byte]) {
+    import ContentLexer._
+
+    private val lx = new Lexer(bytes)
+    /** The value of a [[Num]]. */
+    var num: Double = 0.0
+    /** The bytes of a [[Str]], the `String` of a [[Name]], the [[PArr]]
+      * of an [[Arr]], the [[PdfObj]] of an [[Obj]] or the [[Op]] of an
+      * [[Operator]]. */
+    var ref: AnyRef = null
+    // the number the last look-ahead read: its start, end and value
+    private var aheadStart = -1
+    private var aheadEnd = 0
+    private var aheadValue = 0.0
+
+    /** The kind of the next token, or [[End]]. */
+    def next(): Int = {
+      lx.skipWs()
+      if (lx.atEnd) return End
+      val c = bytes(lx.pos) & 0xff
+      if (c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9')) numberOrRef()
+      else if (c == '(') literal()
+      else if (c == '/') name()
+      else if (isDelim(c)) fallback()
+      else keyword()
+    }
+
+    private def number(): Double =
+      if (lx.pos == aheadStart) { lx.pos = aheadEnd; aheadValue }
+      else lx.scanNumber()
+
+    /** `Lexer.parseNumberOrRef`. */
+    private def numberOrRef(): Int = {
+      val v = number()
+      if (v != math.floor(v) || v < 0) { num = v; return Num }
+      val save = lx.pos
+      lx.skipWs()
+      val start = lx.pos
+      if (start < bytes.length && bytes(start) >= '0' && bytes(start) <= '9') {
+        val v2 = lx.scanNumber()
+        aheadStart = start
+        aheadEnd = lx.pos
+        aheadValue = v2
+        if (v2 == math.floor(v2) && v2 >= 0) {
+          lx.skipWs()
+          val p = lx.pos
+          if (p < bytes.length && bytes(p) == 'R' &&
+              (p + 1 >= bytes.length || isWs(bytes(p + 1) & 0xff) ||
+                isDelim(bytes(p + 1) & 0xff))) {
+            lx.pos = p + 1
+            ref = PRef(v.toInt, v2.toInt)
+            return Obj
+          }
+        }
+      }
+      lx.pos = save
+      num = v
+      Num
+    }
+
+    private def literal(): Int = {
+      val start = lx.pos + 1
+      var p = start
+      while (p < bytes.length && bytes(p) != ')' && bytes(p) != '\\' &&
+          bytes(p) != '(') p += 1
+      if (p < bytes.length && bytes(p) == ')') {
+        ref = java.util.Arrays.copyOfRange(bytes, start, p)
+        lx.pos = p + 1
+        Str
+      } else fallback()
+    }
+
+    private def name(): Int = {
+      val start = lx.pos + 1
+      var p = start
+      while (p < bytes.length && !isWs(bytes(p) & 0xff) && !isDelim(bytes(p) & 0xff)) {
+        if (bytes(p) == '#') return fallback()
+        p += 1
+      }
+      ref = new String(bytes, start, p - start, StandardCharsets.ISO_8859_1)
+      lx.pos = p
+      Name
+    }
+
+    private def keyword(): Int = {
+      val start = lx.pos
+      var p = start
+      while (p < bytes.length && !isWs(bytes(p) & 0xff) && !isDelim(bytes(p) & 0xff))
+        p += 1
+      val n = p - start
+      val op = if (n > 0 && n <= 3) Ops.getOrNull(opKey(bytes, start, n)) else null
+      if (op == null) fallback()
+      else { lx.pos = p; ref = op; Operator }
+    }
+
+    private def fallback(): Int = lx.nextToken() match {
+      case PNum(v) => num = v; Num
+      case PStr(b) => ref = b; Str
+      case PName(n) => ref = n; Name
+      case a: PArr => ref = a; Arr
+      case o: PdfObj => ref = o; Obj
+      case op: Op => ref = op; Operator
+      case _ => End
+    }
+  }
+
+  private[sources] object ContentLexer {
+    final val End = 0
+    final val Num = 1
+    final val Str = 2
+    final val Name = 3
+    final val Arr = 4
+    final val Obj = 5
+    final val Operator = 6
   }
 
   // -------------------------------------------------------------- filters

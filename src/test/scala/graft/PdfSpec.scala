@@ -199,6 +199,21 @@ class PdfSpec extends SparkSuite {
     assert(mid.map(t => (t.text, t.page_idx)) == Seq(("page2", 1)))
   }
 
+  test("a page range reads only its pages: an undecodable content stream " +
+      "on page 2 fails the full parse, not a parse of page 1") {
+    val intact = PdfWriter.build(Seq(
+      Seq(PTok("alpha", 50, 60, 10), PTok("beta", 100, 60, 10)),
+      Seq(PTok("zebra", 50, 60, 10))))
+    val broken = PdfSpec.unknownFilterOnPage2(intact)
+    val e = intercept[IllegalArgumentException](PdfReader.parseTokens(1L, broken))
+    assert(e.getMessage == "unsupported filter /BogusDecode")
+    val first = PdfReader.parseTokens(1L, broken, lastPage = 1)
+    assert(first == PdfReader.parseTokens(1L, intact, lastPage = 1))
+    assert(first.map(_.text) == Seq("alpha", "beta"))
+    assert(PdfReader.parseWithAssets(1L, broken, lastPage = 1)._1 == first)
+    intercept[IllegalArgumentException](PdfReader.parseTokens(1L, broken, firstPage = 2))
+  }
+
   test("embedded /Widths arrays override the standard-14 metrics and " +
       "descriptor flags drive bold/italic") {
     // hand-build a PDF with a custom font: widths 500 for every glyph,
@@ -426,5 +441,19 @@ class PdfSpec extends SparkSuite {
     assert(rows.map(_.page_idx).distinct.length > 1, "expected 2+ pages")
     assert(rows.map(_.text).filter(_.startsWith("tok")) == words,
       "body token order must survive pagination")
+  }
+}
+
+object PdfSpec {
+  /** `pdf` (two or more [[PdfWriter.build]] pages) with page 2's content
+    * stream behind an unknown filter, `/BogusDecode` in place of
+    * `/FlateDecode`: same length, so every xref offset still holds. */
+  def unknownFilterOnPage2(pdf: Array[Byte]): Array[Byte] = {
+    val s = new String(pdf, java.nio.charset.StandardCharsets.ISO_8859_1)
+    val flate = "/Filter /FlateDecode"
+    val page2 = s.indexOf(flate, s.indexOf(flate) + 1)
+    require(page2 > 0, "no second content stream")
+    (s.substring(0, page2) + "/Filter /BogusDecode" + s.substring(page2 + flate.length))
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 }

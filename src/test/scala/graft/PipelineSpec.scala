@@ -53,6 +53,40 @@ class PipelineSpec extends SparkSuite {
       Seq((0, 0, 0, 0), (0, 0, 0, 1), (0, 1, 0, 0), (0, 1, 0, 1)))
   }
 
+  test("ALTO parse: a String's attributes are the first of each local name " +
+      "in any namespace, as getAttributeValue(null, _) finds them; empty is absent") {
+    val xml =
+      """<alto xmlns="http://www.loc.gov/standards/alto/ns-v3#" xmlns:x="urn:x">
+        |<Styles><TextStyle ID="f" FONTFAMILY="Times" FONTSIZE="10.0" FONTSTYLE="bold"/></Styles>
+        |<Layout><Page PHYSICAL_IMG_NR="3" WIDTH="612" HEIGHT="792"><PrintSpace>
+        |<TextBlock><TextLine>
+        |<String x:HPOS="5" HPOS="7" CONTENT="one" VPOS=" 20" WIDTH="30" HEIGHT="" STYLEREFS="f"/>
+        |<String CONTENT="" HPOS="9"/>
+        |<String HPOS="-0" x:CONTENT="two" CONTENT="ignored" WIDTH="1e1" VPOS="3.25" STYLEREFS="missing"/>
+        |</TextLine></TextBlock>
+        |</PrintSpace></Page></Layout></alto>""".stripMargin
+    val (rows, _) = AltoReader.parseAll(4L, xml)
+    // what getAttributeValue(null, name) gives on each String element
+    val r = javax.xml.stream.XMLInputFactory.newInstance()
+      .createXMLStreamReader(new java.io.StringReader(xml))
+    val strings = scala.collection.mutable.ListBuffer.empty[Map[String, String]]
+    while (r.hasNext) {
+      if (r.next() == javax.xml.stream.XMLStreamConstants.START_ELEMENT &&
+          r.getLocalName == "String")
+        strings += Seq("HPOS", "VPOS", "WIDTH", "HEIGHT", "CONTENT", "STYLEREFS")
+          .map(n => n -> r.getAttributeValue(null, n)).toMap
+    }
+    def num(v: String) = if (v == null || v.isEmpty) 0.0 else v.toDouble
+    val expected = strings.filter(a => a("CONTENT") != null && a("CONTENT").nonEmpty).map { a =>
+      (a("CONTENT"), num(a("HPOS")), num(a("VPOS")), num(a("WIDTH")), num(a("HEIGHT")))
+    }
+    assert(expected == Seq(("one", 5.0, 20.0, 30.0, 0.0), ("two", -0.0, 3.25, 10.0, 0.0)))
+    assert(rows.map(t => (t.text, t.coords.get.x, t.coords.get.y, t.coords.get.width,
+      t.coords.get.height)) == expected)
+    assert(rows.map(_.coords.get.page_number) == Seq(3, 3))
+    assert(rows(0).font.is_bold && rows(1).font == FontInfo.empty)
+  }
+
   test("ALTO parse: graphics") {
     val gs = AltoReader.graphics(Seq((0L, altoXml)).toDS()).collect()
     assert(gs.length == 1 && gs(0).file_id == "image-1.png" && gs(0).graphic_type == "png")

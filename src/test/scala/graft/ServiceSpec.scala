@@ -421,6 +421,27 @@ class ServiceSpec extends SparkSuite with BeforeAndAfterAll {
     assert(!incNone.body().contains("alpha"))
   }
 
+  test("PDF page range reads only its pages: an undecodable page 2 fails " +
+      "the full-range parse and not a ranged one") {
+    val intact = graft.sources.PdfWriter.build(Seq(
+      Seq(graft.sources.PdfWriter.PTok("alpha", 50, 60, 10)),
+      Seq(graft.sources.PdfWriter.PTok("zebra", 50, 60, 10))))
+    val broken = PdfSpec.unknownFilterOnPage2(intact)
+    // a full-range parse reaches the undecodable stream: a malformed
+    // PDF upload answers 400
+    val full = postBytes("/api/convert", "application/tei+xml", broken)
+    assert(full.statusCode() == 400, new String(full.body(), "UTF-8"))
+    val ranged = postBytes("/api/convert?last_page=1", "application/tei+xml", broken)
+    assert(ranged.statusCode() == 200, new String(ranged.body(), "UTF-8"))
+    val intactRanged = postBytes("/api/convert?last_page=1", "application/tei+xml", intact)
+    assert(ranged.body().sameElements(intactRanged.body()))
+    val tei = new String(ranged.body(), "UTF-8")
+    assert(tei.contains("alpha") && !tei.contains("zebra"))
+    // the zip route parses with graphics and assets: the same range holds
+    val zip = postBytes("/api/convert?last_page=1", "application/tei+xml+zip", broken)
+    assert(zip.statusCode() == 200)
+  }
+
   test("first_page/last_page restrict processing to the page range") {
     // convert.py:40-58: the page range limits what pdfalto converts —
     // here, which token pages enter the pipeline

@@ -7,21 +7,317 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Coordinates, Coords, FontInfo, LocalLabelers, Processor,
-  TextNormalization, TokenRow}
-import graft.sources.{PdfReader, PdfSyntax}
+import graft.pipeline.{Coordinates, Coords, Extractors, FontInfo, LocalLabelers,
+  Processor, TextNormalization, TokenRow}
+import graft.sources.{PdfReader, PdfSyntax, PdfWriter}
+import graft.sources.PdfWriter.{PImage, PTok}
 
 /** Differential specs for the per-document kernels: each char-scan,
-  * comparator-sort or scratch-buffer kernel against the regex /
-  * `java.util.Formatter` / boxed-key / allocating form it replaced, kept
-  * here as the oracle. The kernels define token identity, token order,
-  * glyph positions and the TEI `coords` bytes, so any difference is an
-  * output change.
+  * comparator-sort, scratch-buffer, typed-stack or streaming kernel
+  * against the regex / `java.util.Formatter` / boxed-key / allocating
+  * form it replaced, kept here as the oracle. The kernels define token
+  * identity, token order, glyph positions, span texts and the TEI
+  * `coords` bytes, so any difference is an output change.
   */
 class TextKernelSpec extends AnyFunSuite {
+  import TextKernelSpec.SpanTok
 
   /** The replaced forms, verbatim. */
   private object Oracle {
+    /** `PdfReader.interpret` on a stack of boxed `PdfObj` operands. */
+    def interpret(page: PdfReader.PageData)
+        : (Seq[PdfReader.Word], Seq[PdfReader.PlacedImage]) = {
+      import scala.collection.mutable
+      import scala.collection.mutable.ListBuffer
+      import PdfSyntax._
+      import PdfReader.{FontRes, GlyphMath, PlacedImage, Word}
+      type Mat = Array[Double]
+      val Id: Mat = Array(1, 0, 0, 1, 0, 0)
+      def mul(m1: Mat, m2: Mat): Mat = Array(
+        m1(0) * m2(0) + m1(1) * m2(2),
+        m1(0) * m2(1) + m1(1) * m2(3),
+        m1(2) * m2(0) + m1(3) * m2(2),
+        m1(2) * m2(1) + m1(3) * m2(3),
+        m1(4) * m2(0) + m1(5) * m2(2) + m2(4),
+        m1(4) * m2(1) + m1(5) * m2(3) + m2(5))
+      def apply(m: Mat, x: Double, y: Double): (Double, Double) =
+        (m(0) * x + m(2) * y + m(4), m(1) * x + m(3) * y + m(5))
+      val images = ListBuffer.empty[PlacedImage]
+      val words = ListBuffer.empty[Word]
+      var ctm: Mat = Id
+      val gsStack = mutable.Stack.empty[Mat]
+      val g = new GlyphMath
+      var tlm: Mat = Id
+      var font: FontRes = null
+      var size = 0.0
+      var charSpace = 0.0
+      var wordSpace = 0.0
+      var hScale = 1.0
+      var leading = 0.0
+      var rise = 0.0
+      val sb = new StringBuilder
+      var wx0 = 0.0
+      var wy = 0.0
+      var wWidth = 0.0
+      var wSize = 0.0
+      var wFont: FontRes = null
+      var expectX = Double.NaN
+      def flush(): Unit = {
+        if (sb.nonEmpty && wFont != null) {
+          words += Word(sb.toString, wx0,
+            page.height - wy - wSize, wWidth, wSize, wFont, wSize)
+          sb.clear()
+        }
+        sb.clear()
+        expectX = Double.NaN
+      }
+      def showString(bytesStr: Array[Byte]): Unit = {
+        if (font == null) return
+        var i = 0
+        while (i < bytesStr.length) {
+          val code = bytesStr(i) & 0xff
+          val w0 = font.width(code)
+          val disp = (w0 / 1000.0 * size + charSpace +
+            (if (code == 32) wordSpace else 0.0)) * hScale
+          g.place(ctm, size, hScale, rise)
+          val gx = g.trm(4) - page.mediaX
+          val gy = g.trm(5) - page.mediaY
+          val deviceW = disp * g.xScale
+          if (code == 32) flush()
+          else {
+            val effSize = g.effSize(size)
+            val continues = !expectX.isNaN &&
+              math.abs(gx - expectX) <= 0.18 * math.max(effSize, 1.0) &&
+              sb.nonEmpty && (wFont eq font) &&
+              math.abs((page.height - gy - effSize) -
+                (page.height - wy - wSize)) < 0.01
+            if (!continues) {
+              flush()
+              wx0 = gx
+              wy = gy
+              wSize = effSize
+              wFont = font
+              wWidth = 0.0
+            }
+            sb.append(code.toChar)
+            wWidth = (gx + deviceW) - wx0
+            expectX = gx + deviceW
+          }
+          g.translate(disp)
+          if (code == 32) expectX = Double.NaN
+          i += 1
+        }
+      }
+      val lx = new Lexer(page.content)
+      val stack = mutable.ArrayBuffer.empty[PdfObj]
+      var tok = lx.nextToken()
+      while (tok != null) {
+        tok match {
+          case o: PdfObj => stack += o
+          case Op(op) =>
+            def num(i: Int): Double = stack.lift(stack.length - i) match {
+              case Some(PNum(v)) => v
+              case _ => 0.0
+            }
+            op match {
+              case "q" => gsStack.push(ctm)
+              case "Q" => if (gsStack.nonEmpty) ctm = gsStack.pop()
+              case "cm" =>
+                ctm = mul(Array(num(6), num(5), num(4), num(3), num(2), num(1)), ctm)
+              case "BT" => g.setTm(Id); tlm = Id; flush()
+              case "ET" => flush()
+              case "Tf" =>
+                flush()
+                size = num(1)
+                stack.lift(stack.length - 2) match {
+                  case Some(PName(fn)) => font = page.fonts.getOrElse(fn,
+                    FontRes(fn, "Helvetica", bold = false, italic = false, 0, null, 0))
+                  case _ => ()
+                }
+              case "Td" =>
+                tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
+                g.setTm(tlm)
+                flush()
+              case "TD" =>
+                leading = -num(1)
+                tlm = mul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
+                g.setTm(tlm)
+                flush()
+              case "Tm" =>
+                tlm = Array(num(6), num(5), num(4), num(3), num(2), num(1))
+                g.setTm(tlm)
+                flush()
+              case "T*" =>
+                tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
+                g.setTm(tlm)
+                flush()
+              case "TL" => leading = num(1)
+              case "Tc" => charSpace = num(1)
+              case "Tw" => wordSpace = num(1)
+              case "Tz" => hScale = num(1) / 100.0
+              case "Ts" => rise = num(1)
+              case "Tj" =>
+                stack.lastOption.foreach {
+                  case PStr(b) => showString(b)
+                  case _ => ()
+                }
+              case "'" =>
+                tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
+                g.setTm(tlm)
+                flush()
+                stack.lastOption.foreach {
+                  case PStr(b) => showString(b)
+                  case _ => ()
+                }
+              case "\"" =>
+                wordSpace = num(3)
+                charSpace = num(2)
+                tlm = mul(Array(1, 0, 0, 1, 0, -leading), tlm)
+                g.setTm(tlm)
+                flush()
+                stack.lastOption.foreach {
+                  case PStr(b) => showString(b)
+                  case _ => ()
+                }
+              case "TJ" =>
+                stack.lastOption.foreach {
+                  case PArr(items) => items.foreach {
+                    case PStr(b) => showString(b)
+                    case PNum(v) =>
+                      val adj = -v / 1000.0 * size * hScale
+                      g.translate(adj)
+                    case _ => ()
+                  }
+                  case _ => ()
+                }
+              case "Do" =>
+                stack.lastOption.foreach {
+                  case PName(n) if page.imageXObjects.contains(n) =>
+                    val corners = Seq((0.0, 0.0), (1.0, 0.0), (0.0, 1.0),
+                      (1.0, 1.0)).map { case (ux, uy) => apply(ctm, ux, uy) }
+                    val xs = corners.map(_._1 - page.mediaX)
+                    val ys = corners.map(_._2 - page.mediaY)
+                    val x0 = xs.min; val x1 = xs.max
+                    val y0 = ys.min; val y1 = ys.max
+                    images += PlacedImage(n, x0, page.height - y1,
+                      x1 - x0, y1 - y0)
+                  case _ => ()
+                }
+              case _ => ()
+            }
+            stack.clear()
+          case _ => ()
+        }
+        tok = lx.nextToken()
+      }
+      flush()
+      (words.toList, images.toList)
+    }
+
+    /** `AltoReader.retokenize`: a word's parts as (text, whitespace,
+      * coords) triples. */
+    def retokenize(text: String, c: Coords): Seq[(String, String, Coords)] = {
+      if (isBlank(text)) return Nil
+      val parts = TextNormalization.tokenize(text, keepWhitespace = true)
+      var chars = 0
+      parts.foreach(p => chars += p.length)
+      val totalLen = chars.toDouble
+      def proRate(c: Coords, text: String, offset: Int, totalLen: Double): Coords =
+        if (totalLen <= 0) c
+        else c.copy(
+          x = c.x + c.width * offset / totalLen,
+          width = c.width * text.length / totalLen)
+      val out = scala.collection.mutable.ListBuffer.empty[(String, String, Coords)]
+      var pendingText: String = null
+      var pendingWs = ""
+      var pendingOffset = 0
+      var offset = 0
+      parts.foreach { p =>
+        if (isBlank(p)) {
+          pendingWs += p
+          offset += p.length
+        } else {
+          if (pendingText != null)
+            out += ((pendingText, pendingWs, proRate(c, pendingText, pendingOffset, totalLen)))
+          pendingText = p
+          pendingWs = ""
+          pendingOffset = offset
+          offset += p.length
+        }
+      }
+      pendingWs = if (pendingWs.isEmpty) " " else pendingWs + " "
+      if (pendingText != null)
+        out += ((pendingText, pendingWs, proRate(c, pendingText, pendingOffset, totalLen)))
+      out.toList
+    }
+
+    /** `SpanAssembly.assemble` over a collected token list. */
+    def assemble(toks: Seq[SpanTok]): (String, String, String) = {
+      def styleMask(f: FontInfo): Int =
+        (if (f != null && f.is_bold) 1 else 0) |
+          (if (f != null && f.is_italics) 2 else 0) |
+          (if (f != null && f.is_subscript) 4 else 0) |
+          (if (f != null && f.is_superscript) 8 else 0)
+      val sb = new StringBuilder
+      val boxes = scala.collection.mutable.ListBuffer.empty[Coords]
+      val runs = scala.collection.mutable.ListBuffer.empty[(Int, Int, Int)]
+      var runStart = 0
+      var runEnd = 0
+      var runMask = 0
+      def closeRun(): Unit = {
+        if (runMask != 0 && runEnd > runStart) runs += ((runStart, runEnd, runMask))
+        runMask = 0
+      }
+      toks.foreach { t =>
+        if (t.text != null && t.whitespace != null) {
+          val mask = styleMask(t.font)
+          if (mask != runMask) { closeRun(); runStart = sb.length; runMask = mask }
+          sb.append(t.text)
+          runEnd = sb.length
+          sb.append(t.whitespace)
+        }
+        t.coords.foreach { c =>
+          if (boxes.nonEmpty && boxes.last.page_number == c.page_number)
+            boxes(boxes.length - 1) = Coordinates.union(boxes.last, c)
+          else boxes += c
+        }
+      }
+      var end = sb.length
+      while (end > 0 && sb.charAt(end - 1) <= ' ') end -= 1
+      closeRun()
+      val styles = runs.collect {
+        case (s, e, m) if s < end => s"$s,${math.min(e, end)},$m"
+      }
+      (sb.substring(0, end), Coordinates.formatList(boxes.toList),
+        if (styles.isEmpty) null else styles.mkString(";"))
+    }
+
+    /** `LocalLabelers.spansLocal` collecting each span's tokens. */
+    def spansLocal(labeled: IndexedSeq[(TokenRow, String)]): IndexedSeq[Extractors.Span] = {
+      val out = new scala.collection.mutable.ListBuffer[Extractors.Span]
+      var spanId = 0L
+      var curTag: String = null
+      var open = false
+      val toks = new scala.collection.mutable.ListBuffer[SpanTok]
+      def flush(): Unit = if (open) {
+        val (text, coords, styles) = assemble(toks.toList)
+        out += Extractors.Span(spanId, curTag, text, coords, styles)
+      }
+      labeled.foreach { case (t, label) =>
+        val tag = LocalLabelers.stripTag(label)
+        if (!open || label.startsWith("B-") || tag != curTag) {
+          flush()
+          spanId += 1
+          curTag = tag
+          toks.clear()
+          open = true
+        }
+        toks += SpanTok(t.text, t.whitespace, t.coords, t.font)
+      }
+      flush()
+      out.toIndexedSeq
+    }
+
     def normalize(text: String): String = {
       val sb = new StringBuilder(text.length)
       text.foreach(c => sb.append(TextNormalization.replacements.getOrElse(c, c.toString)))
@@ -355,4 +651,220 @@ class TextKernelSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** A double's bits: -0.0 apart from 0.0, NaN payloads aside (the JIT
+    * may commute the operands of one product, see the GlyphMath case). */
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+
+  private def outcome[A](f: => A): Either[(Class[_], String), A] =
+    try Right(f)
+    catch { case e: Exception => Left((e.getClass, e.getMessage)) }
+
+  /** An interpreter's words and image placements, doubles by bits. */
+  private def placed(r: (collection.Seq[PdfReader.Word], collection.Seq[PdfReader.PlacedImage])) =
+    (r._1.map(w => (w.text, bits(w.x), bits(w.yTop), bits(w.width), bits(w.height),
+      w.font, bits(w.size))).toList,
+      r._2.map(i => (i.resName, bits(i.x), bits(i.yTop), bits(i.width), bits(i.height))).toList)
+
+  /** The text-operator fixtures of PdfSpec. */
+  private val contentFixtures = Seq(
+    """BT /F1 10 Tf 1 0 0 1 50 700 Tm (alpha beta) Tj ET
+      |BT /F1 10 Tf 1 0 0 1 50 650 Tm [(ker) -18 (ned)] TJ ET
+      |BT /F1 10 Tf 1 0 0 1 50 600 Tm [(two) -300 (words)] TJ ET
+      |""".stripMargin,
+    """BT /F1 10 Tf 14 TL 1 0 0 1 50 700 Tm (one) Tj T* (two) Tj ET
+      |BT /F1 10 Tf 1 0 0 1 50 600 Tm 0 -20 TD (three) Tj ET
+      |BT /F1 10 Tf 14 TL 1 0 0 1 50 500 Tm (x) Tj (four) ' ET
+      |BT /F2 10 Tf 14 TL 1 0 0 1 50 400 Tm (y) Tj 2 1 (five) " ET
+      |q 2 0 0 2 0 0 cm BT /F3 10 Tf 1 0 0 1 40 100 Tm (big) Tj ET Q
+      |BT /F4 10 Tf 2 Tc 1 0 0 1 50 300 Tm (spaced) Tj ET
+      |""".stripMargin,
+    """% a comment line
+      |BT /F1 10 Tf 1 0 0 1 50 700 Tm (par\(en\)s \\ \164ab) Tj ET
+      |BT /F1 10 Tf 1 0 0 1 50 650 Tm <68657821> Tj ET
+      |""".stripMargin)
+
+  private lazy val pdfFixtures: Seq[Array[Byte]] = Seq(
+    PdfWriter.build(Seq(
+      Seq(PTok("alpha", 50, 60, 10), PTok("\ufb01rst", 120, 60, 10, bold = true),
+        PTok("a,b", 200, 60, 10, italic = true), PTok("Fig.\u00a01", 50, 90, 9)),
+      Seq(PTok("page2", 50, 60, 10), PTok("(paren)", 50, 80, 12)))),
+    PdfWriter.buildWithImages(Seq(
+      (Seq(PTok("figure", 50, 60, 10)), Seq(PImage(50, 100, 200, 150))),
+      (Seq(PTok("second", 50, 60, 10)), Seq(PImage(10, 10, 30, 30), PImage(300, 400, 90, 60))))),
+    PdfWriter.documentPdf(("Neural Parsing of Documents\nAda Lovelace Charles Babbage\n" +
+      "Introduction\n" + Seq.fill(40)("Body text with [ 1 ] citations and Figure 2 markers.")
+        .mkString(" ") + "\nReferences\n1. A reference entry, 2020.")),
+    PdfWriter.buildRawContent(contentFixtures),
+    PdfWriter.buildRawContent(contentFixtures, compress = false),
+    PdfWriter.buildRawContent(contentFixtures, pdf15 = true))
+
+  test("content-stream interpreter on the typed operand stack equals the " +
+      "boxed-operand interpret on every PDF fixture") {
+    var words = 0
+    var images = 0
+    pdfFixtures.foreach { pdf =>
+      PdfReader.pages(new PdfReader.PdfDoc(pdf), 1, Int.MaxValue).foreach { case (i, page) =>
+        val got = placed(PdfReader.interpret(page))
+        assert(got == placed(Oracle.interpret(page)), s"page $i")
+        words += got._1.size
+        images += got._2.size
+      }
+    }
+    assert(words > 100 && images == 3, (words, images))
+  }
+
+  private val pieces = IndexedSeq(
+    "0", "1", "12", "-3", "2.5", "-.5", ".25", "+4", "007", "1.2.3", "-", "+", ".", "+.",
+    "..", "123456789012345678901", "1e5", "3 0 R", "1 2 R", "4 0 Rx", "5 -1 R", "6 0.5 R",
+    "7 0 R/N", "8 1 R(s)", "9 % c\n 0 R", "10 11 12 R",
+    "/F1", "/F2", "/Im1", "/Nope", "/A#20B", "/#4", "/", "/Im#31", "/F#zz",
+    "(abc)", "(a b  c)", "()", "(x\\(y\\)z)", "(nest (ed) s)", "(oct \\101\\7\\0053)",
+    "(line\\\ncont)", "(tab\\t\\q)", "(cr\\\r\n)", "(\u00e9\u00a0x)", "(open",
+    "<48656c6c6f>", "<4 8 6>", "<>", "<zz>", "<4g>", "<41",
+    "[(ab) -120 (cd) 50]", "[]", "[(a) /N 3 0 R]", "[1 [2] (x)]", "[(k) 250.5 (e)]", "[(a) Tj]",
+    "<< /K 1 /L (s) >>", "<< /K >>", "<< 1 2 >>", "<< /A << /B [1 2] >> >>",
+    "% comment\n", "%\r", "true", "false", "null",
+    "]", ">>", "{", "}", ")", ">x", ">",
+    "BT", "ET", "/F1 12 Tf", "/F2 9.5 Tf", "/Nope 10 Tf", "12 Tf", "1 0 0 1 50 700 Tm",
+    "0.5 0.1 -0.1 0.5 30 400 Tm", "10 20 Td", "0 -14 TD", "T*", "14 TL", "1 Tc", "2 Tw",
+    "90 Tz", "3 Ts", "(text here) Tj", "(tw) Tj", "(x) '", "1 2 (y) \"", "[(a) -50 (b) -400 (c)] TJ",
+    "q", "Q", "2 0 0 2 10 10 cm", "0 1 -1 0 300 0 cm", "/Im1 Do", "/Nope Do", "re", "f",
+    "/P <</MCID 0>> BDC", "EMC", "ABCD", "endobj", "W*", "0.5 g", "BI /W 2 ID \u0001\u00ff EI",
+    "Tx", "d0", "\u00ff\u0080")
+  private val separators = IndexedSeq(" ", " ", "\n", "\r\n", "\t", "\u0000", " % c\n", "\f", "")
+
+  test("content-stream interpreter equals interpret on seeded random streams: " +
+      "n g R, escaped and nested strings, hex strings, TJ arrays, inline dicts, " +
+      "comments, long operators, truncation (same exception class and message)") {
+    val fonts = Map(
+      "F1" -> PdfReader.FontRes("F1", "Helvetica", bold = false, italic = false, 0, null, 0),
+      "F2" -> PdfReader.FontRes("F2", "ABCDEF+Custom-Bold", bold = true, italic = true, 32,
+        Array.tabulate(95)(k => if (k % 7 == 0) 0 else 400 + k), 250))
+    val rnd = new Random(47L)
+    val kinds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    (0 until 20000).foreach { _ =>
+      val sb = new StringBuilder
+      (0 until rnd.nextInt(40)).foreach { _ =>
+        sb ++= pieces(rnd.nextInt(pieces.length))
+        sb ++= separators(rnd.nextInt(separators.length))
+      }
+      val full = sb.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      val content =
+        if (rnd.nextInt(3) == 0) java.util.Arrays.copyOf(full, rnd.nextInt(full.length + 1))
+        else full
+      val page = PdfReader.PageData(if (rnd.nextBoolean()) 0.0 else 10.0,
+        if (rnd.nextBoolean()) 0.0 else -5.0, 612, 792, fonts, content, Set("Im1"),
+        Map.empty, null)
+      val got = outcome(placed(PdfReader.interpret(page)))
+      assert(got == outcome(placed(Oracle.interpret(page))),
+        new String(content, java.nio.charset.StandardCharsets.ISO_8859_1))
+      kinds(got match {
+        case Left((c, _)) => c.getSimpleName
+        case Right((ws, ims)) => if (ws.nonEmpty) "words" else if (ims.nonEmpty) "images" else "empty"
+      }) += 1
+    }
+    // the streams reach every outcome: text, images and each error class
+    Seq("words", "images", "empty", "IllegalArgumentException", "NumberFormatException",
+      "ClassCastException").foreach(k => assert(kinds(k) > 0, kinds))
+  }
+
+  test("the word → token kernel equals retokenize(normalize(_)) on seeded " +
+      "random words over delimiters, (?U)\\s, U+001C–U+001F, NBSP, thin space " +
+      "and ligatures, coordinates by bits (-0.0, NaN and ∞ included)") {
+    val alphabet: IndexedSeq[String] =
+      (spaceChars ++ ('\u001c' to '\u001f') ++ TextNormalization.delimiters ++
+        TextNormalization.replacements.keys ++ "\u00a0\u2009abcZ19.\u2022").map(_.toString)
+        .toIndexedSeq ++ Seq("ab", "word", "x1", "\ud83d\ude00", "\r\n")
+    val specials = IndexedSeq(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e-300, -1e-300, 12.34, -5.5, 1e300, 612.0)
+    val rnd = new Random(53L)
+    def v(): Double =
+      if (rnd.nextInt(3) == 0) specials(rnd.nextInt(specials.length))
+      else math.rint(rnd.nextDouble() * 60000) / 100
+    var split = 0
+    (0 until 40000).foreach { _ =>
+      val word = Seq.fill(rnd.nextInt(if (rnd.nextBoolean()) 3 else 10))(
+        alphabet(rnd.nextInt(alphabet.length))).mkString
+      val (x, y, w, h, page) = (v(), v(), v(), v(), rnd.nextInt(5))
+      val got = scala.collection.mutable.ListBuffer.empty[(String, String, Coords)]
+      TextNormalization.wordTokens(word, x, y, w, h, page, new TextNormalization.TokenSink {
+        def token(text: String, whitespace: String, coords: Coords): Unit =
+          got += ((text, whitespace, coords))
+      })
+      val oracle = Oracle.retokenize(Oracle.normalize(word), Coords(x, y, w, h, page))
+      def key(ts: Seq[(String, String, Coords)]) = ts.map { case (t, ws, c) =>
+        (t, ws, bits(c.x), bits(c.y), bits(c.width), bits(c.height), c.page_number) }
+      assert(key(got.toList) == key(oracle), show(word))
+      if (oracle.size > 1) split += 1
+      // a word that normalizes to itself is not copied
+      if (Oracle.normalize(word) == word) assert(TextNormalization.normalize(word) eq word)
+    }
+    assert(split > 1000, split)
+  }
+
+  test("the ALTO coordinate number path equals String.toDouble on padded, " +
+      "signed, long and malformed values, exception class and message included") {
+    def run(f: String => Double)(s: String) =
+      outcome(java.lang.Double.doubleToRawLongBits(f(s)))
+    def check(s: String): Unit =
+      assert(run(PdfSyntax.decimalValue)(s) == run(_.toDouble)(s), show(s))
+    Seq("0", "-0", "+0", "-0.0", "12", "12.75", "-12.75", ".5", "5.", "+.5", "612.0",
+      "0.30000000000000004", "123456789012345", "1234567890123456", "0.0000000000000000000001",
+      "0.00000000000000000000001", " 12", "12 ", "\t3.5\n", " -0 ", "\u00a012", "12\u00a0",
+      "1e3", "1E-3", "0x1p3", "NaN", " Infinity", "-Infinity", "1_000", "\u0661", "", " ",
+      "-", "+", ".", "1.2.3", "--1", "1d", "2f", "12,5").foreach(check)
+    val rnd = new Random(59L)
+    val alphabet = "0123456789.-+ e\t\u00a0xd"
+    (0 until 100000).foreach { _ =>
+      check(Seq.fill(rnd.nextInt(20))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    }
+    (0 until 50000).foreach { _ =>
+      val int = Seq.fill(rnd.nextInt(19))(('0' + rnd.nextInt(10)).toChar).mkString
+      val frac = Seq.fill(rnd.nextInt(26))(('0' + rnd.nextInt(10)).toChar).mkString
+      val pad = Seq("", " ", "\t")(rnd.nextInt(3))
+      check(pad + Seq("", "-", "+")(rnd.nextInt(3)) + int +
+        (if (frac.nonEmpty || rnd.nextBoolean()) "." + frac else "") + pad)
+    }
+  }
+
+  test("streaming spansLocal equals the collect-then-assemble form on random " +
+      "labelings: null text or whitespace, page changes and style runs") {
+    val labels = IndexedSeq("B-<a>", "I-<a>", "<a>", "B-<b>", "I-<b>", "<b>", "O", "B-", "I-")
+    val fonts = IndexedSeq(null, FontInfo.empty,
+      FontInfo("f", "F", Some(9.0), true, false, false, false),
+      FontInfo("f", "F", None, false, true, false, false),
+      FontInfo("f", "F", None, true, true, true, false),
+      FontInfo("f", "F", None, false, false, false, true))
+    val texts = IndexedSeq(null, "", "a", "bc", " ", "x ", "\u00a0", "d\t", "\u0001")
+    val spaces = IndexedSeq(null, "", " ", " ", "  ", "\n", "\u00a0")
+    val specials = IndexedSeq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, -3.5, 1e-9)
+    val rnd = new Random(61L)
+    def v(): Double =
+      if (rnd.nextInt(8) == 0) specials(rnd.nextInt(specials.length))
+      else rnd.nextInt(80000) / 100.0
+    var styled = 0
+    var multiPage = 0
+    (0 until 5000).foreach { _ =>
+      var page = 1
+      val labeled = IndexedSeq.tabulate(rnd.nextInt(60)) { i =>
+        if (rnd.nextInt(10) == 0) page += rnd.nextInt(3) - 1
+        val coords = if (rnd.nextInt(5) == 0) None else Some(Coords(v(), v(), v(), v(), page))
+        (TokenRow(1L, 0, 0, 0, i, texts(rnd.nextInt(texts.length)),
+          spaces(rnd.nextInt(spaces.length)), fonts(rnd.nextInt(fonts.length)), coords, page,
+          None, None), labels(rnd.nextInt(labels.length)))
+      }
+      val got = LocalLabelers.spansLocal(labeled)
+      assert(got == Oracle.spansLocal(labeled))
+      styled += got.count(_.styles != null)
+      multiPage += got.count(s => s.coords != null && s.coords.contains(";"))
+    }
+    assert(styled > 1000 && multiPage > 100, (styled, multiPage))
+  }
+}
+
+object TextKernelSpec {
+  /** A span token as the replaced `SpanAssembly` collected it. */
+  final case class SpanTok(text: String, whitespace: String,
+      coords: Option[Coords], font: FontInfo)
 }

@@ -13,8 +13,11 @@ output line is its result JSON.
 
 Printed: per end-to-end metric of BENCHMARK.json, the median and the
 quartiles of each side, the change's move against the parent's
-quartile distance, and the pairs in which the change was better; then
-the failed-operation counts and whether every run printed "check: all
+quartile distance, and the pairs in which the change was better; for
+a workload that prints per-route latencies (service_mixed's "note: per
+route p50 ms:" line), each side's median of the per-run p50 of every
+route, so a per-document change shows which routes moved; then the
+failed-operation counts and whether every run printed "check: all
 output checks passed". --raw writes one JSON line per run. Exits 1 if
 a run failed, had failed operations or did not pass its checks.
 """
@@ -28,6 +31,7 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CHECKS_PASSED = "check: all output checks passed"
+ROUTE_P50 = "note: per route p50 ms: "
 
 
 def export(rev, dest):
@@ -44,8 +48,20 @@ def export(rev, dest):
     return sha
 
 
+def route_p50(lines):
+    """{route: p50 ms} from a run's per-route note line ({} without one;
+    a route with no sample prints "-" and is left out)."""
+    for line in lines:
+        if line.startswith(ROUTE_P50):
+            return {k: float(v) for k, v in
+                    (kv.split("=", 1) for kv in line[len(ROUTE_P50):].split())
+                    if v != "-"}
+    return {}
+
+
 def run_once(copy, workload, seed, seconds):
-    """One benchmark run in `copy`: (result dict or None, checks passed)."""
+    """One benchmark run in `copy`: (result dict or None, checks passed,
+    per-route p50 ms)."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -55,7 +71,7 @@ def run_once(copy, workload, seed, seconds):
         result = json.loads(lines[-1]) if p.returncode == 0 else None
     except ValueError:
         result = None
-    return result, CHECKS_PASSED in lines
+    return result, CHECKS_PASSED in lines, route_p50(lines)
 
 
 def quartiles(xs):
@@ -97,13 +113,16 @@ def main():
         print(f"{side}: {rev} = {sha[:12]} in {copy}", flush=True)
 
     runs = {"parent": [], "change": []}
+    routes = {"parent": [], "change": []}
     raw = open(a.raw, "w") if a.raw else None
     for i in range(a.pairs):
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            result, passed = run_once(sides[side], a.workload, seed, a.seconds)
+            result, passed, p50 = run_once(sides[side], a.workload, seed,
+                                           a.seconds)
             runs[side].append((result, passed))
+            routes[side].append(p50)
             summary = (" ".join(f"{k} {fmt(m['value'])}"
                                 for k, m in result["metrics"].items())
                        if result else "no result line")
@@ -142,6 +161,16 @@ def main():
         print(f"| {name} | {fmt(pm)} [{fmt(p1)}-{fmt(p3)}] | "
               f"{fmt(cm)} [{fmt(c1)}-{fmt(c3)}] | {ratio} | "
               f"{won}/{len(ok_pairs)} |")
+
+    names = sorted({r for side in routes.values() for p50 in side for r in p50})
+    if names:
+        print("\nper route p50 ms, median over runs: " + " | ".join(names))
+        for side in ("parent", "change"):
+            meds = []
+            for r in names:
+                xs = [p50[r] for p50 in routes[side] if r in p50]
+                meds.append(fmt(statistics.median(xs)) if xs else "-")
+            print(f"{side}: " + " | ".join(meds))
 
     bad = False
     for side in ("parent", "change"):
