@@ -38,8 +38,13 @@ object Sketch {
     z ^ (z >>> 31)
   }
 
-  /** k-permutation MinHash of a hash array. */
+  /** Permutation j's seed, `mix(j)`, for the usual signature widths. */
+  private val Seeds: Array[Long] = Array.tabulate(256)(j => mix(j.toLong))
+
+  /** k-permutation MinHash of a hash array: permutation j maps a hash
+    * h to `mix(h ^ mix(j))`. */
   def minHash(hashes: ArrayData, k: Int): ArrayData = {
+    val seeds = if (k <= Seeds.length) Seeds else Array.tabulate(k)(j => mix(j.toLong))
     val n = hashes.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -47,13 +52,13 @@ object Sketch {
       val h = hashes.getLong(i)
       var j = 0
       while (j < k) {
-        val v = mix(h ^ mix(j.toLong))
+        val v = mix(h ^ seeds(j))
         if (v < mins(j)) mins(j) = v
         j += 1
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   /** [[SegmentHashesTextExpr]] kernel: [[segmentHashes]] fused with

@@ -1434,8 +1434,10 @@ object Dedup {
     * the threshold and takes the distributed pointer-jumping loop
     * unchanged.
     *
-    * Optimization round r16: the RAW edge list is checkpointed and
-    * counted FIRST, and the undirected/deduplicated table is built
+    * Optimization round r16: the RAW edge list is checkpointed FIRST,
+    * and one bounded `limit(localThreshold + 1).collect()` of it is
+    * both the size test and the small path's input (no separate
+    * count job); the undirected/deduplicated table is built
     * only on the distributed path — from the checkpoint leaf, not the
     * caller's plan. Before, `edges ∪ swap(edges) distinct` embedded
     * the (often expensive — a df-pruned Jaccard self-join) edge plan
@@ -1457,11 +1459,19 @@ object Dedup {
     val (edgesCp, releaseEdges) =
       graft.CacheRegistry.localCheckpointWithRelease(
         edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nEdges = edgesCp.count()
+    // one bounded collect is both the size test and the local path's
+    // input: at most localThreshold + 1 edges come back (an array holds
+    // under 2^31 of them, so a larger threshold bounds nothing more)
+    val bound = math.max(0L, math.min(localThreshold, Int.MaxValue - 2L)).toInt
+    val head = {
+      import edges.sparkSession.implicits._
+      edgesCp.select(col("src").cast("long"), col("dst").cast("long"))
+        .limit(bound + 1).as[(Long, Long)].collect()
+    }
     // empty edge set → empty label table, no loop: a clean corpus (or
     // a clean delivery batch in the incremental funnel) should not pay
     // label-propagation job rounds to learn there is nothing to label
-    if (nEdges == 0L) {
+    if (head.isEmpty) {
       releaseEdges()
       // derived from the caller's frame, not the released checkpoint
       // (a released checkpoint cannot be re-actioned); limit(0) folds
@@ -1469,11 +1479,10 @@ object Dedup {
       return edges.select(col(srcCol).as("node"), col(srcCol).as("comp"))
         .limit(0)
     }
-    if (nEdges <= localThreshold) {
+    if (head.length <= localThreshold) {
       // raw directed edges suffice: union-find unions (a, b) exactly
       // like the two (a→b, b→a) rows, and duplicates are no-ops
-      val out = localConnectedComponents(
-        edgesCp.select(col("src").as("doc_id_a"), col("dst").as("doc_id_b")))
+      val out = localConnectedComponents(edges.sparkSession, head)
       releaseEdges()
       return out
     }
@@ -1661,8 +1670,14 @@ object Dedup {
   private[graft] def localConnectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val pairs = edges.select(col("doc_id_a").cast("long"),
-      col("doc_id_b").cast("long")).as[(Long, Long)].collect()
+    localConnectedComponents(spark, edges.select(col("doc_id_a").cast("long"),
+      col("doc_id_b").cast("long")).as[(Long, Long)].collect())
+  }
+
+  /** [[localConnectedComponents]] over already collected pairs. */
+  private def localConnectedComponents(spark: org.apache.spark.sql.SparkSession,
+      pairs: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0

@@ -65,8 +65,38 @@ object Coordinates {
   /** `%.2f` as `Formatter` prints it: the shortest decimal form
     * (`Double.toString`) rounded half-up to two places (1.005 → 1.01,
     * 0.125 → 0.13), a '-' on every negative value including -0.0 and
-    * those that round to 0.00, and `NaN` / `Infinity` as words. */
-  private def appendFixed2(sb: java.lang.StringBuilder, v: Double): Unit =
+    * those that round to 0.00, and `NaN` / `Infinity` as words.
+    *
+    * Coordinates stay doubles until this call. For 1e-3 <= |v| < 1e7
+    * the hundredths are the nearest integer to |v|·100 unless that
+    * product lies within 1e-6 of a half-integer: the product is within
+    * 1.1e-7 of 100·|v|, and the shortest decimal within 9.4e-8 of it, so
+    * away from a tie both round alike. Ties and every other value take
+    * the `Double.toString` digits. */
+  private[graft] def appendFixed2(sb: java.lang.StringBuilder, v: Double): Unit = {
+    val a = math.abs(v)
+    if (a >= 1e-3 && a < 1e7) {
+      val h = a * 100
+      val whole = math.floor(h)
+      val frac = h - whole
+      if (math.abs(frac - 0.5) > 1e-6) {
+        if (v < 0) sb.append('-')
+        appendHundredths(sb, whole.toLong + (if (frac > 0.5) 1 else 0))
+        return
+      }
+    }
+    appendFixed2Digits(sb, v)
+  }
+
+  private def appendHundredths(sb: java.lang.StringBuilder, hundredths: Long): Unit = {
+    val frac = (hundredths % 100).toInt
+    sb.append(hundredths / 100).append('.')
+    if (frac < 10) sb.append('0')
+    sb.append(frac)
+  }
+
+  /** [[appendFixed2]] from the `Double.toString` digits. */
+  private def appendFixed2Digits(sb: java.lang.StringBuilder, v: Double): Unit =
     if (v.isNaN) sb.append("NaN")
     else {
       if (java.lang.Double.compare(v, 0.0) < 0) sb.append('-')
@@ -86,10 +116,7 @@ object Coordinates {
           hundredths = hundredths * 10 + (s.charAt(dot + 1) - '0')
           hundredths = hundredths * 10 + (if (dot + 2 < s.length) s.charAt(dot + 2) - '0' else 0)
           if (dot + 3 < s.length && s.charAt(dot + 3) >= '5') hundredths += 1
-          val frac = (hundredths % 100).toInt
-          sb.append(hundredths / 100).append('.')
-          if (frac < 10) sb.append('0')
-          sb.append(frac)
+          appendHundredths(sb, hundredths)
         }
       }
     }
@@ -99,14 +126,7 @@ object Coordinates {
   def formatList(cs: Seq[Coords]): String =
     if (cs.isEmpty) null else cs.map(format).mkString(";")
 
-  /** Merge an ordered token-coordinate stream straight to the
-    * attribute string (tokens without coordinates are skipped, as the
-    * reference's `if token.coordinates` does). */
-  def formatMerged(cs: Seq[Coords]): String = formatList(merge(cs))
-
-  /** Inverse of [[formatList]] — lets derived elements (a `<p>`
-    * fragment, a figure wrapper) re-merge their children's already
-    * formatted coords without threading raw boxes through every node. */
+  /** Inverse of [[formatList]]. */
   def parse(s: String): Seq[Coords] =
     if (s == null || s.isEmpty) Nil
     else s.split(";").toSeq.map { part =>
@@ -115,11 +135,87 @@ object Coordinates {
         f(0).toInt)
     }
 
-  /** Re-merge formatted child coords into a parent attribute value
-    * (null-safe: children without coords contribute nothing; null when
-    * nothing contributes). */
-  def mergeFormatted(ss: Seq[String]): String =
-    formatList(merge(ss.filter(s => s != null && s.nonEmpty).flatMap(parse)))
+  /** Re-merge formatted child coords into a parent attribute value —
+    * `formatList(merge(ss.flatMap(parse)))` — so derived elements (a
+    * `<p>` fragment, a figure wrapper) need no raw boxes threaded
+    * through every node. Null-safe: children without coords contribute
+    * nothing; null when nothing contributes. One [[BoxMerge]] scan over
+    * the children's chars, no `split` and no `Coords`. */
+  def mergeFormatted(ss: Seq[String]): String = {
+    val m = new BoxMerge
+    ss.foreach(m.addFormatted)
+    m.result()
+  }
+
+  /** The pairwise ordered merge ([[merge]]) over boxes given as four
+    * doubles and a page, formatted as each box closes: a box on the
+    * pending box's page grows it by [[union]]'s formula, another page
+    * formats it and starts the next. [[result]] returns the ';'-joined
+    * list, or null with no box, and starts over. */
+  private[graft] final class BoxMerge {
+    private val out = new java.lang.StringBuilder
+    private var pending = false
+    private var page = 0
+    private var x = 0.0
+    private var y = 0.0
+    private var w = 0.0
+    private var h = 0.0
+
+    def add(bx: Double, by: Double, bw: Double, bh: Double, bpage: Int): Unit =
+      if (pending && bpage == page) {
+        val ux = math.min(x, bx)
+        val uy = math.min(y, by)
+        w = math.max(x + w, bx + bw) - ux
+        h = math.max(y + h, by + bh) - uy
+        x = ux
+        y = uy
+      } else {
+        flush()
+        pending = true
+        page = bpage
+        x = bx; y = by; w = bw; h = bh
+      }
+
+    /** Every box of a [[formatList]] string (null or empty: none). The
+      * fields read back exactly: our own format writes at most two
+      * decimals, which [[graft.sources.PdfSyntax.decimalValue]] reads
+      * on its exact path. */
+    def addFormatted(s: String): Unit =
+      if (s != null) {
+        var i = 0
+        while (i < s.length) {
+          var end = s.indexOf(';', i)
+          if (end < 0) end = s.length
+          val c1 = s.indexOf(',', i)
+          val c2 = s.indexOf(',', c1 + 1)
+          val c3 = s.indexOf(',', c2 + 1)
+          val c4 = s.indexOf(',', c3 + 1)
+          add(decimal(s, c1 + 1, c2), decimal(s, c2 + 1, c3), decimal(s, c3 + 1, c4),
+            decimal(s, c4 + 1, end), Integer.parseInt(s, i, c1, 10))
+          i = end + 1
+        }
+      }
+
+    private def decimal(s: String, from: Int, until: Int): Double =
+      graft.sources.PdfSyntax.decimalValue(s, from, until)
+
+    private def flush(): Unit = if (pending) {
+      if (out.length > 0) out.append(';')
+      appendTo(out, page, x, y, w, h)
+    }
+
+    def result(): String = {
+      flush()
+      val s = if (out.length == 0) null else out.toString
+      clear()
+      s
+    }
+
+    def clear(): Unit = {
+      pending = false
+      out.setLength(0)
+    }
+  }
 }
 
 /** Span assembly: a span's ordered tokens → (text, coords, styles),
@@ -135,7 +231,7 @@ object Coordinates {
   *   (UTF8String.trimRight).
   * - coords: one box per run of same-page tokens, grown with
   *   [[Coordinates.union]]'s arithmetic, kept as four doubles; a page
-  *   change formats the pending box (`Coordinates.formatList`).
+  *   change formats the pending box ([[Coordinates.BoxMerge]]).
   * - styles: styled runs — same-style neighbours merge with the joining
   *   whitespace inside, boundary whitespace stays plain
   *   (tei/common.py:115-151), `start,end,mask` clipped to the text.
@@ -150,13 +246,7 @@ private[graft] final class SpanAssembly {
   private var runStart = 0
   private var runEnd = 0
   private var runMask = 0
-  private val boxes = new java.lang.StringBuilder
-  private var hasBox = false
-  private var boxPage = 0
-  private var boxX = 0.0
-  private var boxY = 0.0
-  private var boxW = 0.0
-  private var boxH = 0.0
+  private val boxes = new Coordinates.BoxMerge
 
   var text: String = null
   var coords: String = null
@@ -168,8 +258,7 @@ private[graft] final class SpanAssembly {
     runStart = 0
     runEnd = 0
     runMask = 0
-    boxes.setLength(0)
-    hasBox = false
+    boxes.clear()
   }
 
   private def closeRun(): Unit = {
@@ -194,33 +283,14 @@ private[graft] final class SpanAssembly {
 
   /** A token's box. */
   def box(x: Double, y: Double, width: Double, height: Double, page: Int): Unit =
-    if (hasBox && page == boxPage) {
-      val ux = math.min(boxX, x)
-      val uy = math.min(boxY, y)
-      boxW = math.max(boxX + boxW, x + width) - ux
-      boxH = math.max(boxY + boxH, y + height) - uy
-      boxX = ux
-      boxY = uy
-    } else {
-      flushBox()
-      hasBox = true
-      boxPage = page
-      boxX = x; boxY = y; boxW = width; boxH = height
-    }
-
-  private def flushBox(): Unit = if (hasBox) {
-    if (boxes.length > 0) boxes.append(';')
-    Coordinates.appendTo(boxes, boxPage, boxX, boxY, boxW, boxH)
-  }
+    boxes.add(x, y, width, height, page)
 
   def finish(): Unit = {
     var end = sb.length
     while (end > 0 && sb.charAt(end - 1) <= ' ') end -= 1
     closeRun()
-    flushBox()
-    hasBox = false
     text = sb.substring(0, end)
-    coords = if (boxes.length == 0) null else boxes.toString
+    coords = boxes.result()
     var style: java.lang.StringBuilder = null
     var k = 0
     while (k < nRuns) {

@@ -103,6 +103,21 @@ object GraphicMatching {
     matches.sortBy(identity).toList
   }
 
+  private val TrailingDigits = "([0-9]+)$".r
+
+  /** Natural (trailing-number-aware) id order: `fig_2` before
+    * `fig_10`, `b9` before `b10` — document order for the
+    * `iter_ids`-generated ids, so exact-distance ties resolve the way
+    * the reference's document-ordered candidate list does. The digit
+    * run compares as (length, digits) — numeric order without parsing,
+    * so an id ending in more digits than a Long holds cannot crash
+    * the matching task. */
+  private def naturalKey(id: String): (String, Int, String) =
+    TrailingDigits.findFirstIn(id) match {
+      case Some(d) => (id.dropRight(d.length), d.length, d)
+      case None => (id, -1, "")
+    }
+
   /** Exact per-document assignment, shared by the distributed stage
     * and the pipeline's in-fold matcher ([[Processor]]): entries with
     * the same id merge into one multi-box ref, zero-area GRAPHIC
@@ -115,19 +130,6 @@ object GraphicMatching {
     * loop runs over the FULL per-document sets — no pairwise
     * pre-filter, so continuation chains through absorbed boxes are
     * never pruned away regardless of the absorbed extent. */
-  /** Natural (trailing-number-aware) id order: `fig_2` before
-    * `fig_10`, `b9` before `b10` — document order for the
-    * `iter_ids`-generated ids, so exact-distance ties resolve the way
-    * the reference's document-ordered candidate list does. The digit
-    * run compares as (length, digits) — numeric order without parsing,
-    * so an id ending in more digits than a Long holds cannot crash
-    * the matching task. */
-  private def naturalKey(id: String): (String, Int, String) =
-    "([0-9]+)$".r.findFirstIn(id) match {
-      case Some(d) => (id.dropRight(d.length), d.length, d)
-      case None => (id, -1, "")
-    }
-
   def assignDocument(
       graphics: Seq[(String, Seq[Box])],
       candidates: Seq[(String, Seq[Box])],

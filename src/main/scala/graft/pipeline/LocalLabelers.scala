@@ -74,26 +74,6 @@ private[graft] object LocalLabelers {
     else label
   }
 
-  /** `stripTag(label) == tag`, without building the stripped string. */
-  private def hasTag(label: String, tag: String): Boolean =
-    if (label.startsWith("B-") || label.startsWith("I-"))
-      label.length == tag.length + 2 && label.startsWith(tag, 2)
-    else label == tag
-
-  /** The tokens of each of the distinct `tags`, in order, in one pass:
-    * `views(labeled, tags)(k)` is
-    * `labeled.collect { case (t, l) if stripTag(l) == tags(k) => t }`. */
-  def views(labeled: IndexedSeq[(TokenRow, String)],
-      tags: IndexedSeq[String]): IndexedSeq[IndexedSeq[TokenRow]] = {
-    val out = IndexedSeq.fill(tags.length)(ArraySeq.newBuilder[TokenRow])
-    labeled.foreach { case (t, l) =>
-      var k = 0
-      while (k < tags.length && !hasTag(l, tags(k))) k += 1
-      if (k < tags.length) out(k) += t
-    }
-    out.map(_.result())
-  }
-
   // Java find() over the (anchored) pattern, null → false
   private def re(p: Pattern, s: String): Boolean =
     s != null && p.matcher(s).find()
@@ -177,41 +157,89 @@ private[graft] object LocalLabelers {
     if (found) Some(block) else None
   }
 
-  /** Segmentation-stage rules: the title block and its successor on
-    * page 0 → `<header>`; blocks opening with an acknowledgement,
-    * appendix/annex or references heading → `<acknowledgement>`/
-    * `<annex>`/`<references>`; the rest → `<body>` — the views
-    * `processor.py:205-225` consumes, as a deterministic stand-in. */
-  def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
-    val titleBlock = titleBlockOf(toks)
-    // the back-matter tag of each (page, block), from its first token —
-    // matched once per block, not once per token of the block
-    val blockBack = new scala.collection.mutable.LongMap[Bio]
-    toks.foreach { t =>
-      if (t.line_idx == 0 && t.token_idx == 0) {
-        val back =
-          if (re(AckRe, t.text)) Acknowledgement
-          else if (re(AnnexRe, t.text)) Annex
-          else if (re(RefsRe, t.text)) References
-          else null
-        blockBack.update(blockKey(t), back)
+  /** The segmentation tags, in the order of [[segmentationViews]]. */
+  val SegmentationTags: IndexedSeq[String] = IndexedSeq("<header>", "<body>",
+    "<acknowledgement>", "<annex>", "<references>")
+  private val SegmentationBio = Array(Header, Body, Acknowledgement, Annex, References)
+
+  /** The end of the block run of document-ordered `toks` that starts
+    * at `start`: the tokens of one (page, block). */
+  private def blockEnd(toks: IndexedSeq[TokenRow], start: Int): Int = {
+    val t0 = toks(start)
+    var i = start + 1
+    while (i < toks.length && {
+        val t = toks(i)
+        t.block_idx == t0.block_idx && t.page_idx == t0.page_idx
+      }) i += 1
+    i
+  }
+
+  /** Segmentation-stage rule for the block `toks[start, end)`, as an
+    * index into [[SegmentationTags]]: the title block and its successor
+    * on page 0 → `<header>`; a block whose first token opens an
+    * acknowledgement, appendix/annex or references heading →
+    * `<acknowledgement>`/`<annex>`/`<references>`; the rest → `<body>`
+    * — the views `processor.py:205-225` consumes, as a deterministic
+    * stand-in. Decided once per block; the heading is the text of the
+    * block's last token at line 0, token 0. */
+  private def segmentationView(toks: IndexedSeq[TokenRow], start: Int, end: Int,
+      titleBlock: Option[Int]): Int = {
+    val t0 = toks(start)
+    if (t0.page_idx == 0 && titleBlock.exists(tb => t0.block_idx <= tb + 1)) 0
+    else {
+      var heading: TokenRow = null
+      var i = start
+      while (i < end) {
+        val t = toks(i)
+        if (t.line_idx == 0 && t.token_idx == 0) heading = t
+        i += 1
       }
-    }
-    toks.map { t =>
-      val isFirst = t.line_idx == 0 && t.token_idx == 0
-      val isHeader = t.page_idx == 0 && titleBlock.exists(tb => t.block_idx <= tb + 1)
-      val label =
-        if (isHeader) Header(isFirst)
-        else {
-          val back = blockBack.getOrNull(blockKey(t))
-          if (back != null) back(isFirst) else Body(isFirst)
-        }
-      (t, label)
+      if (heading == null) 1
+      else if (re(AckRe, heading.text)) 2
+      else if (re(AnnexRe, heading.text)) 3
+      else if (re(RefsRe, heading.text)) 4
+      else 1
     }
   }
 
-  private def blockKey(t: TokenRow): Long =
-    (t.page_idx.toLong << 32) | (t.block_idx & 0xffffffffL)
+  /** Segmentation labels of document-ordered `toks` ([[ordered]]): each
+    * token B-/I- of its block's [[segmentationView]]. The rule of
+    * `SegmentationRuleLabeler`; the fold takes [[segmentationViews]]. */
+  def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
+    val titleBlock = titleBlockOf(toks)
+    val out = new Array[(TokenRow, String)](toks.length)
+    var start = 0
+    while (start < toks.length) {
+      val end = blockEnd(toks, start)
+      val bio = SegmentationBio(segmentationView(toks, start, end, titleBlock))
+      var i = start
+      while (i < end) {
+        val t = toks(i)
+        out(i) = (t, bio(t.line_idx == 0 && t.token_idx == 0))
+        i += 1
+      }
+      start = end
+    }
+    ArraySeq.unsafeWrapArray(out)
+  }
+
+  /** The tokens of each segmentation view, in [[SegmentationTags]]
+    * order, from document-ordered `toks`: each block goes whole to its
+    * [[segmentationView]] — what splitting [[segmentationLabels]] by
+    * tag gives, with no label per token. */
+  def segmentationViews(toks: IndexedSeq[TokenRow]): IndexedSeq[IndexedSeq[TokenRow]] = {
+    val titleBlock = titleBlockOf(toks)
+    val views = Array.fill(SegmentationBio.length)(Array.newBuilder[TokenRow])
+    var start = 0
+    while (start < toks.length) {
+      val end = blockEnd(toks, start)
+      val view = views(segmentationView(toks, start, end, titleBlock))
+      var i = start
+      while (i < end) { view += toks(i); i += 1 }
+      start = end
+    }
+    ArraySeq.unsafeWrapArray(views.map(b => ArraySeq.unsafeWrapArray(b.result())))
+  }
 
   /** Header-stage layout rules: title block → `<title>`, its
     * successor → `<author>`, the rest O — over the view's tokens. */

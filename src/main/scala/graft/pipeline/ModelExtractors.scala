@@ -60,7 +60,7 @@ object ModelExtractors {
     * (extract.py:109-140): whitespace stripped, then DOI → PMCID →
     * arXiv → PMID (anchored) → PII. */
   def detectExternalId(text: String): (Option[String], String) = {
-    val value = text.replaceAll("\\s", "")
+    val value = TextNormalization.withoutRegexSpace(text)
     val doi = DoiP.matcher(value)
     if (doi.find()) return (Some("doi"), doi.group(1))
     val pmcid = PmcidP.matcher(value)
@@ -75,9 +75,11 @@ object ModelExtractors {
     (None, value)
   }
 
+  private val YearP = Pattern.compile("(\\d{4})")
+
   /** parse_date (extract.py:153-162): first 4-digit run → year. */
   def parseYear(text: String): Option[Int] = {
-    val m = Pattern.compile("(\\d{4})").matcher(text.replaceAll("\\s", ""))
+    val m = YearP.matcher(TextNormalization.withoutRegexSpace(text))
     if (m.find()) Some(m.group(1).toInt) else None
   }
 
@@ -107,7 +109,7 @@ object ModelExtractors {
               case _ => s.text
             }, null, s.coords))
         case "<web>" =>
-          val value = s.text.replaceAll("\\s", "")
+          val value = TextNormalization.withoutRegexSpace(s.text)
           val doi = DoiP.matcher(value)
           if (doi.find()) fields += (("external_id", doi.group(1), "doi", s.coords))
           else fields += (("external_url", value, null, s.coords))
@@ -147,8 +149,20 @@ object ModelExtractors {
   // ------------------------------------------ E6: reference segmenter
 
   /** is_looks_like_reference (reference_segmenter/extract.py:20-22). */
-  def looksLikeReference(text: String): Boolean =
-    text.trim.split("\\s+").count(_.nonEmpty) > 3
+  def looksLikeReference(text: String): Boolean = {
+    // the words of text.trim.split("\\s+"), counted up to four
+    var end = text.length
+    while (end > 0 && text.charAt(end - 1) <= ' ') end -= 1
+    var i = 0
+    while (i < end && text.charAt(i) <= ' ') i += 1
+    var words = 0
+    while (i < end && words <= 3) {
+      while (i < end && TextNormalization.isRegexSpace(text.charAt(i))) i += 1
+      if (i < end) words += 1
+      while (i < end && !TextNormalization.isRegexSpace(text.charAt(i))) i += 1
+    }
+    words > 3
+  }
 
   /** E6 fold (reference_segmenter/extract.py:25-56): `<label>` opens a
     * raw reference, `<reference>` completes and yields it; a first
@@ -248,12 +262,14 @@ object ModelExtractors {
     }
   }
 
+  private val NonDigitP = Pattern.compile("(\\D)")
+
   /** iter_semantic_markers_for_layout_block (extract.py:99-115):
     * split on every non-digit char; ',' and whitespace are
     * marker_delimiter notes, everything else a marker. */
   def markerPieces(text: String): Seq[(String, String)] = {
     val out = ListBuffer.empty[(String, String)]
-    val m = Pattern.compile("(\\D)").matcher(text)
+    val m = NonDigitP.matcher(text)
     var last = 0
     def piece(p: String): Unit = {
       if (p.nonEmpty) {

@@ -49,16 +49,18 @@ object Processor {
     * produces exactly the tag stream `ModelExtractors.nameFold`
     * consumes (authors then split on the second forename).
     */
-  private[pipeline] def nameSpansOf(text: String): Seq[Span] = {
-    val toks = text.split("\\s+").filter(_.nonEmpty)
+  private[graft] def nameSpansOf(text: String): Seq[Span] = {
+    val words = new SpaceWords(text)
     val out = scala.collection.mutable.ListBuffer.empty[Span]
     var i = 0L
     var expectForename = true
-    toks.foreach { t =>
-      val bare = t.replaceAll("[,;]", "")
+    var k = 0
+    while (k < words.count) {
+      val t = words(k)
+      val bare = withoutCommaOrSemicolon(t)
       if (bare.equalsIgnoreCase("and") || bare.isEmpty) {
         // delimiter — no span
-      } else if (bare.forall(_.isDigit)) {
+      } else if (allDigits(bare)) {
         out += Span(i, "<marker>", bare); i += 1
       } else {
         val tag = if (expectForename) "<forename>" else "<surname>"
@@ -66,8 +68,98 @@ object Processor {
         out += Span(i, tag, t); i += 1
         expectForename = !expectForename
       }
+      k += 1
     }
     out.toList
+  }
+
+  /** `t.replaceAll("[,;]", "")`. */
+  private def withoutCommaOrSemicolon(t: String): String =
+    if (t.indexOf(',') < 0 && t.indexOf(';') < 0) t
+    else {
+      val sb = new java.lang.StringBuilder(t.length)
+      var i = 0
+      while (i < t.length) {
+        val c = t.charAt(i)
+        if (c != ',' && c != ';') sb.append(c)
+        i += 1
+      }
+      sb.toString
+    }
+
+  /** `t.forall(_.isDigit)`: `Character.isDigit` on every char. */
+  private def allDigits(t: String): Boolean = {
+    var i = 0
+    while (i < t.length && Character.isDigit(t.charAt(i))) i += 1
+    i == t.length
+  }
+
+  /** The words of `text.split("\\s+").filter(_.nonEmpty)`, kept as
+    * offsets into `text`: the rule stand-ins' tokenizer, with no
+    * `Pattern` per call. */
+  private final class SpaceWords(text: String) {
+    private var bounds = new Array[Int](16)
+    var count = 0
+    locally {
+      var i = 0
+      while (i < text.length) {
+        while (i < text.length && TextNormalization.isRegexSpace(text.charAt(i))) i += 1
+        if (i < text.length) {
+          val start = i
+          while (i < text.length && !TextNormalization.isRegexSpace(text.charAt(i))) i += 1
+          if (2 * count == bounds.length) bounds = java.util.Arrays.copyOf(bounds, 2 * bounds.length)
+          bounds(2 * count) = start
+          bounds(2 * count + 1) = i
+          count += 1
+        }
+      }
+    }
+    def start(k: Int): Int = bounds(2 * k)
+    def end(k: Int): Int = bounds(2 * k + 1)
+    def apply(k: Int): String = text.substring(start(k), end(k))
+    /** Words `[from, until)` joined by one space (`mkString(" ")`). */
+    def joined(from: Int, until: Int): String =
+      if (until - from == 1) apply(from)
+      else {
+        val sb = new java.lang.StringBuilder(end(until - 1) - start(from))
+        var k = from
+        while (k < until) {
+          if (k > from) sb.append(' ')
+          sb.append(text, start(k), end(k))
+          k += 1
+        }
+        sb.toString
+      }
+    /** Word `k` equals `lower`, ASCII letters compared case-insensitively
+      * (`(?i)` without UNICODE_CASE); `lower` is lower-case ASCII. */
+    def isWord(k: Int, lower: String): Boolean =
+      end(k) - start(k) == lower.length && {
+        var i = 0
+        while (i < lower.length && {
+            val c = text.charAt(start(k) + i)
+            val w = lower.charAt(i)
+            c == w || (c >= 'A' && c <= 'Z' && c + ('a' - 'A') == w)
+          }) i += 1
+        i == lower.length
+      }
+    /** Word `k` matches `[0-9]+[.,:)]?`. */
+    def isNumberLabel(k: Int): Boolean = {
+      var i = start(k)
+      while (i < end(k) && text.charAt(i) >= '0' && text.charAt(i) <= '9') i += 1
+      i > start(k) && (i == end(k) ||
+        (i == end(k) - 1 && ".,:)".indexOf(text.charAt(i)) >= 0))
+    }
+    /** Word `k` has exactly four chars in `[0-9]`. */
+    def hasFourDigits(k: Int): Boolean = {
+      var digits = 0
+      var i = start(k)
+      while (i < end(k)) {
+        val c = text.charAt(i)
+        if (c >= '0' && c <= '9') digits += 1
+        i += 1
+      }
+      digits == 4
+    }
   }
 
   /** Rule stand-in for the citation model over one raw reference's
@@ -75,19 +167,19 @@ object Processor {
     * → `<date>`, everything between → `<title>` — exactly the tag
     * stream [[ModelExtractors.citationFold]] consumes.
     */
-  private[pipeline] def citationSpansOf(text: String): Seq[Span] = {
-    val toks = text.split("\\s+").filter(_.nonEmpty).toIndexedSeq
-    if (toks.isEmpty) return Nil
-    val (authors, rest0) = toks.splitAt(math.min(2, toks.length))
-    val (rest, date) =
-      if (rest0.nonEmpty && rest0.last.replaceAll("[^0-9]", "").matches("[0-9]{4}"))
-        (rest0.dropRight(1), Some(rest0.last))
-      else (rest0, None)
+  private[graft] def citationSpansOf(text: String): Seq[Span] = {
+    val words = new SpaceWords(text)
+    val n = words.count
+    if (n == 0) return Nil
+    val nAuthors = math.min(2, n)
+    // the date test: the last word less its non-[0-9] chars is [0-9]{4}
+    val hasDate = n > nAuthors && words.hasFourDigits(n - 1)
+    val restEnd = if (hasDate) n - 1 else n
     val out = scala.collection.mutable.ListBuffer.empty[Span]
     var i = 0L
-    if (authors.nonEmpty) { out += Span(i, "<author>", authors.mkString(" ")); i += 1 }
-    if (rest.nonEmpty) { out += Span(i, "<title>", rest.mkString(" ")); i += 1 }
-    date.foreach { d => out += Span(i, "<date>", d); i += 1 }
+    out += Span(i, "<author>", words.joined(0, nAuthors)); i += 1
+    if (restEnd > nAuthors) { out += Span(i, "<title>", words.joined(nAuthors, restEnd)); i += 1 }
+    if (hasDate) { out += Span(i, "<date>", words(n - 1)); i += 1 }
     out.toList
   }
 
@@ -99,13 +191,30 @@ object Processor {
     * reference's `b<n>` content id, so citation markers resolve to
     * either — appended to the node list. Pure per-document function.
     */
-  private[pipeline] def citationPass(docId: Long,
+  private[graft] def citationPass(docId: Long,
       segNodes: Seq[SemanticNode]): Seq[SemanticNode] = {
-    var nextId = segNodes.map(_.node_id).maxOption.getOrElse(-1L) + 1
-    val textByParent = segNodes.filter(_.node_type == "raw_reference_text")
-      .groupBy(_.parent_id)
-    val labelByParent = segNodes.filter(_.node_type == "label")
-      .groupBy(_.parent_id)
+    // one walk: the largest id, the raw references, and each one's
+    // texts and labels in node order
+    var maxId = -1L
+    var anyNode = false
+    val raws = scala.collection.mutable.ListBuffer.empty[SemanticNode]
+    val textByParent = new scala.collection.mutable.LongMap[List[SemanticNode]]
+    val labelByParent = new scala.collection.mutable.LongMap[List[SemanticNode]]
+    segNodes.foreach { n =>
+      if (!anyNode || n.node_id > maxId) maxId = n.node_id
+      anyNode = true
+      n.node_type match {
+        case "raw_reference" => raws += n
+        case "raw_reference_text" =>
+          textByParent.update(n.parent_id, n :: textByParent.getOrElse(n.parent_id, Nil))
+        case "label" =>
+          labelByParent.update(n.parent_id, n :: labelByParent.getOrElse(n.parent_id, Nil))
+        case _ => ()
+      }
+    }
+    textByParent.mapValuesInPlace((_, ns) => ns.reverse)
+    labelByParent.mapValuesInPlace((_, ns) => ns.reverse)
+    var nextId = maxId + 1
     // a raw reference whose block yields NO parseable entities demotes
     // to an invalid reference holding the label (the reference's
     // citation model parses EVERY raw reference; label-only or
@@ -123,7 +232,7 @@ object Processor {
       nextId = offset + 1 + copies0.size
       root +: copies
     }
-    val citNodes = segNodes.filter(_.node_type == "raw_reference").flatMap { r =>
+    val citNodes = raws.flatMap { r =>
       val texts = textByParent.getOrElse(r.node_id, Nil)
       if (texts.isEmpty) demoteWithLabel(r)
       else texts.flatMap { t =>
@@ -169,7 +278,7 @@ object Processor {
     * as its parse result so the sink's in-place replacement pairing
     * holds; demoted pairs get an out-of-band id that never renders.
     */
-  private[pipeline] def renumberReferenceIds(
+  private[graft] def renumberReferenceIds(
       nodes: Seq[SemanticNode]): Seq[SemanticNode] = {
     val parseRootsByRawId = nodes
       .filter(n => n.parent_id < 0 && n.content_id != null &&
@@ -214,16 +323,19 @@ object Processor {
     * `Figure|Fig.|Table` + number tokens → `<label>`, a `:`/`.`/`-`
     * delimiter is dropped, the remainder → `<figDesc>`.
     */
-  private[pipeline] def figureSpansOf(text: String): Seq[Span] = {
-    val toks = text.split("\\s+").filter(_.nonEmpty).toIndexedSeq
+  private[graft] def figureSpansOf(text: String): Seq[Span] = {
+    val words = new SpaceWords(text)
+    val n = words.count
     var i = 0
-    if (i < toks.length && toks(i).matches("(?i)(figure|fig\\.?|table)")) i += 1
-    if (i < toks.length && toks(i).matches("[0-9]+[.,:)]?")) i += 1
-    val label = toks.take(i).mkString(" ")
-    val rest = toks.drop(i).dropWhile(t => t == ":" || t == "." || t == "-")
+    if (i < n && (words.isWord(i, "figure") || words.isWord(i, "fig") ||
+        words.isWord(i, "fig.") || words.isWord(i, "table"))) i += 1
+    if (i < n && words.isNumberLabel(i)) i += 1
+    var rest = i
+    while (rest < n && (words.isWord(rest, ":") || words.isWord(rest, ".") ||
+        words.isWord(rest, "-"))) rest += 1
     val out = scala.collection.mutable.ListBuffer.empty[Span]
-    if (label.nonEmpty) out += Span(0L, "<label>", label)
-    if (rest.nonEmpty) out += Span(1L, "<figDesc>", rest.mkString(" "))
+    if (i > 0) out += Span(0L, "<label>", words.joined(0, i))
+    if (rest < n) out += Span(1L, "<figDesc>", words.joined(rest, n))
     out.toList
   }
 
@@ -270,13 +382,47 @@ object Processor {
   /** Content-id matching key: lower-cased, keeping only `[a-z0-9]`.
     * One char scan, since it runs on every reference token. */
   private[graft] def normKey(s: String): String = {
-    val lower = s.toLowerCase
-    val sb = new java.lang.StringBuilder(lower.length)
-    var i = 0
-    while (i < lower.length) {
+    val sb = new java.lang.StringBuilder(s.length)
+    appendNormKey(sb, s, 0, s.length)
+    sb.toString
+  }
+
+  /** [[normKey]] of `s.substring(from, until)`, appended to `sb`. The
+    * lower-casing is `String.toLowerCase`'s, in the default locale; a
+    * part with no upper-case and no non-ASCII char is its own lower
+    * case in every locale, so only such a part skips the call. */
+  private def appendNormKey(sb: java.lang.StringBuilder, s: String, from: Int,
+      until: Int): Unit = {
+    var i = from
+    while (i < until && { val c = s.charAt(i); c < 0x80 && (c < 'A' || c > 'Z') }) i += 1
+    val (lower, start, end) =
+      if (i == until) (s, from, until)
+      else { val l = s.substring(from, until).toLowerCase; (l, 0, l.length) }
+    i = start
+    while (i < end) {
       val c = lower.charAt(i)
       if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) sb.append(c)
       i += 1
+    }
+  }
+
+  /** Content-id token-prefix key: per word of `s.split("\\s+")`, the
+    * [[normKey]] of the whole word when it has a digit
+    * (`Character.isDigit`), else of its first char; concatenated. */
+  private[graft] def prefixKey(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      while (i < s.length && TextNormalization.isRegexSpace(s.charAt(i))) i += 1
+      if (i < s.length) {
+        val start = i
+        var digit = false
+        while (i < s.length && !TextNormalization.isRegexSpace(s.charAt(i))) {
+          if (Character.isDigit(s.charAt(i))) digit = true
+          i += 1
+        }
+        appendNormKey(sb, s, start, if (digit) i else start + 1)
+      }
     }
     sb.toString
   }
@@ -295,19 +441,20 @@ object Processor {
     * time; per-doc it is a few hash-map probes over a handful of
     * labels.
     */
-  private[pipeline] def matchContentIdsLocal(
+  private[graft] def matchContentIdsLocal(
       citations: Seq[(Long, String)],
       candidates: Seq[(String, String)],
       partialCandidates: Seq[(String, String)] = Nil): Map[Long, String] = {
-    def prefixKey(s: String, n: Int = 1): String =
-      s.split("\\s+").filter(_.nonEmpty).map { t =>
-        normKey(if (t.exists(_.isDigit)) t else t.take(n))
-      }.mkString
-    val byExact = candidates.map { case (id, lt) => normKey(lt) -> id }.toMap
+    if (citations.isEmpty) return Map.empty
+    val byExact = new java.util.HashMap[String, String]
     // no empty-key filter: the reference's prefix dict keeps the ''
     // key, so an all-punctuation prefix matches at this stage
     // (ref_matching.py:51-63)
-    val byPrefix = candidates.map { case (id, lt) => prefixKey(lt) -> id }.toMap
+    val byPrefix = new java.util.HashMap[String, String]
+    candidates.foreach { case (id, lt) =>
+      byExact.put(normKey(lt), id)
+      byPrefix.put(prefixKey(lt), id)
+    }
     // the partial (token-vote) fallback runs over its OWN text source
     // (processor.py:244-251: Simple over labels, Partial over raw
     // reference texts; figures/tables chain NO partial matcher,
@@ -320,25 +467,22 @@ object Processor {
     // count equals keys[1]'s — NOT the max-count candidate).
     def partialTokens(s: String): List[String] =
       TextNormalization.tokenize(s).map(normKey)
-    val candIndex: Map[String, List[String]] = {
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ListBuffer[String]]
-      partialCandidates.foreach { case (id, lt) =>
-        partialTokens(lt).foreach { tok =>
-          m.getOrElseUpdate(tok,
-            scala.collection.mutable.ListBuffer.empty[String]) += id
-        }
+    val candIndex = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ListBuffer[String]]
+    partialCandidates.foreach { case (id, lt) =>
+      partialTokens(lt).foreach { tok =>
+        candIndex.getOrElseUpdate(tok,
+          scala.collection.mutable.ListBuffer.empty[String]) += id
       }
-      m.view.mapValues(_.toList).toMap
     }
     def partialMatch(text: String): Option[String] = {
       val toks = partialTokens(text)
       if (toks.isEmpty) return None
       val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
       toks.foreach { tok =>
-        candIndex.getOrElse(tok, Nil).foreach { id =>
+        candIndex.get(tok).foreach(_.foreach { id =>
           counts.update(id, counts.getOrElse(id, 0) + 1)
-        }
+        })
       }
       if (counts.isEmpty) None
       else {
@@ -347,8 +491,10 @@ object Processor {
         else Some(keys.head)
       }
     }
+    def lookup(m: java.util.HashMap[String, String], key: String): Option[String] =
+      if (m.containsKey(key)) Some(m.get(key)) else None
     citations.flatMap { case (nid, text) =>
-      byExact.get(normKey(text)).orElse(byPrefix.get(prefixKey(text)))
+      lookup(byExact, normKey(text)).orElse(lookup(byPrefix, prefixKey(text)))
         .orElse(partialMatch(text))
         .map(nid -> _)
     }.toMap
@@ -362,61 +508,89 @@ object Processor {
     * (the reference's `target_content_id`; TEI renders it as
     * `<ref target="#fig_N">`). Figures and tables are matched
     * separately, as the reference does.
+    *
+    * One walk over the id-sorted nodes assigns the ids, indexes the
+    * nodes by id and buckets what the three matchers read: the labels,
+    * each citation type, the raw reference texts and the demoted
+    * reference ids. Parents resolve after the walk, against the whole
+    * index, and only the matched nodes are copied. The result is a
+    * List, as the sinks' many small groupBy/filter passes over it are
+    * cheapest on one.
     */
   private val NodeIdOrder: java.util.Comparator[SemanticNode] =
     (a, b) => java.lang.Long.compare(a.node_id, b.node_id)
 
-  private[pipeline] def assignIdsAndTargets(
+  private[graft] def assignIdsAndTargets(
       nodes: Seq[SemanticNode]): Seq[SemanticNode] = {
+    import scala.collection.mutable.ArrayBuffer
+    val sorted = nodes.toArray
+    java.util.Arrays.sort(sorted, NodeIdOrder)
     var figN = 0
     var tabN = 0
-    val byNodeId = nodes.toArray
-    java.util.Arrays.sort(byNodeId, NodeIdOrder)
-    // a List, as the sinks' many small groupBy/filter passes over the
-    // result are cheapest on one
-    val withIds = byNodeId.toList.map { n =>
+    val byId = new scala.collection.mutable.LongMap[SemanticNode](sorted.length)
+    val labels = ArrayBuffer.empty[SemanticNode]
+    val rawTexts = ArrayBuffer.empty[SemanticNode]
+    val figureCitations = ArrayBuffer.empty[(Long, String)]
+    val tableCitations = ArrayBuffer.empty[(Long, String)]
+    val referenceCitations = ArrayBuffer.empty[(Long, String)]
+    val demotedIds = new java.util.HashSet[String]
+    var i = 0
+    while (i < sorted.length) {
+      val n = sorted(i)
       n.node_type match {
-        case "figure" => val id = s"fig_$figN"; figN += 1; n.copy(content_id = id)
-        case "table" => val id = s"tab_$tabN"; tabN += 1; n.copy(content_id = id)
-        case _ => n
+        case "figure" => sorted(i) = n.copy(content_id = "fig_" + figN); figN += 1
+        case "table" => sorted(i) = n.copy(content_id = "tab_" + tabN); tabN += 1
+        case "label" => labels += n
+        case "raw_reference_text" => rawTexts += n
+        case "figure_citation" => figureCitations += n.node_id -> n.text
+        case "table_citation" => tableCitations += n.node_id -> n.text
+        case "reference_citation" => referenceCitations += n.node_id -> n.text
+        case "invalid_reference" => if (n.content_id != null) demotedIds.add(n.content_id)
+        case _ => ()
       }
+      byId.update(n.node_id, sorted(i))
+      i += 1
     }
-    val byId = new scala.collection.mutable.LongMap[SemanticNode](byNodeId.length)
-    withIds.foreach(n => byId.update(n.node_id, n))
     def labelsOf(targetType: String): Seq[(String, String)] =
-      withIds.filter(_.node_type == "label").flatMap { l =>
+      labels.flatMap { l =>
         byId.get(l.parent_id).filter(_.node_type == targetType)
           .map(p => (p.content_id, l.text))
-      }
-    def citationsOf(citType: String): Seq[(Long, String)] =
-      withIds.filter(_.node_type == citType).map(n => n.node_id -> n.text)
+      }.toSeq
     // reference citations match against reference LABELS ("1.", "[2]"),
     // candidate ids are the b<n> content ids shared by raw + parsed
     // reference nodes. A DEMOTED (invalid) reference is not a citation
     // target: the reference matcher iterates SemanticReference only
     // (processor.py:239-244), so its markers stay unresolved and the
     // TEI never emits a target=#bN with no matching xml:id
-    val demotedIds = withIds.filter(_.node_type == "invalid_reference")
-      .flatMap(n => Option(n.content_id)).toSet
-    def refTexts(childType: String): Seq[(String, String)] =
-      withIds.filter(_.node_type == childType).flatMap { c =>
+    def refTexts(children: ArrayBuffer[SemanticNode]): Seq[(String, String)] =
+      children.flatMap { c =>
         byId.get(c.parent_id).filter(p => p.node_type == "raw_reference" &&
-            !Option(p.content_id).exists(demotedIds))
+            !(p.content_id != null && demotedIds.contains(p.content_id)))
           .map(p => (p.content_id, c.text))
-      }
-    val refCandidates = refTexts("label")
+      }.toSeq
+    val matched = new scala.collection.mutable.LongMap[String]
+    def resolve(found: Map[Long, String]): Unit =
+      found.foreach { case (id, target) => matched.update(id, target) }
+    if (figureCitations.nonEmpty)
+      resolve(matchContentIdsLocal(figureCitations.toSeq, labelsOf("figure")))
+    if (tableCitations.nonEmpty)
+      resolve(matchContentIdsLocal(tableCitations.toSeq, labelsOf("table")))
     // the vote fallback runs over the RAW REFERENCE TEXTS
     // (processor.py:244-251: ChainedContentIdMatcher of Simple(labels)
     // + Partial(raw texts)); figures/tables chain the Simple matcher
     // only (processor.py:257-267)
-    val refPartial = refTexts("raw_reference_text")
-    val matched =
-      matchContentIdsLocal(citationsOf("figure_citation"), labelsOf("figure")) ++
-        matchContentIdsLocal(citationsOf("table_citation"), labelsOf("table")) ++
-        matchContentIdsLocal(citationsOf("reference_citation"), refCandidates,
-          refPartial)
-    withIds.map(n =>
-      matched.get(n.node_id).map(t => n.copy(content_id = t)).getOrElse(n))
+    if (referenceCitations.nonEmpty)
+      resolve(matchContentIdsLocal(referenceCitations.toSeq, refTexts(labels),
+        refTexts(rawTexts)))
+    if (matched.nonEmpty) {
+      i = 0
+      while (i < sorted.length) {
+        val id = sorted(i).node_id
+        if (matched.contains(id)) sorted(i) = sorted(i).copy(content_id = matched(id))
+        i += 1
+      }
+    }
+    sorted.toList
   }
 
   /** Name model pass on citation authors/editors (reference
@@ -550,9 +724,9 @@ object Processor {
       parent_id = if (n.parent_id < 0) -1L else n.parent_id + idOffset)
 
   /** The reference's full document flow for ONE document
-    * (processor.py:180-274), entirely local: segmentation labels every
-    * token `<header>`/`<body>`/`<acknowledgement>`/`<annex>`/
-    * `<references>`, the header model + name/affiliation passes run on
+    * (processor.py:180-274), entirely local: segmentation routes every
+    * token to its `<header>`/`<body>`/`<acknowledgement>`/`<annex>`/
+    * `<references>` view, the header model + name/affiliation passes run on
     * the header view, the fulltext fold on the body view and the two
     * back-matter views, and the references chain (reference-segmenter →
     * citation model → citation names, processor.py:529-622,654-717) on
@@ -563,18 +737,11 @@ object Processor {
     * labeling the fulltext fold consumed (one pass, and the candidate
     * numbering provably matches the node numbering).
     */
-  /** The segmentation tags [[processTokensLocalWithBody]] splits into
-    * views, in the order it destructures them. */
-  private val SegmentationViews = IndexedSeq("<header>", "<body>",
-    "<acknowledgement>", "<annex>", "<references>")
-
   private[pipeline] def processTokensLocalWithBody(docId: Long,
       toks: Seq[TokenRow], config: Config):
       (Seq[SemanticNode], IndexedSeq[(TokenRow, String)]) = {
-    val ordered = LocalLabelers.ordered(toks)
-    val seg = LocalLabelers.segmentationLabels(ordered)
     val IndexedSeq(headerView, bodyView, ackView, annexView, refsView) =
-      LocalLabelers.views(seg, SegmentationViews)
+      LocalLabelers.segmentationViews(LocalLabelers.ordered(toks))
 
     val headerNodes = processDocument(docId, Extractors.headerFold(docId,
       LocalLabelers.spansLocal(LocalLabelers.headerRuleLabels(headerView))),

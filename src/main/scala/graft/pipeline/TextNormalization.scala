@@ -50,6 +50,28 @@ object TextNormalization {
         t == Character.PARAGRAPH_SEPARATOR
     }
 
+  /** Java's default `\s`, without UNICODE_CHARACTER_CLASS:
+    * `[ \t\n\x0B\f\r]` — what `split("\\s+")` and
+    * `replaceAll("\\s", …)` match. */
+  private[graft] def isRegexSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** `s.replaceAll("\\s", "")`: `s` itself when it has no [[isRegexSpace]] char. */
+  private[graft] def withoutRegexSpace(s: String): String = {
+    var i = 0
+    while (i < s.length && !isRegexSpace(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length)
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (!isRegexSpace(c)) sb.append(c)
+        i += 1
+      }
+      sb.toString
+    }
+  }
+
   /** normalize_text (utils/text.py:55-65): fold chars, collapse
     * whitespace-around-newlines to '\n', collapse runs of whitespace.
     * One scan: a maximal whitespace run containing '\n' becomes "\n",

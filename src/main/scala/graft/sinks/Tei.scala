@@ -15,9 +15,28 @@ import graft.pipeline.SemanticNode
   */
 object Tei {
 
-  private def esc(s: String): String =
-    if (s == null) ""
-    else s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+  /** `&`, `<` and `>` escaped in one scan; the input itself when
+    * nothing needs escaping, "" for null. */
+  private def esc(s: String): String = {
+    if (s == null) return ""
+    var i = 0
+    while (i < s.length && { val c = s.charAt(i); c != '&' && c != '<' && c != '>' }) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 16)
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '&' => sb.append("&amp;")
+          case '<' => sb.append("&lt;")
+          case '>' => sb.append("&gt;")
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+      sb.toString
+    }
+  }
 
   /** ` coords="…"` attribute when the node carries merged page boxes
     * (tei/common.py:104-114 get_default_attributes_for_layout_block —
@@ -260,6 +279,8 @@ object Tei {
 
   /** Build one TEI document from a document's semantic-node rows. */
   def buildTei(nodes: Seq[SemanticNode]): String = {
+    // the coords of the <p> fragment being built, merged as it grows
+    val fragmentCoords = new graft.pipeline.Coordinates.BoxMerge
     // `Processor.assignIdsAndTargets` hands the nodes over sorted; the
     // collection is kept as given (the passes below ran 25–35% slower
     // on an `ArraySeq` than on the `List` the fold produces)
@@ -359,21 +380,18 @@ object Tei {
             // equation SPLITS the paragraph — <formula> renders as a
             // SIBLING of the <p> fragments, never nested inside one
             var fragment = List.empty[String]
-            var fragmentCoords = List.empty[String]
             def flushFragment(): Unit = {
               if (fragment.nonEmpty) {
                 // <p> coords re-merge the fragment's members
                 // (tei/section.py:96 per flat paragraph fragment)
-                val pc = graft.pipeline.Coordinates
-                  .mergeFormatted(fragmentCoords.reverse)
+                val pc = fragmentCoords.result()
                 bodySb ++= s"<p${coordsAttr(pc)}>${fragment.reverse.mkString(" ")}</p>"
                 fragment = Nil
-                fragmentCoords = Nil
               }
             }
             def push(xml: String, n: SemanticNode): Unit = {
               fragment ::= xml
-              fragmentCoords ::= n.coords
+              fragmentCoords.addFormatted(n.coords)
             }
             kids(c.node_id).foreach { p =>
               p.node_type match {

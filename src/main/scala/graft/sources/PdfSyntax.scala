@@ -126,17 +126,22 @@ private[graft] object PdfSyntax {
     * same plain decimals take it, and everything else, padded or
     * malformed input included, goes through `parseDouble` and throws
     * where it throws. For the ALTO readers' coordinate attributes. */
-  private[graft] def decimalValue(s: String): Double = {
-    val end = s.length
-    var i = 0
-    val neg = i < end && s.charAt(i) == '-'
-    if (i < end && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+  private[graft] def decimalValue(s: String): Double = decimalValue(s, 0, s.length)
+
+  /** [[decimalValue]] of `s.substring(from, until)`, read in place. A
+    * plain decimal past the exact path (16 or more significant digits,
+    * as `Double.toString` writes many coordinates) goes to jackson-core's
+    * FastDoubleParser, which rounds correctly as `parseDouble` does. */
+  private[graft] def decimalValue(s: String, from: Int, until: Int): Double = {
+    var i = from
+    val neg = i < until && s.charAt(i) == '-'
+    if (i < until && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
     var mantissa = 0L
     var significant = 0
     var digits = 0
     var fraction = -1
     var plain = true
-    while (i < end && plain) {
+    while (i < until && plain) {
       val c = s.charAt(i)
       if (c >= '0' && c <= '9') {
         digits += 1
@@ -151,7 +156,12 @@ private[graft] object PdfSyntax {
     }
     if (plain && digits > 0 && significant <= 15 && fraction <= 22)
       exactValue(neg, mantissa, fraction)
-    else java.lang.Double.parseDouble(s)
+    else {
+      val part = if (from == 0 && until == s.length) s else s.substring(from, until)
+      if (plain && digits > 0)
+        com.fasterxml.jackson.core.io.NumberInput.parseDouble(part, true)
+      else java.lang.Double.parseDouble(part)
+    }
   }
 
   /** A fast-path decimal: `mantissa` (at most 15 digits) over 10^`fraction`. */

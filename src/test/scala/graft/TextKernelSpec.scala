@@ -7,8 +7,8 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Coordinates, Coords, Extractors, FontInfo, LocalLabelers,
-  Processor, TextNormalization, TokenRow}
+import graft.pipeline.{Coordinates, Coords, Extractors, FontInfo, LocalLabelers, ModelExtractors,
+  Processor, SemanticNode, TextNormalization, TokenRow}
 import graft.sources.{PdfReader, PdfSyntax, PdfWriter}
 import graft.sources.PdfWriter.{PImage, PTok}
 
@@ -363,6 +363,254 @@ class TextKernelSpec extends AnyFunSuite {
     val figWord = Pattern.compile("^(Figure|Fig\\.?)$")
     val markerish = Pattern.compile("^[0-9]+$|^[.)\\]\\[]$")
     def re(p: Pattern, s: String): Boolean = s != null && p.matcher(s).find()
+
+    /** `LocalLabelers.views`: the tokens of each tag, in one pass. */
+    def views(labeled: IndexedSeq[(TokenRow, String)],
+        tags: IndexedSeq[String]): IndexedSeq[IndexedSeq[TokenRow]] = {
+      def hasTag(label: String, tag: String): Boolean =
+        if (label.startsWith("B-") || label.startsWith("I-"))
+          label.length == tag.length + 2 && label.startsWith(tag, 2)
+        else label == tag
+      val out = IndexedSeq.fill(tags.length)(IndexedSeq.newBuilder[TokenRow])
+      labeled.foreach { case (t, l) =>
+        var k = 0
+        while (k < tags.length && !hasTag(l, tags(k))) k += 1
+        if (k < tags.length) out(k) += t
+      }
+      out.map(_.result())
+    }
+
+    /** `LocalLabelers.segmentationLabels` deciding per token, with a
+      * (page, block) map of back-matter headings. */
+    def segmentationLabels(toks: IndexedSeq[TokenRow]): IndexedSeq[(TokenRow, String)] = {
+      val sizes = toks.flatMap(t => Option(t.font).flatMap(_.font_size))
+      val titleBlock =
+        if (sizes.isEmpty) None
+        else {
+          val maxFs = sizes.max
+          val blocks = toks.filter(t => t.page_idx == 0 && t.font != null &&
+            t.font.font_size.exists(_ == maxFs)).map(_.block_idx)
+          if (blocks.isEmpty) None else Some(blocks.min)
+        }
+      val ack = Pattern.compile("(?i)^acknowledge?ments?$")
+      val annex = Pattern.compile("(?i)^(appendix|annex)$")
+      val refs = Pattern.compile("(?i)^(references?|bibliography)$")
+      val back = scala.collection.mutable.Map.empty[(Int, Int), String]
+      toks.foreach { t =>
+        if (t.line_idx == 0 && t.token_idx == 0)
+          back((t.page_idx, t.block_idx)) =
+            if (re(ack, t.text)) "<acknowledgement>"
+            else if (re(annex, t.text)) "<annex>"
+            else if (re(refs, t.text)) "<references>"
+            else null
+      }
+      toks.map { t =>
+        val prefix = if (t.line_idx == 0 && t.token_idx == 0) "B-" else "I-"
+        val tag =
+          if (t.page_idx == 0 && titleBlock.exists(tb => t.block_idx <= tb + 1)) "<header>"
+          else Option(back.getOrElse((t.page_idx, t.block_idx), null)).getOrElse("<body>")
+        (t, prefix + tag)
+      }
+    }
+
+    /** `Coordinates.mergeFormatted` through parse, merge and format. */
+    def mergeFormatted(ss: Seq[String]): String =
+      Coordinates.formatList(Coordinates.merge(
+        ss.filter(s => s != null && s.nonEmpty).flatMap(Coordinates.parse)))
+
+    def normKey(s: String): String = s.toLowerCase.replaceAll("[^a-z0-9]", "")
+
+    def prefixKey(s: String): String =
+      s.split("\\s+").filter(_.nonEmpty).map { t =>
+        normKey(if (t.exists(_.isDigit)) t else t.take(1))
+      }.mkString
+
+    def nameSpansOf(text: String): Seq[Extractors.Span] = {
+      val toks = text.split("\\s+").filter(_.nonEmpty)
+      val out = scala.collection.mutable.ListBuffer.empty[Extractors.Span]
+      var i = 0L
+      var expectForename = true
+      toks.foreach { t =>
+        val bare = t.replaceAll("[,;]", "")
+        if (bare.equalsIgnoreCase("and") || bare.isEmpty) {
+        } else if (bare.forall(_.isDigit)) {
+          out += Extractors.Span(i, "<marker>", bare); i += 1
+        } else {
+          val tag = if (expectForename) "<forename>" else "<surname>"
+          out += Extractors.Span(i, tag, t); i += 1
+          expectForename = !expectForename
+        }
+      }
+      out.toList
+    }
+
+    def citationSpansOf(text: String): Seq[Extractors.Span] = {
+      val toks = text.split("\\s+").filter(_.nonEmpty).toIndexedSeq
+      if (toks.isEmpty) return Nil
+      val (authors, rest0) = toks.splitAt(math.min(2, toks.length))
+      val (rest, date) =
+        if (rest0.nonEmpty && rest0.last.replaceAll("[^0-9]", "").matches("[0-9]{4}"))
+          (rest0.dropRight(1), Some(rest0.last))
+        else (rest0, None)
+      val out = scala.collection.mutable.ListBuffer.empty[Extractors.Span]
+      var i = 0L
+      if (authors.nonEmpty) { out += Extractors.Span(i, "<author>", authors.mkString(" ")); i += 1 }
+      if (rest.nonEmpty) { out += Extractors.Span(i, "<title>", rest.mkString(" ")); i += 1 }
+      date.foreach { d => out += Extractors.Span(i, "<date>", d); i += 1 }
+      out.toList
+    }
+
+    def figureSpansOf(text: String): Seq[Extractors.Span] = {
+      val toks = text.split("\\s+").filter(_.nonEmpty).toIndexedSeq
+      var i = 0
+      if (i < toks.length && toks(i).matches("(?i)(figure|fig\\.?|table)")) i += 1
+      if (i < toks.length && toks(i).matches("[0-9]+[.,:)]?")) i += 1
+      val label = toks.take(i).mkString(" ")
+      val rest = toks.drop(i).dropWhile(t => t == ":" || t == "." || t == "-")
+      val out = scala.collection.mutable.ListBuffer.empty[Extractors.Span]
+      if (label.nonEmpty) out += Extractors.Span(0L, "<label>", label)
+      if (rest.nonEmpty) out += Extractors.Span(1L, "<figDesc>", rest.mkString(" "))
+      out.toList
+    }
+
+    def matchContentIdsLocal(citations: Seq[(Long, String)],
+        candidates: Seq[(String, String)],
+        partialCandidates: Seq[(String, String)] = Nil): Map[Long, String] = {
+      val byExact = candidates.map { case (id, lt) => normKey(lt) -> id }.toMap
+      val byPrefix = candidates.map { case (id, lt) => prefixKey(lt) -> id }.toMap
+      def partialTokens(s: String): List[String] =
+        TextNormalization.tokenize(s).map(normKey)
+      val candIndex: Map[String, List[String]] = {
+        val m = scala.collection.mutable.LinkedHashMap
+          .empty[String, scala.collection.mutable.ListBuffer[String]]
+        partialCandidates.foreach { case (id, lt) =>
+          partialTokens(lt).foreach { tok =>
+            m.getOrElseUpdate(tok, scala.collection.mutable.ListBuffer.empty[String]) += id
+          }
+        }
+        m.view.mapValues(_.toList).toMap
+      }
+      def partialMatch(text: String): Option[String] = {
+        val toks = partialTokens(text)
+        if (toks.isEmpty) return None
+        val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+        toks.foreach { tok =>
+          candIndex.getOrElse(tok, Nil).foreach { id =>
+            counts.update(id, counts.getOrElse(id, 0) + 1)
+          }
+        }
+        if (counts.isEmpty) None
+        else {
+          val keys = counts.keys.toList
+          if (keys.sizeIs >= 2 && counts(keys.head) == counts(keys(1))) None
+          else Some(keys.head)
+        }
+      }
+      citations.flatMap { case (nid, text) =>
+        byExact.get(normKey(text)).orElse(byPrefix.get(prefixKey(text)))
+          .orElse(partialMatch(text))
+          .map(nid -> _)
+      }.toMap
+    }
+
+    /** `Processor.citationPass` with a filter and a groupBy per node type. */
+    def citationPass(docId: Long,
+        segNodes: Seq[SemanticNode]): Seq[SemanticNode] = {
+      var nextId = segNodes.map(_.node_id).maxOption.getOrElse(-1L) + 1
+      val textByParent = segNodes.filter(_.node_type == "raw_reference_text")
+        .groupBy(_.parent_id)
+      val labelByParent = segNodes.filter(_.node_type == "label")
+        .groupBy(_.parent_id)
+      // a raw reference whose block yields NO parseable entities demotes
+      // to an invalid reference holding the label (the reference's
+      // citation model parses EVERY raw reference; label-only or
+      // whitespace-only blocks cannot produce a valid field, and a raw
+      // reference must never survive the pass un-replaced —
+      // processor.py:612-623 asserts a parse result per raw reference)
+      def demoteWithLabel(r: SemanticNode): Seq[SemanticNode] = {
+        val copies0 = labelByParent.getOrElse(r.node_id, Nil)
+        val offset = nextId
+        val root = SemanticNode(docId, offset, -1L, "invalid_reference", "",
+          r.content_id, null, null)
+        val copies = copies0.zipWithIndex.map { case (c, i) =>
+          c.copy(node_id = offset + 1 + i, parent_id = offset)
+        }
+        nextId = offset + 1 + copies0.size
+        root +: copies
+      }
+      val citNodes = segNodes.filter(_.node_type == "raw_reference").flatMap { r =>
+        val texts = textByParent.getOrElse(r.node_id, Nil)
+        if (texts.isEmpty) demoteWithLabel(r)
+        else texts.flatMap { t =>
+          val folded = ModelExtractors.citationFold(docId,
+            citationSpansOf(t.text), r.content_id)
+          if (folded.isEmpty) demoteWithLabel(r)
+          else {
+            // citation/extract.py:214-217: the parsed reference STARTS
+            // with the raw reference's content — the segmenter label and
+            // (for valid refs) the raw reference text render inside the
+            // parsed <biblStruct> as typed notes, BEFORE the parsed
+            // fields (sibling order is node-id order, so the copies take
+            // the ids right after the root). Invalid references drop the
+            // raw text (extract.py:172-179).
+            val keepRaw = folded.find(_.parent_id < 0)
+              .exists(_.node_type == "reference")
+            val copies0 = labelByParent.getOrElse(r.node_id, Nil) ++
+              (if (keepRaw) Seq(t) else Nil)
+            val nCopies = copies0.size
+            val offset = nextId
+            val shifted = folded.map { n =>
+              if (n.parent_id < 0) n.copy(node_id = offset, parent_id = -1L)
+              else n.copy(node_id = n.node_id + offset + nCopies,
+                parent_id = offset)
+            }
+            val inherited = copies0.zipWithIndex.map { case (c, i) =>
+              c.copy(node_id = offset + 1 + i, parent_id = offset)
+            }
+            nextId = offset + nCopies + folded.size
+            shifted ++ inherited
+          }
+        }
+      }
+      Processor.renumberReferenceIds(segNodes ++ citNodes)
+    }
+
+    /** `Processor.assignIdsAndTargets` with a filter pass per node type. */
+    def assignIdsAndTargets(nodes: Seq[SemanticNode]): Seq[SemanticNode] = {
+      var figN = 0
+      var tabN = 0
+      val withIds = nodes.sortBy(_.node_id).toList.map { n =>
+        n.node_type match {
+          case "figure" => val id = s"fig_$figN"; figN += 1; n.copy(content_id = id)
+          case "table" => val id = s"tab_$tabN"; tabN += 1; n.copy(content_id = id)
+          case _ => n
+        }
+      }
+      val byId = new scala.collection.mutable.LongMap[SemanticNode]
+      withIds.foreach(n => byId.update(n.node_id, n))
+      def labelsOf(targetType: String): Seq[(String, String)] =
+        withIds.filter(_.node_type == "label").flatMap { l =>
+          byId.get(l.parent_id).filter(_.node_type == targetType)
+            .map(p => (p.content_id, l.text))
+        }
+      def citationsOf(citType: String): Seq[(Long, String)] =
+        withIds.filter(_.node_type == citType).map(n => n.node_id -> n.text)
+      val demotedIds = withIds.filter(_.node_type == "invalid_reference")
+        .flatMap(n => Option(n.content_id)).toSet
+      def refTexts(childType: String): Seq[(String, String)] =
+        withIds.filter(_.node_type == childType).flatMap { c =>
+          byId.get(c.parent_id).filter(p => p.node_type == "raw_reference" &&
+              !Option(p.content_id).exists(demotedIds))
+            .map(p => (p.content_id, c.text))
+        }
+      val matched =
+        matchContentIdsLocal(citationsOf("figure_citation"), labelsOf("figure")) ++
+          matchContentIdsLocal(citationsOf("table_citation"), labelsOf("table")) ++
+          matchContentIdsLocal(citationsOf("reference_citation"), refTexts("label"),
+            refTexts("raw_reference_text"))
+      withIds.map(n =>
+        matched.get(n.node_id).map(t => n.copy(content_id = t)).getOrElse(n))
+    }
   }
 
   private def show(s: String): String =
@@ -634,24 +882,6 @@ class TextKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("LocalLabelers.views splits a labeling like five collects") {
-    val tags = IndexedSeq("<header>", "<body>", "<acknowledgement>", "<annex>", "<references>")
-    val labels = tags.flatMap(t => Seq("B-" + t, "I-" + t, t)) ++
-      Seq("O", "B-", "I-", "B-<bodyx>", "I-<body", "<body>x", "b-<body>", "B-B-<body>")
-    val rnd = new Random(43L)
-    (0 until 300).foreach { _ =>
-      val labeled = IndexedSeq.tabulate(rnd.nextInt(150)) { i =>
-        (TokenRow(1L, 0, 0, 0, i, s"t$i", " ", FontInfo.empty, None, 1, None, None),
-          labels(rnd.nextInt(labels.length)))
-      }
-      val got = LocalLabelers.views(labeled, tags)
-      tags.indices.foreach { k =>
-        val oracle = labeled.collect { case (t, l) if LocalLabelers.stripTag(l) == tags(k) => t }
-        assert(got(k) == oracle, tags(k))
-      }
-    }
-  }
-
   /** A double's bits: -0.0 apart from 0.0, NaN payloads aside (the JIT
     * may commute the operands of one product, see the GlyphMath case). */
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
@@ -860,6 +1090,223 @@ class TextKernelSpec extends AnyFunSuite {
       multiPage += got.count(s => s.coords != null && s.coords.contains(";"))
     }
     assert(styled > 1000 && multiPage > 100, (styled, multiPage))
+  }
+
+  test("Coordinates.format's %.2f fast path equals Formatter near ties, at its " +
+      "bounds and on random doubles") {
+    val rnd = new Random(67L)
+    val ties = Seq.fill(40000) {
+      val t = f"${rnd.nextInt(10000000)}.${rnd.nextInt(100)}%02d5".toDouble
+      Seq(t, math.nextUp(t), math.nextDown(t))
+    }.flatten
+    val edges = Seq(-0.0, 0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.004, -0.001, -0.0049999, -0.005, -0.0050001, 0.001, math.nextDown(0.001),
+      math.nextUp(0.001), 9.99e-4, 1e-3, 1e7, math.nextDown(1e7), math.nextUp(1e7),
+      9999999.994, 9999999.995, 9999999.996, 12345678.125, 1e-4, 5e-3, 0.0049999999)
+    val random = Seq.fill(100000)(rnd.nextDouble() * 1e4) ++
+      Seq.fill(100000)(math.pow(10, rnd.nextInt(14) - 4) * rnd.nextDouble()) ++
+      Seq.fill(20000)(rnd.nextInt(100000000) / 1000.0) ++
+      Seq.fill(20000)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    val vs = (ties ++ edges ++ random).flatMap(v => Seq(v, -v)).toIndexedSeq
+    (0 until vs.length by 4).foreach { i =>
+      val c = Coords(vs(i), vs((i + 1) % vs.length), vs((i + 2) % vs.length),
+        vs((i + 3) % vs.length), i % 7)
+      assert(Coordinates.format(c) == Oracle.format(c), c.toString)
+    }
+  }
+
+  test("Coordinates.mergeFormatted equals parse, merge and format on random " +
+      "lists with page changes and null or empty entries") {
+    val rnd = new Random(71L)
+    val specials = IndexedSeq(0.0, -0.0, -0.004, 1e7 + 0.125, 1e16, Double.NaN,
+      Double.NegativeInfinity, 2.675, 0.125)
+    def v(): Double =
+      if (rnd.nextInt(10) == 0) specials(rnd.nextInt(specials.length))
+      else rnd.nextInt(120000) / 100.0 - 100
+    var merged = 0
+    (0 until 20000).foreach { _ =>
+      var page = rnd.nextInt(3)
+      val ss = Seq.fill(rnd.nextInt(8)) {
+        rnd.nextInt(6) match {
+          case 0 => null
+          case 1 => ""
+          case _ =>
+            Coordinates.formatList(Seq.fill(rnd.nextInt(3) + 1) {
+              if (rnd.nextInt(4) == 0) page += rnd.nextInt(3) - 1
+              Coords(v(), v(), v(), v(), page)
+            })
+        }
+      }
+      val got = Coordinates.mergeFormatted(ss)
+      assert(got == Oracle.mergeFormatted(ss), ss)
+      if (got != null && ss.count(s => s != null && s.nonEmpty) > 1) merged += 1
+    }
+    assert(merged > 5000, merged)
+  }
+
+  test("segmentationViews equals views(segmentationLabels(_)), both old forms") {
+    val texts = IndexedSeq(null, "", "x", "Acknowledgements", "acknowledgment",
+      "Appendix", "ANNEX", "References", "reference", "Bibliography", "References\n",
+      "Refs", "1.", "Abstract")
+    val fonts = IndexedSeq(null, FontInfo.empty, FontInfo("f", "F", Some(9.0), false, false, false, false),
+      FontInfo("f", "F", Some(12.0), true, false, false, false),
+      FontInfo("f", "F", Some(14.0), false, false, false, false))
+    val rnd = new Random(73L)
+    var blocks = Set.empty[String]
+    (0 until 3000).foreach { _ =>
+      val toks = LocalLabelers.ordered(IndexedSeq.fill(rnd.nextInt(120)) {
+        TokenRow(1L, rnd.nextInt(3), rnd.nextInt(6), rnd.nextInt(3), rnd.nextInt(4),
+          texts(rnd.nextInt(texts.length)), " ", fonts(rnd.nextInt(fonts.length)), None,
+          1, None, None)
+      })
+      val labels = LocalLabelers.segmentationLabels(toks)
+      assert(labels == Oracle.segmentationLabels(toks))
+      assert(LocalLabelers.segmentationViews(toks) ==
+        Oracle.views(labels, LocalLabelers.SegmentationTags))
+      blocks ++= labels.map(l => LocalLabelers.stripTag(l._2))
+    }
+    assert(blocks == LocalLabelers.SegmentationTags.toSet, blocks)
+  }
+
+  test("LocalLabelers.views' old form splits a labeling like five collects") {
+    val tags = LocalLabelers.SegmentationTags
+    val labels = tags.flatMap(t => Seq("B-" + t, "I-" + t, t)) ++
+      Seq("O", "B-", "I-", "B-<bodyx>", "I-<body", "<body>x", "b-<body>", "B-B-<body>")
+    val rnd = new Random(43L)
+    (0 until 300).foreach { _ =>
+      val labeled = IndexedSeq.tabulate(rnd.nextInt(150)) { i =>
+        (TokenRow(1L, 0, 0, 0, i, s"t$i", " ", FontInfo.empty, None, 1, None, None),
+          labels(rnd.nextInt(labels.length)))
+      }
+      val got = Oracle.views(labeled, tags)
+      tags.indices.foreach { k =>
+        val oracle = labeled.collect { case (t, l) if LocalLabelers.stripTag(l) == tags(k) => t }
+        assert(got(k) == oracle, tags(k))
+      }
+    }
+  }
+
+  /** Words and separators of the rule stand-ins' inputs: Java's `\s`
+    * chars, Unicode spaces it does not match, figure words in mixed
+    * case, ASCII and non-ASCII digits, and the delimiters. */
+  private val standInAlphabet = IndexedSeq(" ", " ", "\t", "\n", "\u000B", "\f", "\r",
+    "\u00a0", "\u2009", "\u0085", "Figure", "FIG", "fig.", "Fig", "tAbLe", "Table",
+    "figures", "\u017fig", "\u212aey", "1", "12.", "3)", "4:", "5,", "7;", "2020", "19a99",
+    "\u0661\u0662", "\u0661\u0662\u0663\u0664", "and", "AND", "And,", ",", ";", ":", ".", "-",
+    "Smith", "J.", "\u0130stanbul", "x", "\ud83d\ude00", "(2019)")
+
+  test("the rule stand-ins equal their split/replaceAll/matches forms on " +
+      "random text with \\u000B, NBSP and non-ASCII digits") {
+    val rnd = new Random(79L)
+    val samples = "" +: standInAlphabet ++:
+      Seq.fill(60000)(Seq.fill(rnd.nextInt(9))(standInAlphabet(rnd.nextInt(standInAlphabet.length))).mkString)
+    samples.foreach { s =>
+      assert(Processor.nameSpansOf(s) == Oracle.nameSpansOf(s), show(s))
+      assert(Processor.citationSpansOf(s) == Oracle.citationSpansOf(s), show(s))
+      assert(Processor.figureSpansOf(s) == Oracle.figureSpansOf(s), show(s))
+    }
+  }
+
+  test("content-id keys equal their toLowerCase/split forms, in a Turkish " +
+      "default locale too") {
+    val rnd = new Random(83L)
+    val samples = "" +: standInAlphabet ++:
+      Seq.fill(30000)(Seq.fill(rnd.nextInt(7))(standInAlphabet(rnd.nextInt(standInAlphabet.length))).mkString)
+    val default = Locale.getDefault
+    try {
+      Seq(Locale.ROOT, Locale.forLanguageTag("tr-TR")).foreach { locale =>
+        Locale.setDefault(locale)
+        (samples :+ "ISTANBUL Iİ").foreach { s =>
+          assert(Processor.normKey(s) == Oracle.normKey(s), s"$locale ${show(s)}")
+          assert(Processor.prefixKey(s) == Oracle.prefixKey(s), s"$locale ${show(s)}")
+        }
+      }
+    } finally Locale.setDefault(default)
+  }
+
+  test("assignIdsAndTargets equals its filter-per-type form on random node sets") {
+    val types = IndexedSeq("figure", "table", "label", "figure_citation", "table_citation",
+      "reference_citation", "raw_reference", "raw_reference_text", "invalid_reference",
+      "reference", "section", "text", "caption")
+    val texts = IndexedSeq("", "1", "1.", "[2]", "2.", "Figure 1", "fig. 2", "Table 1",
+      "Smith 2020", "Jones et al. 2021", "(2)", "3", "\u0661", "A title", ".", "\u0130 1")
+    val cids = IndexedSeq(null, null, "b0", "b1", "b2", "invalid_ref_0", "x")
+    val rnd = new Random(89L)
+    var resolved = 0
+    (0 until 4000).foreach { _ =>
+      val n = rnd.nextInt(40)
+      val nodes = Seq.fill(n) {
+        SemanticNode(1L, rnd.nextInt(n + 5).toLong, rnd.nextInt(n + 5).toLong - 2,
+          types(rnd.nextInt(types.length)), texts(rnd.nextInt(texts.length)),
+          cids(rnd.nextInt(cids.length)), null, null)
+      }
+      val got = Processor.assignIdsAndTargets(nodes)
+      assert(got == Oracle.assignIdsAndTargets(nodes), nodes)
+      resolved += got.count(x => x.node_type.endsWith("_citation") && x.content_id != null)
+    }
+    assert(resolved > 2000, resolved)
+  }
+
+  test("decimalValue equals String.toDouble on 16–25-digit decimals, in place too") {
+    def run(f: => Double) = outcome(java.lang.Double.doubleToRawLongBits(f))
+    val rnd = new Random(97L)
+    (0 until 100000).foreach { _ =>
+      val digits = Seq.fill(16 + rnd.nextInt(10))(('0' + rnd.nextInt(10)).toChar).mkString
+      val dot = rnd.nextInt(digits.length + 1)
+      val s = Seq("", "-", "+")(rnd.nextInt(3)) + digits.take(dot) + "." + digits.drop(dot)
+      assert(run(PdfSyntax.decimalValue(s)) == run(s.toDouble), s)
+      val padded = "1,x" + s + ";"
+      assert(run(PdfSyntax.decimalValue(padded, 3, 3 + s.length)) == run(s.toDouble), s)
+    }
+    // Double.toString's 16–17-digit coordinates, as an ALTO writer prints them
+    (0 until 100000).foreach { _ =>
+      val d = rnd.nextInt(100000) / 1000.0 + rnd.nextInt(7) * 0.1
+      val s = java.lang.Double.toString(d)
+      assert(PdfSyntax.decimalValue(s) == d, s)
+    }
+    Seq("1.", "+.5", "-.12345678901234567", "00000000000000000001.5", "1.0000000000000000000000001",
+      "1..2", "1.2.3", "-", ".", "1e5").foreach { s =>
+      assert(run(PdfSyntax.decimalValue(s)) == run(s.toDouble), s)
+      assert(run(PdfSyntax.decimalValue("#" + s + "#", 1, s.length + 1)) == run(s.toDouble), s)
+    }
+  }
+
+  test("ModelExtractors' whitespace scans equal their split/replaceAll forms") {
+    val alphabet = standInAlphabet ++ IndexedSeq("\u0001", "\u001f", "10.1234/x y", "PMC 12",
+      "1999", "19 99", " ")
+    val rnd = new Random(101L)
+    val samples = "" +: alphabet ++:
+      Seq.fill(60000)(Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    samples.foreach { s =>
+      assert(TextNormalization.withoutRegexSpace(s) == s.replaceAll("\\s", ""), show(s))
+      assert(ModelExtractors.looksLikeReference(s) ==
+        (s.trim.split("\\s+").count(_.nonEmpty) > 3), show(s))
+      val m = Pattern.compile("(\\d{4})").matcher(s.replaceAll("\\s", ""))
+      assert(ModelExtractors.parseYear(s) == (if (m.find()) Some(m.group(1).toInt) else None),
+        show(s))
+    }
+  }
+
+  test("citationPass equals its filter-and-groupBy form on random segmenter nodes") {
+    val types = IndexedSeq("raw_reference", "raw_reference", "raw_reference_text", "label",
+      "heading", "note[x]")
+    val texts = IndexedSeq("", "1.", "[2]", "Smith J. A title. Journal 2020",
+      "Jones K. Other paper 2021", "x", "A B", "Doe 1999 x")
+    val cids = IndexedSeq(null, "b0", "b1", "b2", "b3")
+    val rnd = new Random(103L)
+    var references = 0
+    (0 until 3000).foreach { _ =>
+      val n = rnd.nextInt(24)
+      val nodes = List.fill(n) {
+        SemanticNode(1L, rnd.nextInt(n + 4).toLong - (if (rnd.nextInt(8) == 0) 9 else 0),
+          rnd.nextInt(n + 4).toLong - 2, types(rnd.nextInt(types.length)),
+          texts(rnd.nextInt(texts.length)), cids(rnd.nextInt(cids.length)), null, null)
+      }
+      val got = Processor.citationPass(1L, nodes)
+      assert(got == Oracle.citationPass(1L, nodes), nodes)
+      references += got.count(_.node_type == "reference")
+    }
+    assert(references > 1000, references)
   }
 }
 
