@@ -239,7 +239,7 @@ object Coordinates {
   * Reused from span to span: [[start]] clears it, [[finish]] sets
   * [[text]], [[coords]] and [[styles]]. */
 private[graft] final class SpanAssembly {
-  private val sb = new java.lang.StringBuilder
+  private val sb = new java.lang.StringBuilder(256)
   // closed styled runs, (start, end, mask) triples
   private var runs = new Array[Int](24)
   private var nRuns = 0

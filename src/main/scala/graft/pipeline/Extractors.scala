@@ -105,19 +105,22 @@ object Extractors {
 
   /** Post-pass: a container node's coords = re-merge of its children's
     * (the reference merges the whole semantic content's tokens; our
-    * children carry the spans' formatted boxes). */
+    * children carry the spans' formatted boxes). The nodes as given
+    * when no container lacks coords. */
   private[pipeline] def mergeParentCoords(nodes: Seq[SemanticNode],
-      parentTypes: Set[String]): Seq[SemanticNode] = {
-    val byParent = nodes.groupBy(_.parent_id)
-    nodes.map { n =>
-      if (!parentTypes.contains(n.node_type) || n.coords != null) n
-      else {
-        val merged = Coordinates.mergeFormatted(
-          byParent.getOrElse(n.node_id, Nil).map(_.coords))
-        if (merged == null) n else n.copy(coords = merged)
+      parentTypes: Set[String]): Seq[SemanticNode] =
+    if (!nodes.exists(n => n.coords == null && parentTypes.contains(n.node_type))) nodes
+    else {
+      val byParent = nodes.groupBy(_.parent_id)
+      nodes.map { n =>
+        if (!parentTypes.contains(n.node_type) || n.coords != null) n
+        else {
+          val merged = Coordinates.mergeFormatted(
+            byParent.getOrElse(n.node_id, Nil).map(_.coords))
+          if (merged == null) n else n.copy(coords = merged)
+        }
       }
     }
-  }
 
   /** E7 figure/table fold (models/figure/extract.py:24-44): `<label>` +
     * `<figDesc>`/`<tableDesc>` accumulate into one figure/table node per

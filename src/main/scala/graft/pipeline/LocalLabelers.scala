@@ -26,7 +26,8 @@ private[graft] object LocalLabelers {
   /** Document order — `(page_idx, block_idx, line_idx, token_idx)`.
     * A stable sort, so tokens with equal keys keep their input order. */
   def ordered(tokens: Seq[TokenRow]): IndexedSeq[TokenRow] = {
-    val arr = tokens.toArray
+    val arr = new Array[TokenRow](tokens.length)
+    tokens.copyToArray(arr)
     java.util.Arrays.sort(arr, DocOrder)
     ArraySeq.unsafeWrapArray(arr)
   }
@@ -229,16 +230,27 @@ private[graft] object LocalLabelers {
     * tag gives, with no label per token. */
   def segmentationViews(toks: IndexedSeq[TokenRow]): IndexedSeq[IndexedSeq[TokenRow]] = {
     val titleBlock = titleBlockOf(toks)
-    val views = Array.fill(SegmentationBio.length)(Array.newBuilder[TokenRow])
+    // each token's view, then each view's tokens copied into its array
+    val viewOf = new Array[Byte](toks.length)
+    val sizes = new Array[Int](SegmentationBio.length)
     var start = 0
     while (start < toks.length) {
       val end = blockEnd(toks, start)
-      val view = views(segmentationView(toks, start, end, titleBlock))
-      var i = start
-      while (i < end) { view += toks(i); i += 1 }
+      val view = segmentationView(toks, start, end, titleBlock)
+      java.util.Arrays.fill(viewOf, start, end, view.toByte)
+      sizes(view) += end - start
       start = end
     }
-    ArraySeq.unsafeWrapArray(views.map(b => ArraySeq.unsafeWrapArray(b.result())))
+    val views = sizes.map(n => new Array[TokenRow](n))
+    java.util.Arrays.fill(sizes, 0)
+    var i = 0
+    while (i < toks.length) {
+      val v = viewOf(i)
+      views(v)(sizes(v)) = toks(i)
+      sizes(v) += 1
+      i += 1
+    }
+    ArraySeq.unsafeWrapArray(views.map(ArraySeq.unsafeWrapArray(_)))
   }
 
   /** Header-stage layout rules: title block → `<title>`, its
@@ -374,10 +386,17 @@ private[graft] object LocalLabelers {
     var spanId = 0L
     var curTag: String = null
     var open = false
+    // a run of tokens shares one label string: strip it once per run
+    var lastLabel: String = null
+    var lastTag: String = null
     var i = 0
     while (i < labeled.length) {
       val (t, label) = labeled(i)
-      val tag = stripTag(label)
+      if (label == null || (label ne lastLabel)) {
+        lastTag = stripTag(label)
+        lastLabel = label
+      }
+      val tag = lastTag
       if (!open || label.startsWith("B-") || tag != curTag) {
         if (open) {
           asm.finish()

@@ -467,13 +467,16 @@ object Processor {
     // count equals keys[1]'s — NOT the max-count candidate).
     def partialTokens(s: String): List[String] =
       TextNormalization.tokenize(s).map(normKey)
-    val candIndex = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ListBuffer[String]]
-    partialCandidates.foreach { case (id, lt) =>
-      partialTokens(lt).foreach { tok =>
-        candIndex.getOrElseUpdate(tok,
-          scala.collection.mutable.ListBuffer.empty[String]) += id
+    // built on the first citation the two key lookups miss
+    lazy val candIndex = {
+      val m = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.ListBuffer[String]]
+      partialCandidates.foreach { case (id, lt) =>
+        partialTokens(lt).foreach { tok =>
+          m.getOrElseUpdate(tok, scala.collection.mutable.ListBuffer.empty[String]) += id
+        }
       }
+      m
     }
     def partialMatch(text: String): Option[String] = {
       val toks = partialTokens(text)
@@ -892,8 +895,13 @@ object Processor {
       kept += ((spanTag, spanToks.reverse))
       spanToks = Nil
     }
+    var lastLabel: String = null
+    var tag: String = null
     bodyLabeled.foreach { case (t, label) =>
-      val tag = LocalLabelers.stripTag(label)
+      if (label == null || (label ne lastLabel)) {
+        tag = LocalLabelers.stripTag(label)
+        lastLabel = label
+      }
       if (!open || label.startsWith("B-") || tag != spanTag) {
         close()
         open = true
@@ -986,14 +994,26 @@ object Processor {
       graphicRows: Seq[GraphicRow]): Seq[GraphicIn] = {
     if (graphicRows.isEmpty) return Nil
     // the first token with a width on each page a graphic is on
-    val pages = graphicRows.map(_.page_number).toSet
+    val pages = new scala.collection.mutable.LongMap[Unit]
+    graphicRows.foreach(g => pages.update(g.page_number, ()))
     val pageDims = new scala.collection.mutable.LongMap[TokenRow]
+    // a page is settled once found or known unwanted: its later
+    // tokens are not looked up again
+    var settled = false
+    var settledPage = 0
     val it = tokens.iterator
     while (pageDims.size < pages.size && it.hasNext) {
       val t = it.next()
-      if (t.page_width.isDefined && pages(t.page_number) &&
-          !pageDims.contains(t.page_number))
-        pageDims.update(t.page_number, t)
+      if (!settled || t.page_number != settledPage) {
+        if (!pages.contains(t.page_number) || pageDims.contains(t.page_number)) {
+          settled = true
+          settledPage = t.page_number
+        } else if (t.page_width.isDefined) {
+          pageDims.update(t.page_number, t)
+          settled = true
+          settledPage = t.page_number
+        }
+      }
     }
     for {
       g <- graphicRows

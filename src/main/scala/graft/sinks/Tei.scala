@@ -130,10 +130,10 @@ object Tei {
     * `tei_document.py:47-165`): analytic title/authors/idno, monogr
     * journal/editors/imprint with date/biblScope/publisher. The xml:id
     * is the `b<n>` content id citation `<ref target>`s point at.
+    * Appended to `sb`.
     */
-  private def biblStructXml(ref: SemanticNode, cs: Seq[SemanticNode],
-      kids: Long => Seq[SemanticNode]): String = {
-    val sb = new StringBuilder
+  private def biblStructXml(sb: StringBuilder, ref: SemanticNode, cs: Seq[SemanticNode],
+      kids: Long => Seq[SemanticNode]): Unit = {
     val id = Option(ref.content_id).map(i => s""" xml:id="${esc(i)}"""").getOrElse("")
     sb ++= s"<biblStruct$id${coordsAttr(ref)}>"
     // inherited raw-reference content renders first
@@ -202,7 +202,6 @@ object Tei {
     cs.filter(_.node_type == "external_url").foreach(v =>
       sb ++= s"""<ref type="url">${esc(v.text)}</ref>""")
     sb ++= "</biblStruct>"
-    sb.toString
   }
 
   private val AddressFieldTags = Map(
@@ -281,11 +280,18 @@ object Tei {
   def buildTei(nodes: Seq[SemanticNode]): String = {
     // the coords of the <p> fragment being built, merged as it grows
     val fragmentCoords = new graft.pipeline.Coordinates.BoxMerge
+    // the members of that fragment, ' '-joined
+    val fragment = new StringBuilder
+    var fragmentItems = 0
     // `Processor.assignIdsAndTargets` hands the nodes over sorted; the
     // collection is kept as given (the passes below ran 25–35% slower
     // on an `ArraySeq` than on the `List` the fold produces)
     val ordered = if (ascendingIds(nodes)) nodes else nodes.sortBy(_.node_id)
-    val childrenOf = ordered.groupBy(_.parent_id)
+    // each parent's children in node order, keyed without boxing
+    val childrenOf = new scala.collection.mutable.LongMap[List[SemanticNode]]
+    ordered.foreach(n =>
+      childrenOf.update(n.parent_id, n :: childrenOf.getOrElse(n.parent_id, Nil)))
+    childrenOf.mapValuesInPlace((_, ns) => ns.reverse)
     def kids(id: Long): Seq[SemanticNode] = childrenOf.getOrElse(id, Nil)
 
     val title = ordered.find(n => n.node_type == "title" && n.parent_id < 0)
@@ -331,8 +337,7 @@ object Tei {
     // directly, annex sections inside the <div type="annex"> container
     // (document/tei/document.py:125-155, tei/section.py:127)
     // tei/figure_table.py:32-87: label renders as head AND label
-    def figureXml(c: SemanticNode): String = {
-      val fsb = new StringBuilder
+    def figureXml(fsb: StringBuilder, c: SemanticNode): Unit = {
       val idAttr = Option(c.content_id)
         .map(i => s""" xml:id="${esc(i)}"""").getOrElse("")
       val typeAttr = if (c.node_type == "table") """ type="table"""" else ""
@@ -349,7 +354,6 @@ object Tei {
         }
       }
       fsb ++= "</figure>"
-      fsb.toString
     }
 
     // tei_document.py:124-129/157-162 iter_by_types_recursively: every
@@ -360,9 +364,10 @@ object Tei {
         else figuresOf(c)
       }
 
-    def sectionDiv(s: SemanticNode, typeAttr: Option[String]): String = {
-      val bodySb = new StringBuilder
+    def sectionDiv(bodySb: StringBuilder, s: SemanticNode, typeAttr: Option[String]): Unit = {
+      val start = bodySb.length
       bodySb ++= typeAttr.map(t => s"""<div type="$t">""").getOrElse("<div>")
+      val contentStart = bodySb.length
       kids(s.node_id).foreach { c =>
         c.node_type match {
           case "heading" =>
@@ -379,18 +384,22 @@ object Tei {
             // tei/section.py:63-77 iter_flat_paragraph_formula: a raw
             // equation SPLITS the paragraph — <formula> renders as a
             // SIBLING of the <p> fragments, never nested inside one
-            var fragment = List.empty[String]
             def flushFragment(): Unit = {
-              if (fragment.nonEmpty) {
+              if (fragmentItems > 0) {
                 // <p> coords re-merge the fragment's members
                 // (tei/section.py:96 per flat paragraph fragment)
                 val pc = fragmentCoords.result()
-                bodySb ++= s"<p${coordsAttr(pc)}>${fragment.reverse.mkString(" ")}</p>"
-                fragment = Nil
+                bodySb ++= "<p" ++= coordsAttr(pc) += '>'
+                bodySb.underlying.append(fragment.underlying)
+                bodySb ++= "</p>"
+                fragment.clear()
+                fragmentItems = 0
               }
             }
             def push(xml: String, n: SemanticNode): Unit = {
-              fragment ::= xml
+              if (fragmentItems > 0) fragment += ' '
+              fragment ++= xml
+              fragmentItems += 1
               fragmentCoords.addFormatted(n.coords)
             }
             kids(c.node_id).foreach { p =>
@@ -438,28 +447,62 @@ object Tei {
           case _ => ()
         }
       }
-      bodySb ++= "</div>"
-      val xml = bodySb.toString
-      val open = typeAttr.map(t => s"""<div type="$t">""").getOrElse("<div>")
       // tei/section.py:122-125: a section whose remaining content is
       // empty (e.g. its only children were the lifted figures/tables)
       // yields NO div at all
-      if (xml == open + "</div>") "" else xml
+      if (bodySb.length == contentStart) bodySb.setLength(start)
+      else bodySb ++= "</div>"
     }
 
+    // one builder for the whole document: body and back render in
+    // place, sized from the node texts so it seldom grows
+    val sb = new StringBuilder(ordered.foldLeft(1024) { (size, n) =>
+      size + 64 + (if (n.text == null) 0 else n.text.length) +
+        (if (n.coords == null) 0 else n.coords.length)
+    })
+    sb ++= """<TEI xmlns="http://www.tei-c.org/ns/1.0">"""
+    sb ++= "<teiHeader><fileDesc>"
+    sb ++= "<titleStmt>"
+    title.foreach(t =>
+      sb ++= s"""<title level="a" type="main"${coordsAttr(t)}>${styledXml(t)}</title>""")
+    sb ++= "</titleStmt>"
+    sb ++= "<sourceDesc><biblStruct><analytic>"
+    authorXmls.foreach(sb ++= _)
+    dummyAuthor.foreach(sb ++= _)
+    sb ++= "</analytic></biblStruct></sourceDesc>"
+    sb ++= "</fileDesc>"
+    abstractNode.filter(_.text.nonEmpty).foreach { t =>
+      sb ++= "<profileDesc><abstract>" +
+        s"<p${coordsAttr(t)}>${styledXml(t)}</p></abstract></profileDesc>"
+    }
+    // tei_document.py:92-99: front content not folded into title /
+    // abstract / author / affiliation renders as a teiHeader-level
+    // note whose type is the model's raw tag (e.g. a SECOND <title>
+    // span → <note type="&lt;title&gt;">, get_tei_note_for_
+    // semantic_content keeps the tag verbatim); fulltext-fold and
+    // unmatched-graphics notes belong to body/back, not here
+    ordered.filter(n => n.parent_id < 0 && n.node_type.startsWith("note[") &&
+        !n.node_type.startsWith("note[fulltext:") &&
+        n.node_type != "note[unmatched_graphics]").foreach { n =>
+      val t = n.node_type.stripPrefix("note[").stripSuffix("]")
+      sb ++= s"""<note type="${esc(t)}"${coordsAttr(n)}>${styledXml(n)}</note>"""
+    }
+    sb ++= "</teiHeader>"
     val rootSections = ordered.filter(n => n.parent_id < 0 && n.node_type == "section")
     def sectionType(s: SemanticNode): String = Option(s.content_id).getOrElse("")
-    val bodySb = new StringBuilder
-    val backSb = new StringBuilder
     val bodySections = rootSections.filter(s =>
       sectionType(s) != "acknowledgement" && sectionType(s) != "annex")
+    sb ++= "<text>"
+    val bodySb = sb
+    val bodyAt = sb.length
+    bodySb ++= "<body>"
     // body children in document order: section divs and body-level
     // notes interleaved (tei_document.py:114-123 — a root fulltext
     // note is body_section content, get_body().add_note)
     ordered.filter(_.parent_id < 0).foreach { n =>
       if (n.node_type == "section" && sectionType(n) != "acknowledgement" &&
           sectionType(n) != "annex")
-        bodySb ++= sectionDiv(n, None)
+        sectionDiv(bodySb, n, None)
       else if (n.node_type.startsWith("note[fulltext:")) {
         val t = n.node_type.stripPrefix("note[fulltext:").stripSuffix("]")
         bodySb ++= s"""<note type="${esc(t)}"${coordsAttr(n)}>${styledXml(n)}</note>"""
@@ -467,11 +510,15 @@ object Tei {
     }
     // body figures/tables render AFTER the section divs, directly under
     // <body> (tei_document.py:124-129)
-    bodySections.flatMap(figuresOf).foreach(f => bodySb ++= figureXml(f))
+    bodySections.flatMap(figuresOf).foreach(figureXml(bodySb, _))
+    if (sb.length == bodyAt + "<body>".length) { sb.setLength(bodyAt); sb ++= "<body/>" }
+    else sb ++= "</body>"
+    val backSb = sb
+    val backAt = sb.length
+    backSb ++= "<back>"
     rootSections.filter(sectionType(_) == "acknowledgement")
-      .foreach(s => backSb ++= sectionDiv(s, Some("acknowledgement")))
+      .foreach(sectionDiv(backSb, _, Some("acknowledgement")))
     val annexSections = rootSections.filter(sectionType(_) == "annex")
-    val annexDivs = annexSections.map(sectionDiv(_, None)).filter(_.nonEmpty)
     // back figures/tables render inside the annex container, after its
     // divs — collected from the WHOLE back section in document order,
     // acknowledgement sections included (tei_document.py:157-162
@@ -479,9 +526,13 @@ object Tei {
     // element, so an acknowledgement figure lands in the annex too)
     val backSections = rootSections.filter(s =>
       sectionType(s) == "acknowledgement" || sectionType(s) == "annex")
-    val annexFigures = backSections.flatMap(figuresOf).map(figureXml)
-    if (annexDivs.nonEmpty || annexFigures.nonEmpty)
-      backSb ++= s"""<div type="annex">${annexDivs.mkString}${annexFigures.mkString}</div>"""
+    val annexAt = backSb.length
+    backSb ++= """<div type="annex">"""
+    val annexContentAt = backSb.length
+    annexSections.foreach(sectionDiv(backSb, _, None))
+    backSections.flatMap(figuresOf).foreach(figureXml(backSb, _))
+    if (backSb.length == annexContentAt) backSb.setLength(annexAt)
+    else backSb ++= "</div>"
 
     // references back matter (document/tei/references.py: <div
     // type="references"><listBibl> of biblStructs): parsed references
@@ -510,7 +561,7 @@ object Tei {
         backSb ++= s"""<note type="invalid_reference">${esc(text)}</note>"""
       }
       def renderParsed(r: SemanticNode): Unit = r.node_type match {
-        case "reference" => backSb ++= biblStructXml(r, kids(r.node_id), kids)
+        case "reference" => biblStructXml(backSb, r, kids(r.node_id), kids)
         case _ => renderInvalid(r)
       }
       backSb ++= """<div type="references">"""
@@ -559,39 +610,9 @@ object Tei {
       backSb ++= "</note>"
     }
 
-    val sb = new StringBuilder
-    sb ++= """<TEI xmlns="http://www.tei-c.org/ns/1.0">"""
-    sb ++= "<teiHeader><fileDesc>"
-    sb ++= "<titleStmt>"
-    title.foreach(t =>
-      sb ++= s"""<title level="a" type="main"${coordsAttr(t)}>${styledXml(t)}</title>""")
-    sb ++= "</titleStmt>"
-    sb ++= "<sourceDesc><biblStruct><analytic>"
-    authorXmls.foreach(sb ++= _)
-    dummyAuthor.foreach(sb ++= _)
-    sb ++= "</analytic></biblStruct></sourceDesc>"
-    sb ++= "</fileDesc>"
-    abstractNode.filter(_.text.nonEmpty).foreach { t =>
-      sb ++= "<profileDesc><abstract>" +
-        s"<p${coordsAttr(t)}>${styledXml(t)}</p></abstract></profileDesc>"
-    }
-    // tei_document.py:92-99: front content not folded into title /
-    // abstract / author / affiliation renders as a teiHeader-level
-    // note whose type is the model's raw tag (e.g. a SECOND <title>
-    // span → <note type="&lt;title&gt;">, get_tei_note_for_
-    // semantic_content keeps the tag verbatim); fulltext-fold and
-    // unmatched-graphics notes belong to body/back, not here
-    ordered.filter(n => n.parent_id < 0 && n.node_type.startsWith("note[") &&
-        !n.node_type.startsWith("note[fulltext:") &&
-        n.node_type != "note[unmatched_graphics]").foreach { n =>
-      val t = n.node_type.stripPrefix("note[").stripSuffix("]")
-      sb ++= s"""<note type="${esc(t)}"${coordsAttr(n)}>${styledXml(n)}</note>"""
-    }
-    sb ++= "</teiHeader>"
-    val backXml = if (backSb.nonEmpty) s"<back>${backSb.toString}</back>" else "<back/>"
-    if (bodySb.nonEmpty) sb ++= s"<text><body>${bodySb.toString}</body>$backXml</text>"
-    else sb ++= s"<text><body/>$backXml</text>"
-    sb ++= "</TEI>"
+    if (sb.length == backAt + "<back>".length) { sb.setLength(backAt); sb ++= "<back/>" }
+    else sb ++= "</back>"
+    sb ++= "</text></TEI>"
     sb.toString
   }
 
