@@ -73,7 +73,7 @@ object Coordinates {
     * 1.1e-7 of 100·|v|, and the shortest decimal within 9.4e-8 of it, so
     * away from a tie both round alike. Ties and every other value take
     * the `Double.toString` digits. */
-  private[graft] def appendFixed2(sb: java.lang.StringBuilder, v: Double): Unit = {
+  private def appendFixed2(sb: java.lang.StringBuilder, v: Double): Unit = {
     val a = math.abs(v)
     if (a >= 1e-3 && a < 1e7) {
       val h = a * 100

@@ -22,7 +22,7 @@ object Extractors {
 
   /** Fold input: one BIO span. `coords` is the span's merged
     * page-coordinate list already in the TEI attribute format
-    * ([[Coordinates.formatMerged]]; null when no token carried
+    * ([[Coordinates.formatList]] of the merged boxes; null when no token carried
     * coordinates — synthesized spans from re-labeled text, fixtures
     * without geometry). `styles` encodes the styled token runs over
     * `text` as `start,end,mask` triples (';'-joined; mask bits

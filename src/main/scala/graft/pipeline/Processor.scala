@@ -503,6 +503,9 @@ object Processor {
     }.toMap
   }
 
+  private val NodeIdOrder: java.util.Comparator[SemanticNode] =
+    (a, b) => java.lang.Long.compare(a.node_id, b.node_id)
+
   /** J1 + F2 per document: assign `fig_0…`/`tab_0…` content ids in
     * document order (`utils/misc.py:4-8` iter_ids), then resolve each
     * `figure_citation`/`table_citation` against its document's
@@ -520,9 +523,6 @@ object Processor {
     * List, as the sinks' many small groupBy/filter passes over it are
     * cheapest on one.
     */
-  private val NodeIdOrder: java.util.Comparator[SemanticNode] =
-    (a, b) => java.lang.Long.compare(a.node_id, b.node_id)
-
   private[graft] def assignIdsAndTargets(
       nodes: Seq[SemanticNode]): Seq[SemanticNode] = {
     import scala.collection.mutable.ArrayBuffer
