@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry of every cache the library creates —
   * persisted frames and `localCheckpoint` storage blocks — so a
@@ -182,11 +183,20 @@ object CacheRegistry {
     * ([[graft.operators.Dedup.connectedComponents]]) that retire each
     * round's checkpoint as soon as the next round is materialized,
     * instead of holding every round's blocks until end-of-query.
+    *
+    * `level` stores the blocks at that storage level through
+    * `localCheckpoint(eager = true, level)`; without it they keep
+    * `localCheckpoint`'s default, deserialized rows in memory and on
+    * disk. A serialized level suits a checkpoint that is read once or
+    * twice: its blocks are sized by their byte count, where
+    * deserialized rows are sized by Spark's `SizeEstimator` walking
+    * them as they are stored.
     */
-  def localCheckpointWithRelease[T](df: Dataset[T]): (Dataset[T], () => Unit) = {
+  def localCheckpointWithRelease[T](df: Dataset[T],
+      level: Option[StorageLevel] = None): (Dataset[T], () => Unit) = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint()
+    val out = level.fold(df.localCheckpoint())(df.localCheckpoint(eager = true, _))
     // primary handle: the checkpointed RDD straight off the result's
     // plan (exact even when concurrent work persists other RDDs);
     // id-diff only as a fallback for a future plan shape

@@ -530,34 +530,92 @@ object Sketch {
     * `xxhash64(slice(sig, b*rows+1, rows), b)` — XXH64 seed 42 folded
     * over the slice's non-null longs, then over the int `b`. A null or
     * short signature hashes its empty or partial slices the same way,
-    * so every signature yields `bands` keys. */
-  def bandKeys(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
-    val n = if (sig == null) 0 else sig.numElements()
+    * so every signature yields `bands` keys. Every key comes from
+    * [[bandKey]], the core the primitive form shares: a null-free
+    * signature goes through that form, and one with null elements
+    * hashes each slice's non-null longs. */
+  def bandKeys(sig: ArrayData, bands: Int, rows: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      if (sig == null) bandKeys(NoLongs, bands, rows)
+      else if (!hasNull(sig)) bandKeys(sig.toLongArray(), bands, rows)
+      else {
+        val n = sig.numElements()
+        val slice = new Array[Long](rows)
+        val out = new Array[Long](bands)
+        var b = 0
+        while (b < bands) {
+          var m = 0
+          var i = b * rows
+          val end = math.min(i + rows, n)
+          while (i < end) {
+            if (!sig.isNullAt(i)) { slice(m) = sig.getLong(i); m += 1 }
+            i += 1
+          }
+          out(b) = bandKey(slice, 0, m, b)
+          b += 1
+        }
+        out
+      })
+
+  /** The band keys of a null-free signature held as `Array[Long]` (null
+    * counts as empty): the first `bands` keys of the `ArrayData` form.
+    * Key `b` depends only on `b` and its slice, so a caller that needs
+    * only the bands below `b` asks for `b` of them. */
+  def bandKeys(sig: Array[Long], bands: Int, rows: Int): Array[Long] = {
+    val n = if (sig == null) 0 else sig.length
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
-      var h = 42L
-      var i = b * rows
-      val end = math.min(i + rows, n)
-      while (i < end) {
-        if (!sig.isNullAt(i)) h = XXH64.hashLong(sig.getLong(i), h)
-        i += 1
-      }
-      out(b) = XXH64.hashInt(b, h)
+      val from = b * rows
+      out(b) = bandKey(sig, from, math.min(from + rows, n), b)
       b += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    out
+  }
+
+  /** One band key: XXH64 seed 42 over `vals(from until until)`, then
+    * over the int `b`. */
+  private def bandKey(vals: Array[Long], from: Int, until: Int, b: Int): Long = {
+    var h = 42L
+    var i = from
+    while (i < until) { h = XXH64.hashLong(vals(i), h); i += 1 }
+    XXH64.hashInt(b, h)
+  }
+
+  private val NoLongs = new Array[Long](0)
+
+  private def hasNull(a: ArrayData): Boolean = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) { if (a.isNullAt(i)) return true; i += 1 }
+    false
   }
 
   /** [[SigMatchCountExpr]] kernel: positions where both arrays hold
-    * equal non-null longs; slots past the shorter array never match. */
-  def sigMatchCount(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
+    * equal non-null longs; slots past the shorter array never match.
+    * Two null-free arrays go through the primitive form. */
+  def sigMatchCount(a: ArrayData, b: ArrayData): Int =
+    if (!hasNull(a) && !hasNull(b)) sigMatchCount(a.toLongArray(), b.toLongArray())
+    else {
+      val n = math.min(a.numElements(), b.numElements())
+      var cnt = 0
+      var i = 0
+      while (i < n) {
+        if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+          cnt += 1
+        i += 1
+      }
+      cnt
+    }
+
+  /** Positions where two signatures held as `Array[Long]` agree; slots
+    * past the shorter array never match. */
+  def sigMatchCount(a: Array[Long], b: Array[Long]): Int = {
+    val n = math.min(a.length, b.length)
     var cnt = 0
     var i = 0
     while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-        cnt += 1
+      if (a(i) == b(i)) cnt += 1
       i += 1
     }
     cnt

@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators over a document corpus.
@@ -157,12 +155,11 @@ object Dedup {
       minEstJaccard: Double = 0.5,
       maxBucket: Long = Long.MaxValue): DataFrame = {
     val sig0 = minHashSignatures(docs, textCol, idCol, shingleSize, numHashes)
-    // the signature table feeds the band pass and the count below (plus,
-    // capped, the over-cap probe and the star pass; uncapped, the two
-    // verify join-backs) — persisted so the shingle+minhash kernel, THE
-    // corpus-scale pass of this family, runs once
-    val sig = graft.CacheRegistry.persist(sig0)
     if (maxBucket == Long.MaxValue) {
+      // the band pass and the two verify join-backs read the signatures:
+      // persisted so the shingle+minhash kernel, THE corpus-scale pass of
+      // this family, runs once
+      val sig = graft.CacheRegistry.persist(sig0)
       val banded = bandKeys(sig, "id", bands, numHashes)
       val a = banded.select(col("band"), col("bkey"), col("id").as("doc_id_a"))
       val b = banded.select(col("band"), col("bkey"), col("id").as("doc_id_b"))
@@ -177,18 +174,24 @@ object Dedup {
         .filter(col("est_jaccard") >= minEstJaccard)
         .select("doc_id_a", "doc_id_b", "est_jaccard")
     } else {
-      val idType = sig.schema("id").dataType
+      val idType = sig0.schema("id").dataType
+      // A bucket never holds more members than the corpus has rows, so
+      // one count of the input rules out every over-cap bucket when the
+      // corpus is under the cap — the benchmark and sf0.1 regime. The
+      // count reads no column (the scan is pruned to row counts) and
+      // runs as one job with no exchange. Under the cap the band
+      // exchange's map stage signs each document, and nothing is cached.
+      // Otherwise the signatures are persisted, because the over-cap
+      // aggregate (which lists the over-cap buckets, at most
+      // n·bands/(maxBucket+1) of them) and the keeper-star pass read
+      // them again.
+      val canExceed = docs.select().queryExecution.toRdd.count() > maxBucket
+      val sig = if (canExceed) graft.CacheRegistry.persist(sig0) else sig0
       val live = sig.filter(col("id").isNotNull)
         .select(col("id").cast("long").as("id"), col("sig"))
       val banded = bandKeys(live, "id", bands, numHashes, col("sig"))
-      // A bucket never holds more members than the corpus has rows, so
-      // ONE count on the persisted signatures (which pays the cache
-      // build the kernel reuses) rules out every over-cap bucket when
-      // the corpus is under the cap — the benchmark and sf0.1 regime.
-      // Otherwise one small aggregate over the band keys lists the
-      // over-cap buckets: at most n·bands/(maxBucket+1) of them.
       val overCap: Set[(Int, Long)] =
-        if (sig.count() <= maxBucket) Set.empty
+        if (!canExceed) Set.empty
         else banded.groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
           .filter(col("bn") > maxBucket).select("band", "bkey")
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
@@ -197,7 +200,7 @@ object Dedup {
         .as[(Int, Long), LshMember](
           Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong), MemberEnc)
         .flatMapGroups { (key, members) =>
-          lshBucketPairs(key._1, members, maxBucket, bands, rows, overCap)
+          lshBucketPairs(key._1, members, maxBucket, rows, overCap)
         }(PairEnc)
       val pairs =
         if (overCap.isEmpty) inBuckets
@@ -232,15 +235,6 @@ object Dedup {
   private lazy val MemberEnc = Encoders.product[LshMember]
   private lazy val PairEnc = Encoders.product[LshPair]
 
-  private def sigData(m: LshMember): ArrayData =
-    if (m.sig == null) null else UnsafeArrayData.fromPrimitiveArray(m.sig)
-
-  /** A member's band keys by the one [[graft.functions.Sketch.bandKeys]]
-    * definition, so a 64-bit key collision behaves as it does in the
-    * band exchange. */
-  private def keysOf(sig: ArrayData, bands: Int, rows: Int): Array[Long] =
-    graft.functions.Sketch.bandKeys(sig, bands, rows).toLongArray()
-
   /** Whether two members' keys agree on a band below `limit` whose
     * bucket is under the cap — i.e. the pair came out of that bucket. */
   private def sharedUnderCap(ka: Array[Long], kb: Array[Long], limit: Int,
@@ -254,7 +248,7 @@ object Dedup {
     false
   }
 
-  private def lshPair(idA: Long, sigA: ArrayData, idB: Long, sigB: ArrayData): LshPair =
+  private def lshPair(idA: Long, sigA: Array[Long], idB: Long, sigB: Array[Long]): LshPair =
     LshPair(idA, idB,
       if (sigA == null || sigB == null) None
       else Some(graft.functions.Sketch.sigMatchCount(sigA, sigB)))
@@ -264,21 +258,47 @@ object Dedup {
     * the cap or under 2 members emits nothing. Every member pair with
     * `id_a < id_b` (equal ids never pair) is estimated and emitted
     * unless the two already share an under-cap bucket of a lower band,
-    * so over all buckets each pair comes out exactly once. */
+    * so over all buckets each pair comes out exactly once. Band keys
+    * come from [[graft.functions.Sketch.bandKeys]], the definition the
+    * band exchange uses, so a 64-bit key collision behaves as it does
+    * there; only the `band` keys below this bucket's band are computed.
+    * Pairs stream in (i, j) member order. */
   private[operators] def lshBucketPairs(band: Int, members: Iterator[LshMember],
-      maxBucket: Long, bands: Int, rows: Int,
-      overCap: Set[(Int, Long)]): Iterator[LshPair] = {
+      maxBucket: Long, rows: Int, overCap: Set[(Int, Long)]): Iterator[LshPair] = {
     val ms = scala.collection.mutable.ArrayBuffer.empty[LshMember]
     while (members.hasNext && ms.size <= maxBucket) ms += members.next()
-    if (ms.size < 2 || ms.size > maxBucket) return Iterator.empty
-    val sigs = ms.map(sigData)
-    val keys = sigs.map(keysOf(_, bands, rows))
-    Iterator.range(0, ms.size).flatMap { i =>
-      Iterator.range(i + 1, ms.size).flatMap { j =>
-        val (a, b) = if (ms(i).id < ms(j).id) (i, j) else (j, i)
-        if (ms(a).id == ms(b).id || sharedUnderCap(keys(a), keys(b), band, overCap))
-          Iterator.empty
-        else Iterator.single(lshPair(ms(a).id, sigs(a), ms(b).id, sigs(b)))
+    val n = ms.size
+    if (n < 2 || n > maxBucket) return Iterator.empty
+    val ids = new Array[Long](n)
+    val sigs = new Array[Array[Long]](n)
+    var k = 0
+    while (k < n) { ids(k) = ms(k).id; sigs(k) = ms(k).sig; k += 1 }
+    val keys =
+      if (band == 0) null
+      else {
+        val ks = new Array[Array[Long]](n)
+        k = 0
+        while (k < n) { ks(k) = graft.functions.Sketch.bandKeys(sigs(k), band, rows); k += 1 }
+        ks
+      }
+    new PairStream {
+      private var i = 0
+      private var j = 1
+      protected def advance(): LshPair = {
+        while (i < n - 1) {
+          while (j < n) {
+            val c = j
+            j += 1
+            val a = if (ids(i) < ids(c)) i else c
+            val b = i + c - a
+            if (ids(a) != ids(b) &&
+                (keys == null || !sharedUnderCap(keys(a), keys(b), band, overCap)))
+              return lshPair(ids(a), sigs(a), ids(b), sigs(b))
+          }
+          i += 1
+          j = i + 1
+        }
+        null
       }
     }
   }
@@ -292,15 +312,37 @@ object Dedup {
     if (!members.hasNext) Iterator.empty
     else {
       val keeper = members.next()
-      val kSig = sigData(keeper)
-      val kKeys = keysOf(kSig, bands, rows)
-      members.filter(_.id != keeper.id).flatMap { m =>
-        val mSig = sigData(m)
-        if (sharedUnderCap(kKeys, keysOf(mSig, bands, rows), bands, overCap))
-          Iterator.empty
-        else Iterator.single(lshPair(keeper.id, kSig, m.id, mSig))
+      val kKeys = graft.functions.Sketch.bandKeys(keeper.sig, bands, rows)
+      new PairStream {
+        protected def advance(): LshPair = {
+          while (members.hasNext) {
+            val m = members.next()
+            if (m.id != keeper.id && !sharedUnderCap(kKeys,
+                graft.functions.Sketch.bandKeys(m.sig, bands, rows), bands, overCap))
+              return lshPair(keeper.id, keeper.sig, m.id, m.sig)
+          }
+          null
+        }
       }
     }
+
+  /** An iterator over the pairs `advance` finds, one look-ahead, null
+    * at the end. */
+  private abstract class PairStream extends Iterator[LshPair] {
+    protected def advance(): LshPair
+    private var ahead: LshPair = _
+    private var started = false
+    def hasNext: Boolean = {
+      if (!started) { ahead = advance(); started = true }
+      ahead != null
+    }
+    def next(): LshPair = {
+      if (!hasNext) throw new NoSuchElementException("no more pairs")
+      val p = ahead
+      ahead = advance()
+      p
+    }
+  }
 
   /** MinHash signature table (id, sig) — the PERSISTABLE form of the
     * fuzzy-dedup index: compute once per corpus snapshot, store as
@@ -1414,8 +1456,10 @@ object Dedup {
     * On a cluster with shaky executors, swap in reliable
     * `checkpoint()` + a checkpoint dir — same loop, durable truncation.
     *
-    * Returns `(node, component)` for every node with at least one edge;
-    * `component` is the minimum node id of the component.
+    * Returns `(node, component)` for every node with at least one edge
+    * whose endpoints are both non-null; `component` is the minimum node
+    * id of the component. An edge with a null endpoint is dropped before
+    * either path, so the two agree on it.
     *
     * Small-graph fast path (round 16): an edge set at or under
     * `localThreshold` RAW rows (directed, duplicates included — the
@@ -1448,6 +1492,15 @@ object Dedup {
     * duplicate-insensitive), dropping the distinct exchange and the
     * second checkpoint outright (guide §2.4). Labels are unchanged on
     * both paths.
+    *
+    * The raw edge checkpoint is stored `MEMORY_AND_DISK_SER`: it is read
+    * once by the bounded collect and, over the threshold, once more to
+    * build the undirected table, so storing it as bytes costs one
+    * deserialization per read, while deserialized rows were sized by
+    * `SizeEstimator` walking them as they were stored, about a third of
+    * the stage that builds it on `corpus_dedup`. The label rounds keep
+    * the default level. The local path's union-find
+    * ([[componentLabels]]) runs over sorted primitive ids.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b", maxIter: Int = 25,
@@ -1456,9 +1509,13 @@ object Dedup {
     // blocks are retired as soon as round N+1 is materialized and the
     // convergence probe has read them — before round 8 the loop leaked
     // one label-table's worth of storage per iteration per invocation
+    // an edge with a null endpoint joins nothing, on either path; the
+    // raw edges are stored serialized (see the scaladoc)
     val (edgesCp, releaseEdges) =
       graft.CacheRegistry.localCheckpointWithRelease(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+          .filter(col("src").isNotNull && col("dst").isNotNull),
+        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     // one bounded collect is both the size test and the local path's
     // input: at most localThreshold + 1 edges come back (an array holds
     // under 2^31 of them, so a larger threshold bounds nothing more)
@@ -1678,31 +1735,52 @@ object Dedup {
   private def localConnectedComponents(spark: org.apache.spark.sql.SparkSession,
       pairs: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x0: Long): Long = {
+    val (nodes, comps) = componentLabels(pairs.map(_._1), pairs.map(_._2))
+    Seq.tabulate(nodes.length)(i => (nodes(i), comps(i))).toDF("node", "comp")
+  }
+
+  /** Min-id component labels of the graph whose edges are
+    * `(src(e), dst(e))`: every endpoint once, in ascending id order, and
+    * its component's minimum id. Union-find runs over each endpoint's
+    * index in the sorted id array, uniting by the smaller index, so a
+    * root is always its component's smallest id. Direction, duplicate
+    * edges and self-loops change nothing. */
+  private[operators] def componentLabels(src: Array[Long],
+      dst: Array[Long]): (Array[Long], Array[Long]) = {
+    val m = src.length
+    val all = new Array[Long](2 * m)
+    System.arraycopy(src, 0, all, 0, m)
+    System.arraycopy(dst, 0, all, m, m)
+    java.util.Arrays.sort(all)
+    var k = 0
+    var i = 0
+    while (i < all.length) {
+      if (k == 0 || all(i) != all(k - 1)) { all(k) = all(i); k += 1 }
+      i += 1
+    }
+    val nodes = java.util.Arrays.copyOf(all, k)
+    val parent = new Array[Int](k)
+    i = 0
+    while (i < k) { parent(i) = i; i += 1 }
+    def find(x0: Int): Int = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { x = p; p = parent.getOrDefault(x, x) }
+      while (parent(x) != x) x = parent(x)
       // path compression
       var y = x0
-      while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
+      while (y != x) { val up = parent(y); parent(y) = x; y = up }
       x
     }
-    pairs.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      // union by MIN id so the root IS the component label
-      if (ra != rb) {
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-      if (!parent.containsKey(a)) parent.put(a, find(a))
-      if (!parent.containsKey(b)) parent.put(b, find(b))
+    var e = 0
+    while (e < m) {
+      val ra = find(java.util.Arrays.binarySearch(nodes, src(e)))
+      val rb = find(java.util.Arrays.binarySearch(nodes, dst(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 1
     }
-    val nodes = new java.util.TreeSet[java.lang.Long]()
-    pairs.foreach { case (a, b) => nodes.add(a); nodes.add(b) }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-    val it = nodes.iterator()
-    while (it.hasNext) { val n = it.next().longValue; out += ((n, find(n))) }
-    out.toSeq.toDF("node", "comp")
+    val comps = new Array[Long](k)
+    i = 0
+    while (i < k) { comps(i) = nodes(find(i)); i += 1 }
+    (nodes, comps)
   }
 
   // ------------------------------ label index (slotted state)

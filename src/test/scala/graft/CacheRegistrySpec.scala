@@ -211,9 +211,43 @@ class CacheRegistrySpec extends SparkSuite {
     assert(persistentCount == base + 1, spark.sparkContext.getPersistentRDDs)
     Graft.releaseCaches(spark)
     assert(persistentCount == base)
-    // the fast path: same answer, zero persistent storage
-    val local = operators.Dedup.connectedComponents(edges)
-    assert(local.agg(countDistinct("comp")).head.getLong(0) == 1L)
-    assert(persistentCount == base, spark.sparkContext.getPersistentRDDs)
+    // the fast path: same answer, and its edge checkpoint, stored
+    // serialized, is gone by the time the labels come back
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.storage.StorageLevel]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.foreach(r => levels.add(r.storageLevel))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val local = operators.Dedup.connectedComponents(edges)
+      assert(persistentCount == base, spark.sparkContext.getPersistentRDDs)
+      assert(local.agg(countDistinct("comp")).head.getLong(0) == 1L)
+      Graft.releaseCaches(spark)
+      assert(persistentCount == base, spark.sparkContext.getPersistentRDDs)
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds)) {
+        assert(levels.contains(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), levels)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("localCheckpointWithRelease stores at the level it is given") {
+    import spark.implicits._
+    Graft.releaseCaches(spark, includeShared = true)
+    val base = persistentCount
+    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val (ck, release) = CacheRegistry.localCheckpointWithRelease(
+      (1 to 40).toDF("n"), Some(ser))
+    val levels = spark.sparkContext.getPersistentRDDs.values
+      .map(_.getStorageLevel).toSeq
+    assert(persistentCount == base + 1 && levels.contains(ser), levels)
+    assert(ck.agg(sum("n")).head.getLong(0) == 820L)
+    release()
+    assert(persistentCount == base)
   }
 }

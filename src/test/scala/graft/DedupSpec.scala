@@ -628,6 +628,24 @@ class DedupSpec extends SparkSuite {
       assert(got.count(p => (p._1, p._2) == pair) == 1, pair))
   }
 
+  test("minHashLshPairs at the cap boundary: maxBucket and maxBucket + 1 " +
+      "identical texts equal the driver reference; the + 1 corpus keeps " +
+      "its keeper stars") {
+    val text = "one two three four five six seven eight nine ten"
+    val maxBucket = 6L
+    def corpus(n: Long) = (1L to n).map(i => (i, text))
+    // at the cap every bucket holds maxBucket members: all pairs banded
+    val at = lshRows(Dedup.minHashLshPairs(corpus(maxBucket).toDF("doc_id", "text"),
+      minEstJaccard = 0.0, maxBucket = maxBucket))
+    assert(at == lshReference(corpus(maxBucket), maxBucket, 0.0))
+    assert(at.size == 15 && at.forall(_._3 == 1.0), at)
+    // one over: every bucket is over the cap, so only the stars remain
+    val over = lshRows(Dedup.minHashLshPairs(corpus(maxBucket + 1).toDF("doc_id", "text"),
+      minEstJaccard = 0.0, maxBucket = maxBucket))
+    assert(over == lshReference(corpus(maxBucket + 1), maxBucket, 0.0))
+    assert(over == (2L to maxBucket + 1).map(b => (1L, b, 1.0)), over)
+  }
+
   test("minHashLshPairs: null texts and null ids never pair, capped or not") {
     val base = "one two three four five six seven eight nine ten"
     val docs = Seq[(java.lang.Long, String)]((1L, base), (2L, base),
@@ -1477,6 +1495,18 @@ class DedupSpec extends SparkSuite {
     local.groupBy(_._2).foreach { case (comp, members) =>
       assert(members.map(_._1).min == comp)
     }
+  }
+
+  test("connectedComponents drops edges with a null endpoint on both paths") {
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L),
+      (5L, null), (7L, 8L)).toDF("doc_id_a", "doc_id_b")
+    val want = Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L))
+    Seq(Dedup.localCcMaxEdges, 0L).foreach { threshold =>
+      val got = Dedup.connectedComponents(edges, localThreshold = threshold)
+        .as[(Long, Long)].collect().toSeq.sorted
+      assert(got == want, s"localThreshold $threshold")
+    }
+    CacheRegistry.release(spark)
   }
 
   test("nearDeduplicate: keeps exactly each cluster's min-id member") {

@@ -2,7 +2,8 @@
 """Alternating A/B of the repository benchmark between two revisions.
 
     python3 tools/perf_ab.py --parent REV --change REV --workload W \\
-        --pairs N --seed0 S [--seconds 30] [--work DIR] [--raw FILE]
+        --pairs N --seed0 S [--seconds 30] [--work DIR] [--raw FILE] \\
+        [--traced]
 
 Each revision is exported with `git archive` into its own directory under
 --work (a fresh temporary directory by default), so both sides build and
@@ -20,7 +21,16 @@ route, so a per-document change shows which routes moved; then the
 failed-operation counts and whether every run printed "check: all
 output checks passed". --raw writes one JSON line per run. Exits 1 if
 a run failed, had failed operations or did not pass its checks.
+
+--traced adds, after the pairs, one `--trace 1` run per side on seed 1
+(the seed whose dedup keepers and operator counts are recorded) and
+prints every per-layer metric of the two runs side by side: the Spark
+counts and gauges (`spark.jobs`, `spark.driver_gap_ms`, ...), the
+workload's operator counts and its span self times per pass
+(`operators.dedup.candidates_ms`, ...). The traced runs' checks count
+like the pairs'.
 """
+import re
 import argparse
 import json
 import os
@@ -32,6 +42,9 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CHECKS_PASSED = "check: all output checks passed"
 ROUTE_P50 = "note: per route p50 ms: "
+TRACE_TABLE = "trace: per-layer table"
+LAYER_ROW = re.compile(r"^(\S+)\s+(-?[0-9][0-9.E+-]*)\s+\S+$")
+TRACED_SEED = 1
 
 
 def export(rev, dest):
@@ -59,19 +72,40 @@ def route_p50(lines):
     return {}
 
 
-def run_once(copy, workload, seed, seconds):
+def traced_layers(lines, result):
+    """{metric: value} of a traced run: every row of the metric part of
+    its per-layer table, then any result-line metric the table lacks."""
+    layers = {}
+    in_table = in_metrics = False
+    for line in lines:
+        if line.startswith(TRACE_TABLE):
+            in_table = True
+        elif in_table and line.startswith("metric "):
+            in_metrics = True
+        elif in_metrics:
+            m = LAYER_ROW.match(line)
+            if not m:
+                break
+            layers[m.group(1)] = float(m.group(2))
+    for name, m in (result or {}).get("metrics", {}).items():
+        layers.setdefault(name, m["value"])
+    return layers
+
+
+def run_once(copy, workload, seed, seconds, trace=0):
     """One benchmark run in `copy`: (result dict or None, checks passed,
-    per-route p50 ms)."""
+    per-route p50 ms, output lines)."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace",
+         str(trace)],
         cwd=copy, stdout=subprocess.PIPE, stdin=subprocess.DEVNULL, text=True)
     lines = p.stdout.rstrip("\n").split("\n")
     try:
         result = json.loads(lines[-1]) if p.returncode == 0 else None
     except ValueError:
         result = None
-    return result, CHECKS_PASSED in lines, route_p50(lines)
+    return result, CHECKS_PASSED in lines, route_p50(lines), lines
 
 
 def quartiles(xs):
@@ -102,6 +136,9 @@ def main():
     ap.add_argument("--seconds", type=int, default=30)
     ap.add_argument("--work", help="directory for the two exported copies")
     ap.add_argument("--raw", help="write one JSON line per run here")
+    ap.add_argument("--traced", action="store_true",
+                    help="after the pairs, one traced run per side on "
+                         f"seed {TRACED_SEED}, per-layer metrics side by side")
     a = ap.parse_args()
 
     work = a.work or tempfile.mkdtemp(prefix="perf_ab-")
@@ -119,8 +156,8 @@ def main():
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            result, passed, p50 = run_once(sides[side], a.workload, seed,
-                                           a.seconds)
+            result, passed, p50, _ = run_once(sides[side], a.workload,
+                                              seed, a.seconds)
             runs[side].append((result, passed))
             routes[side].append(p50)
             summary = (" ".join(f"{k} {fmt(m['value'])}"
@@ -132,6 +169,22 @@ def main():
                 raw.write(json.dumps({"pair": i, "seed": seed, "side": side,
                                       "checks_passed": passed,
                                       "result": result}) + "\n")
+                raw.flush()
+    traced = {}
+    if a.traced:
+        for side in ("parent", "change"):
+            result, passed, _, lines = run_once(
+                sides[side], a.workload, TRACED_SEED, a.seconds, trace=1)
+            runs[side].append((result, passed))
+            traced[side] = traced_layers(lines, result)
+            print(f"traced seed {TRACED_SEED} {side}: "
+                  f"{len(traced[side])} per-layer metrics"
+                  f"{'' if passed else ' (checks NOT passed)'}", flush=True)
+            if raw:
+                raw.write(json.dumps({"traced": True, "seed": TRACED_SEED,
+                                      "side": side, "checks_passed": passed,
+                                      "result": result,
+                                      "layers": traced[side]}) + "\n")
                 raw.flush()
     if raw:
         raw.close()
@@ -171,6 +224,17 @@ def main():
                 xs = [p50[r] for p50 in routes[side] if r in p50]
                 meds.append(fmt(statistics.median(xs)) if xs else "-")
             print(f"{side}: " + " | ".join(meds))
+
+    if traced:
+        print(f"\ntraced seed {TRACED_SEED}, per pass (one run per side)")
+        print("| metric | parent | change |")
+        print("|---|---|---|")
+        names = list(traced["parent"]) + [n for n in traced["change"]
+                                          if n not in traced["parent"]]
+        for name in names:
+            cells = [fmt(traced[side][name]) if name in traced[side] else "-"
+                     for side in ("parent", "change")]
+            print(f"| {name} | {cells[0]} | {cells[1]} |")
 
     bad = False
     for side in ("parent", "change"):
