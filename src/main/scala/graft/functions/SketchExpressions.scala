@@ -593,23 +593,24 @@ object Sketch {
 
   /** [[SigMatchCountExpr]] kernel: positions where both arrays hold
     * equal non-null longs; slots past the shorter array never match.
-    * Two null-free arrays go through the primitive form. */
-  def sigMatchCount(a: ArrayData, b: ArrayData): Int =
-    if (!hasNull(a) && !hasNull(b)) sigMatchCount(a.toLongArray(), b.toLongArray())
-    else {
-      val n = math.min(a.numElements(), b.numElements())
-      var cnt = 0
-      var i = 0
-      while (i < n) {
-        if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-          cnt += 1
-        i += 1
-      }
-      cnt
+    * It reads the arrays in place: on the SQL paths it runs once per
+    * candidate pair, where copying both signatures out would cost two
+    * allocations per pair. */
+  def sigMatchCount(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        cnt += 1
+      i += 1
     }
+    cnt
+  }
 
-  /** Positions where two signatures held as `Array[Long]` agree; slots
-    * past the shorter array never match. */
+  /** The `ArrayData` form's count for two signatures held as
+    * `Array[Long]`, which have no null elements; slots past the shorter
+    * array never match. */
   def sigMatchCount(a: Array[Long], b: Array[Long]): Int = {
     val n = math.min(a.length, b.length)
     var cnt = 0
