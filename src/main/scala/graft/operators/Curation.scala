@@ -657,14 +657,10 @@ object Curation {
       .select(col("did"))
     // component label per delivery doc (own id when unpaired); a
     // component touching a stored survivor drops whole. Delivery edge
-    // lists are delta-scale: under the driver-safe gate the fold is
-    // one in-memory union-find instead of the iterative distributed
-    // loop (the q53b discipline)
-    val withinP = graft.CacheRegistry.persist(within)
-    val comps =
-      if (withinP.count() <= Dedup.localCcMaxEdges)
-        Dedup.localConnectedComponents(withinP)
-      else Dedup.connectedComponents(withinP)
+    // lists are delta-scale: under connectedComponents' driver-safe
+    // threshold the fold is one in-memory union-find instead of the
+    // iterative distributed loop (the q53b discipline)
+    val comps = Dedup.connectedComponents(within)
     val labeled = s3.select(col(idCol).as("did"))
       .join(comps.withColumnRenamed("node", "did"), Seq("did"), "left")
       .select(col("did"), coalesce(col("comp"), col("did")).as("comp"))

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Large-scale deduplication operators over a document corpus.
   *
@@ -121,8 +123,9 @@ object Dedup {
     * rows that share an under-cap bucket.
     *
     * With a finite `maxBucket` (the scale path) candidates are verified
-    * where the band exchange puts them: ONE exchange on (band, bkey)
-    * carries each doc's id AND signature, and a bucket-local kernel
+    * where the band exchange puts them: ONE exchange on (bkey, band)
+    * (the band key first, so it is the bucket sort's prefix) carries
+    * each doc's id AND signature, and a bucket-local kernel
     * ([[lshBucketPairs]]) estimates every member pair and emits it only
     * from the FIRST band where the two share an under-cap bucket — so
     * each pair comes out once with no pair `distinct` and no signature
@@ -196,11 +199,15 @@ object Dedup {
           .filter(col("bn") > maxBucket).select("band", "bkey")
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
       val rows = numHashes / bands
-      val inBuckets = banded.groupBy(col("band"), col("bkey"))
-        .as[(Int, Long), LshMember](
-          Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong), MemberEnc)
+      // bkey first: the bucket sort's 8-byte prefix is then the 64-bit
+      // band key, which almost always decides a comparison on its own;
+      // with `band` first it holds one of `bands` values, and nearly
+      // every comparison falls through to the full row comparator
+      val inBuckets = banded.groupBy(col("bkey"), col("band"))
+        .as[(Long, Int), LshMember](
+          Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt), MemberEnc)
         .flatMapGroups { (key, members) =>
-          lshBucketPairs(key._1, members, maxBucket, rows, overCap)
+          lshBucketPairs(key._2, members, maxBucket, rows, overCap)
         }(PairEnc)
       val pairs =
         if (overCap.isEmpty) inBuckets
@@ -1461,92 +1468,96 @@ object Dedup {
     * id of the component. An edge with a null endpoint is dropped before
     * either path, so the two agree on it.
     *
-    * Small-graph fast path (round 16): an edge set at or under
+    * Small-graph fast path (round 16): an edge set of at most
     * `localThreshold` RAW rows (directed, duplicates included — the
-    * gate reads the caller's edge list as delivered, so a
+    * gate counts the caller's edge list as delivered, so a
     * duplicate-heavy list whose deduplicated size is under the
     * threshold but raw size is over it takes the distributed path; a
     * deliberate trade — counting deduplicated edges first would cost
     * the distinct exchange on exactly the small graphs the fast path
-    * exists to spare) runs [[localConnectedComponents]]
-    * (the driver union-find [[connectedComponentsDelta]] already uses
-    * for contracted graphs) — identical labels (comp = min member id),
-    * microseconds instead of 2+ distributed rounds whose fixed cost
-    * (checkpoint job + convergence probe + codegen per round)
-    * dominates any small graph. This is the common case for df-pruned
-    * near-dup graphs at bench scale; a 100 TB batch edge set exceeds
-    * the threshold and takes the distributed pointer-jumping loop
-    * unchanged.
+    * exists to spare) is labeled on the driver by union-find
+    * ([[componentLabels]], over sorted primitive ids) — identical
+    * labels (comp = min member id), microseconds instead of 2+
+    * distributed rounds whose fixed cost (checkpoint job + convergence
+    * probe + codegen per round) dominates any small graph. This is the
+    * common case for df-pruned near-dup graphs at bench scale; a
+    * 100 TB batch edge set exceeds the threshold and takes the
+    * distributed pointer-jumping loop unchanged. The fast path returns
+    * non-null bigint `node`/`comp`; the distributed path returns the
+    * input's id types. Ids must be of an integral type.
     *
-    * Optimization round r16: the RAW edge list is checkpointed FIRST,
-    * and one bounded `limit(localThreshold + 1).collect()` of it is
-    * both the size test and the small path's input (no separate
-    * count job); the undirected/deduplicated table is built
-    * only on the distributed path — from the checkpoint leaf, not the
-    * caller's plan. Before, `edges ∪ swap(edges) distinct` embedded
-    * the (often expensive — a df-pruned Jaccard self-join) edge plan
-    * TWICE and paid a second full-width materialization; with AQE
-    * each of its shuffle stages is a separate job whose re-planning
-    * walks that doubled tree. The small path now collects the raw
-    * checkpointed edges directly (union-find is direction- and
-    * duplicate-insensitive), dropping the distinct exchange and the
-    * second checkpoint outright (guide §2.4). Labels are unchanged on
-    * both paths.
-    *
-    * The raw edge checkpoint is stored `MEMORY_AND_DISK_SER`: it is read
-    * once by the bounded collect and, over the threshold, once more to
-    * build the undirected table, so storing it as bytes costs one
-    * deserialization per read, while deserialized rows were sized by
-    * `SizeEstimator` walking them as they were stored, about a third of
-    * the stage that builds it on `corpus_dedup`. The label rounds keep
-    * the default level. The local path's union-find
-    * ([[componentLabels]]) runs over sorted primitive ids.
+    * The edge plan runs in ONE job. Its rows become primitive chunks
+    * of at most [[ChunkEdges]] edges (`[src0, dst0, src1, dst1, …]`,
+    * [[edgeChunks]]), persisted `MEMORY_AND_DISK_SER` — long arrays
+    * store and load as bytes with no per-row object. Each partition
+    * returns its edge count, and its chunks too when the count is
+    * within its share ⌈(b + 1)/P⌉ of the bound b, so the job hands the
+    * driver at most b + P edges. At a total of at most b, union-find
+    * runs on the driver; the partitions that went over their share (a
+    * skewed edge plan) are read back from the chunk store in a second
+    * job. Over b, the distributed loop's edge table is read from the
+    * chunk store, ids cast back to the input's types. No path runs the
+    * edge plan twice, and the driver holds at most about b edges. (A
+    * bounded `limit(b + 1).collect()` of a row checkpoint runs as two
+    * jobs, one partition and then the rest, each deserializing rows.)
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b", maxIter: Int = 25,
       localThreshold: Long = localCcMaxEdges): DataFrame = {
+    val spark = edges.sparkSession
+    val srcType = edges.schema(srcCol).dataType
+    val dstType = edges.schema(dstCol).dataType
+    val toSrc = fromLong(srcType)
+    val toDst = fromLong(dstType)
+    // an edge with a null endpoint joins nothing, on either path
+    val chunks = edges
+      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
+      .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+      .queryExecution.toRdd.mapPartitions(edgeChunks)
+      .setName("connectedComponents edge chunks")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val releaseChunks = () => { chunks.unpersist(blocking = false); () }
+    // the local path holds the edges in arrays of under 2^31 longs
+    val bound = math.max(0L, math.min(localThreshold, Int.MaxValue / 2 - 1L))
+    val parts = math.max(1, chunks.getNumPartitions)
+    val share = (bound + parts) / parts
+    val heads = spark.sparkContext.runJob(chunks, headChunks(share) _)
+    val total = heads.iterator.map(_._1).sum
+    // empty edge set → empty label table, no loop: a clean corpus (or
+    // a clean delivery batch in the incremental funnel) should not pay
+    // label-propagation job rounds to learn there is nothing to label;
+    // limit(0) folds to an empty relation
+    if (total == 0L) {
+      releaseChunks()
+      return edges.select(col(srcCol).as("node"), col(srcCol).as("comp"))
+        .limit(0)
+    }
+    if (total <= bound) {
+      // raw directed edges suffice: union-find unions (a, b) exactly
+      // like the two (a→b, b→a) rows, and duplicates are no-ops
+      val over = heads.indices.filter(heads(_)._2 == null)
+      val rest =
+        if (over.isEmpty) Array.empty[Array[Array[Long]]]
+        else spark.sparkContext.runJob(chunks,
+          (it: Iterator[Array[Long]]) => it.toArray, over)
+      releaseChunks()
+      val (src, dst) = splitChunks(
+        heads.iterator.map(_._2).filter(_ != null) ++ rest.iterator, total.toInt)
+      val (nodes, comps) = componentLabels(src, dst)
+      return labelFrame(spark, nodes, comps)
+    }
+    val edgeTable = spark.createDataFrame(
+      chunks.mapPartitions(_.flatMap(c => Iterator.range(0, c.length, 2)
+        .map(i => org.apache.spark.sql.Row(toSrc(c(i)), toDst(c(i + 1)))))),
+      StructType(Seq(StructField("src", srcType, nullable = false),
+        StructField("dst", dstType, nullable = false))))
     // every checkpoint in the loop carries a release handle: round N's
     // blocks are retired as soon as round N+1 is materialized and the
     // convergence probe has read them — before round 8 the loop leaked
     // one label-table's worth of storage per iteration per invocation
-    // an edge with a null endpoint joins nothing, on either path; the
-    // raw edges are stored serialized (see the scaladoc)
-    val (edgesCp, releaseEdges) =
-      graft.CacheRegistry.localCheckpointWithRelease(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-          .filter(col("src").isNotNull && col("dst").isNotNull),
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    // one bounded collect is both the size test and the local path's
-    // input: at most localThreshold + 1 edges come back (an array holds
-    // under 2^31 of them, so a larger threshold bounds nothing more)
-    val bound = math.max(0L, math.min(localThreshold, Int.MaxValue - 2L)).toInt
-    val head = {
-      import edges.sparkSession.implicits._
-      edgesCp.select(col("src").cast("long"), col("dst").cast("long"))
-        .limit(bound + 1).as[(Long, Long)].collect()
-    }
-    // empty edge set → empty label table, no loop: a clean corpus (or
-    // a clean delivery batch in the incremental funnel) should not pay
-    // label-propagation job rounds to learn there is nothing to label
-    if (head.isEmpty) {
-      releaseEdges()
-      // derived from the caller's frame, not the released checkpoint
-      // (a released checkpoint cannot be re-actioned); limit(0) folds
-      // to an empty relation
-      return edges.select(col(srcCol).as("node"), col(srcCol).as("comp"))
-        .limit(0)
-    }
-    if (head.length <= localThreshold) {
-      // raw directed edges suffice: union-find unions (a, b) exactly
-      // like the two (a→b, b→a) rows, and duplicates are no-ops
-      val out = localConnectedComponents(edges.sparkSession, head)
-      releaseEdges()
-      return out
-    }
     val (und, releaseUnd) = graft.CacheRegistry.localCheckpointWithRelease(
-      edgesCp.union(edgesCp.select(col("dst"), col("src")))
-        .distinct())
-    releaseEdges() // und is materialized; the raw edge blocks are done
+      edgeTable.union(edgeTable.select(col("dst"), col("src"))).distinct())
+    releaseChunks() // und is materialized; the chunk store is done
     var (labels, releaseLabels) =
       graft.CacheRegistry.localCheckpointWithRelease(
         und.select(col("src").as("node")).distinct()
@@ -1582,6 +1593,83 @@ object Dedup {
     // until the caller's Graft.releaseCaches
     graft.CacheRegistry.registerRelease(edges.sparkSession)(releaseLabels)
     labels
+  }
+
+  /** Most edges in one [[connectedComponents]] chunk: 1 MB of longs. */
+  private final val ChunkEdges = 1 << 16
+
+  /** Long id → the value of an integral column of type `t`. */
+  private def fromLong(t: DataType): Long => Any = t match {
+    case LongType => identity
+    case IntegerType => _.toInt
+    case ShortType => _.toShort
+    case ByteType => _.toByte
+    case other => throw new IllegalArgumentException(
+      s"connectedComponents needs integral ids, got $other")
+  }
+
+  /** Rows of two non-null longs → chunks of at most [[ChunkEdges]]
+    * edges, each `[src0, dst0, src1, dst1, …]`. */
+  private def edgeChunks(rows: Iterator[InternalRow]): Iterator[Array[Long]] =
+    new Iterator[Array[Long]] {
+      private var buf = new Array[Long](1024)
+      def hasNext: Boolean = rows.hasNext
+      def next(): Array[Long] = {
+        var k = 0
+        while (k < 2 * ChunkEdges && rows.hasNext) {
+          val r = rows.next()
+          if (k == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * k)
+          buf(k) = r.getLong(0)
+          buf(k + 1) = r.getLong(1)
+          k += 2
+        }
+        java.util.Arrays.copyOf(buf, k)
+      }
+    }
+
+  /** One partition's edge count, with its chunks when the count is at
+    * most `share` (null otherwise): reads every chunk, keeps at most
+    * `share` edges. */
+  private def headChunks(share: Long)(
+      chunks: Iterator[Array[Long]]): (Long, Array[Array[Long]]) = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    var n = 0L
+    while (chunks.hasNext) {
+      val c = chunks.next()
+      n += c.length / 2
+      if (n <= share) kept += c else kept.clear()
+    }
+    (n, if (n <= share) kept.toArray else null)
+  }
+
+  /** The `m` edges of `parts`' chunks as `(src, dst)` arrays. */
+  private def splitChunks(parts: Iterator[Array[Array[Long]]],
+      m: Int): (Array[Long], Array[Long]) = {
+    val src = new Array[Long](m)
+    val dst = new Array[Long](m)
+    var e = 0
+    parts.foreach(_.foreach { c =>
+      var i = 0
+      while (i < c.length) { src(e) = c(i); dst(e) = c(i + 1); e += 1; i += 2 }
+    })
+    (src, dst)
+  }
+
+  private val LabelSchema = StructType(Seq(
+    StructField("node", LongType, nullable = false),
+    StructField("comp", LongType, nullable = false)))
+
+  /** The `(node, comp)` frame of [[componentLabels]]' arrays, built
+    * from rows against [[LabelSchema]] — no encoder is derived. */
+  private def labelFrame(spark: org.apache.spark.sql.SparkSession,
+      nodes: Array[Long], comps: Array[Long]): DataFrame = {
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.length)
+    var i = 0
+    while (i < nodes.length) {
+      rows.add(org.apache.spark.sql.Row(nodes(i), comps(i)))
+      i += 1
+    }
+    spark.createDataFrame(rows, LabelSchema)
   }
 
   /** Incremental connected components — the consumer-side maintenance
@@ -1678,19 +1766,14 @@ object Dedup {
       .select(col("ca").as("doc_id_a"), col("cb").as("doc_id_b"))
     // delta-scale CC: nodes are old component labels + new doc ids.
     // The contracted graph is DELTA-bounded (≤ one edge per delivered
-    // pair), so below a driver-safe threshold it is solved as one
-    // in-memory union-find instead of the iterative distributed loop —
-    // the loop's per-round job+checkpoint floor (~6 small jobs per
-    // delivery) was most of q53b's fixed cost at toy scale, and a
-    // collect of ≤ `localCcMaxEdges` (id, id) pairs is a few MB. Over
-    // the threshold (a genuinely huge delivery) the distributed loop
-    // stands. Outputs are identical: min-member-id labels either way.
-    val contractedP = graft.CacheRegistry.persist(contracted)
-    val nContracted = contractedP.count()
+    // pair), so it is almost always under connectedComponents' local
+    // threshold and solved as one in-memory union-find instead of the
+    // iterative distributed loop — the loop's per-round job+checkpoint
+    // floor (~6 small jobs per delivery) was most of q53b's fixed cost
+    // at toy scale. Outputs are identical: min-member-id labels either
+    // way.
     val merged = graft.CacheRegistry.persist(
-      if (nContracted <= localCcMaxEdges)
-        localConnectedComponents(contractedP)
-      else connectedComponents(contractedP, maxIter = maxIter))
+      connectedComponents(contracted, maxIter = maxIter))
     // remap rows only for STORED labels: a new node's own entry in
     // `merged` is its label assignment, not a component merge — no
     // stored row can carry a new node id as its comp, so keeping such
@@ -1714,30 +1797,12 @@ object Dedup {
     (remap, newLabels)
   }
 
-  /** Edge-count ceiling for the driver-local union-find fast path of
-    * [[connectedComponentsDelta]] — 4M (id, id) edges ≈ 64 MB
-    * collected, far under driver headroom, far over any sane
-    * delivery. */
+  /** Edge-count ceiling for [[connectedComponents]]' driver-local
+    * union-find — 4M edges arrive as 64 MB of primitive chunks (16
+    * bytes an edge; the boxed `(Long, Long)` tuples collected before
+    * took about 60), and union-find over them holds a few times that
+    * at most: far under driver headroom, far over any sane delivery. */
   private[graft] val localCcMaxEdges = 4000000L
-
-  /** Driver-local connected components: collect a (small) edge list,
-    * union-find with min-id labels, return the same `(node, comp)`
-    * frame [[connectedComponents]] produces. ONLY for delta-scale
-    * graphs behind [[localCcMaxEdges]] — the caller guards. */
-  private[graft] def localConnectedComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    localConnectedComponents(spark, edges.select(col("doc_id_a").cast("long"),
-      col("doc_id_b").cast("long")).as[(Long, Long)].collect())
-  }
-
-  /** [[localConnectedComponents]] over already collected pairs. */
-  private def localConnectedComponents(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val (nodes, comps) = componentLabels(pairs.map(_._1), pairs.map(_._2))
-    Seq.tabulate(nodes.length)(i => (nodes(i), comps(i))).toDF("node", "comp")
-  }
 
   /** Min-id component labels of the graph whose edges are
     * `(src(e), dst(e))`: every endpoint once, in ascending id order, and
@@ -1745,7 +1810,7 @@ object Dedup {
     * index in the sorted id array, uniting by the smaller index, so a
     * root is always its component's smallest id. Direction, duplicate
     * edges and self-loops change nothing. */
-  private[operators] def componentLabels(src: Array[Long],
+  private[graft] def componentLabels(src: Array[Long],
       dst: Array[Long]): (Array[Long], Array[Long]) = {
     val m = src.length
     val all = new Array[Long](2 * m)

@@ -1509,6 +1509,88 @@ class DedupSpec extends SparkSuite {
     CacheRegistry.release(spark)
   }
 
+  /** `componentLabels` over the collected edges of `edges`, as rows. */
+  private def labelsOf(edges: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
+    val rows = edges.filter(col("doc_id_a").isNotNull && col("doc_id_b").isNotNull)
+      .select(col("doc_id_a").cast("long"), col("doc_id_b").cast("long"))
+      .as[(Long, Long)].collect()
+    val (ns, cs) = Dedup.componentLabels(rows.map(_._1), rows.map(_._2))
+    ns.toSeq.zip(cs.toSeq)
+  }
+
+  /** `edges` with its source column counted by `seen` once per row
+    * each time the plan runs. */
+  private def counted(edges: org.apache.spark.sql.DataFrame,
+      seen: org.apache.spark.util.LongAccumulator): org.apache.spark.sql.DataFrame = {
+    val t = edges.schema("doc_id_a").dataType
+    val tap = udf((x: Long) => { seen.add(1L); x }).asNondeterministic()
+    edges.select(tap(col("doc_id_a").cast("long")).cast(t).as("doc_id_a"),
+      col("doc_id_b"))
+  }
+
+  test("connectedComponents reads back only the partitions over their " +
+      "share of the local threshold, and runs the edge plan once") {
+    val rnd = new scala.util.Random(7)
+    val raw = (0 until 400).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .toDF("doc_id_a", "doc_id_b")
+    // every edge in one of four partitions: 400 edges against a share
+    // of ⌈1001 / 4⌉ = 251, while the total stays under 1000
+    val skewed = raw.repartition(4, lit(0))
+    val seen = spark.sparkContext.longAccumulator("edge rows")
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        tasks.add(e.stageInfos.maxBy(_.stageId).numTasks); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val labels = Dedup.connectedComponents(counted(skewed, seen),
+        localThreshold = 1000L).as[(Long, Long)].collect().toSeq
+      // the count job reads all four partitions; the read-back job only
+      // the one over its share
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds)) {
+        assert(tasks.toArray.toSeq.takeRight(2) == Seq(4, 1), tasks)
+      }
+      labels
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(got == labelsOf(raw) && got.nonEmpty)
+    assert(seen.value == 400L, "the edge plan ran more than once")
+    CacheRegistry.release(spark)
+  }
+
+  test("connectedComponents' distributed path reads its edges from the " +
+      "chunk store, in the input's id types") {
+    val edges = Seq((3, 1), (1, 2), (5, 6), (7, 6), (9, 9), (2, 3), (-4, 10))
+      .toDF("doc_id_a", "doc_id_b")
+    val seen = spark.sparkContext.longAccumulator("edge rows")
+    val got = Dedup.connectedComponents(counted(edges, seen), localThreshold = 1L)
+    import org.apache.spark.sql.types._
+    assert(got.schema == StructType(Seq(
+      StructField("node", IntegerType, nullable = false),
+      StructField("comp", IntegerType, nullable = true))), got.schema)
+    val rows = got.as[(Int, Int)].collect().toSeq.sorted
+    assert(rows.map { case (n, c) => (n.toLong, c.toLong) } == labelsOf(edges))
+    assert(seen.value == 7L, "the edge plan ran more than once")
+    CacheRegistry.release(spark)
+  }
+
+  test("connectedComponents of an empty or all-null edge set is empty on " +
+      "both paths") {
+    val empty = Seq.empty[(Long, Long)].toDF("doc_id_a", "doc_id_b")
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((null, 1L), (2L, null),
+      (null, null)).toDF("doc_id_a", "doc_id_b")
+    val base = spark.sparkContext.getPersistentRDDs.size
+    for (edges <- Seq(empty, nulls); threshold <- Seq(Dedup.localCcMaxEdges, 0L)) {
+      val got = Dedup.connectedComponents(edges, localThreshold = threshold)
+        .as[(Long, Long)].collect().toSeq
+      assert(got.isEmpty && labelsOf(edges).isEmpty, s"localThreshold $threshold")
+      assert(spark.sparkContext.getPersistentRDDs.size == base)
+    }
+  }
+
   test("nearDeduplicate: keeps exactly each cluster's min-id member") {
     val docs = Tables(spark, sf("0.001")).documents
     val kept = Dedup.nearDeduplicate(docs)

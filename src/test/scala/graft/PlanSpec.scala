@@ -451,9 +451,9 @@ class PlanSpec extends SparkSuite {
     val lines = p.linesIterator.toIndexedSeq
     val exchanges = lines.filter(_.contains("Exchange"))
     assert(exchanges.size == 1 &&
-      exchanges.head.contains("hashpartitioning(band#") &&
-      exchanges.head.contains("bkey#"),
-      s"expected exactly ONE (band, bkey) exchange:\n$p")
+      exchanges.head.contains("hashpartitioning(bkey#") &&
+      exchanges.head.contains("band#"),
+      s"expected exactly ONE (bkey, band) exchange:\n$p")
     val mapGroups = lines.indexWhere(_.contains("MapGroups"))
     assert(mapGroups >= 0 && mapGroups < lines.indexWhere(_.contains("Exchange")),
       s"expected the bucket kernel above the band exchange:\n$p")

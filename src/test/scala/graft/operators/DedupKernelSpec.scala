@@ -107,7 +107,7 @@ class DedupKernelSpec extends AnyFunSuite {
         }
       }
 
-    /** `Dedup.localConnectedComponents` on a boxed `HashMap` parent
+    /** The driver union-find before `Dedup.componentLabels`: a boxed `HashMap` parent
       * table and a `TreeSet` of nodes, as rows in output order. */
     def components(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
       val parent = new java.util.HashMap[Long, Long]()
