@@ -7,12 +7,38 @@ import org.apache.spark.sql.SparkSession
   * sink (count() would let Catalyst prune sorts/projections and
   * under-measure). One warm-up pass amortizes parquet footer reads and
   * codegen compilation out of the reported numbers; prints the single
-  * JSON line the driver expects, then (r17) mirrors that line to a
-  * sidecar file and prints a compact totals-only line — redundant
-  * channels for consumers that keep only a tail of stdout (the full
-  * 176-entry line outgrows a 2000-char tail).
+  * JSON line the driver expects, then the same per-query medians again
+  * as `queries_part` lines of at most [[PartChars]] chars each, mirrors
+  * the full line to a sidecar file and prints a compact totals-only
+  * line — redundant channels for consumers that keep only a tail of
+  * stdout (the full 176-entry line outgrows a 2000-char tail).
   */
 object Bench {
+  /** The longest `queries_part` line. */
+  val PartChars = 1500
+
+  /** `{"metric":"queries_part",...}` lines that together carry every
+    * `"name":seconds` entry of `medians` in order, each line at most
+    * `maxChars` chars (an entry too long for one line alone still gets
+    * a line of its own); `part` counts from 1 to `parts`. No entries,
+    * no lines. */
+  def queryParts(medians: Seq[(String, Double)], maxChars: Int = PartChars): Seq[String] = {
+    // the line around the entries, with room for part numbers of up
+    // to 6 digits
+    val room = maxChars -
+      """{"metric":"queries_part","part":000000,"parts":000000,"queries":{}}""".length
+    val groups = scala.collection.mutable.ArrayBuffer.empty[StringBuilder]
+    medians.foreach { case (k, v) =>
+      val e = "\"" + k + "\":" + f"$v%.3f"
+      if (groups.isEmpty || groups.last.length + 1 + e.length > room)
+        groups += new StringBuilder(e)
+      else groups.last.append(',').append(e)
+    }
+    groups.toSeq.zipWithIndex.map { case (g, i) =>
+      s"""{"metric":"queries_part","part":${i + 1},"parts":${groups.length},"queries":{$g}}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -111,26 +137,30 @@ object Bench {
     val failed = results.count(_._2._1 < 0)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmins,"reps":$reps,"failed":$failed,"sf":"$sfDir"}"""
     println(line)
-    // Contract-restoration (optimization round r17, VERDICT r16 item 3):
-    // the full line above IS the declared contract, but at 176 query
+    // The full line above IS the declared contract, but at 176 query
     // entries it is ~10 KB and a consumer keeping only a bounded tail of
-    // stdout cannot parse it (PERF has been empty since r14). Two
-    // redundant channels, both carrying the SAME numbers measured by the
-    // SAME run — never a cached or recomputed result:
-    //  (a) the identical line lands in a sidecar file
-    //      (SPARK_GRAFT_BENCH_OUT, default plans/bench_out.json);
-    //  (b) a compact summary line (totals only, no per-query map) prints
-    //      AFTER the full line, small enough to survive any tail cut.
+    // stdout cannot parse it. Three redundant channels, all carrying the
+    // SAME numbers measured by the SAME run — never a cached or
+    // recomputed result:
+    //  (a) the per-query medians again, as `queries_part` lines short
+    //      enough for a line-bounded reader, joined back by name;
+    //  (b) the identical line lands in a sidecar file
+    //      (SPARK_GRAFT_BENCH_OUT, default plans/bench_out_c<cpus>.json,
+    //      so runs on different core counts keep their own);
+    //  (c) a compact summary line (totals only, no per-query map) prints
+    //      last, small enough to survive any tail cut.
+    queryParts(results.map { case (k, (med, _)) => k -> med }).foreach(println)
+    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      s"plans/bench_out_c$cpus.json")
     try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "plans/bench_out.json"))
+      val out = java.nio.file.Paths.get(sidecar)
       Option(out.getParent)
         .foreach(p => { java.nio.file.Files.createDirectories(p); () })
       java.nio.file.Files.writeString(out, line + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.length},"reps":$reps,"failed":$failed,"sf":"$sfDir","queries_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "plans/bench_out.json")}"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.length},"reps":$reps,"failed":$failed,"sf":"$sfDir","queries_file":"$sidecar"}""")
     spark.stop()
   }
 }

@@ -4,17 +4,12 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator,
-  GenericInternalRow, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DoubleLongInputTypes,
-  DoubleStringInputTypes, LongInputType, LongLongInputTypes}
+  DoubleStringInputTypes, LongInputType}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -62,173 +57,6 @@ object BoundedAgg {
     ColumnBridge.column(
       CollectMinKByScoreStr(ColumnBridge.expression(score),
         ColumnBridge.expression(value), k).toAggregateExpression())
-
-  /** Capped member-list collect of non-null longs: accumulation STOPS
-    * at `cap`+1 elements, so per-group aggregation state is bounded by
-    * the declared cap on EVERY partial and final buffer — the
-    * scale-safe form of `collect_list` for df-capped inverted-index
-    * member lists. A group at or under the cap collects completely; a
-    * group over the cap yields a (cap+1)-element SENTINEL list the
-    * caller's `size(..) <= cap` filter drops — exactly the groups the
-    * unbounded collect-then-filter would drop, without a hot key
-    * (stopword gram, degenerate bucket) ever holding a corpus-scale
-    * buffer. Element order is accumulation order, NOT collect_list's
-    * input order: callers must be order-insensitive (pair-explode +
-    * re-aggregate shapes are).
-    */
-  def collect_capped(c: Column, cap: Long): Column =
-    ColumnBridge.column(
-      CollectCappedLongs(ColumnBridge.expression(c), cap)
-        .toAggregateExpression())
-
-  /** [[collect_capped]] widened to an (id, payload) long pair, emitted
-    * as `array<struct<id:bigint, v:bigint>>` — the member-list form
-    * that carries a per-member attribute (set size, signature) through
-    * the one exchange. Same bounded-buffer sentinel discipline.
-    */
-  def collect_capped_pair(id: Column, v: Column, cap: Long): Column =
-    ColumnBridge.column(
-      CollectCappedLongPairs(ColumnBridge.expression(id),
-        ColumnBridge.expression(v), cap).toAggregateExpression())
-
-  /** Every member pair `(a, b)` with `b.id > a.id` of one member list,
-    * as a generator — the row-local pair explode of the member-list
-    * shape. A [[collect_capped]] list (`array<bigint>`) yields
-    * `(ida, idb)`; a [[collect_capped_pair]] list
-    * (`array<struct<id, v>>`) yields `(ida, va, idb, vb)`. Pairs stream
-    * from an iterator, so a list of `m` members holds O(m) state while
-    * its C(m, 2) pairs flow through `GenerateExec` one at a time. Same
-    * multiset as exploding the nested `transform(ms, a =>
-    * transform(filter(ms, b => b > a), …))` lambdas, which built all
-    * C(m, 2) structs in one row (DedupSpec pins the parity, duplicate
-    * and negative ids included): null members and null ids never
-    * pair, a null list yields no rows. */
-  def member_pairs(ms: Column): Column =
-    ColumnBridge.column(MemberPairsExpr(ColumnBridge.expression(ms)))
-
-  /** [[MemberPairsExpr]] kernel: the pairs of `ms` in the nested
-    * form's order (outer member, then inner member, both in list
-    * order). One output row is reused across `next()` calls —
-    * `GenerateExec` copies or consumes each row before asking for the
-    * next. */
-  def memberPairs(ms: ArrayData, withPayload: Boolean): Iterator[InternalRow] = {
-    if (ms == null) return Iterator.empty
-    val n0 = ms.numElements()
-    val ids = new Array[Long](n0)
-    val vs = if (withPayload) new Array[Long](n0) else null
-    val vNull = if (withPayload) new Array[Boolean](n0) else null
-    var n = 0
-    var k = 0
-    while (k < n0) {
-      if (!ms.isNullAt(k)) {
-        if (withPayload) {
-          val st = ms.getStruct(k, 2)
-          if (!st.isNullAt(0)) {
-            ids(n) = st.getLong(0)
-            vNull(n) = st.isNullAt(1)
-            if (!vNull(n)) vs(n) = st.getLong(1)
-            n += 1
-          }
-        } else { ids(n) = ms.getLong(k); n += 1 }
-      }
-      k += 1
-    }
-    new MemberPairsIterator(ids, vs, vNull, n)
-  }
-}
-
-/** Lazy nested-loop walk over `(i, j)` with `ids(j) > ids(i)`; see
-  * [[BoundedAgg.memberPairs]]. */
-private final class MemberPairsIterator(ids: Array[Long], vs: Array[Long],
-    vNull: Array[Boolean], n: Int) extends Iterator[InternalRow] {
-  private val row = new SpecificInternalRow(
-    Seq.fill(if (vs == null) 2 else 4)(LongType))
-  private var i = 0
-  private var j = -1
-  private var ready = false
-
-  // moves (i, j) to the next pair; false once every member is done
-  private def advance(): Boolean = {
-    while (i < n) {
-      j += 1
-      while (j < n && ids(j) <= ids(i)) j += 1
-      if (j < n) return true
-      i += 1
-      j = -1
-    }
-    false
-  }
-
-  override def hasNext: Boolean = {
-    if (!ready) ready = advance()
-    ready
-  }
-
-  override def next(): InternalRow = {
-    if (!hasNext) throw new NoSuchElementException("member_pairs")
-    ready = false
-    if (vs == null) {
-      row.setLong(0, ids(i)); row.setLong(1, ids(j))
-    } else {
-      row.setLong(0, ids(i))
-      if (vNull(i)) row.setNullAt(1) else row.setLong(1, vs(i))
-      row.setLong(2, ids(j))
-      if (vNull(j)) row.setNullAt(3) else row.setLong(3, vs(j))
-    }
-    row
-  }
-}
-
-/** [[BoundedAgg.member_pairs]] as a codegen'd Catalyst generator: the
-  * generated loop pulls rows from [[BoundedAgg.memberPairs]] directly,
-  * so the pairs feed the consuming aggregate inside one whole-stage
-  * codegen stage. */
-case class MemberPairsExpr(child: Expression) extends UnaryExpression
-    with Generator {
-  private def elemType: DataType = child.dataType match {
-    case ArrayType(t, _) => t
-    case _ => null
-  }
-  private def withPayload: Boolean = elemType.isInstanceOf[StructType]
-
-  override def checkInputDataTypes(): TypeCheckResult = elemType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case StructType(Array(StructField(_, LongType, _, _),
-        StructField(_, LongType, _, _))) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      "member_pairs takes array<bigint> or array<struct<id: bigint, " +
-        s"v: bigint>>, not ${child.dataType.catalogString}")
-  }
-
-  override def elementSchema: StructType = elemType match {
-    case StructType(Array(_, v)) => StructType(Seq(
-      StructField("ida", LongType, nullable = false),
-      StructField("va", LongType, v.nullable),
-      StructField("idb", LongType, nullable = false),
-      StructField("vb", LongType, v.nullable)))
-    case _ => StructType(Seq(
-      StructField("ida", LongType, nullable = false),
-      StructField("idb", LongType, nullable = false)))
-  }
-
-  override def prettyName: String = "member_pairs"
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] =
-    BoundedAgg.memberPairs(child.eval(input).asInstanceOf[ArrayData],
-      withPayload)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ms = child.genCode(ctx)
-    ev.copy(code = code"""
-      |${ms.code}
-      |scala.collection.Iterator<InternalRow> ${ev.value} =
-      |  graft.functions.BoundedAgg.memberPairs(
-      |    ${ms.isNull} ? null : ${ms.value}, $withPayload);
-      |""".stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(c: Expression): MemberPairsExpr =
-    copy(child = c)
 }
 
 /** Smallest-k distinct values of a non-null long child, emitted as a
@@ -301,166 +129,6 @@ case class CollectMinK(child: Expression, k: Int,
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): CollectMinK =
     copy(child = c)
-}
-
-/** Capped collect of non-null longs ([[BoundedAgg.collect_capped]]):
-  * an ArrayBuffer that stops growing at `cap`+1 elements. Update,
-  * merge and serialize are all bounded by the cap; the (cap+1)-element
-  * sentinel survives merges (appending to a saturated buffer is a
-  * no-op), so the final `size <= cap` filter sees every over-cap group
-  * as over-cap regardless of how its partials were distributed.
-  */
-case class CollectCappedLongs(child: Expression, cap: Long,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Long]]
-  with UnaryLike[Expression] with LongInputType {
-  require(cap > 0, "collect_capped requires cap > 0")
-  // buffers index with Int: a cap the sentinel cannot exceed would
-  // silently stop bounding the list — an uncapped caller belongs on
-  // its self-join branch (Long.MaxValue), never here
-  require(cap < Int.MaxValue - 8L,
-    s"collect_capped cap $cap must be below ${Int.MaxValue - 8}")
-
-  private val stopAt: Int = (cap + 1L).toInt
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "collect_capped"
-
-  override def createAggregationBuffer(): scala.collection.mutable.ArrayBuffer[Long] =
-    new scala.collection.mutable.ArrayBuffer[Long]()
-
-  override def update(buf: scala.collection.mutable.ArrayBuffer[Long],
-      input: InternalRow): scala.collection.mutable.ArrayBuffer[Long] = {
-    if (buf.length < stopAt) {
-      val v = child.eval(input)
-      if (v != null) buf += v.asInstanceOf[Long]
-    }
-    buf
-  }
-
-  override def merge(buf: scala.collection.mutable.ArrayBuffer[Long],
-      other: scala.collection.mutable.ArrayBuffer[Long]): scala.collection.mutable.ArrayBuffer[Long] = {
-    var i = 0
-    while (buf.length < stopAt && i < other.length) {
-      buf += other(i); i += 1
-    }
-    buf
-  }
-
-  override def eval(buf: scala.collection.mutable.ArrayBuffer[Long]): Any = {
-    val out = new Array[Any](buf.length)
-    var i = 0
-    while (i < buf.length) { out(i) = buf(i); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.length)
-    bb.putInt(buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): scala.collection.mutable.ArrayBuffer[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](n)
-    var i = 0
-    while (i < n) { buf += bb.getLong; i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): CollectCappedLongs =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CollectCappedLongs =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CollectCappedLongs =
-    copy(child = c)
-}
-
-/** Capped collect of non-null (id, payload) long pairs
-  * ([[BoundedAgg.collect_capped_pair]]) — [[CollectCappedLongs]]
-  * widened to `array<struct<id:bigint, v:bigint>>`. The buffer is a
-  * flat long array (two slots per element), bounded at cap+1 pairs.
-  */
-case class CollectCappedLongPairs(left: Expression, right: Expression,
-    cap: Long, mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Long]]
-  with BinaryLike[Expression] with LongLongInputTypes {
-  require(cap > 0, "collect_capped_pair requires cap > 0")
-  // two buffer slots per pair: the [[CollectCappedLongs]] bound halved
-  require(cap < (Int.MaxValue - 8L) / 2,
-    s"collect_capped_pair cap $cap must be below ${(Int.MaxValue - 8) / 2}")
-
-  private val stopAt: Int = (cap + 1L).toInt
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("v", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "collect_capped_pair"
-
-  override def createAggregationBuffer(): scala.collection.mutable.ArrayBuffer[Long] =
-    new scala.collection.mutable.ArrayBuffer[Long]()
-
-  override def update(buf: scala.collection.mutable.ArrayBuffer[Long],
-      input: InternalRow): scala.collection.mutable.ArrayBuffer[Long] = {
-    if (buf.length < 2 * stopAt) {
-      val a = left.eval(input)
-      val b = right.eval(input)
-      if (a != null && b != null) {
-        buf += a.asInstanceOf[Long]
-        buf += b.asInstanceOf[Long]
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: scala.collection.mutable.ArrayBuffer[Long],
-      other: scala.collection.mutable.ArrayBuffer[Long]): scala.collection.mutable.ArrayBuffer[Long] = {
-    var i = 0
-    while (buf.length < 2 * stopAt && i < other.length) {
-      buf += other(i); buf += other(i + 1); i += 2
-    }
-    buf
-  }
-
-  override def eval(buf: scala.collection.mutable.ArrayBuffer[Long]): Any = {
-    val n = buf.length / 2
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) = new GenericInternalRow(Array[Any](buf(2 * i), buf(2 * i + 1)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.length)
-    bb.putInt(buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): scala.collection.mutable.ArrayBuffer[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](n)
-    var i = 0
-    while (i < n) { buf += bb.getLong; i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): CollectCappedLongPairs =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CollectCappedLongPairs =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): CollectCappedLongPairs = copy(left = l, right = r)
 }
 
 /** Smallest-k (score, id) pairs of non-null (double, long) children,

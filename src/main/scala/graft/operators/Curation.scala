@@ -609,26 +609,7 @@ object Curation {
     val dExp = graft.CacheRegistry.localCheckpoint(
       dExpAll.join(broadcast(rareGrams), Seq("gram"), "left_semi"))
     val sExp = sExpAll.join(broadcast(rareGrams), Seq("gram"), "left_semi")
-    // r17 (guide §2.4, the ngramJaccardPairs member-list shape): ONE
-    // exchange on the gram builds per-gram member lists — every gram
-    // here already passed the union-df cut (dc + sc <= maxDocFreq), so
-    // the capped collect can never drop a member; the set sizes ride
-    // the collected pair, so the Jaccard filter runs directly on the
-    // pair aggregate. Replaces the a×b self-join plus TWO post-agg
-    // size joins.
-    val within = dExp.join(dSizes, Seq("did"))
-      .groupBy("gram")
-      .agg(graft.functions.BoundedAgg.collect_capped_pair(
-        col("did"), col("dng"), maxDocFreq).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
-      .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-        .as(Seq("doc_id_a", "nga", "doc_id_b", "ngb")))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("inter"),
-        max(col("nga")).as("ng_a"), max(col("ngb")).as("ng_b"))
-      .filter(round(col("inter").cast("double") /
-        (col("ng_a") + col("ng_b") - col("inter")), 4) >= threshold)
-      .select("doc_id_a", "doc_id_b")
+    val within = deliveryNearDupPairs(dExp, dSizes, threshold, maxDocFreq)
     // candidate (delivery, stored) pairs with shared-rare-gram counts —
     // delivery-pair-bounded; checkpointed because it feeds both the sid
     // prune and the verdict join
@@ -670,6 +651,25 @@ object Curation {
       .groupBy("comp").agg(min("did").as("did"))
       .select(col("did").as(idCol))
   }
+
+  /** The near-duplicate pairs WITHIN a delivery of
+    * [[incrementalNearDupKeepers]]: `dExp` holds its (did, gram) rows
+    * whose grams passed the union-df cut (dc + sc <= maxDocFreq), so
+    * the bucket kernel's capped read never drops a member, and `dSizes`
+    * its (did, dng) set sizes, which ride with the ids so the Jaccard
+    * filter runs directly on the pair aggregate. ONE exchange on the
+    * gram. */
+  private[graft] def deliveryNearDupPairs(dExp: DataFrame, dSizes: DataFrame,
+      threshold: Double, maxDocFreq: Long): DataFrame =
+    Dedup.cappedPairs(dExp.join(dSizes, Seq("did")), Seq("gram"),
+        col("did"), col("dng"), maxDocFreq)
+      .toDF("doc_id_a", "nga", "doc_id_b", "ngb")
+      .groupBy("doc_id_a", "doc_id_b")
+      .agg(count(lit(1)).as("inter"),
+        max(col("nga")).as("ng_a"), max(col("ngb")).as("ng_b"))
+      .filter(round(col("inter").cast("double") /
+        (col("ng_a") + col("ng_b") - col("inter")), 4) >= threshold)
+      .select("doc_id_a", "doc_id_b")
 
   /** URL-based curation — the FIRST stage of the published web-corpus
     * recipes (CCNet/RefinedWeb run URL filtering before any content

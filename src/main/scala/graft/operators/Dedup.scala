@@ -261,21 +261,20 @@ object Dedup {
       else Some(graft.functions.Sketch.sigMatchCount(sigA, sigB)))
 
   /** The bucket-local verify of [[minHashLshPairs]] for one bucket of
-    * band `band`: reads at most `maxBucket + 1` members; a bucket over
-    * the cap or under 2 members emits nothing. Every member pair with
-    * `id_a < id_b` (equal ids never pair) is estimated and emitted
-    * unless the two already share an under-cap bucket of a lower band,
-    * so over all buckets each pair comes out exactly once. Band keys
-    * come from [[graft.functions.Sketch.bandKeys]], the definition the
-    * band exchange uses, so a 64-bit key collision behaves as it does
-    * there; only the `band` keys below this bucket's band are computed.
-    * Pairs stream in (i, j) member order. */
+    * band `band`: the [[cappedRead]] and [[BucketWalk]] of every capped
+    * pair site, so a bucket over the cap or under 2 members emits
+    * nothing and equal ids never pair. Each member pair is estimated
+    * and emitted unless the two already share an under-cap bucket of a
+    * lower band, so over all buckets each pair comes out exactly once.
+    * Band keys come from [[graft.functions.Sketch.bandKeys]], the
+    * definition the band exchange uses, so a 64-bit key collision
+    * behaves as it does there; only the `band` keys below this
+    * bucket's band are computed. */
   private[operators] def lshBucketPairs(band: Int, members: Iterator[LshMember],
       maxBucket: Long, rows: Int, overCap: Set[(Int, Long)]): Iterator[LshPair] = {
-    val ms = scala.collection.mutable.ArrayBuffer.empty[LshMember]
-    while (members.hasNext && ms.size <= maxBucket) ms += members.next()
+    val ms = cappedRead(members, maxBucket)(_ => true)
+    if (ms == null) return Iterator.empty
     val n = ms.size
-    if (n < 2 || n > maxBucket) return Iterator.empty
     val ids = new Array[Long](n)
     val sigs = new Array[Array[Long]](n)
     var k = 0
@@ -288,25 +287,10 @@ object Dedup {
         while (k < n) { ks(k) = graft.functions.Sketch.bandKeys(sigs(k), band, rows); k += 1 }
         ks
       }
-    new PairStream {
-      private var i = 0
-      private var j = 1
-      protected def advance(): LshPair = {
-        while (i < n - 1) {
-          while (j < n) {
-            val c = j
-            j += 1
-            val a = if (ids(i) < ids(c)) i else c
-            val b = i + c - a
-            if (ids(a) != ids(b) &&
-                (keys == null || !sharedUnderCap(keys(a), keys(b), band, overCap)))
-              return lshPair(ids(a), sigs(a), ids(b), sigs(b))
-          }
-          i += 1
-          j = i + 1
-        }
-        null
-      }
+    new BucketWalk[LshPair](ids) {
+      protected def pair(a: Int, b: Int): LshPair =
+        if (keys != null && sharedUnderCap(keys(a), keys(b), band, overCap)) null
+        else lshPair(ids(a), sigs(a), ids(b), sigs(b))
     }
   }
 
@@ -320,7 +304,7 @@ object Dedup {
     else {
       val keeper = members.next()
       val kKeys = graft.functions.Sketch.bandKeys(keeper.sig, bands, rows)
-      new PairStream {
+      new PairStream[LshPair] {
         protected def advance(): LshPair = {
           while (members.hasNext) {
             val m = members.next()
@@ -333,17 +317,112 @@ object Dedup {
       }
     }
 
+  /** One member of a capped pair bucket: an id and the long payload
+    * that travels with it (a set size, a 64-bit signature, a frame
+    * count). A member with a null id or payload is skipped. */
+  private[operators] final case class BucketMember(id: java.lang.Long,
+      v: java.lang.Long)
+
+  /** One member pair of a capped bucket, `doc_id_a < doc_id_b`, each id
+    * with its own payload. */
+  private[operators] final case class MemberPair(doc_id_a: Long, v_a: Long,
+      doc_id_b: Long, v_b: Long)
+
+  private lazy val BucketMemberEnc = Encoders.product[BucketMember]
+  private lazy val MemberPairEnc = Encoders.product[MemberPair]
+
+  /** The member pairs of every bucket of `key` that holds 2 to `cap`
+    * members with a non-null id and payload, as (doc_id_a, v_a,
+    * doc_id_b, v_b): ONE exchange on `key`, then [[bucketPairs]] per
+    * bucket. A bucket reads at most `cap + 1` members, so its state is
+    * bounded by the cap however many rows share the key. Ids and
+    * payloads are cast to bigint. The pair site of the Hamming, n-gram,
+    * winnowing, incremental near-dup and video families under their
+    * caps. */
+  private[operators] def cappedPairs(rows: DataFrame, key: Seq[String],
+      id: Column, v: Column, cap: Long): DataFrame = {
+    val keyed = rows.select(key.map(col) :+ id.cast("long").as("id") :+
+      v.cast("long").as("v"): _*)
+    keyed.groupBy(key.map(col): _*)
+      .as[org.apache.spark.sql.Row, BucketMember](
+        Encoders.row(keyed.select(key.map(col): _*).schema), BucketMemberEnc)
+      .flatMapGroups((_, members) => bucketPairs(members, cap))(MemberPairEnc)
+      .toDF()
+  }
+
+  /** The pairs of one [[cappedPairs]] bucket: every member pair with
+    * `id_a < id_b`, each with its payload, once per pair of members —
+    * so a repeated id pairs once per member it shares the bucket with,
+    * and never with itself. Nothing when fewer than 2 or more than
+    * `cap` members have a non-null id and payload. */
+  private[operators] def bucketPairs(members: Iterator[BucketMember],
+      cap: Long): Iterator[MemberPair] = {
+    val ms = cappedRead(members, cap)(m => m.id != null && m.v != null)
+    if (ms == null) return Iterator.empty
+    val n = ms.size
+    val ids = new Array[Long](n)
+    val vs = new Array[Long](n)
+    var k = 0
+    while (k < n) { ids(k) = ms(k).id; vs(k) = ms(k).v; k += 1 }
+    new BucketWalk[MemberPair](ids) {
+      protected def pair(a: Int, b: Int): MemberPair =
+        MemberPair(ids(a), vs(a), ids(b), vs(b))
+    }
+  }
+
+  /** The members of one capped bucket that `usable` admits, read up to
+    * `cap + 1` of them — the read that bounds every bucket kernel's
+    * state whatever the bucket's size. Null when fewer than 2 or more
+    * than `cap` are usable. */
+  private def cappedRead[M](members: Iterator[M], cap: Long)(
+      usable: M => Boolean): scala.collection.mutable.ArrayBuffer[M] = {
+    val ms = scala.collection.mutable.ArrayBuffer.empty[M]
+    while (members.hasNext && ms.size <= cap) {
+      val m = members.next()
+      if (usable(m)) ms += m
+    }
+    if (ms.size < 2 || ms.size > cap) null else ms
+  }
+
+  /** The pair walk of one bucket: every member pair (i, j), i < j,
+    * whose ids differ, in (i, j) order, with `a` the smaller-id member
+    * and `b` the other. `pair` builds the output, or null to skip. */
+  private abstract class BucketWalk[P >: Null](ids: Array[Long])
+      extends PairStream[P] {
+    protected def pair(a: Int, b: Int): P
+    private val n = ids.length
+    private var i = 0
+    private var j = 1
+    protected def advance(): P = {
+      while (i < n - 1) {
+        while (j < n) {
+          val c = j
+          j += 1
+          val a = if (ids(i) < ids(c)) i else c
+          val b = i + c - a
+          if (ids(a) != ids(b)) {
+            val p = pair(a, b)
+            if (p != null) return p
+          }
+        }
+        i += 1
+        j = i + 1
+      }
+      null
+    }
+  }
+
   /** An iterator over the pairs `advance` finds, one look-ahead, null
     * at the end. */
-  private abstract class PairStream extends Iterator[LshPair] {
-    protected def advance(): LshPair
-    private var ahead: LshPair = _
+  private abstract class PairStream[P >: Null] extends Iterator[P] {
+    protected def advance(): P
+    private var ahead: P = _
     private var started = false
     def hasNext: Boolean = {
       if (!started) { ahead = advance(); started = true }
       ahead != null
     }
-    def next(): LshPair = {
+    def next(): P = {
       if (!hasNext) throw new NoSuchElementException("no more pairs")
       val p = ahead
       ahead = advance()
@@ -735,10 +814,10 @@ object Dedup {
       simHash64(tokensOf(col(textCol))).as("sim"))
     // a chunk bucket can never exceed the corpus row count — one
     // metadata-cheap count skips the cap machinery (persist + star
-    // recovery) at sub-cap sizes. The cap itself still passes through
-    // (r17): at or under it no bucket can exceed maxBucket, so the
-    // capped member-list path is candidate-identical to the uncapped
-    // self-join while paying one exchange fewer (guide §2.4).
+    // recovery) at sub-cap sizes. The cap itself still passes through:
+    // at or under it no bucket can exceed maxBucket, so the bucket
+    // kernel is candidate-identical to the uncapped self-join while
+    // paying one exchange fewer.
     if (maxBucket == Long.MaxValue)
       hamming64Pairs(sigs, "id", "sim", maxHamming)
     else if (docs.count() <= maxBucket)
@@ -774,29 +853,16 @@ object Dedup {
           shiftright(col("sim"), c * 16).bitwiseAND(lit(0xFFFFL))): _*))
           .as(Seq("chunk", "cval")))
     val cand =
-      if (maxBucket != Long.MaxValue) {
-        // Capped path (r17, guide §2.4): ONE exchange on the chunk key
-        // builds per-bucket member lists with the SIZE-CAPPED collect
-        // (state bounded at maxBucket+1 (id, sig) pairs on every
-        // partial buffer), the bucket cap is the list-size filter, and
-        // candidate pairs explode ROW-LOCALLY. The previous shape read
-        // the chunk explode three ways (bucket-count aggregate,
-        // semi-join prune, a×b self-join) — two extra re-planned AQE
-        // stages per invocation. Pair multiplicity is identical: the
-        // self-join emitted one row per shared chunk, as does the
-        // per-bucket explode, and the final min-agg collapses both the
-        // same way. Sub-cap corpora (where no bucket CAN be over cap)
-        // produce identical candidates to the uncapped join, so
-        // callers pass the cap through their sub-cap short-circuits.
-        chunked.groupBy("chunk", "cval")
-          .agg(graft.functions.BoundedAgg.collect_capped_pair(
-            col("id"), col("sim"), maxBucket).as("ms"))
-          .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-          .select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-            .as(Seq("doc_id_a", "sim_a", "doc_id_b", "sim_b")))
-      } else {
-        // uncapped: the self-join form stands — a member list without
-        // the bucket bound could hold the whole corpus in one row
+      if (maxBucket != Long.MaxValue)
+        // the 16-bit value first, so it is the bucket sort's prefix
+        // (the chunk index holds one of 4 values). Pair multiplicity is
+        // the self-join's: one row per shared chunk, which the min-agg
+        // below collapses
+        cappedPairs(chunked, Seq("cval", "chunk"), col("id"), col("sim"),
+          maxBucket).toDF("doc_id_a", "sim_a", "doc_id_b", "sim_b")
+      else {
+        // uncapped: the self-join form stands — a bucket read without
+        // the cap could hold the whole corpus
         val a = chunked.select(col("chunk"), col("cval"),
           col("id").as("doc_id_a"), col("sim").as("sim_a"))
         val b = chunked.select(col("chunk"), col("cval"),
@@ -849,11 +915,10 @@ object Dedup {
     * Under the cap, output is identical to [[hamming64Pairs]] (star
     * edges are subsumed by the clique in the final min-agg).
     *
-    * The signature table is persisted: three consumers read it (the
-    * banding join's two sides share one scan via the self-join, the
-    * group aggregate, and the member re-join), and signatures are
-    * (id, 8 bytes) — negligible storage, expensive to recompute when
-    * the upstream is an image decode. */
+    * The signature table is persisted: the row count, the banding
+    * pass and both sides of the keeper-star join read it, and
+    * signatures are (id, 8 bytes) — negligible storage, expensive to
+    * recompute when the upstream is an image decode. */
   def hamming64PairsCapped(sig: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, maxBucket: Long = 100000L): DataFrame = {
     val s = graft.CacheRegistry.persist(
@@ -861,8 +926,8 @@ object Dedup {
     // the count pays the cache build the banding pass reuses either
     // way; a sub-cap corpus cannot have an over-cap bucket, so the
     // group aggregate + star join are skipped entirely (the cap still
-    // passes through — the member-list path is candidate-identical
-    // at sub-cap sizes and one exchange cheaper, r17)
+    // passes through — the bucket kernel is candidate-identical at
+    // sub-cap sizes and one exchange cheaper)
     if (s.count() <= maxBucket)
       return hamming64Pairs(s, "id", "sig64", maxHamming, maxBucket)
     val banded = hamming64Pairs(s, "id", "sig64", maxHamming, maxBucket)
@@ -1095,17 +1160,14 @@ object Dedup {
   // ----------------------------------------------- n-gram Jaccard (exact)
 
   /** Exact n-gram Jaccard pairs via an inverted index: explode distinct
-    * n-grams, group into per-gram member lists (one exchange), emit all
-    * in-list pairs row-locally, count intersections per pair. At scale,
-    * grams shared by >B docs should be dropped first (stopword grams
-    * produce quadratic candidate blowup) — `maxDocFreq` does that
-    * document-frequency pruning, and the SAME bound caps the member
-    * lists during aggregation: the size-capped collect stops
-    * accumulating at maxDocFreq+1 entries on every partial and final
-    * buffer, so no aggregate key ever holds corpus-scale state (r17 —
-    * the unbounded collect_list form only applied the bound after the
-    * full list was built). Without a cap the self-join form stands (a
-    * per-gram list could be corpus-sized).
+    * n-grams, one exchange on the gram, emit the member pairs of each
+    * gram's bucket, count intersections per pair. At scale, grams
+    * shared by >B docs should be dropped first (stopword grams produce
+    * quadratic candidate blowup) — `maxDocFreq` does that
+    * document-frequency pruning, and the SAME bound caps each gram's
+    * bucket read at maxDocFreq+1 members ([[cappedPairs]]), so no gram
+    * ever holds corpus-scale state. Without a cap the self-join form
+    * stands (a gram's bucket could be corpus-sized).
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 2, threshold: Double = 0.2,
@@ -1122,37 +1184,15 @@ object Dedup {
       size(col("grams")).cast("bigint").as("ng"),
       explode(col("grams")).as("gram"))
     val matches =
-      if (maxDocFreq != Long.MaxValue) {
-        // Capped path (optimization round r16): ONE exchange on the
-        // gram builds per-gram member lists; the df prune is the
-        // list-size filter and candidate pairs explode ROW-LOCALLY
-        // from each surviving list. The previous shape (df groupBy +
-        // left-semi prune + a×b self-join) re-read the exploded table
-        // three ways across ~4 exchanges — with AQE, four extra
-        // re-planned query stages per invocation (guide §2.4).
-        // Optimization round r17: the collect is the SIZE-CAPPED
-        // aggregate — `collect_list` only bounded per-key state AFTER
-        // its filter ran, so a stopword gram (the hot key this
-        // operator's df cap exists for) built a corpus-scale list
-        // inside one aggregation buffer before being dropped.
-        // `collect_capped_pair` stops accumulating at maxDocFreq+1
-        // elements on every partial and final buffer; the sentinel
-        // list falls to the same `size <= maxDocFreq` filter, so the
-        // surviving groups (and their complete lists) are identical.
-        val members = exploded
-          .groupBy("gram")
-          .agg(graft.functions.BoundedAgg.collect_capped_pair(
-            col("id"), col("ng"), maxDocFreq).as("ms"))
-          .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
-        // all unordered (a, b) pairs with a.id < b.id, row-local;
-        // shingles are distinct per doc so each doc appears at most
-        // once per list and `inter` counts shared grams exactly as
-        // the self-join did
-        members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-          .as(Seq("ida", "nga", "idb", "ngb")))
-      } else {
-        // uncapped: the self-join shape stands — a per-gram list
-        // without the df bound could hold the whole corpus in one row
+      if (maxDocFreq != Long.MaxValue)
+        // shingles are distinct per doc, so each doc appears at most
+        // once per gram and `inter` counts shared grams exactly as the
+        // self-join did
+        cappedPairs(exploded, Seq("gram"), col("id"), col("ng"), maxDocFreq)
+          .toDF("ida", "nga", "idb", "ngb")
+      else {
+        // uncapped: the self-join shape stands — a gram's bucket
+        // without the df bound could hold the whole corpus
         exploded.as("a")
           .join(exploded.as("b"),
             col("a.gram") === col("b.gram") && col("a.id") < col("b.id"))
@@ -1255,23 +1295,12 @@ object Dedup {
   def winnowingOverlapPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 3, w: Int = 4,
       maxDf: Long = 100L, minShared: Long = 3L): DataFrame = {
-    // ONE exchange on the fingerprint hash builds per-hash member
-    // lists (df prune = list-size filter, bounded by maxDf) and the
-    // candidate pairs explode row-locally — the ngramJaccardPairs r16
-    // shape, replacing the df groupBy + semi-join + self-join chain
-    // (guide §2.4). Postings are distinct per doc, so the pair count
-    // per hash equals the self-join's. r17: size-capped collect — the
-    // unbounded collect_list held a boilerplate fingerprint's full
-    // corpus-scale posting list in one aggregation buffer before the
-    // filter could drop it; collect_capped stops at maxDf+1 on every
-    // partial and the sentinel falls to the same size filter.
-    val members = winnowPostings(docs, textCol, idCol, k, w)
-      .groupBy("fph")
-      .agg(graft.functions.BoundedAgg.collect_capped(col("doc_id"), maxDf)
-        .as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDf)
-    members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-        .as(Seq("doc_id_a", "doc_id_b")))
+    // ONE exchange on the fingerprint hash; a hash's bucket is read
+    // only up to maxDf+1 postings (the df prune). Postings are
+    // distinct per doc, so the pair count per hash equals the
+    // self-join's. The kernel's payload is unused here.
+    cappedPairs(winnowPostings(docs, textCol, idCol, k, w), Seq("fph"),
+        col("doc_id"), lit(0L), maxDf)
       .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)

@@ -802,30 +802,22 @@ object Multimodal {
   def videoNearDupPairs(media: Dataset[MediaRow], minShared: Int = 2,
       maxDocFreq: Long = 20L): DataFrame = {
     import org.apache.spark.sql.functions._
-    // persisted: the size aggregate and the member-list aggregate both
-    // read this frame — re-executing the subtree would re-decode every
+    // persisted: the size aggregate and the bucket kernel both read
+    // this frame — re-executing the subtree would re-decode every
     // video
     val hashes = graft.CacheRegistry.persist(
       videoFrameHashes(media).toDF()
         .select(col("doc_id").as("id"), col("fhash")).distinct())
     val sizes = hashes.groupBy("id").agg(count(lit(1)).as("nf"))
-    // r17 (guide §2.4, the ngramJaccardPairs shape): ONE exchange on
-    // the frame hash builds per-frame member lists with the SIZE-CAPPED
-    // collect (state bounded at maxDocFreq+1 (id, nf) pairs on every
-    // partial buffer — a ubiquitous black frame never holds a
-    // corpus-scale list), the df prune is the list-size filter, and
-    // candidate pairs explode row-locally. Replaces the separate df
-    // aggregate + semi-join + a×b self-join. Frame counts ride the
-    // collected pair (one extra long) so the overlap filter still runs
-    // DIRECTLY on the pair aggregate — the coincidental 1-shared-frame
-    // tail dies before any post-aggregation join.
-    val members = hashes.join(sizes, Seq("id"))
-      .groupBy("fhash")
-      .agg(graft.functions.BoundedAgg.collect_capped_pair(
-        col("id"), col("nf"), maxDocFreq).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxDocFreq)
-    members.select(graft.functions.BoundedAgg.member_pairs(col("ms"))
-        .as(Seq("doc_id_a", "nfa", "doc_id_b", "nfb")))
+    // ONE exchange on the frame hash into the bucket kernel: a
+    // frame's bucket is read only up to maxDocFreq+1 videos (the df
+    // prune), so a ubiquitous black frame never holds a corpus-scale
+    // bucket. Frame counts ride with the ids, so the overlap filter
+    // runs DIRECTLY on the pair aggregate — the coincidental
+    // 1-shared-frame tail dies before any post-aggregation join.
+    graft.operators.Dedup.cappedPairs(hashes.join(sizes, Seq("id")),
+        Seq("fhash"), col("id"), col("nf"), maxDocFreq)
+      .toDF("doc_id_a", "nfa", "doc_id_b", "nfb")
       .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("shared_frames"),
         first(col("nfa")).as("frames_a"), first(col("nfb")).as("frames_b"))

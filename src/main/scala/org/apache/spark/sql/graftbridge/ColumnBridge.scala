@@ -40,15 +40,6 @@ trait LongInputType
     Seq(org.apache.spark.sql.types.LongType)
 }
 
-/** (long, long) input signature — the capped member-list aggregate's
-  * two children (id, payload). */
-trait LongLongInputTypes
-  extends org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.LongType,
-      org.apache.spark.sql.types.LongType)
-}
-
 /** (score: double, id: long) input signature — the bounded
   * top-k-by-score aggregate's two children. */
 trait DoubleLongInputTypes

@@ -1028,26 +1028,6 @@ class DedupSpec extends SparkSuite {
     assert(pairs((0L, 2L)) > 0.5 && pairs((0L, 2L)) < 1.0)
   }
 
-  test("collect_capped: a hot key's aggregation buffer is bounded at " +
-      "cap+1 (sentinel), under-cap groups collect completely") {
-    import graft.functions.BoundedAgg
-    // 5000 members under one key — the stopword-gram shape. The
-    // unbounded collect_list would buffer all 5000 before any filter;
-    // the capped collect must stop at cap+1 = 6 (the over-cap sentinel
-    // the size filter drops).
-    val hot = (0L until 5000L).map(i => ("hot", i)) ++
-      (0L until 3L).map(i => ("rare", i))
-    val sizes = hot.toDF("k", "id").repartition(8, col("k"))
-      .groupBy("k")
-      .agg(size(BoundedAgg.collect_capped(col("id"), 5L)).as("n"),
-        size(BoundedAgg.collect_capped_pair(col("id"), col("id"), 5L))
-          .as("np"))
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2)))
-      .toMap
-    assert(sizes("hot") == ((6, 6)), sizes)
-    assert(sizes("rare") == ((3, 3)), sizes)
-  }
-
   test("ngramJaccardPairs with a hot gram (df >> maxDocFreq): output " +
       "equals the df-pruned self-join reference, no corpus-scale list") {
     // 300 docs share ONE boilerplate bigram (df = 300 >> cap 5) and
@@ -3553,89 +3533,6 @@ class DedupSpec extends SparkSuite {
       }
       assert(aggOffenders.isEmpty, aggOffenders.mkString("\n"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-  }
-
-  test("collect_capped / collect_capped_pair reject a cap their Int-indexed " +
-      "buffers cannot bound") {
-    import graft.functions.BoundedAgg
-    val df = Seq((1L, 2L)).toDF("id", "v")
-    intercept[IllegalArgumentException] {
-      df.agg(BoundedAgg.collect_capped(col("id"), Int.MaxValue.toLong))
-        .collect()
-    }
-    intercept[IllegalArgumentException] {
-      df.agg(BoundedAgg.collect_capped_pair(col("id"), col("v"),
-        (Int.MaxValue - 8L) / 2)).collect()
-    }
-    // the largest caps each buffer can still bound are accepted
-    val r = df.agg(
-      size(BoundedAgg.collect_capped(col("id"), Int.MaxValue - 9L)),
-      size(BoundedAgg.collect_capped_pair(col("id"), col("v"),
-        (Int.MaxValue - 8L) / 2 - 1))).head()
-    assert(r.getInt(0) == 1 && r.getInt(1) == 1, r)
-  }
-
-  test("member_pairs ≡ the nested transform/filter explode as a multiset, " +
-      "for id lists and (id, v) lists") {
-    import graft.functions.BoundedAgg
-    val L = (x: Long) => java.lang.Long.valueOf(x)
-    val lists: Seq[Seq[java.lang.Long]] = Seq(
-      Seq.empty, Seq(L(7)), Seq(L(5), L(1), L(3), L(2)),
-      Seq(L(-4), L(9), L(-1), L(0)),
-      Seq(L(3), L(3), L(1), L(3), L(2), L(1)),
-      Seq(L(Long.MinValue), L(Long.MaxValue), L(0)),
-      Seq(L(2), null, L(1), null, L(4)))
-    val ids = lists.zipWithIndex.map { case (ms, k) => (k, ms) }
-      .toDF("k", "ms")
-    val lambda = ids.select(col("k"), explode(flatten(transform(col("ms"),
-        a => transform(filter(col("ms"), b => b > a), b =>
-          struct(a.as("ida"), b.as("idb")))))).as("p"))
-      .select("k", "p.ida", "p.idb")
-    val native = ids.select(col("k"),
-      BoundedAgg.member_pairs(col("ms")).as(Seq("ida", "idb")))
-    def bag(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq.groupBy(identity).map {
-        case (r, rs) => r -> rs.size }
-    assert(bag(native) == bag(lambda), (bag(native), bag(lambda)))
-    assert(native.count() == 6 + 6 + 11 + 3 + 3)
-    // (id, v) lists: the payload rides with its own id; null ids never
-    // pair, null payloads pass through
-    val pairs = lists.zipWithIndex.map { case (ms, k) =>
-      (k, ms.map(i => (i, if (i == null || i % 3 == 0) null
-        else L(i * 10 + k)))) }.toDF("k", "l")
-      .select(col("k"), transform(col("l"), e =>
-        struct(e("_1").as("id"), e("_2").as("v"))).as("ms"))
-    val lambdaP = pairs.select(col("k"), explode(flatten(transform(
-        col("ms"), a => transform(filter(col("ms"), b => b("id") > a("id")),
-          b => struct(a("id").as("ida"), a("v").as("va"),
-            b("id").as("idb"), b("v").as("vb")))))).as("p"))
-      .select("k", "p.ida", "p.va", "p.idb", "p.vb")
-    val nativeP = pairs.select(col("k"), BoundedAgg.member_pairs(col("ms"))
-      .as(Seq("ida", "va", "idb", "vb")))
-    assert(bag(nativeP) == bag(lambdaP), (bag(nativeP), bag(lambdaP)))
-    // the list straight from the capped collects, as the operators use it
-    val members = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v")
-      .agg(BoundedAgg.collect_capped(col("id"), 5L).as("ms"),
-        BoundedAgg.collect_capped_pair(col("id"), col("v"), 5L).as("mp"))
-    assert(members.select(BoundedAgg.member_pairs(col("ms"))).count() == 3L)
-    assert(members.select(BoundedAgg.member_pairs(col("mp"))
-      .as(Seq("ida", "va", "idb", "vb"))).filter(col("va") === col("ida") * 10 &&
-      col("vb") === col("idb") * 10).count() == 3L)
-    intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(Seq("x")).toDF("ms").select(BoundedAgg.member_pairs(col("ms")))
-        .collect()
-    }
-  }
-
-  test("member_pairs streams: one 10^4-member list yields C(10^4, 2) " +
-      "pairs without building them in one row") {
-    import graft.functions.BoundedAgg
-    val m = 10000L
-    val members = spark.range(0L, m).repartition(4)
-      .agg(BoundedAgg.collect_capped(col("id"), m).as("ms"))
-    val n = members.select(BoundedAgg.member_pairs(col("ms"))
-      .as(Seq("ida", "idb"))).filter(col("idb") > col("ida")).count()
-    assert(n == m * (m - 1) / 2, n)
   }
 
   test("band_keys ≡ xxhash64(slice(sig, b*rows+1, rows), b) per band, " +

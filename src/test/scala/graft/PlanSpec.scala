@@ -434,31 +434,69 @@ class PlanSpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("capped minHashLshPairs under the cap: ONE (band, bkey) exchange " +
-      "into the bucket-local kernel; no aggregate, join or lambda") {
+  test("every capped pair site under its cap: ONE exchange on the site's " +
+      "key into the bucket kernel; no capped collect, generator or lambda " +
+      "before the pair aggregate") {
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, MapGroupsExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators.{Curation, Dedup, Multimodal}
     val docs = (0L until 40L).map(i =>
       (i, s"shared words for every doc number ${i % 7} with tail ${i % 3}"))
       .toDF("doc_id", "text")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val p = try {
-      graft.operators.Dedup.minHashLshPairs(docs, maxBucket = 100000L)
-        .queryExecution.executedPlan.toString
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      CacheRegistry.release(spark)
+    val junk = Array.fill[Byte](80)(7)
+    val videos = Seq(20L, 21L).map(i =>
+      Multimodal.MediaRow(i, "video/mp4", junk.clone(), Map.empty)).toDS()
+    val delivery = Seq((1L, "a b"), (2L, "a b"), (2L, "b c")).toDF("did", "gram")
+    val sizes = Seq((1L, 2L), (2L, 3L)).toDF("did", "dng")
+    // (site, its pairs under the cap, the site's bucket key in exchange order)
+    val sites: Seq[(String, () => DataFrame, Seq[String])] = Seq(
+      ("minHashLshPairs", () => Dedup.minHashLshPairs(docs, maxBucket = 100000L),
+        Seq("bkey", "band")),
+      ("simHashPairs / hamming64Pairs",
+        () => Dedup.simHashPairs(docs, maxBucket = 100000L), Seq("cval", "chunk")),
+      ("ngramJaccardPairs", () => Dedup.ngramJaccardPairs(docs, maxDocFreq = 50L),
+        Seq("gram")),
+      ("winnowingOverlapPairs", () => Dedup.winnowingOverlapPairs(docs), Seq("fph")),
+      ("incrementalNearDupKeepers within-delivery pairs",
+        () => Curation.deliveryNearDupPairs(delivery, sizes, 0.2, 20L), Seq("gram")),
+      ("videoNearDupPairs", () => Multimodal.videoNearDupPairs(videos), Seq("fhash")))
+    // the plan from the root to `target`, both included
+    def pathTo(p: SparkPlan, target: SparkPlan): Option[List[SparkPlan]] =
+      if (p eq target) Some(List(target))
+      else p.children.iterator.map(pathTo(_, target)).collectFirst {
+        case Some(path) => p :: path }
+    // the nodes below `p` down to, not into, the nearest exchanges
+    def downToExchanges(p: SparkPlan): Seq[SparkPlan] = p match {
+      case e: ShuffleExchangeExec => Seq(e)
+      case o => o +: o.children.flatMap(downToExchanges)
     }
-    val lines = p.linesIterator.toIndexedSeq
-    val exchanges = lines.filter(_.contains("Exchange"))
-    assert(exchanges.size == 1 &&
-      exchanges.head.contains("hashpartitioning(bkey#") &&
-      exchanges.head.contains("band#"),
-      s"expected exactly ONE (bkey, band) exchange:\n$p")
-    val mapGroups = lines.indexWhere(_.contains("MapGroups"))
-    assert(mapGroups >= 0 && mapGroups < lines.indexWhere(_.contains("Exchange")),
-      s"expected the bucket kernel above the band exchange:\n$p")
-    assert(!p.contains("Aggregate"), s"unexpected aggregate:\n$p")
-    assert(!p.contains("Join"), s"unexpected join:\n$p")
-    assert(!p.contains("lambdafunction"), p)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try sites.foreach { case (site, pairs, key) =>
+      val plan = try pairs().queryExecution.executedPlan
+        finally CacheRegistry.release(spark)
+      val mapGroups = plan.collect { case m: MapGroupsExec => m }
+      assert(mapGroups.size == 1, s"$site: expected one bucket kernel:\n$plan")
+      val below = downToExchanges(mapGroups.head.child)
+      val exchanges = below.collect { case e: ShuffleExchangeExec => e }
+      val keys = exchanges.map(_.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.references.head.name)
+        case other => Seq(other.toString)
+      })
+      assert(keys == Seq(key),
+        s"$site: expected ONE exchange on $key below the kernel, got $keys:\n$plan")
+      // the pair aggregate and everything between it and the exchange
+      val spine = pathTo(plan, mapGroups.head).get ++ below
+      val offenders = spine.filter(n => n.isInstanceOf[ObjectHashAggregateExec] ||
+        n.isInstanceOf[GenerateExec] ||
+        n.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction])))
+      assert(offenders.isEmpty, s"$site: ${offenders.map(_.nodeName)}:\n$plan")
+      assert(plan.collect { case a: ObjectHashAggregateExec => a }.isEmpty,
+        s"$site: unexpected ObjectHashAggregate:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 }

@@ -7,14 +7,15 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Sketch
-import graft.operators.Dedup.{LshMember, LshPair}
+import graft.operators.Dedup.{BucketMember, LshMember, LshPair, MemberPair}
 
-/** Differential specs for the MinHash dedup kernels: the primitive band
-  * keys and match counts, the bucket and star pair streams of
-  * `Dedup.minHashLshPairs` and the union-find of
+/** Differential specs for the dedup kernels: the primitive band keys
+  * and match counts, the bucket and star pair streams of
+  * `Dedup.minHashLshPairs`, the capped bucket pairs every other capped
+  * pair site shares (`Dedup.bucketPairs`) and the union-find of
   * `Dedup.connectedComponents`' local path, each against the
   * `ArrayData`, boxed-iterator or boxed-map form it replaced, kept here
-  * as the oracle. Band keys decide which bucket a pair comes out of and
+  * as the oracle (the bucket pairs against a nested loop). Band keys decide which bucket a pair comes out of and
   * the labels are the component keepers, so any difference is an
   * output change.
   */
@@ -106,6 +107,18 @@ class DedupKernelSpec extends AnyFunSuite {
           else Iterator.single(lshPair(keeper.id, kSig, m.id, mSig))
         }
       }
+
+    /** Every member pair of a capped bucket by nested loop: members
+      * with a null id or payload are dropped, a bucket left with fewer
+      * than 2 or more than `cap` emits nothing, and otherwise each
+      * member `i` pairs every member `j` with `ids(j) > ids(i)`, each
+      * payload with its own id. */
+    def bucketPairs(ms: Seq[BucketMember], cap: Long): Seq[MemberPair] = {
+      val live = ms.filter(m => m.id != null && m.v != null)
+      if (live.size < 2 || live.size > cap) Seq.empty
+      else for (a <- live; b <- live if b.id > a.id)
+        yield MemberPair(a.id, a.v, b.id, b.v)
+    }
 
     /** The driver union-find before `Dedup.componentLabels`: a boxed `HashMap` parent
       * table and a `TreeSet` of nodes, as rows in output order. */
@@ -252,6 +265,79 @@ class DedupKernelSpec extends AnyFunSuite {
       emitted += got.size
     }
     assert(emitted > 1000, emitted)
+  }
+
+  private def sorted(ps: Seq[MemberPair]): Seq[MemberPair] =
+    ps.sortBy(p => (p.doc_id_a, p.v_a, p.doc_id_b, p.v_b))
+
+  private val extremeIds = Array(Long.MinValue, Long.MaxValue,
+    Long.MinValue + 1, Long.MaxValue - 1, 0L, -1L)
+
+  /** A random capped bucket: ids over a small range around zero (so
+    * they repeat and go negative) and the extremes, payloads that name
+    * their member, and each id or payload null with probability
+    * `pNull`. */
+  private def members(rnd: Random, size: Int, pNull: Double): Seq[BucketMember] =
+    Seq.tabulate(size) { k =>
+      val id: java.lang.Long =
+        if (rnd.nextDouble() < pNull) null
+        else if (rnd.nextInt(6) == 0) extremeIds(rnd.nextInt(extremeIds.length))
+        else rnd.nextInt(size + 2).toLong - size / 2
+      val v: java.lang.Long =
+        if (rnd.nextDouble() < pNull) null else 1000L * k + rnd.nextInt(1000)
+      BucketMember(id, v)
+    }
+
+  test("bucketPairs equals the nested-loop oracle on random buckets with " +
+      "repeated, negative and extreme ids and null ids and payloads") {
+    val rnd = new Random(29)
+    var emitted = 0
+    (0 until 3000).foreach { _ =>
+      val ms = members(rnd, rnd.nextInt(14), Seq(0.0, 0.1, 0.3)(rnd.nextInt(3)))
+      val live = ms.count(m => m.id != null && m.v != null)
+      // caps around the live size, so buckets at, just over and just
+      // under the cap all come up
+      val cap = math.max(1L, live + rnd.nextInt(5) - 2L)
+      val got = Dedup.bucketPairs(ms.iterator, cap).toList
+      val want = Oracle.bucketPairs(ms, cap)
+      assert(sorted(got) == sorted(want), (cap, ms))
+      assert(got.forall(p => p.doc_id_a < p.doc_id_b))
+      emitted += got.size
+    }
+    assert(emitted > 5000, emitted)
+  }
+
+  test("bucketPairs at the cap boundary: cap members pair, cap + 1 and " +
+      "fewer than 2 emit nothing, and null members do not count") {
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    val five = (1L to 5L).map(i => BucketMember(L(i), L(10 * i)))
+    val nulls = Seq(BucketMember(null, L(1)), BucketMember(L(9), null),
+      BucketMember(null, null))
+    assert(Dedup.bucketPairs(five.iterator, 5L).size == 10)
+    assert(Dedup.bucketPairs(five.iterator, 4L).isEmpty)
+    // nulls interleaved with the members: still 5 usable under cap 5
+    val mixed = five.take(2) ++ nulls ++ five.drop(2) ++ nulls
+    assert(sorted(Dedup.bucketPairs(mixed.iterator, 5L).toList) ==
+      sorted(Oracle.bucketPairs(five, 5L)))
+    assert(Dedup.bucketPairs((five :+ BucketMember(L(6), L(60))).iterator, 5L).isEmpty)
+    assert(Dedup.bucketPairs((five.take(1) ++ nulls).iterator, 5L).isEmpty)
+    assert(Dedup.bucketPairs(Iterator.empty, 5L).isEmpty)
+    // equal ids never pair; a repeated id pairs once per member
+    val rep = Seq(BucketMember(L(3), L(1)), BucketMember(L(3), L(2)),
+      BucketMember(L(4), L(3)))
+    assert(sorted(Dedup.bucketPairs(rep.iterator, 5L).toList) ==
+      Seq(MemberPair(3L, 1L, 4L, 3L), MemberPair(3L, 2L, 4L, 3L)))
+  }
+
+  test("bucketPairs reads at most cap + 1 members: a 10^4-member bucket " +
+      "under cap 5 pulls 6 and emits nothing") {
+    var pulled = 0
+    val big = Iterator.range(0, 10000).map { i =>
+      pulled += 1
+      BucketMember(java.lang.Long.valueOf(i.toLong), java.lang.Long.valueOf(0L))
+    }
+    assert(Dedup.bucketPairs(big, 5L).isEmpty)
+    assert(pulled == 6, pulled)
   }
 
   test("componentLabels equals the old boxed union-find, row order " +
